@@ -550,13 +550,19 @@ object Bench {
     // file + ATOMIC_MOVE) so a crash mid-write can never leave a torn
     // JSON, and carrying the same `queries`/totals as the stdout line
     // (plus the per-shot diag and per-query ratio map that are too wide
-    // for the stdout parse window).
+    // for the stdout parse window). A file system without atomic moves
+    // falls back to a plain replacing move.
     val benchTmp = java.nio.file.Paths.get("graft_bench.json.tmp")
+    val benchOut = java.nio.file.Paths.get("graft_bench.json")
     java.nio.file.Files.writeString(benchTmp,
       s"""{$core,"diag":$diagJson$ratioAgg$ratioMap}""" + "\n")
-    java.nio.file.Files.move(benchTmp, java.nio.file.Paths.get("graft_bench.json"),
+    try java.nio.file.Files.move(benchTmp, benchOut,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
+      java.nio.file.Files.move(benchTmp, benchOut,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
     spark.stop()
   }
 }

@@ -48,7 +48,7 @@ object Verify {
       if (needed)
         try fn(spark, sfDir).write.mode("overwrite")
           .parquet(s"$stageBase/$name")
-        catch { case e: Throwable =>
+        catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[verify] stage $name failed: ${e.getMessage}")
         }
     }
@@ -68,7 +68,7 @@ object Verify {
               " — serialize or explode them (driver oracle hashes scalars only)")
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
-      catch { case e: Throwable =>
+      catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // A failed query must leave NO output: in a reused outDir the
         // previous run's parquet would otherwise survive here and the

@@ -50,8 +50,10 @@ object Classifier {
     val spark = docs.sparkSession
     def toks(c: Column) = ColumnBridge.column(
       graft.functions.expressions.ShingleExpr(ColumnBridge.expression(c), 1))
+    // pmod: every real bucket is in [0, buckets), so the bias gradient's
+    // reserved key bkt = -1 can never collide with one.
     def bucket(t: Column): Column =
-      F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long") % buckets
+      F.pmod(F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long"), F.lit(buckets))
 
     // Distinct (doc, bucket) presence rows + the label, byKey so every
     // per-doc aggregation below runs exchange-free. The groupBy(id, bkt)

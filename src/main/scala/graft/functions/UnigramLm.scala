@@ -179,7 +179,12 @@ object UnigramLm {
     * join of two corpus-sized frames (2 exchanges + sorts) just to
     * reunite columns that were born on the same row. Carrying them costs
     * only the extra column's bytes (a 2-letter lang code) on the tok
-    * shuffle the pipeline already pays. */
+    * shuffle the pipeline already pays.
+    *
+    * Precondition: `idCol` is unique per document. The per-document fold
+    * groups by the id alone and keeps each carried column with FIRST, so
+    * two documents sharing an id would merge into one score and carry an
+    * arbitrary one of their values. */
   private[graft] def scoreCarrying(docs: DataFrame, idCol: String,
                                    textCol: String,
                                    carry: Seq[(String, Column)]): DataFrame = {

@@ -23,7 +23,7 @@ object ExplainAudit {
     names.foreach { n =>
       println(s"\n========== $n ==========")
       try SparkEntry.queries(n)(spark, sfDir).explain("formatted")
-      catch { case e: Throwable => println(s"EXPLAIN FAILED: ${e.getMessage}") }
+      catch { case scala.util.control.NonFatal(e) => println(s"EXPLAIN FAILED: ${e.getMessage}") }
     }
     spark.stop()
   }

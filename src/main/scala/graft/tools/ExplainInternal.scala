@@ -35,7 +35,7 @@ object ExplainInternal {
         val df = SparkEntry.queries(n)(spark, sfDir)
         println(s"---------- terminal ----------")
         df.explain("formatted")
-      } catch { case e: Throwable => println(s"EXPLAIN FAILED: ${e.getMessage}") }
+      } catch { case scala.util.control.NonFatal(e) => println(s"EXPLAIN FAILED: ${e.getMessage}") }
       finally graft.CacheScope.planRecorder = null
     }
     spark.stop()

@@ -31,7 +31,7 @@ object SubmitSmoke {
       "q_gopher_rules" -> (() => graft.SparkEntry.queries("q_gopher_rules")(spark, sfDir).count()))
     var ok = true
     checks.foreach { case (name, run) =>
-      val n = try run() catch { case e: Throwable =>
+      val n = try run() catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[submit-smoke] $name FAILED: $e"); ok = false; -1L }
       System.err.println(f"[submit-smoke] $name%-16s rows=$n")
       if (n <= 0) ok = false

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Bucketing
@@ -85,21 +85,19 @@ class BucketedJoinSpec extends AnyFunSuite with SparkFixture {
     } finally spark.sql("DROP TABLE IF EXISTS t_sig_idx3")
   }
 
-  test("incremental dedup: the appended index serves the NEXT shard") {
-    // Three shards arrive in sequence (doc_id mod 3). After indexInit(A)
-    // and incremental(B) — which appends B's signatures — shard C's probe
-    // must see BOTH A and B: its pair set equals the batch LSH pairs over
-    // the whole corpus restricted to pairs touching C. This is the
-    // contract that makes the index a continually-growing history rather
-    // than a one-shot snapshot.
+  /** Three shards arrive in sequence (doc_id mod 3): `build` indexes
+    * shard A, incremental(B) appends B's signatures, and shard C's probe
+    * must see BOTH A and B — its pair set equals the batch LSH pairs over
+    * the whole corpus restricted to pairs touching C. */
+  private def stagedAppendMatchesBatch(table: String)(build: DataFrame => Unit): Unit = {
     import graft.dedup.Dedup
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
     def shard(i: Int) = docs.filter(F.col("doc_id") % 3 === i)
-    spark.sql("DROP TABLE IF EXISTS t_sig_idx2")
+    spark.sql(s"DROP TABLE IF EXISTS $table")
     try {
-      Dedup.indexInit(shard(0), "t_sig_idx2")
-      Dedup.incremental(shard(1), "t_sig_idx2").count() // appends shard 1
-      val got = Dedup.incremental(shard(2), "t_sig_idx2", updateIndex = false)
+      build(shard(0))
+      Dedup.incremental(shard(1), table).count() // appends shard 1
+      val got = Dedup.incremental(shard(2), table, updateIndex = false)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val expected = Dedup.minhashCandidates(docs, knownDocCount = docs.count())
         .filter(F.col("doc_a") % 3 === 2 || F.col("doc_b") % 3 === 2)
@@ -107,7 +105,13 @@ class BucketedJoinSpec extends AnyFunSuite with SparkFixture {
       assert(got == expected,
         s"missing=${(expected -- got).take(5)} extra=${(got -- expected).take(5)}")
       assert(got.nonEmpty)
-    } finally spark.sql("DROP TABLE IF EXISTS t_sig_idx2")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("incremental dedup: the appended index serves the NEXT shard") {
+    // The contract that makes the index a continually-growing history
+    // rather than a one-shot snapshot.
+    stagedAppendMatchesBatch("t_sig_idx2")(graft.dedup.Dedup.indexInit(_, "t_sig_idx2"))
   }
 
   test("incremental dedup: re-probing after the shard's own append is result-identical") {
@@ -131,5 +135,28 @@ class BucketedJoinSpec extends AnyFunSuite with SparkFixture {
       assert(first == reprobe && first.nonEmpty,
         s"missing=${(first -- reprobe).take(5)} extra=${(reprobe -- first).take(5)}")
     } finally spark.sql("DROP TABLE IF EXISTS t_sig_idx4")
+  }
+
+  test("incremental dedup: the index is bucketed by the session's parallelism") {
+    import graft.dedup.Dedup
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val docs = spark.read.parquet(s"$sf001/documents.parquet")
+    spark.sql("DROP TABLE IF EXISTS t_sig_idx5")
+    try {
+      Dedup.indexInit(docs.filter(F.col("doc_id") % 2 === 0), "t_sig_idx5")
+      val spec = spark.sessionState.catalog.getTableMetadata(TableIdentifier("t_sig_idx5")).bucketSpec
+      assert(spec.map(_.numBuckets).contains(spark.sparkContext.defaultParallelism), s"bucketSpec=$spec")
+    } finally spark.sql("DROP TABLE IF EXISTS t_sig_idx5")
+  }
+
+  test("incremental dedup: an index built with another bucket count still appends and probes") {
+    // The bucket count is read from the table, not assumed: a 3-bucket
+    // index takes a shard's append (a fixed count would fail Spark's
+    // bucket-spec check) and serves the next shard's probe.
+    import graft.dedup.Dedup
+    stagedAppendMatchesBatch("t_sig_idx6") { docs =>
+      Bucketing.writeBucketedBy(Dedup.minhashSignaturesFromDocs(docs, "doc_id", "text", 3,
+        Dedup.DefaultBands), "t_sig_idx6", 3, Seq("band", "sig"))
+    }
   }
 }
