@@ -51,11 +51,11 @@ import org.apache.spark.storage.StorageLevel
   */
 object CacheScope {
 
-  /** Test-only plan recorder (ExplainAuditSpec, round 10): when non-null,
-    * receives (kind, formatted plan) for every index table at materialize
-    * time and for every scoped result BEFORE `localCheckpoint` replaces
-    * its plan with a checkpoint scan — the hook that lets CI audit the
-    * interesting INTERNAL plans the terminal frame no longer shows.
+  /** Plan recorder (ExplainAuditSpec and `graft.tools.ExplainAudit`): when
+    * non-null, receives (kind, formatted plan) for every index table at
+    * materialize time and for every scoped result BEFORE `localCheckpoint`
+    * replaces its plan with a checkpoint scan — the hook that shows the
+    * INTERNAL plans the terminal frame no longer shows.
     * Null in production: the only cost is one volatile read per
     * materialize/scoped call. */
   @volatile private[graft] var planRecorder: (String, String) => Unit = null

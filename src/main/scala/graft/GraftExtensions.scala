@@ -19,71 +19,52 @@ import graft.functions.expressions.{DotProductF, MinhashSigsExpr, ShingleExpr, S
   * expressions directly.
   */
 object GraftExtensions {
+
+  /** One graft SQL function: its name, the Catalyst expression class it
+    * builds (for the injector's `ExpressionInfo`) and its builder. */
+  private[graft] final case class SqlFunction(
+      name: String, cls: Class[_ <: Expression], build: Seq[Expression] => Expression)
+
+  /** The literal-argument check every builder shares: `e` must fold to a
+    * constant int, else the call fails with `msg`. */
+  private def lit(e: Expression, msg: String): Int =
+    if (e.foldable) e.eval().asInstanceOf[Number].intValue()
+    else throw new IllegalArgumentException(msg)
+
+  /** THE table of graft's SQL surface — read by [[registerAll]], the
+    * session-extension injector and `VectorFunctions.registerAll`. */
+  private[graft] val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_dot_f", classOf[DotProductF],
+      es => DotProductF(es.head, es(1))),
+    SqlFunction("graft_shingles", classOf[ShingleExpr],
+      es => ShingleExpr(es.head, lit(es(1), "graft_shingles(text, n): n must be a literal"))),
+    SqlFunction("graft_minhash_sigs", classOf[MinhashSigsExpr],
+      es => MinhashSigsExpr(es.head,
+        lit(es(1), "graft_minhash_sigs(shingles, bands): bands must be a literal"))),
+    SqlFunction("graft_simhash", classOf[SimhashExpr], es => SimhashExpr(es.head)),
+    SqlFunction("graft_token_tf", classOf[TokenTfExpr], es => TokenTfExpr(es.head)),
+    SqlFunction("graft_winnow", classOf[WinnowExpr], es => {
+      val msg = "graft_winnow(text, k, w): k and w must be literals"
+      WinnowExpr(es.head, lit(es(1), msg), lit(es(2), msg))
+    }))
+
   /** Runtime registration of the same SQL surface on an ALREADY-built
     * session (the extensions path only applies at session construction). */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def lit(e: Expression, what: String): Int = e match {
-      case f if f.foldable => f.eval().asInstanceOf[Number].intValue()
-      case _ => throw new IllegalArgumentException(s"$what must be a literal")
-    }
-    reg.createOrReplaceTempFunction(
-      "graft_dot_f", es => DotProductF(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_shingles", es => ShingleExpr(es.head, lit(es(1), "n")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_minhash_sigs", es => MinhashSigsExpr(es.head, lit(es(1), "bands")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_simhash", es => SimhashExpr(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_token_tf", es => TokenTfExpr(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_winnow", es => WinnowExpr(es.head, lit(es(1), "k"), lit(es(2), "w")), "built-in")
-  }
+  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
+    register(spark, functions)
+
+  private[graft] def register(spark: org.apache.spark.sql.SparkSession,
+                              fs: Seq[SqlFunction]): Unit =
+    fs.foreach(f => spark.sessionState.functionRegistry
+      .createOrReplaceTempFunction(f.name, f.build, "built-in"))
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.plans.RewriteDotProduct)
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot_f"),
-      new ExpressionInfo(classOf[DotProductF].getName, "graft_dot_f"),
-      (children: Seq[Expression]) => DotProductF(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShingleExpr].getName, "graft_shingles"),
-      (children: Seq[Expression]) => children(1) match {
-        case e if e.foldable =>
-          ShingleExpr(children.head, e.eval().asInstanceOf[Number].intValue())
-        case _ => throw new IllegalArgumentException("graft_shingles(text, n): n must be a literal")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash_sigs"),
-      new ExpressionInfo(classOf[MinhashSigsExpr].getName, "graft_minhash_sigs"),
-      (children: Seq[Expression]) => children(1) match {
-        case e if e.foldable =>
-          MinhashSigsExpr(children.head, e.eval().asInstanceOf[Number].intValue())
-        case _ => throw new IllegalArgumentException(
-          "graft_minhash_sigs(shingles, bands): bands must be a literal")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimhashExpr].getName, "graft_simhash"),
-      (children: Seq[Expression]) => SimhashExpr(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_token_tf"),
-      new ExpressionInfo(classOf[TokenTfExpr].getName, "graft_token_tf"),
-      (children: Seq[Expression]) => TokenTfExpr(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowExpr].getName, "graft_winnow"),
-      (children: Seq[Expression]) => (children(1), children(2)) match {
-        case (k, w) if k.foldable && w.foldable =>
-          WinnowExpr(children.head,
-            k.eval().asInstanceOf[Number].intValue(),
-            w.eval().asInstanceOf[Number].intValue())
-        case _ => throw new IllegalArgumentException(
-          "graft_winnow(text, k, w): k and w must be literals")
-      }))
+    GraftExtensions.functions.foreach { f =>
+      ext.injectFunction(
+        (FunctionIdentifier(f.name), new ExpressionInfo(f.cls.getName, f.name), f.build))
+    }
   }
 }

@@ -1447,7 +1447,7 @@ object SparkEntry {
   }
 
   /** Streaming CDC apply ([[graft.streaming.StreamingOps
-    * .cdcApplyStream]]): the SAME refetch/discover updates as
+    * .exactlyOnceParquetSink]]): the SAME refetch/discover updates as
     * [[qUpsert]], delivered as two real micro-batches through the
     * marker-gated append-only log, then served merge-on-read — the
     * streamed log ∪ base must equal the batch upsert, so the oracle is
@@ -1483,7 +1483,7 @@ object SparkEntry {
     val logDir = scratchCheckpoint("stream_upsert_log")
     val ckpt = scratchCheckpoint("stream_upsert")
     try {
-      graft.streaming.StreamingOps.cdcApplyStream(stream, logDir, ckpt)
+      graft.streaming.StreamingOps.exactlyOnceParquetSink(stream, logDir, ckpt)
         .awaitTermination()
       val batchDirs = new java.io.File(logDir).listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("batch="))
@@ -1915,7 +1915,7 @@ object SparkEntry {
     * cheap-to-duplicate) — inlined, the interpreted higher-order-function
     * lambda re-ran split(text) per LINE element, O(tokens²/8) per doc;
     * that interpreter tax, not any shuffle, was most of the r19
-    * q_dedup_lines/q_boilerplate wall (MicroLines: lines_explode 443 ms
+    * q_dedup_lines/q_boilerplate wall (lines_explode measured at 443 ms
     * of an 879 ms query at sf0.1). Values are identical either way. */
   private[graft] def synthDocs(df: DataFrame): DataFrame =
     df.withColumn("_toks", F.split(F.col("text"), " "))

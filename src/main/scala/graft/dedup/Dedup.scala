@@ -1032,8 +1032,8 @@ object Dedup {
   /** The exploded per-occurrence line stream with BOTH identity hashes —
     * shared by [[dedupLines]] and [[stripBoilerplate]]. NOT cached: the
     * explode subtree runs under both the aggregation and the join-back
-    * probe. MicroLines A/B'd the CacheScope variant — persist+count+
-    * checkpoint cost ~2× the recompute at every SF tried, and at 100 TB
+    * probe. An A/B of the CacheScope variant measured persist+count+
+    * checkpoint at ~2× the recompute at every SF tried, and at 100 TB
     * caching the exploded raw-line stream costs a corpus-sized write
     * where the recompute is a column-pruned scan. */
   private def hashedLines(docs: DataFrame, idCol: String,

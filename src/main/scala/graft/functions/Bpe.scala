@@ -205,7 +205,7 @@ object Bpe {
     // INTERNED symbol ids. Strings would make every pair-count update
     // re-hash two growing substrings; int ids make a pair a single long
     // key into an open-addressing primitive map (measured ~20x on an
-    // adversarial all-words-affected corpus, tools/MicroBpe).
+    // adversarial all-words-affected corpus).
     // State: per-word symbol-id arrays, exact pair counts (no deletion —
     // decremented-to-zero entries are simply ineligible), and an
     // APPEND-ONLY pair→word occurrence index validated lazily at merge
@@ -243,7 +243,7 @@ object Bpe {
     // others), so a re-segmented word's other pairs are already listed
     // from when they first appeared. Without this the index re-listed
     // every pair of every touched word per merge: 15M candidate visits
-    // for 1M real hits at 256 merges on the MicroBpe stress corpus.
+    // for 1M real hits at 256 merges on an adversarial stress corpus.
     // CREATED pairs of the current merge (every new adjacency involves
     // the merged symbol) are collected here and heap-armed ONCE per merge
     // at their exact post-merge count (r16 — the per-occurrence

@@ -63,7 +63,7 @@ object Dsir {
     // conv(substr(md5(g),1,8),16,10) % buckets Column chain (the oracle
     // still computes that form, so hash-exactness IS the equivalence
     // proof; codegen parity spec'd). Wall-neutral at bench scale
-    // (MicroDsir: the cost is the profile agg + scoring join constants,
+    // (measured: the cost is the profile agg + scoring join constants,
     // not per-gram scalars) — kept for the eliminated per-gram
     // string/hex allocations. Empty/token-less text yields an empty
     // array (null text → null) — explode drops both, matching the

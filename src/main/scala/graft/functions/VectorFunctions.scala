@@ -25,8 +25,8 @@ object VectorFunctions {
   /** Register the native dot as a SQL function (`graft_dot_f`) for
     * spark.sql users. Column-API callers go through [[dotF]] directly. */
   def registerAll(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot_f", exprs => DotProductF(exprs.head, exprs(1)), "built-in")
+    graft.GraftExtensions.register(spark,
+      graft.GraftExtensions.functions.filter(_.name == "graft_dot_f"))
 
   /** Native codegen dot product over array<float|double> columns. */
   def dotF(a: Column, b: Column): Column =

@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * 4 bytes read unsigned big-endian mod `buckets` — bit-identical to the
   * hex-conv convention the DuckDB oracle replays.
   *
-  * Measured honestly (tools/MicroDsir, r14): on WALL TIME this is a wash
+  * Measured honestly (r14): on WALL TIME this is a wash
   * with the codegen'd md5/conv Column chain at bench scale (261 vs
   * 223 ms for the 536k-gram stream — Spark's hex builtins are fast; the
   * operator's cost lives in the profile aggregation + scoring join

@@ -58,15 +58,6 @@ case class TokenTfExpr(child: Expression) extends UnaryExpression {
 
 object TokenTfExpr {
 
-  /** Eval-count probe (local mode shares the JVM): the fold must run once
-    * per DOCUMENT — tools/EvalCount detects per-output-row re-evaluation.
-    * LongAdder, not AtomicLong: 32 executor threads increment per document
-    * in the hot path, and a single CAS cache line is real cross-core
-    * contention in exactly the stage this expression was tuned for.
-    * (Executor-side statics never reach the driver on a real cluster —
-    * the probe is meaningful in local mode only, which is where it runs.) */
-  val evals = new java.util.concurrent.atomic.LongAdder
-
   // exactly RE2 \s = [ \t\n\f\r], the delimiter class of the oracle's
   // string_split_regex. NOT Java \s: Java adds \x0B (vertical tab), which
   // RE2 excludes -- a \x0B-bearing document would otherwise tokenize
@@ -77,7 +68,6 @@ object TokenTfExpr {
   /** The shared fold — called per DOCUMENT from both interpreted eval and
     * generated code. */
   def tokenTf(input: UTF8String): GenericArrayData = {
-    evals.increment()
     // Locale.ROOT, matching ShingleExpr and DuckDB's locale-independent
     // lower(): UTF8String.toLowerCase falls back to the JVM DEFAULT locale
     // for non-ASCII text, where e.g. tr-TR maps 'I' to dotless 'ı' and the

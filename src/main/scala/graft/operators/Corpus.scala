@@ -164,7 +164,7 @@ object Corpus {
   }
 
   /** CDC-log COMPACTION — the periodic maintenance step the
-    * [[graft.streaming.StreamingOps.cdcApplyStream]] merge-on-read story
+    * [[graft.streaming.StreamingOps.exactlyOnceParquetSink]] merge-on-read story
     * requires: materialize [[asOf]] at `version` through
     * [[optimizeLayout]]'s range-clustered writer to a NEW path
     * (single-writer build-verify-swap, the ivfRequantize lifecycle).

@@ -35,7 +35,7 @@ final case class FileSink(path: String, format: String = "parquet") extends Graf
   * manifest carrying an epoch id. A re-run with the same epoch is a no-op
   * (idempotent replay, the batch analogue of malstrom's snapshot-consistent
   * sink state); streaming gets the same property from `foreachBatch` +
-  * `batchId` (see graft.streaming.StreamingOps.exactlyOnceSink).
+  * `batchId` (see graft.streaming.StreamingOps.exactlyOnceParquetSink).
   */
 final case class StatefulParquetSink(path: String) extends GraftSink {
   // Manifest I/O through the Hadoop FS API so the commit lives NEXT TO the

@@ -11,8 +11,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   * publishes as it lands.
   *
   * Mechanics: [[sink]] is a foreachBatch body that stages each batch to
-  * `stageDir/batch=<id>` under the repo's idempotent per-batch marker
-  * contract (a replayed batch whose stage `_SUCCESS` exists is a no-op),
+  * `stageDir/batch=<id>` through [[StreamingOps.markerGated]], the repo's
+  * idempotent per-batch marker gate (a replayed batch whose stage
+  * `_SUCCESS` exists is a no-op),
   * then publishes immediately IF the gate is already open. [[open]]
   * flips the gate and publishes the backlog: for each staged batch
   * without a publish marker, data files copy first and `_SUCCESS` LAST —
@@ -35,10 +36,9 @@ final class SinkGate(stageDir: String, publishDir: String) {
 
   /** foreachBatch body: stage exactly-once, publish-through when open. */
   def sink: (DataFrame, Long) => Unit = { (batch: DataFrame, batchId: Long) =>
-    val target = s"$stageDir/batch=$batchId"
-    val (fs, done) = graft.HadoopFs.get(s"$target/_SUCCESS")
-    if (!fs.exists(done))
-      batch.write.mode(SaveMode.Overwrite).parquet(target)
+    StreamingOps.markerGated(stageDir) { (b, target) =>
+      b.write.mode(SaveMode.Overwrite).parquet(target)
+    }(batch, batchId)
     if (opened) publishBacklog()
   }
 

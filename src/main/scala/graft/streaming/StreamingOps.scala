@@ -84,30 +84,29 @@ object StreamingOps {
   /** Start a query with a durable checkpoint (snapshot backend analogue).
     * Killing the query and calling this again resumes from state. */
   def startWithCheckpoint(writer: DataStreamWriter[Row], checkpointDir: String): StreamingQuery =
-    writer
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    start(writer, checkpointDir, Trigger.AvailableNow())
 
-  /** Exactly-once file sink: foreachBatch + idempotent per-batch commit —
-    * replayed batch ids are skipped, matching sinks/stateful.rs semantics.
-    * The `_SUCCESS` probe resolves through the session's Hadoop FS
-    * ([[graft.HadoopFs]]): a java.io.File check on an hdfs://-or-s3a
-    * outDir answers against the driver's local disk, is always false,
-    * and would re-Overwrite every committed batch on replay — the exact
-    * idempotence this sink exists to provide. */
-  def exactlyOnceParquetSink(df: DataFrame, outDir: String, checkpointDir: String): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val target = s"$outDir/batch=$batchId"
-        val (fs, done) = graft.HadoopFs.get(s"$target/_SUCCESS")
-        if (!fs.exists(done)) { // replay of a committed batch → no-op
-          batch.write.mode(SaveMode.Overwrite).parquet(target)
-        }
-      }
-      .start()
+  private def start(writer: DataStreamWriter[Row], checkpointDir: String,
+                    trigger: Trigger): StreamingQuery =
+    writer.option("checkpointLocation", checkpointDir).trigger(trigger).start()
+
+  /** Exactly-once parquet sink: each micro-batch lands as ONE segment
+    * `outDir/batch=<id>` through [[markerGated]], so a replayed batch
+    * whose `_SUCCESS` committed is a no-op — sinks/stateful.rs semantics.
+    *
+    * It is also the living-corpus CDC APPLY path ([[graft.operators
+    * .Corpus]]'s streaming half): fed version-stamped update rows, the
+    * segments form an append-only log and the SERVING view is
+    * merge-on-read (latest-wins [[graft.operators.Corpus.upsert]] /
+    * time-travel [[graft.operators.Corpus.asOf]] over base ∪ log). No
+    * table rewrite per batch — at 100 TB the corpus never moves, only
+    * the log grows (and a periodic compaction materializes asOf +
+    * [[graft.operators.Corpus.optimizeLayout]], the lakehouse shape). */
+  def exactlyOnceParquetSink(df: DataFrame, outDir: String, checkpointDir: String,
+                             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    start(df.writeStream.foreachBatch(markerGated(outDir) { (batch, target) =>
+      batch.write.mode(SaveMode.Overwrite).parquet(target)
+    }), checkpointDir, trigger)
 
   /** Streaming INCREMENTAL cross-shard dedup — the living-corpus ingest
     * that unites the streaming dedup gates with the persisted index
@@ -136,36 +135,12 @@ object StreamingOps {
                              outDir: String, checkpointDir: String,
                              idCol: String = "doc_id",
                              textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(markerGated(outDir) { (batch, target) =>
-        val pairs = graft.dedup.Dedup.incremental(
-          batch.select(batch(idCol), batch(textCol)),
-          indexTable, idCol, textCol)
-        pairs.write.mode(SaveMode.Overwrite).parquet(target)
-      })
-      .start()
-
-  /** Streaming CDC APPLY — the living-corpus WRITE path ([[graft.operators
-    * .Corpus]]'s missing streaming half): each micro-batch of
-    * version-stamped update rows lands as ONE append-only log segment,
-    * marker-gated so a replayed batch is a no-op; the SERVING view is
-    * merge-on-read (latest-wins [[graft.operators.Corpus.upsert]] /
-    * time-travel [[graft.operators.Corpus.asOf]] over base ∪ log). No
-    * table rewrite per batch — at 100 TB the corpus never moves, only
-    * the log grows (and a periodic compaction materializes asOf +
-    * [[graft.operators.Corpus.optimizeLayout]], the lakehouse shape). */
-  def cdcApplyStream(updates: DataFrame, outDir: String,
-                     checkpointDir: String,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    updates.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(markerGated(outDir) { (batch, target) =>
-        batch.write.mode(SaveMode.Overwrite).parquet(target)
-      })
-      .start()
+    startWithCheckpoint(docs.writeStream.foreachBatch(markerGated(outDir) { (batch, target) =>
+      val pairs = graft.dedup.Dedup.incremental(
+        batch.select(batch(idCol), batch(textCol)),
+        indexTable, idCol, textCol)
+      pairs.write.mode(SaveMode.Overwrite).parquet(target)
+    }), checkpointDir)
 
   /** Streaming IVF index ingest — the vector analogue of
     * [[incrementalDedupStream]]: each micro-batch of new embeddings is
@@ -190,30 +165,14 @@ object StreamingOps {
                       outDir: String, checkpointDir: String,
                       idCol: String = "vec_id",
                       embCol: String = "embedding"): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(markerGatedId(outDir) { (batch, target, batchId) =>
-        val prelist = s"$outDir/prelist_batch=$batchId"
+    startWithCheckpoint(vectors.writeStream.foreachBatch(ledgerGated(outDir) {
+      (batch, target, prelist) =>
         graft.ann.Ann.ivfIndexAppend(
           batch.select(batch(idCol), batch(embCol)), indexPath,
           prelistDir = Some(prelist))
         batch.select(batch(idCol))
           .write.mode(SaveMode.Overwrite).parquet(target)
-        // The ledger is SINGLE-USE: once the commit marker above exists,
-        // markerGated can never re-enter this batch, so the prelist is
-        // dead weight — and a STALE committed ledger is dangerous (a
-        // batch-id collision after a checkpoint reset would treat the
-        // old listing as this batch's pre-state and delete every file
-        // appended since — review r15). Delete it now; a crash between
-        // the marker and this delete leaves a harmless orphan that is
-        // never read again (the marker gates the only reader). This
-        // also bounds ledger storage at O(1) instead of one full index
-        // listing per batch over the stream's lifetime.
-        val (fs, p) = graft.HadoopFs.get(prelist)
-        fs.delete(p, true); ()
-      })
-      .start()
+    }), checkpointDir)
 
   /** Streaming INCREMENTAL SEMANTIC dedup — [[incrementalDedupStream]]'s
     * vector twin over the frozen-quantizer index (r20, row 221's
@@ -234,43 +193,60 @@ object StreamingOps {
                           idCol: String = "vec_id",
                           embCol: String = "embedding",
                           tau: Double = 0.4): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(markerGatedId(outDir) { (batch, target, batchId) =>
-        val prelist = s"$outDir/prelist_batch=$batchId"
+    startWithCheckpoint(vectors.writeStream.foreachBatch(ledgerGated(outDir) {
+      (batch, target, prelist) =>
         val b = batch.select(batch(idCol), batch(embCol))
         graft.ann.Ann.ivfIndexAppend(b, indexPath, idCol, embCol,
           prelistDir = Some(prelist))
         graft.ann.Ann.semanticIncremental(
             batch.sparkSession, indexPath, b, idCol, embCol, tau)
           .write.mode(SaveMode.Overwrite).parquet(target)
-        // single-use ledger, same rationale as ivfIngestStream
-        val (fs, p) = graft.HadoopFs.get(prelist)
-        fs.delete(p, true); ()
-      })
-      .start()
+    }), checkpointDir)
 
-  /** The ONE per-batch replay gate both ingest streams share (review r14:
-    * three hand-rolled copies drift): run `action(batch, targetDir)` only
-    * when `outDir/batch=<id>/_SUCCESS` is absent — a replayed batch whose
-    * marker committed is a full no-op. The action must END by writing
-    * `targetDir` (whose _SUCCESS is the commit marker); anything it does
-    * BEFORE that write is at-least-once under a crash and must be
-    * value-safe or reader-deduplicated (see the two call sites). */
-  private def markerGated(outDir: String)(
-      action: (DataFrame, String) => Unit): (DataFrame, Long) => Unit =
-    markerGatedId(outDir)((batch, target, _) => action(batch, target))
-
-  /** [[markerGated]] with the batch id exposed — for actions that keep
-    * per-batch side state OUTSIDE the target dir (the ivf prelist
-    * ledger, which the target's own overwrite must not delete). */
-  private def markerGatedId(outDir: String)(
-      action: (DataFrame, String, Long) => Unit): (DataFrame, Long) => Unit = {
+  /** The ONE per-batch replay gate every marker-committed sink shares
+    * (review r14: hand-rolled copies drift): run `action(batch, targetDir)`
+    * only when `outDir/batch=<id>/_SUCCESS` is absent — a replayed batch
+    * whose marker committed is a full no-op. The probe resolves through
+    * the session's Hadoop FS ([[graft.HadoopFs]]): a java.io.File check on
+    * an hdfs://-or-s3a outDir answers against the driver's local disk, is
+    * always false, and would re-Overwrite every committed batch on replay.
+    * The action must END by writing `targetDir` (whose _SUCCESS is the
+    * commit marker); anything it does BEFORE that write is at-least-once
+    * under a crash and must be value-safe or reader-deduplicated (see the
+    * call sites). */
+  private[streaming] def markerGated(outDir: String)(
+      action: (DataFrame, String) => Unit): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
       val target = s"$outDir/batch=$batchId"
       val (fs, done) = graft.HadoopFs.get(s"$target/_SUCCESS")
-      if (!fs.exists(done)) action(batch, target, batchId)
+      if (!fs.exists(done)) action(batch, target)
+  }
+
+  /** [[markerGated]] plus the batch's prelist reconciliation ledger
+    * `outDir/prelist_batch=<id>` — OUTSIDE the target dir, so the
+    * target's own overwrite cannot delete it — passed to
+    * `action(batch, targetDir, prelistDir)` for
+    * [[graft.ann.Ann.ivfIndexAppend]].
+    *
+    * The ledger is SINGLE-USE: once the commit marker exists, markerGated
+    * can never re-enter this batch, so the prelist is dead weight — and a
+    * STALE committed ledger is dangerous (a batch-id collision after a
+    * checkpoint reset would treat the old listing as this batch's
+    * pre-state and delete every file appended since — review r15). It is
+    * deleted right after the action; a crash between the marker and the
+    * delete leaves a harmless orphan that is never read again (the marker
+    * gates the only reader). This also bounds ledger storage at O(1)
+    * instead of one full index listing per batch over the stream's
+    * lifetime. */
+  private def ledgerGated(outDir: String)(
+      action: (DataFrame, String, String) => Unit): (DataFrame, Long) => Unit = {
+    (batch: DataFrame, batchId: Long) =>
+      val prelist = s"$outDir/prelist_batch=$batchId"
+      markerGated(outDir) { (b, target) =>
+        action(b, target, prelist)
+        val (fs, p) = graft.HadoopFs.get(prelist)
+        fs.delete(p, true); ()
+      }(batch, batchId)
   }
 
   /** STREAMING KMV bottom-k maintenance — the quantile-sketch face of the

@@ -2,11 +2,18 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{CacheScope, SparkEntry}
 
 /** Prints formatted physical plans for selected queries — the audit loop
-  * for pushdown (PushedFilters/ReadSchema), broadcast joins, and
-  * whole-stage codegen coverage. Usage:
+  * for pushdown (PushedFilters/ReadSchema), broadcast joins, exchanges and
+  * whole-stage codegen coverage. For each query it first prints the
+  * INTERNAL plans recorded through `CacheScope.planRecorder` while the
+  * query is built (every `materialize` input and every `scoped` result,
+  * the same hook ExplainAuditSpec audits through), then the terminal
+  * plan. The terminal frame of a scoped operator is a checkpoint scan
+  * (`Scan ExistingRDD`), so only the recorded frames show where its
+  * exchanges are; a query with no CacheScope frame prints the terminal
+  * plan alone. Usage:
   *   runMain graft.tools.ExplainAudit <sfDir> [query ...]
   */
 object ExplainAudit {
@@ -22,8 +29,18 @@ object ExplainAudit {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      try SparkEntry.queries(n)(spark, sfDir).explain("formatted")
-      catch { case scala.util.control.NonFatal(e) => println(s"EXPLAIN FAILED: ${e.getMessage}") }
+      var i = 0
+      CacheScope.planRecorder = (kind, plan) => {
+        i += 1
+        println(s"---------- frame $i [$kind] ----------")
+        println(plan)
+      }
+      try {
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        if (i > 0) println("---------- terminal ----------")
+        df.explain("formatted")
+      } catch { case scala.util.control.NonFatal(e) => println(s"EXPLAIN FAILED: ${e.getMessage}") }
+      finally CacheScope.planRecorder = null
     }
     spark.stop()
   }

@@ -13,6 +13,40 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
     new GraftExtensions().apply(new SparkSessionExtensions) // builder wiring
   }
 
+  test("GraftExtensions' injected functions resolve and evaluate") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, Literal, Size}
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType}
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val reg = org.apache.spark.sql.InjectedFunctions.registry(ext)
+    val names = Seq("graft_dot_f", "graft_shingles", "graft_minhash_sigs",
+      "graft_simhash", "graft_token_tf", "graft_winnow")
+    assert(reg.listFunction().map(_.funcName).toSet == names.toSet)
+    def call(name: String, args: Expression*): Expression =
+      reg.lookupFunction(FunctionIdentifier(name), args)
+    def floats(xs: Float*): Literal =
+      Literal(new GenericArrayData(xs.toArray[Any]), ArrayType(FloatType, containsNull = false))
+    assert(call("graft_dot_f", floats(1.5f, 2.0f), floats(2.0f, 3.0f)).eval() == 1.5 * 2.0 + 2.0 * 3.0)
+    val sh = call("graft_shingles", Literal("a b c d"), Literal(3))
+    assert(Size(sh).eval() == 2)  // 4 tokens, 3-shingles -> 2
+    assert(Size(call("graft_minhash_sigs", sh, Literal(8))).eval() == 8)  // one per band
+    assert(call("graft_simhash", Literal("hello world")).eval() != null)
+    val tf = call("graft_token_tf", Literal("x y x")).eval().asInstanceOf[ArrayData]
+    val tfMap = (0 until tf.numElements()).map { i =>
+      val r = tf.getStruct(i, 2)
+      r.getUTF8String(0).toString -> r.getLong(1)
+    }.toMap
+    assert(tfMap == Map("x" -> 2L, "y" -> 1L))
+    assert(Size(call("graft_winnow", Literal("abcdefghijklmnopqrstuvwxyz"), Literal(4), Literal(5)))
+      .eval().asInstanceOf[Int] > 0)
+    // the literal check names the offending argument
+    val col = AttributeReference("n", IntegerType)()
+    val e = intercept[IllegalArgumentException](call("graft_winnow", Literal("abc"), col, Literal(5)))
+    assert(e.getMessage == "graft_winnow(text, k, w): k and w must be literals")
+  }
+
   test("RewriteDotProduct turns the portable HOF pattern into DotProductF") {
     import org.apache.spark.sql.{functions => F}
     import spark.implicits._

@@ -376,7 +376,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       // ProcessingTime(0): the memory-stream driver feeds batches one at
       // a time (the gate's file source uses AvailableNow +
       // maxFilesPerTrigger for the same one-segment-per-batch effect)
-      val q = graft.streaming.StreamingOps.cdcApplyStream(
+      val q = graft.streaming.StreamingOps.exactlyOnceParquetSink(
         input.toDS().toDF("doc_id", "text", "version"), logDir, ckpt,
         trigger = Trigger.ProcessingTime(0))
       input.addData(upd1: _*); q.processAllAvailable()
