@@ -586,7 +586,7 @@ object OracleSql {
   }
 
   /** Portable double-precision cosine between two FLOAT lists (left fold,
-    * mirrors VectorFunctions.cosine). */
+    * mirrors Ann's `dotF(a, b) / (‖a‖ · ‖b‖)`). */
   private def cosSql(a: String, b: String): String = {
     def dot(x: String, y: String) =
       s"list_sum(list_transform(list_zip($x, $y), s -> CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE)))"

@@ -2854,7 +2854,7 @@ object SparkEntry {
 
   private def qAnnBrute(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
-    Ann.bruteTopK(emb, emb.filter(F.col("vec_id") < 20), k = 5, native = true)
+    Ann.bruteTopK(emb, emb.filter(F.col("vec_id") < 20), k = 5)
   }
 
   /** MMR diverse selection ([[graft.ann.Ann.mmrSelect]]): greedy
@@ -2862,7 +2862,7 @@ object SparkEntry {
     * diversity-aware example curation plain top-k can't do. */
   private def qAnnMmr(s: SparkSession, dir: String): DataFrame =
     Ann.mmrSelect(T(s, dir, "embeddings"), queryId = 0L,
-      poolSize = 64, k = 8, lambda = 0.7, native = true)
+      poolSize = 64, k = 8, lambda = 0.7)
 
   /** PCA whitening ([[graft.ann.Whitening]]): fit on a bounded
     * md5-uniform sample ([[graft.ann.Whitening.fitSampled]] — the 100 TB

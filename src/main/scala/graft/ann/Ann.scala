@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 
 import graft.functions.VectorFunctions
+import graft.functions.VectorFunctions.dotF
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -20,11 +21,16 @@ import graft.functions.VectorFunctions
   *    see VectorFunctions.lshSignature) → candidates share a bucket →
   *    rerank within bucket. Probes only matching buckets; recall is
   *    measured against [[bruteTopK]] in AnnSpec.
+  *
+  * Every score runs on one kernel per shape: pairwise dots and norms on
+  * [[graft.functions.VectorFunctions.dotF]] (DotProductF), centroid
+  * scores on [[graft.functions.expressions.CentroidScoresExpr]]. Both
+  * return the same double as the portable reference fold
+  * ([[graft.functions.VectorFunctions.dot]], the oracle's formulation),
+  * and NULL wherever it does: a null embedding, a length mismatch, a
+  * null element.
   */
 object Ann {
-
-  private def dotX(a: Column, b: Column, native: Boolean): Column =
-    if (native) VectorFunctions.dotF(a, b) else VectorFunctions.dot(a, b)
 
   /** Re-key `idCol` densely as 0..N−1 in ascending order of the original
     * ids — the pre-densification [[trainCentroids]]' dense-id precondition
@@ -61,10 +67,9 @@ object Ann {
     * ONCE per side (not per pair) — bit-identical to the per-pair
     * formulation (`sqrt(q·q) * sqrt(c·c)` in the same operand order). */
   private def pairs(corpus: DataFrame, queries: DataFrame, idCol: String, embCol: String,
-                    native: Boolean, excludeSelf: Boolean = true): DataFrame = {
-    def nrm(e: Column) = F.sqrt(dotX(e, e, native))
+                    excludeSelf: Boolean = true): DataFrame = {
     val q = queries.select(F.col(idCol).as("query_id"), F.col(embCol).as("q_emb"),
-      nrm(F.col(embCol)).as("q_norm"))
+      normCol(F.col(embCol)).as("q_norm"))
     // excludeSelf only makes sense when corpus and queries draw ids from
     // ONE id space (self-retrieval suppression: bruteTopK, minePairs, the
     // mmrSelect pool). Cross-TABLE comparisons (eval-set decontamination)
@@ -74,19 +79,19 @@ object Ann {
     val cond = if (excludeSelf) F.col("neighbor_id") =!= F.col("query_id") else F.lit(true)
     corpus
       .select(F.col(idCol).as("neighbor_id"), F.col(embCol).as("c_emb"),
-        nrm(F.col(embCol)).as("c_norm"))
+        normCol(F.col(embCol)).as("c_norm"))
       .join(F.broadcast(q), cond)
       .select(
         F.col("query_id"), F.col("neighbor_id"),
-        F.round(dotX(F.col("q_emb"), F.col("c_emb"), native) /
+        F.round(dotF(F.col("q_emb"), F.col("c_emb")) /
           (F.col("q_norm") * F.col("c_norm")), 6).as("cosine"))
   }
 
   /** Exact top-k via a rank window (the simple, oracle-matching form). */
   def bruteTopK(corpus: DataFrame, queries: DataFrame, idCol: String = "vec_id",
-                embCol: String = "embedding", k: Int = 5, native: Boolean = false): DataFrame = {
+                embCol: String = "embedding", k: Int = 5): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc, F.col("neighbor_id").asc)
-    pairs(corpus, queries, idCol, embCol, native)
+    pairs(corpus, queries, idCol, embCol)
       .withColumn("rank", F.row_number().over(w))
       .filter(F.col("rank") <= k)
       .select(F.col("query_id"), F.col("rank").cast("long").as("rnk"),
@@ -120,8 +125,8 @@ object Ann {
     * selection order; the first pick scores against ms = 0. */
   def mmrSelect(corpus: DataFrame, idCol: String = "vec_id",
                 embCol: String = "embedding", queryId: Long = 0L,
-                poolSize: Int = 64, k: Int = 8, lambda: Double = 0.7,
-                native: Boolean = false): DataFrame = graft.CacheScope.scoped {
+                poolSize: Int = 64, k: Int = 8,
+                lambda: Double = 0.7): DataFrame = graft.CacheScope.scoped {
     require(k >= 1 && poolSize >= k, s"need 1 <= k <= poolSize, got k=$k pool=$poolSize")
     // poolSize² sims reach the driver: 1024² = 1M doubles = 8 MB in the
     // flat array below. The earlier 4096 cap allowed 16.7M TUPLE-KEYED
@@ -132,11 +137,11 @@ object Ann {
     val spark = corpus.sparkSession
     val query = corpus.filter(F.col(idCol) === queryId)
     val rel = graft.CacheScope.materialize(
-      bruteTopK(corpus, query, idCol, embCol, k = poolSize, native = native)
+      bruteTopK(corpus, query, idCol, embCol, k = poolSize)
         .select(F.col("neighbor_id").as("id"), F.col("cosine").as("rel")))
     val poolVecs = corpus.join(F.broadcast(rel.select(F.col("id"))),
       corpus(idCol) === F.col("id")).drop("id")
-    val sims = pairs(poolVecs, poolVecs, idCol, embCol, native)
+    val sims = pairs(poolVecs, poolVecs, idCol, embCol)
     val relArr = rel.collect().map(r => r.getLong(0) -> r.getDouble(1))
     // sims in a FLAT primitive array indexed by pool-local position
     // (idxA * n + idxB): no boxing, no tuple keys — 8 bytes per entry,
@@ -189,8 +194,8 @@ object Ann {
     * mined pairs hash-exact. */
   def minePairs(corpus: DataFrame, anchors: DataFrame, idCol: String = "vec_id",
                 embCol: String = "embedding", tPos: Double = 0.4,
-                nNeg: Int = 4, native: Boolean = true): DataFrame = {
-    val p = pairs(corpus, anchors, idCol, embCol, native)
+                nNeg: Int = 4): DataFrame = {
+    val p = pairs(corpus, anchors, idCol, embCol)
     val pos = p.filter(F.col("cosine") >= tPos)
       .select(F.col("query_id").as("anchor_id"),
         F.col("neighbor_id").as("cand_id"), F.col("cosine"),
@@ -228,14 +233,13 @@ object Ann {
   def semanticDecontaminate(corpus: DataFrame, evalSet: DataFrame,
                             idCol: String = "vec_id",
                             embCol: String = "embedding",
-                            tau: Double = 0.2,
-                            native: Boolean = true): DataFrame = {
+                            tau: Double = 0.2): DataFrame = {
     // excludeSelf = false: eval ids and corpus ids are DIFFERENT id
     // spaces — every corpus × eval pair is compared, including id-equal
     // ones (the likeliest exact-copy leak shares content AND often id
     // provenance; round-19 ADVICE found the old shared-pairs() path
     // silently skipped those comparisons).
-    val p = pairs(corpus, evalSet, idCol, embCol, native, excludeSelf = false)
+    val p = pairs(corpus, evalSet, idCol, embCol, excludeSelf = false)
     val w = Window.partitionBy("neighbor_id")
       .orderBy(F.col("cosine").desc, F.col("query_id").asc)
     p.withColumn("rn", F.row_number().over(w))
@@ -283,16 +287,15 @@ object Ann {
     * doubles are hash-exact. */
   def marginMine(a: DataFrame, b: DataFrame, idCol: String = "vec_id",
                  embCol: String = "embedding", k: Int = 8,
-                 threshold: Double = 1.05, native: Boolean = true): DataFrame = {
-    def nrm(e: Column) = F.sqrt(dotX(e, e, native))
+                 threshold: Double = 1.05): DataFrame = {
     val q = a.select(F.col(idCol).as("src_id"), F.col(embCol).as("q_emb"),
-      nrm(F.col(embCol)).as("q_norm"))
+      normCol(F.col(embCol)).as("q_norm"))
     val scored = b
       .select(F.col(idCol).as("tgt_id"), F.col(embCol).as("c_emb"),
-        nrm(F.col(embCol)).as("c_norm"))
+        normCol(F.col(embCol)).as("c_norm"))
       .join(F.broadcast(q))
       .select(F.col("src_id"), F.col("tgt_id"),
-        F.round(dotX(F.col("q_emb"), F.col("c_emb"), native) /
+        F.round(dotF(F.col("q_emb"), F.col("c_emb")) /
           (F.col("q_norm") * F.col("c_norm")), 6).as("cosine"))
     val wX = Window.partitionBy("src_id").orderBy(F.col("cosine").desc, F.col("tgt_id").asc)
     val wY = Window.partitionBy("tgt_id").orderBy(F.col("cosine").desc, F.col("src_id").asc)
@@ -317,9 +320,9 @@ object Ann {
     * partition per query reach the shuffle. Identical output to
     * [[bruteTopK]] (same deterministic sort key). */
   def bruteTopKPartial(corpus: DataFrame, queries: DataFrame, idCol: String = "vec_id",
-                       embCol: String = "embedding", k: Int = 5, native: Boolean = true): DataFrame = {
+                       embCol: String = "embedding", k: Int = 5): DataFrame = {
     val agg = new TopKAgg(k).toColumn.name("topk")
-    val p = pairs(corpus, queries, idCol, embCol, native)
+    val p = pairs(corpus, queries, idCol, embCol)
       .select(
         F.col("query_id").cast("long").as("_1"),
         F.struct(
@@ -349,7 +352,7 @@ object Ann {
     * then queries × rerank). */
   def jlTopK(corpus: DataFrame, queries: DataFrame, idCol: String = "vec_id",
              embCol: String = "embedding", k: Int = 5, rerank: Int = 100,
-             jlK: Int = 16, dim: Int = 64, native: Boolean = true): DataFrame = {
+             jlK: Int = 16, dim: Int = 64): DataFrame = {
     require(rerank >= k, s"rerank must be >= k, got $rerank < $k")
     // The TRUTH metric is cosine, so the coarse ranking must live on the
     // unit sphere: project the raw vector, then scale by 1/‖e‖
@@ -358,7 +361,7 @@ object Ann {
     // ranks by magnitude as much as by angle and the shortlist misses
     // true cosine neighbors (measured recall 0.48 → 0.9+ normalized).
     val proj = (e: Column) => {
-      val nrmE = F.sqrt(dotX(e, e, native))
+      val nrmE = normCol(e)
       F.transform(VectorFunctions.jlProject(e, jlK, dim), v => v / nrmE)
     }
     val c = corpus.select(F.col(idCol).as("neighbor_id"),
@@ -377,13 +380,12 @@ object Ann {
         F.col("q_emb"), F.col("c_emb"), jd.as("jl_d2"))
       .withColumn("_jr", F.row_number().over(wJl))
       .filter(F.col("_jr") <= rerank)
-    def nrm(e: Column) = F.sqrt(dotX(e, e, native))
     val w = Window.partitionBy("query_id")
       .orderBy(F.col("cosine").desc, F.col("neighbor_id").asc)
     cand
       .select(F.col("query_id"), F.col("neighbor_id"),
-        F.round(dotX(F.col("q_emb"), F.col("c_emb"), native) /
-          (nrm(F.col("q_emb")) * nrm(F.col("c_emb"))), 6).as("cosine"))
+        F.round(dotF(F.col("q_emb"), F.col("c_emb")) /
+          (normCol(F.col("q_emb")) * normCol(F.col("c_emb"))), 6).as("cosine"))
       .withColumn("rank", F.row_number().over(w))
       .filter(F.col("rank") <= k)
       .select(F.col("query_id"), F.col("rank").cast("long").as("rnk"),
@@ -401,8 +403,7 @@ object Ann {
     * deterministic, so shortlist AND rerank replay in the oracle. */
   def signHammingTopK(corpus: DataFrame, queries: DataFrame,
                       idCol: String = "vec_id", embCol: String = "embedding",
-                      k: Int = 5, rerank: Int = 64,
-                      native: Boolean = true): DataFrame = {
+                      k: Int = 5, rerank: Int = 64): DataFrame = {
     require(rerank >= k, s"rerank must be >= k, got $rerank < $k")
     val c = corpus.select(F.col(idCol).as("neighbor_id"), F.col(embCol).as("c_emb"))
     val q = queries.select(F.col(idCol).as("query_id"), F.col(embCol).as("q_emb"))
@@ -417,13 +418,12 @@ object Ann {
         F.col("q_emb"), F.col("c_emb"), ham.as("hamming"))
       .withColumn("_hr", F.row_number().over(wH))
       .filter(F.col("_hr") <= rerank)
-    def nrm(e: Column) = F.sqrt(dotX(e, e, native))
     val w = Window.partitionBy("query_id")
       .orderBy(F.col("cosine").desc, F.col("neighbor_id").asc)
     cand
       .select(F.col("query_id"), F.col("neighbor_id"),
-        F.round(dotX(F.col("q_emb"), F.col("c_emb"), native) /
-          (nrm(F.col("q_emb")) * nrm(F.col("c_emb"))), 6).as("cosine"))
+        F.round(dotF(F.col("q_emb"), F.col("c_emb")) /
+          (normCol(F.col("q_emb")) * normCol(F.col("c_emb"))), 6).as("cosine"))
       .withColumn("rank", F.row_number().over(w))
       .filter(F.col("rank") <= k)
       .select(F.col("query_id"), F.col("rank").cast("long").as("rnk"),
@@ -437,7 +437,7 @@ object Ann {
     * `tables × |corpus|` slim rows — never all-pairs, never wide rows. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String = "vec_id",
               embCol: String = "embedding", k: Int = 5, bits: Int = 8,
-              tables: Int = 4, dim: Int = 64, native: Boolean = true): DataFrame = {
+              tables: Int = 4, dim: Int = 64): DataFrame = {
     val sigs = (e: Column) => VectorFunctions.lshTableSignatures(e, bits, tables, dim)
     val cs = corpus.select(
       F.col(idCol).as("neighbor_id"),
@@ -449,15 +449,14 @@ object Ann {
       .filter(F.col("neighbor_id") =!= F.col("query_id"))
       .select("query_id", "neighbor_id")
       .distinct()
-    def nrm(e: Column) = F.sqrt(dotX(e, e, native))
     val w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc, F.col("neighbor_id").asc)
     cand
       .join(corpus.select(F.col(idCol).as("neighbor_id"), F.col(embCol).as("c_emb"),
-        nrm(F.col(embCol)).as("c_norm")), Seq("neighbor_id"))
+        normCol(F.col(embCol)).as("c_norm")), Seq("neighbor_id"))
       .join(F.broadcast(queries.select(F.col(idCol).as("query_id"), F.col(embCol).as("q_emb"),
-        nrm(F.col(embCol)).as("q_norm"))), Seq("query_id"))
+        normCol(F.col(embCol)).as("q_norm"))), Seq("query_id"))
       .select(F.col("query_id"), F.col("neighbor_id"),
-        F.round(dotX(F.col("q_emb"), F.col("c_emb"), native) /
+        F.round(dotF(F.col("q_emb"), F.col("c_emb")) /
           (F.col("q_norm") * F.col("c_norm")), 6).as("cosine"))
       .withColumn("rank", F.row_number().over(w))
       .filter(F.col("rank") <= k)
@@ -593,26 +592,17 @@ object Ann {
     * inside ONE native [[graft.functions.expressions.CentroidScoresExpr]]
     * (reference-object matrix + pre-compiled loop — see its scaladoc for
     * why this beats `cells` inlined literal dots) — still a
-    * broadcast-constant scan, no join, no shuffle. `native=false` keeps
-    * the portable literal composition for the HOF parity tests. */
-  private def centroidScores(centroids: Array[(Int, Seq[Double])], e: Column,
-                             native: Boolean): Column =
-    if (native)
-      org.apache.spark.sql.graftbridge.ColumnBridge.column(
-        graft.functions.expressions.CentroidScoresExpr(
-          org.apache.spark.sql.graftbridge.ColumnBridge.expression(e),
-          centroids.map(_._2.toArray)))
-    else
-      F.array(centroids.toIndexedSeq.map { case (_, c) =>
-        val c2 = c.map(x => x * x).sum
-        dotX(e, F.typedlit(c), native) * 2.0 - F.lit(c2)
-      }: _*)
+    * broadcast-constant scan, no join, no shuffle. */
+  private def centroidScores(centroids: Array[(Int, Seq[Double])], e: Column): Column =
+    org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      graft.functions.expressions.CentroidScoresExpr(
+        org.apache.spark.sql.graftbridge.ColumnBridge.expression(e),
+        centroids.map(_._2.toArray)))
 
   /** Nearest-centroid id; first max ⇔ lowest id on ties, matching the
     * oracle's `ORDER BY sc DESC, cid ASC`. */
-  private def nearestCentroid(centroids: Array[(Int, Seq[Double])], e: Column,
-                              native: Boolean): Column = {
-    val sc = centroidScores(centroids, e, native)
+  private def nearestCentroid(centroids: Array[(Int, Seq[Double])], e: Column): Column = {
+    val sc = centroidScores(centroids, e)
     (F.array_position(sc, F.array_max(sc)) - 1L).cast("int")
   }
 
@@ -625,8 +615,8 @@ object Ann {
     * products per row. Output: (idCol, cluster_id). */
   def clusterKmeans(corpus: DataFrame, idCol: String = "vec_id",
                     embCol: String = "embedding", clusters: Int = 16,
-                    native: Boolean = true, sampleN: Int = 512,
-                    iters: Int = 2, carry: Seq[String] = Nil): DataFrame = {
+                    sampleN: Int = 512, iters: Int = 2,
+                    carry: Seq[String] = Nil): DataFrame = {
     val centroids: Array[(Int, Seq[Double])] =
       trainCentroids(corpus, idCol, embCol, clusters, sampleN, iters)
         .zipWithIndex.map { case (c, i) => (i, c.toSeq) }
@@ -635,7 +625,7 @@ object Ann {
     // than forcing callers into a corpus self-join to get them back.
     graft.Spread(corpus)
       .select(F.col(idCol) +: carry.map(F.col) :+
-        nearestCentroid(centroids, F.col(embCol), native).as("cluster_id"): _*)
+        nearestCentroid(centroids, F.col(embCol)).as("cluster_id"): _*)
   }
 
   /** Embedding-space OOD screen: cluster-relative robust outliers —
@@ -656,16 +646,15 @@ object Ann {
   def embeddingOutliers(corpus: DataFrame, idCol: String = "vec_id",
                         embCol: String = "embedding", clusters: Int = 16,
                         sampleN: Int = 512, iters: Int = 2,
-                        native: Boolean = true,
                         cutoff: Double = 3.5): DataFrame = {
     val centroids: Array[(Int, Seq[Double])] =
       trainCentroids(corpus, idCol, embCol, clusters, sampleN, iters)
         .zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-    val sc = centroidScores(centroids, F.col(embCol), native)
+    val sc = centroidScores(centroids, F.col(embCol))
     val assigned = graft.Spread(corpus).select(
       F.col(idCol),
       (F.array_position(sc, F.array_max(sc)) - 1L).cast("int").as("cluster_id"),
-      (dotX(F.col(embCol), F.col(embCol), native) - F.array_max(sc)).as("d2"))
+      (dotF(F.col(embCol), F.col(embCol)) - F.array_max(sc)).as("d2"))
     graft.operators.Profile.robustOutliers(
       assigned, groupCol = "cluster_id", valueCol = "d2",
       idCol = idCol, cutoff = cutoff)
@@ -692,8 +681,7 @@ object Ann {
   def prunePrototypes(corpus: DataFrame, idCol: String = "vec_id",
                       embCol: String = "embedding", clusters: Int = 16,
                       keepFraction: Double = 0.5, hardest: Boolean = true,
-                      native: Boolean = true, sampleN: Int = 512,
-                      iters: Int = 2,
+                      sampleN: Int = 512, iters: Int = 2,
                       uniformSample: Boolean = false): DataFrame = {
     require(keepFraction > 0.0 && keepFraction <= 1.0,
       s"keepFraction must be in (0, 1], got $keepFraction")
@@ -707,7 +695,7 @@ object Ann {
     val centroids: Array[(Int, Seq[Double])] =
       trainCentroidsFromSample(sample, clusters, iters)
         .zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-    val scores = centroidScores(centroids, F.col(embCol), native)
+    val scores = centroidScores(centroids, F.col(embCol))
     val scored = graft.Spread(corpus)
       .select(F.col(idCol), scores.as("_scs"))
       .select(F.col(idCol),
@@ -797,12 +785,11 @@ object Ann {
     * read order. */
   def orderInContext(corpus: DataFrame, idCol: String = "vec_id",
                      embCol: String = "embedding", clusters: Int = 16,
-                     native: Boolean = true, sampleN: Int = 512,
-                     iters: Int = 2): DataFrame = {
+                     sampleN: Int = 512, iters: Int = 2): DataFrame = {
     val centroids: Array[(Int, Seq[Double])] =
       trainCentroids(corpus, idCol, embCol, clusters, sampleN, iters)
         .zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-    val scores = centroidScores(centroids, F.col(embCol), native)
+    val scores = centroidScores(centroids, F.col(embCol))
     val scored = graft.Spread(corpus)
       .select(F.col(idCol), scores.as("_scs"))
       .select(F.col(idCol),
@@ -822,8 +809,8 @@ object Ann {
   // reverse would tie-break HIGHEST-id and could probe a different cell
   // set than the one a tied corpus vector was assigned to.
   private def probeCellsCol(centroids: Array[(Int, Seq[Double])], e: Column,
-                            probes: Int, native: Boolean): Column = {
-    val sc = centroidScores(centroids, e, native)
+                            probes: Int): Column = {
+    val sc = centroidScores(centroids, e)
     val zipped = F.zip_with(
       sc, F.sequence(F.lit(0), F.lit(centroids.length - 1)),
       (s, i) => F.struct(s.as("s"), (-i).as("ni")))
@@ -832,12 +819,12 @@ object Ann {
       p => -p.getField("ni"))
   }
 
-  /** Per-side norm column: sqrt of the self-dot, computed ONCE per row in
-    * the side's own projection (below the join) — the scoring tail then
-    * does a single dot per candidate pair instead of three. Bit-identical
-    * to the former per-pair formulation: same ops, same operand order. */
-  private[ann] def normCol(e: Column, native: Boolean): Column =
-    F.sqrt(dotX(e, e, native))
+  /** Norm column: sqrt of the self-dot. Placed in a side's own
+    * projection (below the join) it is computed ONCE per row, and the
+    * scoring tail does a single dot per candidate pair instead of three —
+    * bit-identical to the per-pair formulation (same ops, same operand
+    * order). */
+  private[ann] def normCol(e: Column): Column = F.sqrt(dotF(e, e))
 
   /** The shared IVF scoring tail: cell-equi-join the corpus side against
     * the broadcast probe set, exact cosine, per-query top-k — ONE
@@ -846,13 +833,12 @@ object Ann {
     * arrive with their norm precomputed (`c_norm` / `q_norm`, via
     * [[normCol]]): the projections sit below the join, so each norm is
     * one dot per ROW, not one per candidate pair. */
-  private def ivfScore(c: DataFrame, q: DataFrame, k: Int,
-                       native: Boolean): DataFrame = {
+  private def ivfScore(c: DataFrame, q: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc, F.col("neighbor_id").asc)
     c.join(F.broadcast(q), Seq("cell"))
       .filter(F.col("neighbor_id") =!= F.col("query_id"))
       .select(F.col("query_id"), F.col("neighbor_id"),
-        F.round(dotX(F.col("q_emb"), F.col("c_emb"), native) /
+        F.round(dotF(F.col("q_emb"), F.col("c_emb")) /
           (F.col("q_norm") * F.col("c_norm")), 6).as("cosine"))
       .withColumn("rank", F.row_number().over(w))
       .filter(F.col("rank") <= k)
@@ -862,8 +848,8 @@ object Ann {
 
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String = "vec_id",
               embCol: String = "embedding", k: Int = 5, cells: Int = 16,
-              probes: Int = 4, native: Boolean = true,
-              sampleN: Int = 512, iters: Int = 2): DataFrame = {
+              probes: Int = 4, sampleN: Int = 512,
+              iters: Int = 2): DataFrame = {
     val centroids: Array[(Int, Seq[Double])] =
       trainCentroids(corpus, idCol, embCol, cells, sampleN, iters)
         .zipWithIndex.map { case (c, i) => (i, c.toSeq) }
@@ -872,12 +858,12 @@ object Ann {
     // round 9); a no-op at scale where splits >> cores.
     val c = graft.Spread(corpus)
       .select(F.col(idCol).as("neighbor_id"), F.col(embCol).as("c_emb"),
-        normCol(F.col(embCol), native).as("c_norm"),
-        nearestCentroid(centroids, F.col(embCol), native).as("cell"))
+        normCol(F.col(embCol)).as("c_norm"),
+        nearestCentroid(centroids, F.col(embCol)).as("cell"))
     val q = queries.select(F.col(idCol).as("query_id"), F.col(embCol).as("q_emb"),
-      normCol(F.col(embCol), native).as("q_norm"),
-      F.explode(probeCellsCol(centroids, F.col(embCol), probes, native)).as("cell"))
-    ivfScore(c, q, k, native)
+      normCol(F.col(embCol)).as("q_norm"),
+      F.explode(probeCellsCol(centroids, F.col(embCol), probes)).as("cell"))
+    ivfScore(c, q, k)
   }
 
   /** PERSIST an IVF index: train the coarse quantizer, assign every
@@ -889,12 +875,11 @@ object Ann {
     * of the index per query batch, not a full scan. */
   def ivfIndexInit(corpus: DataFrame, path: String, idCol: String = "vec_id",
                    embCol: String = "embedding", cells: Int = 16,
-                   sampleN: Int = 512, iters: Int = 2,
-                   native: Boolean = true): Unit = {
+                   sampleN: Int = 512, iters: Int = 2): Unit = {
     val centroids: Array[(Int, Seq[Double])] =
       trainCentroids(corpus, idCol, embCol, cells, sampleN, iters)
         .zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-    writeIndex(corpus, centroids, path, idCol, embCol, native)
+    writeIndex(corpus, centroids, path, idCol, embCol)
   }
 
   /** The shared index writer (init and [[ivfRequantize]]/[[ivfReindex]]):
@@ -908,22 +893,21 @@ object Ann {
     * tasks / ~50 files for a 6-cell probe at sf0.1. At real scale the
     * files-per-cell lever is this same repartition with a finer key. */
   private def writeIndex(corpus: DataFrame, centroids: Array[(Int, Seq[Double])],
-                         path: String, idCol: String, embCol: String,
-                         native: Boolean): Unit = {
+                         path: String, idCol: String, embCol: String): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
     centroids.toSeq.toDF("cid", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(path + "_centroids")
     graft.Spread(corpus)
       .select(F.col(idCol), F.col(embCol),
-        nearestCentroid(centroids, F.col(embCol), native).as("cell"))
+        nearestCentroid(centroids, F.col(embCol)).as("cell"))
       .repartition(F.col("cell"))
       .write.partitionBy("cell").mode("overwrite").parquet(path)
     // training-time per-cell snapshot (occupancy + mean assignment
     // score): the drift probe's reference. A separate tiny agg pass so
     // the index data schema stays (id, emb, cell) — serving reads are
     // untouched and the snapshot is one (cells)-row table.
-    cellStats(corpus, centroids, embCol, native)
+    cellStats(corpus, centroids, embCol)
       .withColumnRenamed("n_vectors", "n_init")
       .withColumnRenamed("mean_score", "mean_score_init")
       .coalesce(1).write.mode("overwrite").parquet(path + "_stats")
@@ -933,9 +917,9 @@ object Ann {
     * quantizer's own objective) of `corpus` under `centroids` — the
     * health summary of a coarse quantizer over a data distribution. */
   private def cellStats(corpus: DataFrame, centroids: Array[(Int, Seq[Double])],
-                        embCol: String, native: Boolean): DataFrame =
+                        embCol: String): DataFrame =
     graft.Spread(corpus)
-      .select(centroidScores(centroids, F.col(embCol), native).as("_scs"))
+      .select(centroidScores(centroids, F.col(embCol)).as("_scs"))
       .select(
         (F.array_position(F.col("_scs"), F.array_max(F.col("_scs"))) - 1L)
           .cast("int").as("cell"),
@@ -958,8 +942,7 @@ object Ann {
     * mean_score_init, score_drop); cells absent from one side read 0/null
     * (a cell newly crowded from emptiness is exactly the signal). */
   def ivfDriftReport(spark: org.apache.spark.sql.SparkSession, path: String,
-                     embCol: String = "embedding",
-                     native: Boolean = true): DataFrame = {
+                     embCol: String = "embedding"): DataFrame = {
     val stamp = centroidStamp(path)
     val centroids = loadCentroids(spark, path, stamp)
     val cur = spark.read.schema(indexSchema(spark, path, stamp)).parquet(path)
@@ -967,7 +950,7 @@ object Ann {
     // (assignment is persisted — no re-argmax needed)
     val now = cur
       .select(F.col("cell"),
-        F.element_at(centroidScores(centroids, F.col(embCol), native),
+        F.element_at(centroidScores(centroids, F.col(embCol)),
           F.col("cell") + 1).as("_sc"))
       .groupBy(F.col("cell"))
       .agg(F.count(F.lit(1)).as("n_now"), F.avg(F.col("_sc")).as("mean_score_now"))
@@ -992,13 +975,12 @@ object Ann {
     * to); this rule samples old and new content uniformly. */
   def ivfReindex(corpus: DataFrame, outPath: String, idCol: String = "vec_id",
                  embCol: String = "embedding", cells: Int = 16,
-                 sampleN: Int = 512, iters: Int = 2,
-                 native: Boolean = true): Unit = {
+                 sampleN: Int = 512, iters: Int = 2): Unit = {
     val sample = collectUniformSample(corpus, idCol, embCol, sampleN, cells)
     val centroids: Array[(Int, Seq[Double])] =
       trainCentroidsFromSample(sample, cells, iters)
         .zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-    writeIndex(corpus, centroids, outPath, idCol, embCol, native)
+    writeIndex(corpus, centroids, outPath, idCol, embCol)
   }
 
   /** [[ivfReindex]]'s md5-uniform bounded training collect, shared by
@@ -1037,12 +1019,11 @@ object Ann {
   def ivfRequantize(spark: org.apache.spark.sql.SparkSession, path: String,
                     outPath: String, idCol: String = "vec_id",
                     embCol: String = "embedding", cells: Int = 16,
-                    sampleN: Int = 512, iters: Int = 2,
-                    native: Boolean = true): Unit = {
+                    sampleN: Int = 512, iters: Int = 2): Unit = {
     val stamp = centroidStamp(path)
     val content = spark.read.schema(indexSchema(spark, path, stamp)).parquet(path)
       .select(F.col(idCol), F.col(embCol))
-    ivfReindex(content, outPath, idCol, embCol, cells, sampleN, iters, native)
+    ivfReindex(content, outPath, idCol, embCol, cells, sampleN, iters)
   }
 
   /** Driver-side quantizer cache for the serving/ingest loop: one entry
@@ -1144,7 +1125,6 @@ object Ann {
     * the stale listing. */
   def ivfIndexAppend(newVectors: DataFrame, path: String,
                      idCol: String = "vec_id", embCol: String = "embedding",
-                     native: Boolean = true,
                      prelistDir: Option[String] = None): Unit = {
     val spark = newVectors.sparkSession
     prelistDir.foreach { dir =>
@@ -1176,7 +1156,7 @@ object Ann {
     // (upstream task x cell).
     graft.Spread(newVectors)
       .select(F.col(idCol), F.col(embCol),
-        nearestCentroid(centroids, F.col(embCol), native).as("cell"))
+        nearestCentroid(centroids, F.col(embCol)).as("cell"))
       .repartition(F.col("cell"))
       .write.partitionBy("cell").mode("append").parquet(path)
   }
@@ -1206,18 +1186,18 @@ object Ann {
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
                      queries: DataFrame, idCol: String = "vec_id",
                      embCol: String = "embedding", k: Int = 5,
-                     probes: Int = 4, native: Boolean = true): DataFrame = {
+                     probes: Int = 4): DataFrame = {
     // ONE stamp listing per serve, shared by both caches (each computing
     // its own would be two object-store round-trips — review r15)
     val stamp = centroidStamp(path)
     val centroids = loadCentroids(spark, path, stamp)
     val q = queries.select(F.col(idCol).as("query_id"), F.col(embCol).as("q_emb"),
-      normCol(F.col(embCol), native).as("q_norm"),
-      F.explode(probeCellsCol(centroids, F.col(embCol), probes, native)).as("cell"))
+      normCol(F.col(embCol)).as("q_norm"),
+      F.explode(probeCellsCol(centroids, F.col(embCol), probes)).as("cell"))
     val c = spark.read.schema(indexSchema(spark, path, stamp)).parquet(path)
       .select(F.col(idCol).as("neighbor_id"), F.col(embCol).as("c_emb"),
-        normCol(F.col(embCol), native).as("c_norm"), F.col("cell"))
-    ivfScore(c, q, k, native)
+        normCol(F.col(embCol)).as("c_norm"), F.col("cell"))
+    ivfScore(c, q, k)
   }
 
   /** INCREMENTAL semantic dedup — the SemDeDup pair scan composed with
@@ -1248,23 +1228,17 @@ object Ann {
     * exclusion every within-shard pair would double as a cross pair). */
   def semanticIncremental(spark: org.apache.spark.sql.SparkSession, path: String,
                           shard: DataFrame, idCol: String = "vec_id",
-                          embCol: String = "embedding", tau: Double = 0.4,
-                          native: Boolean = true): DataFrame = {
-    import graft.functions.VectorFunctions
+                          embCol: String = "embedding",
+                          tau: Double = 0.4): DataFrame = {
     val stamp = centroidStamp(path)
     val centroids = loadCentroids(spark, path, stamp)
     val sh = graft.Spread(shard).select(
       F.col(idCol).as("ia"), F.col(embCol).as("e_a"),
-      nearestCentroid(centroids, F.col(embCol), native).as("cell"))
+      nearestCentroid(centroids, F.col(embCol)).as("cell"))
     val hist = spark.read.schema(indexSchema(spark, path, stamp)).parquet(path)
       .select(F.col(idCol).as("ib"), F.col(embCol).as("e_b"), F.col("cell"))
       .join(F.broadcast(shard.select(F.col(idCol).as("ib")).distinct()),
         Seq("ib"), "left_anti")
-    // dotX, not a hardcoded dotF: every Ann entry point dispatches the
-    // cosine through the native flag (ADVICE r20 — native=false callers
-    // silently got the native path here; both gate callers pass true,
-    // so results are unchanged)
-    def nrm(e: Column) = F.sqrt(dotX(e, e, native))
     def scored(pairs: DataFrame): DataFrame =
       pairs.select(
         F.least(F.col("ia"), F.col("ib")).as("vec_a"),
@@ -1273,8 +1247,8 @@ object Ann {
         // dot/norm orientation-safe: per-term products commute and the
         // accumulation order is the dim order either way, so the pair's
         // rounded cosine is identical however least/greatest landed
-        F.round(dotX(F.col("e_a"), F.col("e_b"), native) /
-          (nrm(F.col("e_a")) * nrm(F.col("e_b"))), 6).as("cosine"))
+        F.round(dotF(F.col("e_a"), F.col("e_b")) /
+          (normCol(F.col("e_a")) * normCol(F.col("e_b"))), 6).as("cosine"))
         .filter(F.col("cosine") >= tau)
     val cross = sh.join(hist, Seq("cell"))
     val within = sh.join(

@@ -1,6 +1,6 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -89,8 +89,6 @@ object Pq {
       .orderBy(F.col("adc").desc, F.col("neighbor_id").asc)
     val wCos = Window.partitionBy("query_id")
       .orderBy(F.col("cosine").desc, F.col("neighbor_id").asc)
-    def dot(a: Column, b: Column) = graft.functions.VectorFunctions.dotF(a, b)
-    def nrm(e: Column) = F.sqrt(dot(e, e))
     // First stage carries (query_id, neighbor_id, adc) ONLY: the window
     // exchange over |corpus| x |queries| candidate rows must ship ~24
     // bytes/row, not two full embeddings — "scores codes, not vectors" has
@@ -108,8 +106,8 @@ object Pq {
       .join(F.broadcast(survivors), Seq("neighbor_id"))
       .join(F.broadcast(q), Seq("query_id"))
       .select(F.col("query_id"), F.col("neighbor_id"),
-        F.round(dot(F.col("q_emb"), F.col("c_emb")) /
-          (nrm(F.col("q_emb")) * nrm(F.col("c_emb"))), 6).as("cosine"))
+        F.round(graft.functions.VectorFunctions.dotF(F.col("q_emb"), F.col("c_emb")) /
+          (Ann.normCol(F.col("q_emb")) * Ann.normCol(F.col("c_emb"))), 6).as("cosine"))
       .withColumn("rank", F.row_number().over(wCos))
       .filter(F.col("rank") <= k)
       .select(F.col("query_id"), F.col("rank").cast("long").as("rnk"),

@@ -1431,11 +1431,11 @@ object Dedup {
     * constant-bounded per cell at any corpus size. Never all-pairs. */
   def semantic(corpus: DataFrame, idCol: String = "vec_id",
                embCol: String = "embedding", clusters: Int = 16,
-               tau: Double = 0.4, native: Boolean = true): DataFrame = graft.CacheScope.scoped {
+               tau: Double = 0.4): DataFrame = graft.CacheScope.scoped {
     import graft.functions.VectorFunctions
     val assigned = materialize(
       graft.ann.Ann.clusterKmeans(corpus, idCol, embCol, clusters,
-        native = native, carry = Seq(embCol)))
+        carry = Seq(embCol)))
     val a = assigned.select(F.col("cluster_id"), F.col(idCol).as("va"), F.col(embCol).as("e_a"))
     val b = assigned.select(F.col("cluster_id"), F.col(idCol).as("vb"), F.col(embCol).as("e_b"))
     def nrm(e: Column) = F.sqrt(VectorFunctions.dotF(e, e))

@@ -291,19 +291,15 @@ object Bpe {
 
     var merges = Vector.empty[(String, String)]
     var continue = true
-    val dbg = java.lang.Boolean.getBoolean("graft.bpe.debug")
-    var tArgmax = 0L; var tApply = 0L; var nCand = 0L; var nHit = 0L
     // parallel-apply scratch: a visit stamp dedups the append-only
     // candidate list before sharding (two threads must never rewrite the
     // same word); allocated once, O(1) amortized per merge
     val stamp = new Array[Int](words.length)
     java.util.Arrays.fill(stamp, -1)
-    var nParallel = 0L
     while (continue && merges.length < numMerges) {
       // global argmax with the total-order tie-break (count DESC, l ASC,
       // r ASC in UTF-8 byte order) — iteration order of the map cannot
       // influence the winner.
-      val t0 = if (dbg) System.nanoTime() else 0L
       // pop the live argmax: discard/re-push stale (overestimated)
       // entries until the top matches its live count
       var bestK = -1L
@@ -313,8 +309,6 @@ object Bpe {
         if (cur == hn) bestK = hk
         else if (cur >= 2L) heap.push(cur, hk)
       }
-      if (dbg) tArgmax += System.nanoTime() - t0
-      val t1 = if (dbg) System.nanoTime() else 0L
       if (bestK < 0) continue = false
       else {
         val l = (bestK >>> 32).toInt; val r = bestK.toInt
@@ -324,10 +318,8 @@ object Bpe {
           val lst = pairWords.getOrNull(bestK).asInstanceOf[IntList]
           if (lst == null) Array.empty[Int] else lst.toArray
         }
-        if (dbg) nCand += candidates.length
         if (applyParallelism > 1 && candidates.length >= parallelThreshold) {
           // ---- parallel apply (adversarial-fan merges only) ----
-          nParallel += 1
           val round = merges.length - 1 // unique, monotone per merge
           val dd = new IntList
           var ci = 0
@@ -353,7 +345,6 @@ object Bpe {
                 if (old(j) == l && old(j + 1) == r) hit = true; j += 1
               }
               if (hit) {
-                sh.nHit += 1
                 val n = wn(idx)
                 var i = 0
                 while (i < old.length - 1) {
@@ -392,7 +383,6 @@ object Bpe {
           var c2 = 0
           while (c2 < nChunks) {
             val sh = shards(c2)
-            if (dbg) nHit += sh.nHit
             sh.delta.foreach { (k, d) => if (d != 0L) pairCount.add(k, d) }
             var e = 0
             while (e < sh.entryKeys.length) {
@@ -421,7 +411,6 @@ object Bpe {
               if (old(j) == l && old(j + 1) == r) hit = true; j += 1
             }
             if (hit) {
-              if (dbg) nHit += 1
               val n = wn(idx)
               // retract the old adjacency counts (index stays append-only)
               dropPairs(old, n)
@@ -449,11 +438,8 @@ object Bpe {
           }
           createdScratch.clear()
         }
-        if (dbg) tApply += System.nanoTime() - t1
       }
     }
-    if (dbg) System.err.println(
-      f"[bpe-debug] merges=${merges.length} argmax=${tArgmax / 1e9}%.2fs apply=${tApply / 1e9}%.2fs cand=$nCand hit=$nHit syms=${symStr.length} parallelMerges=$nParallel")
     merges
   }
 
@@ -526,12 +512,11 @@ object Bpe {
   }
 
   /** Per-thread scratch of the parallel merge application: a local count
-    * delta (merged order-free), per-occurrence index entries, hit tally. */
+    * delta (merged order-free) and per-occurrence index entries. */
   private final class ApplyShard {
     val delta = new LongLongCounter(1 << 8)
     val entryKeys = new LongList
     val entryIdxs = new IntList
-    var nHit = 0L
   }
 
   /** Open-addressing long→long counter (linear probing, power-of-2

@@ -11,14 +11,13 @@ import graft.functions.expressions.DotProductF
 
 /** Vector (embedding) Column functions for similarity search.
   *
-  * Two tiers:
-  *  - portable formulations built from higher-order functions
-  *    (`zip_with` + `aggregate`) — exact left-fold in double precision,
-  *    reproducible by any engine (the oracle's formulation);
-  *  - [[dotF]], a native codegen Catalyst expression ([[DotProductF]]),
-  *    the hot path for ANN/LSH at scale.
-  * Both produce bit-identical doubles (same accumulation order), so they
-  * are interchangeable without breaking oracle hash equality.
+  * One dot product kernel, [[dotF]] (the native codegen
+  * [[DotProductF]]), carries every ANN / LSH / JL score. [[dot]] is the
+  * portable reference fold (`zip_with` + `aggregate`, exact left fold in
+  * double precision — the oracle's formulation): tests compare the
+  * kernel against it, and it is the pattern
+  * [[graft.plans.RewriteDotProduct]] turns into the kernel. The two
+  * return the same double, or NULL, on every input.
   */
 object VectorFunctions {
 
@@ -33,22 +32,12 @@ object VectorFunctions {
     ColumnBridge.column(
       DotProductF(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** Portable dot product: left fold in double precision. */
+  /** Portable reference dot product: left fold in double precision. */
   def dot(a: Column, b: Column): Column =
     F.aggregate(
       F.zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       F.lit(0.0),
       (acc, v) => acc + v)
-
-  /** L2 norm. */
-  def norm(a: Column): Column = F.sqrt(dot(a, a))
-
-  /** Cosine similarity in double precision (portable formulation). */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** Cosine via the native dot (bit-identical to [[cosine]], faster). */
-  def cosineF(a: Column, b: Column): Column =
-    dotF(a, b) / (F.sqrt(dotF(a, a)) * F.sqrt(dotF(b, b)))
 
   /** Nibble value (0-15) of a single lowercase hex character column. */
   def hexNibble(c: Column): Column = {

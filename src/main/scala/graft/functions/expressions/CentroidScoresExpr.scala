@@ -27,10 +27,9 @@ import org.apache.spark.sql.types._
   * construction time, and the combine is `acc * 2.0 − c2` — identical
   * ops in identical order.
   *
-  * A dimension-mismatched embedding yields NULL (the literal form
-  * produced an all-null array — both collapse to a null cell downstream
-  * and the row drops out of the cell join; this form is the cleaner
-  * contract and is documented at the call sites).
+  * A dimension-mismatched embedding and an embedding with a null
+  * element both yield NULL, like a null embedding: the row gets a null
+  * cell downstream and drops out of the cell join.
   *
   * Reference semantics: the IVF coarse-quantizer scoring of
   * graft.ann.Ann (see SURVEY §2 rows 44/84/115); scale shape unchanged —
@@ -91,11 +90,15 @@ object CentroidScoresExpr {
       if (v.numElements() != dim) return null
       // Widen the row ONCE: float→double is exact, and reading a local
       // double array inside the per-cell loop beats `cells` virtual
-      // ArrayData accessor calls per element.
+      // ArrayData accessor calls per element. A null element ends the
+      // pass with NULL (its slot would otherwise read as 0.0).
       val x = new Array[Double](dim)
       var i = 0
-      if (floatElems) while (i < dim) { x(i) = v.getFloat(i).toDouble; i += 1 }
-      else while (i < dim) { x(i) = v.getDouble(i); i += 1 }
+      while (i < dim) {
+        if (v.isNullAt(i)) return null
+        x(i) = if (floatElems) v.getFloat(i).toDouble else v.getDouble(i)
+        i += 1
+      }
       val out = new Array[Double](centroids.length)
       var j = 0
       while (j < centroids.length) {

@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Native codegen dot product over two numeric array columns
-  * (`array<float>` or `array<double>` on either side).
+  * (`array<float>` or `array<double>` on either side) — the one dot
+  * product kernel of the ANN pack.
   *
   * This is the (b)-tier extension point from the build brief: a custom
   * Catalyst `Expression` with `doGenCode`, which beats both a Scala UDF
@@ -16,9 +17,17 @@ import org.apache.spark.sql.types._
   * interpretation). Accumulates left-to-right in double precision —
   * bit-identical to the sequential fold an oracle computes.
   *
-  * Used by the ANN operators (graft.ann) for the 100 TB hot path; the
-  * array<double> side also carries plan-time constant weight vectors
-  * (LSH hyperplanes), so signature computation is pure codegen arithmetic.
+  * It returns what that fold returns on EVERY input: NULL for a null
+  * array, for a length mismatch (zip_with null-pads the shorter side)
+  * and for a null element on either side (the null product poisons the
+  * fold). Parquet embeddings load as `array<float>` with
+  * `containsNull = true`, so the element check is part of the kernel,
+  * not a caller precondition; it is emitted only for a side whose type
+  * can hold a null element.
+  *
+  * Used by the ANN operators (graft.ann); the array<double> side also
+  * carries plan-time constant weight vectors (LSH hyperplanes), so
+  * signature computation is pure codegen arithmetic.
   */
 case class DotProductF(left: Expression, right: Expression) extends BinaryExpression {
 
@@ -38,26 +47,27 @@ case class DotProductF(left: Expression, right: Expression) extends BinaryExpres
         s"graft_dot_f requires array<float|double> inputs, got (${left.dataType}, ${right.dataType})")
     }
 
+  private def mayHoldNull(e: Expression): Boolean = e.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _                          => false
+  }
+
   @inline private def get(a: ArrayData, i: Int, t: DataType): Double = t match {
     case FloatType => a.getFloat(i).toDouble
     case _         => a.getDouble(i)
   }
 
-  /** Length mismatch yields NULL — matching the portable
-    * `aggregate(zip_with(a,b,·*·), …)` formulation, where zip_with
-    * null-pads the shorter array and the fold propagates the null.
-    * Null ELEMENTS are the caller's responsibility (the optimizer rewrite
-    * only fires on containsNull=false inputs; direct dotF callers pass
-    * non-null embedding arrays). */
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
     if (a.numElements() != b.numElements()) return null
     val (ta, tb) = (elemType(left).get, elemType(right).get)
+    val (na, nb) = (mayHoldNull(left), mayHoldNull(right))
     val n = a.numElements()
     var acc = 0.0
     var i = 0
     while (i < n) {
+      if ((na && a.isNullAt(i)) || (nb && b.isNullAt(i))) return null
       acc += get(a, i, ta) * get(b, i, tb)
       i += 1
     }
@@ -75,6 +85,11 @@ case class DotProductF(left: Expression, right: Expression) extends BinaryExpres
       val i = ctx.freshName("i")
       val acc = ctx.freshName("acc")
       val (ta, tb) = (elemType(left).get, elemType(right).get)
+      val nullElem = Seq(a -> mayHoldNull(left), b -> mayHoldNull(right))
+        .collect { case (v, true) => s"$v.isNullAt($i)" }
+      val elemCheck =
+        if (nullElem.isEmpty) ""
+        else s"if (${nullElem.mkString(" || ")}) { ${ev.isNull} = true; break; }"
       s"""
          |if ($a.numElements() != $b.numElements()) {
          |  ${ev.isNull} = true;
@@ -82,6 +97,7 @@ case class DotProductF(left: Expression, right: Expression) extends BinaryExpres
          |  int $n = $a.numElements();
          |  double $acc = 0.0;
          |  for (int $i = 0; $i < $n; $i++) {
+         |    $elemCheck
          |    $acc += ${accessor(a, i, ta)} * ${accessor(b, i, tb)};
          |  }
          |  ${ev.value} = $acc;

@@ -13,9 +13,12 @@ import graft.functions.expressions.DotProductF
   *
   * into the native codegen [[DotProductF]]. The two formulations are
   * bit-identical (same left-fold accumulation order in double precision) —
-  * see DedupAnnSpec — so the rewrite is a pure performance transformation:
-  * it removes per-element lambda interpretation and the intermediate
-  * zipped array, keeping the expression inside whole-stage codegen.
+  * see DedupAnnSpec — and return NULL on the same inputs (a null array, a
+  * length mismatch, a null element), so the rewrite is a pure performance
+  * transformation on any float/double array, whatever its element
+  * nullability: it removes per-element lambda interpretation and the
+  * intermediate zipped array, keeping the expression inside whole-stage
+  * codegen.
   *
   * This is the (c)-tier extension point from the build brief: a
   * `Rule[LogicalPlan]` registered through [[graft.GraftExtensions]]
@@ -24,13 +27,8 @@ import graft.functions.expressions.DotProductF
   */
 object RewriteDotProduct extends Rule[LogicalPlan] {
 
-  /** The rewrite only fires on arrays that PROVABLY contain no null
-    * elements: zip_with yields a null product slot for a null element and
-    * the fold propagates it to a NULL result, while DotProductF reads the
-    * slot as garbage. Length mismatch is handled (DotProductF returns NULL
-    * like the null-padded fold), so only element nullability gates here. */
   private def isNumericArray(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, false) | ArrayType(DoubleType, false) => true
+    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
     case _ => false
   }
 

@@ -25,8 +25,10 @@ object ExplainAudit {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      // applied as the context starts, so its own start-up INFO lines are
+      // quiet too (setLogLevel after getOrCreate comes too late for them)
+      .config("spark.log.level", "ERROR")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       var i = 0

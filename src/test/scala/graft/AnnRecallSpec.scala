@@ -27,7 +27,7 @@ class AnnRecallSpec extends AnyFunSuite with SparkFixture {
   private def truthAt(k: Int): Map[Long, Set[Long]] = {
     val emb = spark.read.parquet(s"$sf01/embeddings.parquet")
     val q = emb.filter(F.col("vec_id") < 20)
-    Ann.bruteTopK(emb, q, k = k, native = true).collect()
+    Ann.bruteTopK(emb, q, k = k).collect()
       .map(r => (r.getLong(0), r.getLong(2)))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
   }
@@ -68,7 +68,7 @@ class AnnRecallSpec extends AnyFunSuite with SparkFixture {
     assert(recall >= 0.7,
       f"sign-Hamming recall@10 dropped to $recall%.3f — sign fold or shortlist regressed")
     // reranked cosines are EXACT (same check as the JL gate)
-    val bruteCos = Ann.bruteTopK(emb, q, k = 10, native = true).collect()
+    val bruteCos = Ann.bruteTopK(emb, q, k = 10).collect()
       .map(r => (r.getLong(0), r.getLong(2)) -> r.getDouble(3)).toMap
     Ann.signHammingTopK(emb, q, k = 10, rerank = 400).collect().foreach { r =>
       val key = (r.getLong(0), r.getLong(2))
@@ -93,7 +93,7 @@ class AnnRecallSpec extends AnyFunSuite with SparkFixture {
       f"JL shortlist recall@10 dropped to $recall%.3f — projection or coarse ranking regressed")
     // reranked scores are EXACT: every returned cosine equals brute
     // force's for the same (query, neighbor)
-    val bruteCos = Ann.bruteTopK(emb, q, k = 10, native = true).collect()
+    val bruteCos = Ann.bruteTopK(emb, q, k = 10).collect()
       .map(r => (r.getLong(0), r.getLong(2)) -> r.getDouble(3)).toMap
     Ann.jlTopK(emb, q, k = 10, rerank = 400, jlK = 32).collect().foreach { r =>
       val key = (r.getLong(0), r.getLong(2))

@@ -40,28 +40,13 @@ class CodegenParitySpec extends AnyFunSuite with SparkFixture {
     "q_script_profile", // ScriptStatsExpr (r17; struct-valued census)
     "q_dedup_jaccard_weighted", // SortedPairMinSumExpr (r19; struct-array merge)
     "q_quality", // QualityStatsExpr (r21; struct-valued single pass)
-    "q_lang_id" // LangIdHitsExpr (r21; struct-valued inventory census)
+    "q_lang_id", // LangIdHitsExpr (r21; struct-valued inventory census)
+    "q_ann_brute", // DotProductF (null-element check on array<float>)
+    "q_ann_ivf" // CentroidScoresExpr (addReferenceObj scorer) + DotProductF
   )
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
-
-  private def withModes[A](codegen: Boolean)(body: => A): A = {
-    val conf = spark.conf
-    val ws = conf.get("spark.sql.codegen.wholeStage", "true")
-    val fm = conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    conf.set("spark.sql.codegen.wholeStage", codegen.toString)
-    // factoryMode governs non-WSCG expression evaluation (projections,
-    // filters outside codegen stages): CODEGEN_ONLY / NO_CODEGEN force
-    // the two paths; FALLBACK is the production default.
-    conf.set("spark.sql.codegen.factoryMode",
-      if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
-    try body
-    finally {
-      conf.set("spark.sql.codegen.wholeStage", ws)
-      conf.set("spark.sql.codegen.factoryMode", fm)
-    }
-  }
 
   for (q <- queries)
     test(s"$q: generated and interpreted paths agree row-for-row") {

@@ -356,9 +356,9 @@ class DedupAnnSpec extends AnyFunSuite with SparkFixture {
     val emb = spark.read.parquet(s"$sf001/embeddings.parquet")
     val q = emb.filter(F.col("vec_id") < 10)
     VectorFunctions.registerAll(spark)
-    val a = Ann.bruteTopK(emb, q, k = 5, native = false)
+    val a = Ann.bruteTopK(emb, q, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
-    val b = Ann.bruteTopKPartial(emb, q, k = 5, native = true)
+    val b = Ann.bruteTopKPartial(emb, q, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
     assert(a == b, "partial-agg top-k diverges from window top-k")
   }

@@ -50,8 +50,8 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   test("RewriteDotProduct turns the portable HOF pattern into DotProductF") {
     import org.apache.spark.sql.{functions => F}
     import spark.implicits._
-    // Typed source: primitive Array[Float] encodes as containsNull=false,
-    // the only element shape the rewrite is allowed to fire on.
+    // Typed source: primitive Array[Float] encodes as containsNull=false;
+    // the next test covers the nullable-element shape.
     val emb = spark.read.parquet(s"$sf001/embeddings.parquet").limit(100)
       .select(F.col("vec_id"), F.col("embedding"))
       .as[(Long, Array[Float])].map(identity).toDF("vec_id", "embedding")
@@ -75,17 +75,19 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
     } finally spark.experimental.extraOptimizations = prev
   }
 
-  test("RewriteDotProduct leaves nullable-element arrays alone") {
+  test("RewriteDotProduct fires on nullable-element arrays and keeps the fold's NULL") {
     import org.apache.spark.sql.{functions => F}
     // array(col, lit(null)) → containsNull=true: the HOF fold yields NULL
-    // here while DotProductF would read garbage — the rule must not fire.
+    // here, and so does DotProductF, which checks the elements of a side
+    // whose type can hold a null — the rule fires and the result holds.
     val df = spark.range(3).select(
       F.array(F.col("id").cast("double"), F.lit(null).cast("double")).as("a"))
     val prev = spark.experimental.extraOptimizations
     try {
       spark.experimental.extraOptimizations = Seq(graft.plans.RewriteDotProduct)
       val q = df.select(VectorFunctions.dot(F.col("a"), F.col("a")).as("d"))
-      assert(!q.queryExecution.optimizedPlan.toString.toLowerCase.contains("dotproductf"))
+      assert(q.queryExecution.optimizedPlan.toString.toLowerCase.contains("dotproductf"),
+        "optimizer rule did not fire")
       assert(q.collect().forall(_.isNullAt(0)))
     } finally spark.experimental.extraOptimizations = prev
   }
@@ -96,6 +98,48 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
       "SELECT graft_dot_f(array(CAST(1.0 AS FLOAT)), " +
         "array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT))) AS d").head()
     assert(r.isNullAt(0), "length mismatch must yield NULL, not a truncated dot")
+  }
+
+  test("DotProductF returns NULL on a null element, like the portable fold (eval and codegen)") {
+    import org.apache.spark.sql.{functions => F}
+    VectorFunctions.registerAll(spark)
+    // Built from `id` so nothing constant-folds: each mode runs the kernel
+    // in its own projection. Row 0: a = [1, null, 2]; row 1: a = [2, 7, 3].
+    // `a` is containsNull=true, `b` containsNull=false, so dot(a, b) and
+    // dot(b, a) exercise the element check on either side.
+    val id = F.col("id")
+    val df = spark.range(2).select(
+      F.array((id + 1).cast("float"), F.when(id > 0, id + 6).cast("float"),
+        (id + 2).cast("float")).as("a"),
+      F.array((id + 3).cast("float"), (id + 5).cast("float"), (id + 1).cast("float")).as("b"))
+    for (codegen <- Seq(true, false)) withModes(codegen) {
+      val rows = df.select(
+        VectorFunctions.dotF(F.col("a"), F.col("b")),
+        VectorFunctions.dotF(F.col("b"), F.col("a")),
+        F.expr("graft_dot_f(a, b)"),
+        VectorFunctions.dot(F.col("a"), F.col("b"))).collect()
+      assert((0 until 4).forall(rows(0).isNullAt),
+        s"codegen=$codegen: a null element must yield NULL, got ${rows(0)}")
+      assert((0 until 4).map(rows(1).getDouble) == Seq.fill(4)(2.0 * 4 + 7.0 * 6 + 3.0 * 2),
+        s"codegen=$codegen: ${rows(1)}")
+    }
+  }
+
+  test("CentroidScoresExpr returns NULL on a null element (eval and codegen)") {
+    import org.apache.spark.sql.{functions => F}
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import graft.functions.expressions.CentroidScoresExpr
+    // Row 0: v = [null, -3]; row 1: v = [1, -2]. Scores are 2·(v·c) − |c|².
+    val id = F.col("id")
+    val v = F.array(F.when(id > 0, id).cast("float"), (id - 3).cast("float"))
+    val scores = ColumnBridge.column(CentroidScoresExpr(
+      ColumnBridge.expression(v), Array(Array(1.0, 0.0), Array(0.0, 2.0))))
+    for (codegen <- Seq(true, false)) withModes(codegen) {
+      val rows = spark.range(2).select(scores).collect()
+      assert(rows(0).isNullAt(0),
+        s"codegen=$codegen: a null element must yield NULL, got ${rows(0)}")
+      assert(rows(1).getSeq[Double](0) == Seq(1.0, -12.0), s"codegen=$codegen: ${rows(1)}")
+    }
   }
 
   test("graft_dot_f is callable from SQL after registration") {

@@ -7,6 +7,25 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkFixture { self: AnyFunSuite =>
   lazy val spark: SparkSession = SparkFixture.session
   def sf001 = "/root/testdata/sf0.001"
+
+  /** Run `body` with expressions forced onto one execution path: the
+    * generated code (`codegen = true`) or the interpreted `eval`.
+    * factoryMode governs non-WSCG expression evaluation (projections,
+    * filters outside codegen stages): CODEGEN_ONLY / NO_CODEGEN force the
+    * two paths; FALLBACK is the production default. */
+  def withModes[A](codegen: Boolean)(body: => A): A = {
+    val conf = spark.conf
+    val ws = conf.get("spark.sql.codegen.wholeStage", "true")
+    val fm = conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
+    conf.set("spark.sql.codegen.wholeStage", codegen.toString)
+    conf.set("spark.sql.codegen.factoryMode",
+      if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
+    try body
+    finally {
+      conf.set("spark.sql.codegen.wholeStage", ws)
+      conf.set("spark.sql.codegen.factoryMode", fm)
+    }
+  }
 }
 
 object SparkFixture {
