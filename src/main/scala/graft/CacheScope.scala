@@ -19,7 +19,9 @@ import org.apache.spark.storage.StorageLevel
   *    via `localCheckpoint` (dedup/scoring outputs are orders of magnitude
   *    smaller than the corpus-sized indexes that produce them), then
   *    unpersists every cache the body tracked — in `finally`, so failures
-  *    release too.
+  *    release too; [[scopedWith]] hands the result to one consumer (the
+  *    write that reads it) instead of checkpointing it, and releases
+  *    after the consumer returns.
   *
   * Thread-safety: the tracked-handle stack is a plain (deliberately
   * NON-inheritable) ThreadLocal, so each thread — and each `scoped`
@@ -104,9 +106,10 @@ object CacheScope {
     * is not provably broadcast-sized should use [[materialize]] — one
     * extra pass is strictly cheaper than a racing double fold. Current
     * callers qualify unconditionally: UnigramLm.score's first consumer
-    * is a driver-BLOCKING `first()` action, and TfIdf.bm25's is a
+    * is a BLOCKING `first()` action, Dedup.incremental's append
+    * path's is the blocking index append, and TfIdf.bm25's is a
     * broadcast build whose aggregated output is ≤ |queryTerms| rows by
-    * construction — neither can cross the regime boundary. */
+    * construction — none can cross the regime boundary. */
   private[graft] def materializeLazy(df: DataFrame): DataFrame = {
     record("materialize_lazy", df)
     val p = df.persist()
@@ -134,15 +137,26 @@ object CacheScope {
     * THIS scope (inner scopes release their own; other threads are
     * untouched). The result is lineage-free: downstream consumers
     * (writes, joins, iterative algorithms) read materialized blocks,
-    * never re-running the released pipeline. */
-  def scoped(body: => DataFrame): DataFrame = {
+    * never re-running the released pipeline. This is [[scopedWith]]
+    * with the checkpoint as the consumer. */
+  def scoped(body: => DataFrame): DataFrame =
+    scopedWith(body)(r => r.localCheckpoint(true, checkpointLevel(r.sparkSession.sparkContext.isLocal)))
+
+  /** Run `body`, hand its result to `use` while the caches `body` tracked
+    * in THIS scope are still live, then release them — after `use`
+    * returns or throws. A caller whose only consumer is one action (a
+    * parquet write) runs it as `use` and skips the checkpoint job
+    * [[scoped]] would pay to pin a result nobody re-reads. (A separate
+    * name, not a `scoped` overload: Scala 2 resolves overloads on the
+    * first parameter list alone, which both forms share.) */
+  def scopedWith[T](body: => DataFrame)(use: DataFrame => T): T = {
     val frame = scala.collection.mutable.ArrayBuffer[DataFrame]()
     val saved = scopes.get()
     try {
       scopes.set(frame :: saved)
       val result = body
       record("scoped", result)
-      result.localCheckpoint(true, checkpointLevel(result.sparkSession.sparkContext.isLocal))
+      use(result)
     } finally {
       scopes.set(saved)
       frame.synchronized {

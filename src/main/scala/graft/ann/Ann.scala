@@ -318,7 +318,8 @@ object Ann {
 
   /** Exact top-k via map-side partial aggregation — only k candidates per
     * partition per query reach the shuffle. Identical output to
-    * [[bruteTopK]] (same deterministic sort key). */
+    * [[bruteTopK]] (same deterministic sort key; a NULL cosine from a
+    * null-element embedding ranks last, as there). */
   def bruteTopKPartial(corpus: DataFrame, queries: DataFrame, idCol: String = "vec_id",
                        embCol: String = "embedding", k: Int = 5): DataFrame = {
     val agg = new TopKAgg(k).toColumn.name("topk")
@@ -329,7 +330,7 @@ object Ann {
           F.col("cosine").as("_1"),
           F.col("neighbor_id").cast("long").as("_2")).as("_2"))
     import p.sparkSession.implicits._
-    p.as[(Long, (Double, Long))]
+    p.as[(Long, (Option[Double], Long))]
       .groupByKey(_._1)
       .agg(agg)
       .toDF("query_id", "topk")
@@ -464,14 +465,18 @@ object Ann {
         F.col("neighbor_id"), F.col("cosine"))
   }
 
-  /** Element-type-tolerant fetch: embeddings may arrive as array<float>
-    * (the parquet tables) or array<double> (derived columns) — both map to
-    * the identical double sequence (float→double widening is exact). */
-  private def rowToDoubles(r: org.apache.spark.sql.Row, at: Int = 0): Array[Double] =
-    r.getSeq[Any](at).iterator.map {
-      case f: java.lang.Float  => f.doubleValue
-      case d: java.lang.Double => d.doubleValue
-      case x => throw new IllegalArgumentException(
+  /** Element-type-tolerant fetch of a sampled (id, embedding) row:
+    * embeddings may arrive as array<float> (the parquet tables) or
+    * array<double> (derived columns) — both map to the identical double
+    * sequence (float→double widening is exact). A null element has no
+    * training value; the error names the row's id and the position. */
+  private def rowToDoubles(r: org.apache.spark.sql.Row): Array[Double] =
+    r.getSeq[Any](1).iterator.zipWithIndex.map {
+      case (f: java.lang.Float, _)  => f.doubleValue
+      case (d: java.lang.Double, _) => d.doubleValue
+      case (null, i) => throw new IllegalArgumentException(
+        s"embedding of id ${r.getLong(0)} has a null element at position $i")
+      case (x, _) => throw new IllegalArgumentException(
         s"embedding element must be float or double, got ${x.getClass}")
     }.toArray
 
@@ -524,7 +529,7 @@ object Ann {
       .select(F.col(idCol).cast("long"), F.col(embCol))
       .collect()
       .sortBy(_.getLong(0))
-    val sample: Array[Array[Double]] = sampled.map(r => rowToDoubles(r, 1))
+    val sample: Array[Array[Double]] = sampled.map(rowToDoubles)
     require(sample.length >= cells,
       s"IVF training needs >= $cells sample vectors, got ${sample.length}")
     // The SQL oracle seeds centroid j from the row WHERE <id> = j; we seed
@@ -1001,7 +1006,7 @@ object Ann {
       .sortBy(r => (r.getString(2), r.getLong(0)))
     require(sampled.length >= cells,
       s"uniform-sample training needs >= $cells vectors, got ${sampled.length}")
-    sampled.map(r => rowToDoubles(r, 1))
+    sampled.map(rowToDoubles)
   }
 
   /** REQUANTIZE a persisted index: retrain the coarse quantizer on the
@@ -1270,28 +1275,33 @@ object Ann {
 /** Typed top-k aggregator: keeps the k best (score desc, id asc) pairs.
   * Spark runs it with partial aggregation → map-side combine, which is what
   * makes the brute scan viable at corpus scale. */
-class TopKAgg(k: Int) extends Aggregator[(Long, (Double, Long)), Seq[(Double, Long)], Seq[(Double, Long)]] {
-  // NaN scores rank FIRST (as the largest double), matching the window
-  // formulation's `orderBy(cosine.desc)` — a plain Ordering.by(-s) would
-  // sort NaN last and the two documented-identical paths would disagree
-  // on any zero-norm (NaN-cosine) vector.
-  private def sortKey(s: Double): Double =
-    if (s.isNaN) Double.NegativeInfinity else -s
-  private val ord: Ordering[(Double, Long)] =
-    Ordering.by[(Double, Long), (Double, Long)] { case (s, id) => (sortKey(s), id) }
+class TopKAgg(k: Int)
+    extends Aggregator[(Long, (Option[Double], Long)), Seq[(Option[Double], Long)], Seq[(Option[Double], Long)]] {
+  private type Scored = (Option[Double], Long)
+  // The window formulation's `orderBy(cosine.desc)`, id ascending on ties:
+  // NaN ranks FIRST (as the largest double) and NULL LAST (desc sorts
+  // NULLS LAST) — a plain Ordering.by(-s) would sort NaN last and the two
+  // documented-identical paths would disagree on any zero-norm
+  // (NaN-cosine) or null-element (NULL-cosine) vector.
+  private def sortKey(s: Option[Double]): (Int, Double) = s match {
+    case None => (1, 0.0)
+    case Some(d) => (0, if (d.isNaN) Double.NegativeInfinity else -d)
+  }
+  private val ord: Ordering[Scored] =
+    Ordering.by[Scored, ((Int, Double), Long)] { case (s, id) => (sortKey(s), id) }
 
-  override def zero: Seq[(Double, Long)] = Seq.empty
+  override def zero: Seq[Scored] = Seq.empty
   // The buffer is kept sorted (trim's postcondition), so the common case —
   // a row no better than the current worst of a full buffer — is a single
   // comparison, not a k+1-element sort per corpus row.
-  override def reduce(buf: Seq[(Double, Long)], in: (Long, (Double, Long))): Seq[(Double, Long)] =
+  override def reduce(buf: Seq[Scored], in: (Long, Scored)): Seq[Scored] =
     if (buf.size == k && ord.gteq(in._2, buf.last)) buf
     else trim(buf :+ in._2)
-  override def merge(a: Seq[(Double, Long)], b: Seq[(Double, Long)]): Seq[(Double, Long)] =
+  override def merge(a: Seq[Scored], b: Seq[Scored]): Seq[Scored] =
     trim(a ++ b)
-  override def finish(r: Seq[(Double, Long)]): Seq[(Double, Long)] = r.sorted(ord)
-  private def trim(s: Seq[(Double, Long)]): Seq[(Double, Long)] = s.sorted(ord).take(k)
+  override def finish(r: Seq[Scored]): Seq[Scored] = r.sorted(ord)
+  private def trim(s: Seq[Scored]): Seq[Scored] = s.sorted(ord).take(k)
 
-  override def bufferEncoder: Encoder[Seq[(Double, Long)]] = ExpressionEncoder()
-  override def outputEncoder: Encoder[Seq[(Double, Long)]] = ExpressionEncoder()
+  override def bufferEncoder: Encoder[Seq[Scored]] = ExpressionEncoder()
+  override def outputEncoder: Encoder[Seq[Scored]] = ExpressionEncoder()
 }

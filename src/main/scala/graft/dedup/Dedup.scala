@@ -341,22 +341,34 @@ object Dedup {
 
   /** Incremental cross-shard dedup against a persisted [[indexInit]] index
     * (VERDICT r10 next-round #2): candidate duplicate pairs TOUCHING the
-    * new shard — (new, old) via one join against the index and (new, new)
-    * via the usual bucket aggregation — as (least, greatest) id pairs,
-    * then (when `updateIndex`) the shard's signatures are appended to the
-    * index so the next shard sees this one.
+    * new shard — (new, old) and (new, new) — as (least, greatest) id
+    * pairs.
     *
-    * Scale shape: the new shard's signatures are computed once (persisted
-    * — three consumers: index probe, within-shard buckets, index append)
-    * and shuffled once to the index's bucketing; the index side joins
-    * WITHOUT an exchange, because its on-disk HashPartitioning(band, sig)
-    * is exactly the join key (BucketedJoinSpec pins the single-Exchange
+    * With `updateIndex` (the ingest path) the shard's signatures are
+    * APPENDED to the index first, so the next shard sees this one, and the
+    * GROWN index is probed after: because it already holds the shard, one
+    * join of the shard's signatures against it (self-matches dropped)
+    * returns the (new, old) and the (new, new) pairs together. Without
+    * `updateIndex` (a read-only probe) the index is left as it is and the
+    * (new, new) pairs come from a bucket aggregation over the shard.
+    *
+    * Scale shape: the new shard's signatures are computed once and
+    * shuffled once to the index's bucketing; the index side joins WITHOUT
+    * an exchange, because its on-disk HashPartitioning(band, sig) is
+    * exactly the join key (BucketedJoinSpec pins the single-Exchange
     * plan). The bucket count comes from the index table's catalog
     * `BucketSpec` (see [[indexInit]]); an append writes one file per
-    * bucket. The old corpus is never re-scanned, and the
-    * pair set equals the batch [[minhashCandidates]] answer over the
-    * union restricted to pairs with a new member — q_dedup_incremental
-    * gates exactly that equality hash-exact. */
+    * bucket. The old corpus is never re-scanned.
+    *
+    * Degenerate-bucket guard: buckets holding more than `maxBucket` docs
+    * in the index the probe reads are dropped — on the append path that is
+    * history plus shard, the same count the batch [[minhashCandidates]]
+    * takes over the union, so the pair set equals the batch answer over
+    * the union restricted to pairs with a new member whether or not the
+    * guard binds (q_dedup_incremental gates that equality hash-exact).
+    * `knownIndexCount`, which skips the index count job, must bound the
+    * rows of the index the probe reads: on the append path, the grown
+    * index. */
   def incremental(newDocs: DataFrame, indexTable: String, idCol: String = "doc_id",
                   textCol: String = "text", shingleN: Int = 3, bands: Int = DefaultBands,
                   knownNewCount: Long = -1L,
@@ -370,7 +382,7 @@ object Dedup {
     // only add its exit localCheckpoint: a whole extra action computing
     // the plan once to write blocks the single consumer then re-reads.
     // Run the body bare instead — ONE action end to end. Every other
-    // shape (append's three-consumer materialize, an engaged heavy-bucket
+    // shape (the append's persisted signatures, an engaged heavy-bucket
     // guard, unknown counts) still scopes, because something persists
     // inside and must be released behind a checkpointed result.
     val cacheFree = !updateIndex &&
@@ -382,43 +394,72 @@ object Dedup {
     if (cacheFree) body() else graft.CacheScope.scoped(body())
   }
 
+  /** [[incremental]] with `updateIndex` and default parameters, its pairs
+    * handed to `use` (the stream's per-batch write) inside the cache scope
+    * instead of pinned by a checkpoint job first. */
+  private[graft] def incrementalInto[T](newDocs: DataFrame, indexTable: String,
+                                        idCol: String, textCol: String)(use: DataFrame => T): T =
+    graft.CacheScope.scopedWith(incrementalBody(newDocs, indexTable, idCol, textCol,
+      shingleN = 3, DefaultBands, knownNewCount = -1L, updateIndex = true,
+      maxBucket = 100000, knownIndexCount = -1L))(use)
+
   private def incrementalBody(newDocs: DataFrame, indexTable: String, idCol: String,
                   textCol: String, shingleN: Int, bands: Int,
                   knownNewCount: Long,
                   updateIndex: Boolean,
                   maxBucket: Int,
                   knownIndexCount: Long): DataFrame = {
-    val buckets = indexBuckets(newDocs.sparkSession, indexTable)
-    // Signature sharing is cost-based on the consumer set (r17; shaved
-    // the steady-state probe's one fixed-cost job):
-    //  - updateIndex = true → THREE consumers, one of which (the index
-    //    append) is a separate WRITE job that cannot reuse a sibling
-    //    job's exchange — persist the fold once (materialize). The row
-    //    count that action pays bounds the within-shard buckets when the
-    //    caller supplied no bound (no second count job over the cache).
-    //  - updateIndex = false → TWO consumers (index probe join +
-    //    within-shard buckets), both requiring (band, sig) clustering:
-    //    repartition to the index's bucket count and they share ONE
-    //    IDENTICAL exchange subtree — ReuseExchange computes the
-    //    shingle+minhash fold once with NO extra action (the q_lm_score
-    //    one-action pattern), and the probe side lands already
-    //    partitioned to the bucketed table's layout.
+    val spark = newDocs.sparkSession
+    val buckets = indexBuckets(spark, indexTable)
     val sigs = minhashSignaturesFromDocs(newDocs, idCol, textCol, shingleN, bands)
-    val (newSigs, newBound) =
-      if (updateIndex) {
-        val (held, nSigs) = materializeCounted(sigs)
-        (held, if (knownNewCount >= 0L) knownNewCount else nSigs)
-      } else (sigs.repartition(buckets, F.col("band"), F.col("sig")), knownNewCount)
-    val index = newDocs.sparkSession.table(indexTable)
-    // The probe needs the SAME degenerate-bucket guard as the batch path
-    // (candidatesFromSigs): one pathological signature accumulated in a
-    // 100 TB history would fan every matching new doc out to the whole
-    // bucket. An indexed doc count bounds every bucket (one row per doc
-    // per band). Callers tracking the index size (every real ingest
-    // pipeline does; any UPPER bound on index rows is valid — the guard
-    // only ever compares against maxBucket) pass it as `knownIndexCount`
-    // so the steady-state probe runs ZERO count jobs; -1 falls back to
-    // the table count (parquet-metadata cheap, but still a job per call).
+    if (updateIndex) {
+      // Append, then probe. The signatures have two consumers that run
+      // one after the other: the append, a blocking write action that
+      // alone fills the cache, then the probe — so persist lazily, with
+      // no eager count job (materializeLazy's sequential precondition).
+      val newSigs = graft.CacheScope.materializeLazy(sigs)
+      // Same write-partitioning alignment as Bucketing.writeBucketedBy:
+      // one file per bucket per shard append, not one per task × bucket.
+      newSigs.repartition(buckets, F.col("band"), F.col("sig"))
+        .write.mode(org.apache.spark.sql.SaveMode.Append)
+        .bucketBy(buckets, "band", "sig").sortBy("band", "sig").saveAsTable(indexTable)
+      // Resolve the table AFTER the append: a relation analyzed before it
+      // keeps the pre-append file listing and would miss the shard's own
+      // signatures, i.e. every (new, new) pair.
+      probeIndex(newSigs, spark.table(indexTable), idCol, bands, maxBucket,
+        knownIndexCount).distinct()
+    } else {
+      // TWO consumers (index probe join + within-shard buckets), both
+      // requiring (band, sig) clustering: repartition to the index's
+      // bucket count and they share ONE IDENTICAL exchange subtree —
+      // ReuseExchange computes the shingle+minhash fold once with NO
+      // extra action (the q_lm_score one-action pattern), and the probe
+      // side lands already partitioned to the bucketed table's layout.
+      val newSigs = sigs.repartition(buckets, F.col("band"), F.col("sig"))
+      val cross = probeIndex(newSigs, spark.table(indexTable), idCol, bands, maxBucket,
+        knownIndexCount)
+      // Same maxBucket as the probe side: a caller-tightened bound must
+      // guard (new, new) pairs too, not silently fall back to the default.
+      val within = candidatesFromSigs(newSigs, idCol, maxBucket = maxBucket,
+        knownBucketBound = knownNewCount, dedup = false)
+      cross.union(within.toDF("doc_a", "doc_b")).distinct()
+    }
+  }
+
+  /** (least, greatest) pairs of each shard signature with every OTHER id
+    * in its (band, sig) bucket of `index`, before any distinct.
+    *
+    * The probe needs the SAME degenerate-bucket guard as the batch path
+    * (candidatesFromSigs): one pathological signature accumulated in a
+    * 100 TB history would fan every matching new doc out to the whole
+    * bucket. An indexed doc count bounds every bucket (one row per doc
+    * per band). Callers tracking the index size (every real ingest
+    * pipeline does; any UPPER bound on index rows is valid — the guard
+    * only ever compares against maxBucket) pass it as `knownIndexCount`
+    * so the steady-state probe runs ZERO count jobs; -1 falls back to
+    * the table count (parquet-metadata cheap, but still a job per call). */
+  private def probeIndex(newSigs: DataFrame, index: DataFrame, idCol: String,
+                         bands: Int, maxBucket: Int, knownIndexCount: Long): DataFrame = {
     val indexRows = if (knownIndexCount >= 0L) knownIndexCount else index.count()
     val indexBounded =
       if (indexRows / bands.toLong.max(1L) <= maxBucket) index
@@ -429,28 +470,12 @@ object Dedup {
           .select("band", "sig")
         index.join(F.broadcast(big), Seq("band", "sig"), "left_anti")
       }
-    val cross = newSigs
+    newSigs
       .join(indexBounded.select(F.col("band"), F.col("sig"), F.col(idCol).as("_old_id")),
         Seq("band", "sig"))
       .filter(F.col(idCol) =!= F.col("_old_id"))
       .select(F.least(F.col(idCol), F.col("_old_id")).as("doc_a"),
         F.greatest(F.col(idCol), F.col("_old_id")).as("doc_b"))
-    // Same maxBucket as the probe side: a caller-tightened bound must
-    // guard (new, new) pairs too, not silently fall back to the default.
-    val within = candidatesFromSigs(newSigs, idCol, maxBucket = maxBucket,
-      knownBucketBound = newBound, dedup = false)
-    val pairs = cross.union(within.toDF("doc_a", "doc_b")).distinct()
-    if (updateIndex)
-      // Same write-partitioning alignment as Bucketing.writeBucketedBy:
-      // one file per bucket per shard append, not one per task × bucket.
-      newSigs.repartition(buckets, F.col("band"), F.col("sig"))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .bucketBy(buckets, "band", "sig").sortBy("band", "sig").saveAsTable(indexTable)
-    // Scope exit checkpoints `pairs` AFTER the append above has run; the
-    // index probe may therefore also see the shard's own signatures, but
-    // the (new, new) pairs that adds are exactly `within`'s, merged by
-    // the distinct — the result is append-order-independent.
-    pairs
   }
 
   /** The ONE per-doc shingle index (id, arr, n, sigs) both [[ngramJaccard]]

@@ -110,15 +110,15 @@ object StreamingOps {
 
   /** Streaming INCREMENTAL cross-shard dedup — the living-corpus ingest
     * that unites the streaming dedup gates with the persisted index
-    * lifecycle: each micro-batch probes the
-    * [[graft.dedup.Dedup.indexInit]] signature index for duplicate pairs
-    * against ALL history (earlier micro-batches included — the index
-    * carries them) and appends its own signatures for the batches after
-    * it, writing the batch's pair set to `outDir/batch=<id>` with the
+    * lifecycle: each micro-batch appends its signatures to the
+    * [[graft.dedup.Dedup.indexInit]] signature index, then probes the
+    * grown index for duplicate pairs against ALL history (earlier
+    * micro-batches included — the index carries them) and within the
+    * batch, writing the batch's pair set to `outDir/batch=<id>` with the
     * idempotent per-batch commit of [[exactlyOnceParquetSink]].
     *
     * Exactly-once: a batch whose `_SUCCESS` exists is a FULL no-op
-    * (probe, append, and write all skipped). A crash BETWEEN the index
+    * (append, probe, and write all skipped). A crash BETWEEN the index
     * append and the output commit replays the batch against an index
     * that already holds its signatures: the duplicate rows raise
     * candidate multiplicities but never change the DISTINCT pair set
@@ -127,19 +127,19 @@ object StreamingOps {
     * batch after it — is value-identical; the only cost is the
     * duplicated signature rows' storage.
     *
-    * Scale shape per batch: exactly [[graft.dedup.Dedup.incremental]] —
-    * shard signatures once, an exchange-free probe of the bucketed
-    * index, and a bucket-aligned append; history text is never
-    * re-scanned at any batch. */
+    * Scale shape per batch: exactly [[graft.dedup.Dedup.incremental]]'s
+    * append path — shard signatures once, a bucket-aligned append, then
+    * one exchange-free probe of the grown bucketed index; history text is
+    * never re-scanned at any batch. The pairs are written from inside the
+    * dedup's cache scope (the write is their only reader), so no
+    * checkpoint job pins them first. */
   def incrementalDedupStream(docs: DataFrame, indexTable: String,
                              outDir: String, checkpointDir: String,
                              idCol: String = "doc_id",
                              textCol: String = "text"): StreamingQuery =
     startWithCheckpoint(docs.writeStream.foreachBatch(markerGated(outDir) { (batch, target) =>
-      val pairs = graft.dedup.Dedup.incremental(
-        batch.select(batch(idCol), batch(textCol)),
-        indexTable, idCol, textCol)
-      pairs.write.mode(SaveMode.Overwrite).parquet(target)
+      graft.dedup.Dedup.incrementalInto(batch.select(batch(idCol), batch(textCol)),
+        indexTable, idCol, textCol)(_.write.mode(SaveMode.Overwrite).parquet(target))
     }), checkpointDir)
 
   /** Streaming IVF index ingest — the vector analogue of

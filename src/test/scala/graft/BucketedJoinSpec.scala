@@ -137,6 +137,46 @@ class BucketedJoinSpec extends AnyFunSuite with SparkFixture {
     } finally spark.sql("DROP TABLE IF EXISTS t_sig_idx4")
   }
 
+  test("the append path finds within-shard pairs from the grown index") {
+    // The append path appends the shard first and finds its (new, new)
+    // pairs only by probing the GROWN index: a probe that read a relation
+    // analyzed before the append would miss this pair.
+    import graft.dedup.Dedup
+    import spark.implicits._
+    spark.sql("DROP TABLE IF EXISTS t_sig_idx7")
+    try {
+      Dedup.indexInit(Seq((1L, "an unrelated history document about rivers and the sea"))
+        .toDF("doc_id", "text"), "t_sig_idx7")
+      val twin = "two identical shard documents share every shingle and band"
+      val got = Dedup.incremental(Seq((10L, twin), (11L, twin)).toDF("doc_id", "text"),
+        "t_sig_idx7").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == Set((10L, 11L)), s"got $got")
+    } finally spark.sql("DROP TABLE IF EXISTS t_sig_idx7")
+  }
+
+  test("append path with maxBucket = 3 equals batch minhashCandidates over the union") {
+    // The guard counts each (band, sig) bucket over history plus shard,
+    // as the batch path counts it over the union — so the equality holds
+    // even where the guard binds (at sf0.01 the largest bucket is 5).
+    import graft.dedup.Dedup
+    val docs = spark.read.parquet(s"${sf001.stripSuffix("sf0.001")}sf0.01/documents.parquet")
+    val n = docs.count()
+    def pairs(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def touchingShard(df: DataFrame) = df.filter(F.col("doc_a") % 2 === 1 || F.col("doc_b") % 2 === 1)
+    spark.sql("DROP TABLE IF EXISTS t_sig_idx8")
+    try {
+      Dedup.indexInit(docs.filter(F.col("doc_id") % 2 === 0), "t_sig_idx8")
+      val got = pairs(Dedup.incremental(docs.filter(F.col("doc_id") % 2 === 1), "t_sig_idx8",
+        maxBucket = 3))
+      val expected = pairs(touchingShard(Dedup.minhashCandidates(docs, knownDocCount = n,
+        maxBucket = 3)))
+      val unguarded = pairs(touchingShard(Dedup.minhashCandidates(docs, knownDocCount = n)))
+      assert(expected.size < unguarded.size, "guard dropped nothing — no bucket above 3?")
+      assert(got == expected,
+        s"missing=${(expected -- got).take(5)} extra=${(got -- expected).take(5)}")
+    } finally spark.sql("DROP TABLE IF EXISTS t_sig_idx8")
+  }
+
   test("incremental dedup: the index is bucketed by the session's parallelism") {
     import graft.dedup.Dedup
     import org.apache.spark.sql.catalyst.TableIdentifier

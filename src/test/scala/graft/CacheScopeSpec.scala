@@ -23,6 +23,28 @@ class CacheScopeSpec extends AnyFunSuite with SparkFixture {
     assert(out.collect().head.getLong(0) == 5050L, "checkpointed result unreadable after release")
   }
 
+  test("scopedWith hands the result to its consumer, then releases on return or throw") {
+    import spark.implicits._
+    var tracked: org.apache.spark.sql.DataFrame = null
+    val sum = CacheScope.scopedWith {
+      tracked = CacheScope.materialize((1 to 100).toDF("v"))
+      tracked.select(F.sum($"v").as("s"))
+    } { result =>
+      assert(tracked.storageLevel != StorageLevel.NONE, "cache released before the consumer ran")
+      result.collect().head.getLong(0)
+    }
+    assert(sum == 5050L)
+    assert(tracked.storageLevel == StorageLevel.NONE, "cache not released after the consumer returned")
+    val failed = intercept[IllegalStateException] {
+      CacheScope.scopedWith {
+        tracked = CacheScope.materialize((1 to 10).toDF("v"))
+        tracked
+      } { _ => throw new IllegalStateException("consumer failed") }
+    }
+    assert(failed.getMessage == "consumer failed")
+    assert(tracked.storageLevel == StorageLevel.NONE, "cache not released after the consumer threw")
+  }
+
   test("scoped checkpoint is disk-backed; 2-replica on clusters only") {
     import spark.implicits._
     // Level policy: replicated blocks where a peer block manager exists

@@ -363,6 +363,30 @@ class DedupAnnSpec extends AnyFunSuite with SparkFixture {
     assert(a == b, "partial-agg top-k diverges from window top-k")
   }
 
+  /** The sf0.001 embeddings with vec_id 3's element 5 set to null. */
+  private def embWithNullElement() =
+    spark.read.parquet(s"$sf001/embeddings.parquet").withColumn("embedding",
+      F.expr("transform(embedding, (x, i) -> IF(vec_id = 3 AND i = 5, NULL, x))"))
+
+  test("bruteTopKPartial equals bruteTopK on a null-element embedding (NULL cosine ranks last)") {
+    val emb = embWithNullElement()
+    val q = emb.filter(F.col("vec_id") < 10)
+    val a = Ann.bruteTopK(emb, q, k = 5).collect().map(_.toString).sorted.toSeq
+    val b = Ann.bruteTopKPartial(emb, q, k = 5).collect().map(_.toString).sorted.toSeq
+    // query 3 scores NULL against everything: its top 5 are ids 0..4
+    assert(a.count(_.startsWith("[3,")) == 5 && a.filter(_.startsWith("[3,")).forall(_.endsWith(",null]")),
+      s"expected five NULL-cosine rows for query 3: $a")
+    assert(a == b, s"window=${a.diff(b).take(5)} partial=${b.diff(a).take(5)}")
+  }
+
+  test("IVF training names the id and position of a null embedding element") {
+    val emb = embWithNullElement()
+    val e = intercept[IllegalArgumentException] {
+      Ann.ivfTopK(emb, emb.filter(F.col("vec_id") < 5), k = 5, cells = 16, probes = 4)
+    }
+    assert(e.getMessage.contains("id 3") && e.getMessage.contains("position 5"), e.getMessage)
+  }
+
   test("native codegen dot product is bit-identical to the portable fold") {
     VectorFunctions.registerAll(spark)
     val emb = spark.read.parquet(s"$sf001/embeddings.parquet").limit(50)

@@ -238,8 +238,9 @@ class ExplainAuditSpec extends AnyFunSuite with SparkFixture {
     // plus the final distinct = 5. The index side stays exchange-free
     // (BucketedJoinSpec pins that by name): at gate scale the tiny shard
     // side broadcasts into the index scan, at shard scale AQE falls back
-    // to the bucketed SMJ. The updateIndex = true three-consumer
-    // materialize path is BucketedJoinSpec's append tests.
+    // to the bucketed SMJ. The updateIndex = true append-then-probe
+    // path (lazily persisted signatures, one probe of the grown index)
+    // is BucketedJoinSpec's append tests.
     Audit("q_dedup_incremental", maxExchange = 5),
     // layout-pruned scan: filter fully pushed to the clustered parquet
     // (the whole point of the layout), one agg exchange
@@ -449,9 +450,6 @@ class ExplainAuditSpec extends AnyFunSuite with SparkFixture {
     InternalAudit("q_dedup_simhash", maxExchangeTotal = 4),
     // contamination's terminal frame is also a checkpoint scan
     InternalAudit("q_contamination", maxExchangeTotal = 5),
-    // round 11: newSigs materialize + the pairs frame (index probe join,
-    // within-shard buckets, distinct) — the bucketed index side must not
-    // add an exchange (BucketedJoinSpec pins that side separately)
     // assigned-cells materialize (broadcast-centroid scan: spread only)
     // + survivors frame (cell self-join, components label agg, anti join)
     InternalAudit("q_dedup_semantic", maxExchangeTotal = 7),
