@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
 
 import graft.api.{GraftStream, SaltedAgg}
+import graft.SessionConf.{RocksDbProvider, withConf}
 import graft.ann.Ann
 import graft.dedup.Dedup
 import graft.functions.{TextFunctions => TF}
@@ -194,9 +195,7 @@ object SparkEntry {
   private def stageStreamDir(dir: String, table: String): java.nio.file.Path = {
     val src = java.nio.file.Paths.get(s"$dir/$table.parquet")
     val key = f"${src.toAbsolutePath.toString.hashCode}%08x"
-    val srcDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"),
-      s"graft_stream_src_${table}_${new java.io.File(dir).getName}_$key")
+    val srcDir = tmpPath(s"graft_stream_src_${table}_${new java.io.File(dir).getName}_$key")
     java.nio.file.Files.createDirectories(srcDir)
     val link = srcDir.resolve(s"$table.parquet")
     if (!java.nio.file.Files.exists(link, java.nio.file.LinkOption.NOFOLLOW_LINKS) ||
@@ -212,18 +211,10 @@ object SparkEntry {
     * clustered on (lang, n_chars)), reused across runs: the gate times
     * the PRUNED READ, which is the recurring cost the layout buys down;
     * the one-time rewrite is the investment, not the query. */
-  private def stageOptimizedDocs(s: SparkSession, dir: String): String = {
-    // stageKey (path hash + source mtime/size stamp) — in-place testdata
-    // regeneration flips the stamp, so a stale staged layout is discarded
-    // instead of silently graded against a fresh oracle table
-    val key = stageKey(dir, "documents.parquet")
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_layout_docs_$key")
-    if (!java.nio.file.Files.exists(out.resolve("_SUCCESS")))
+  private def stageOptimizedDocs(s: SparkSession, dir: String): String =
+    stageOnce("graft_layout_docs", dir, "documents.parquet")(
       graft.operators.Corpus.optimizeLayout(
-        T(s, dir, "documents"), out.toString, Seq("lang", "n_chars"), ranges = 8)
-    out.toString
-  }
+        T(s, dir, "documents"), _, Seq("lang", "n_chars"), ranges = 8)).toString
 
   /** Stats-pruned scan over the range-clustered layout
     * ([[graft.operators.Corpus.optimizeLayout]]): a selective
@@ -251,7 +242,7 @@ object SparkEntry {
   private def scratchCheckpoint(name: String): String = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     val base = if (java.nio.file.Files.isDirectory(shm)) shm
-      else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+      else tmpPath("")
     java.nio.file.Files.createTempDirectory(base, s"graft_ckpt_${name}_").toString
   }
 
@@ -265,20 +256,121 @@ object SparkEntry {
     }
   }
 
-  /** Run `body` with `spark.sql.legacy.parquet.nanosAsLong` set (the
-    * streaming sources read the raw nanosecond BIGINT column), restoring
-    * the previous session value afterwards so the setting cannot leak into
-    * other queries in the same session. */
-  private def withNanosAsLong[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
+  /** `<java.io.tmpdir>/<name>`: where every staged input, persisted
+    * index and scratch directory of the gates lives. */
+  private def tmpPath(name: String): java.nio.file.Path =
+    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), name)
+
+  /** Size+mtime fingerprint of a staged query input (ADVICE r10): staging
+    * keys carry it so in-place testdata regeneration discards the stale
+    * staged copy instead of silently comparing it against a fresh oracle. */
+  private def srcStamp(dir: String, table: String): Long = {
+    val root = java.nio.file.Paths.get(dir, table)
+    val st = java.nio.file.Files.walk(root)
+    try st.filter(java.nio.file.Files.isRegularFile(_))
+      .mapToLong(p => java.nio.file.Files.size(p) ^ java.nio.file.Files.getLastModifiedTime(p).toMillis)
+      .sum()
+    finally st.close()
   }
+
+  /** The (dir, source-stamp) key of everything derived from `dir/table`:
+    * in-place testdata regeneration flips the stamp, so stale staged
+    * copies are discarded instead of silently graded. */
+  private def stageKey(dir: String, table: String): String =
+    f"${dir.hashCode}%08x_${srcStamp(dir, table)}%016x"
+
+  /** `<tmp>/<name>_<stageKey>`: a location owned by one dataset and one
+    * version of its `table`, never by every dataset sharing a basename. */
+  private def stagePath(name: String, dir: String, table: String): java.nio.file.Path =
+    tmpPath(s"${name}_${stageKey(dir, table)}")
+
+  /** Write the input a gate derives from `dir/table` once per
+    * [[stageKey]] and return its root, [[stagePath]]. A single part is
+    * written into the root; several go to `b1`, `b2`, … in order (read
+    * them back as `<root>/b*`), each part's files an older mtime than the
+    * next part's, because a file stream admits files in mtime order. The
+    * stage is done only when the LAST part's `_SUCCESS` exists — the root
+    * appears as soon as the first write starts — and an unfinished stage
+    * is wiped and written again from the first part. */
+  private[graft] def stageOnce(name: String, dir: String, table: String)(
+      parts: (String => Unit)*): java.nio.file.Path = {
+    val root = stagePath(name, dir, table)
+    val dirs =
+      if (parts.size == 1) Seq(root) else parts.indices.map(i => root.resolve(s"b${i + 1}"))
+    if (!java.nio.file.Files.exists(dirs.last.resolve("_SUCCESS"))) {
+      rmTree(root.toString)
+      parts.zip(dirs).foreach { case (write, d) => write(d.toString) }
+      val now = System.currentTimeMillis()
+      dirs.zipWithIndex.foreach { case (d, i) =>
+        d.toFile.listFiles().foreach { f => f.setLastModified(now - (dirs.size - 1 - i) * 60000L); () }
+      }
+    }
+    root
+  }
+
+  /** A [[stageOnce]] part: `df` as one parquet file. */
+  private def oneFile(df: DataFrame): String => Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(_)
+
+  /** Slot → the [[stageKey]] its persisted index was last built for in
+    * this JVM, so repeated bench shots time the steady-state probe, not
+    * the one-time build; a fresh JVM (a Verify run) always builds. One
+    * key per slot, not a set: a slot names one place on disk, so only its
+    * LAST build may claim it (a set would let dir A reuse dir B's index
+    * after an A→B→A call sequence). */
+  private val builtIndex = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** Run `build` for `slot` unless this JVM last built it for `key` and
+    * `exists` still holds. The memo is cleared before a rebuild and set
+    * only after `build` returns, so a build that throws leaves it unset
+    * and the next call builds again. */
+  private[graft] def indexOnce(slot: String, key: String, exists: => Boolean)(build: => Unit): Unit =
+    if (builtIndex.get(slot) != key || !exists) {
+      builtIndex.remove(slot)
+      build
+      builtIndex.put(slot, key)
+    }
+
+  /** [[indexOnce]] for an index of `dir`'s embeddings persisted at
+    * [[stagePath]], present while its `_SUCCESS` marker is; returns the
+    * path. */
+  private def embeddingIndex(name: String, dir: String)(build: String => Unit): String = {
+    val key = stageKey(dir, "embeddings.parquet")
+    val path = tmpPath(s"${name}_$key")
+    indexOnce(name, key, java.nio.file.Files.isRegularFile(path.resolve("_SUCCESS")))(
+      build(path.toString))
+    path.toString
+  }
+
+  /** Drop the signature-index table `name` with its warehouse directory:
+    * a fresh session's catalog has no entry for a previous run's table,
+    * so the DROP alone can no-op while the directory survives and
+    * saveAsTable throws LOCATION_ALREADY_EXISTS. */
+  private def dropIndexTable(s: SparkSession, name: String): Unit = {
+    s.sql(s"DROP TABLE IF EXISTS $name")
+    val loc = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"), name)
+    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
+  }
+
+  /** `df` collected into a local relation of the same schema, so the
+    * returned frame no longer reads the scratch files its plan scans (the
+    * caller deletes them in `finally`). */
+  private def detach(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collectAsList(), df.schema)
+
+  /** The `batch=<id>` directories a foreachBatch sink committed under
+    * `outDir`, read as one frame. Listed, not globbed: a glob makes the
+    * reader's FileStreamSink metadata probe log a spurious
+    * FileNotFoundException stack into every Verify run. */
+  private def readBatches(s: SparkSession, outDir: String): DataFrame =
+    s.read.parquet(new java.io.File(outDir).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
+      .map(_.getAbsolutePath).sorted.toSeq: _*)
+
+  /** Run `body` with `spark.sql.legacy.parquet.nanosAsLong` set: the
+    * streaming sources read the raw nanosecond BIGINT column. */
+  private def withNanosAsLong[A](s: SparkSession)(body: => A): A =
+    withConf(s, "spark.sql.legacy.parquet.nanosAsLong" -> "true")(body)
 
   /** Schema-adaptive streaming read of the staged events dir: declare
     * whichever physical ts shape the file actually has (the SAME
@@ -304,27 +396,19 @@ object SparkEntry {
     * `qname` with an AvailableNow trigger and a scratch checkpoint,
     * using `parts` state partitions for the query (the state-store
     * partition count fixes at first run; the session conf is restored
-    * the moment the query starts). One implementation of the
-    * save/set/start/restore/await/clean sequence the memory-sink gates
-    * each carried by copy until round 13 — the finally-after-start conf
-    * restore and checkpoint cleanup live HERE, once. Returns the sink
-    * table. */
+    * the moment the query starts). Returns the sink table. */
   private def runMemoryGate(s: SparkSession, df: DataFrame, qname: String,
                             mode: String, parts: String = "8"): DataFrame = {
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", parts)
     val ckpt = scratchCheckpoint(qname)
-    try {
-      val q =
-        try df.writeStream
-          .format("memory").queryName(qname)
-          .option("checkpointLocation", ckpt)
-          .outputMode(mode)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      q.awaitTermination()
-    } finally rmTree(ckpt)
+    try withConf(s, "spark.sql.shuffle.partitions" -> parts) {
+      df.writeStream
+        .format("memory").queryName(qname)
+        .option("checkpointLocation", ckpt)
+        .outputMode(mode)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+    }.awaitTermination()
+    finally rmTree(ckpt)
     s.table(qname)
   }
 
@@ -477,29 +561,11 @@ object SparkEntry {
       def update(k: Long, v: Ev, n: Long): (Long, IterableOnce[RunningN]) =
         (n + 1, Iterator.single(RunningN(k, v.event_id, n + 1)))
     }
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val qname = "graft_stream_stateful"
-    val ckpt = scratchCheckpoint(qname)
-    try {
-      val q = StatefulExec.streamTws[Long, Ev, Long, RunningN](stream, _.user_id, logic)
-        .toDF()
-        .writeStream.format("memory").queryName(qname)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      rmTree(ckpt)
-      prevProvider match {
-        case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-    s.table(qname)
-      .groupBy(F.col("user_id"))
+    withConf(s, RocksDbProvider) {
+      runMemoryGate(s,
+        StatefulExec.streamTws[Long, Ev, Long, RunningN](stream, _.user_id, logic).toDF(),
+        "graft_stream_stateful", mode = "append", parts = s.conf.get("spark.sql.shuffle.partitions"))
+    }.groupBy(F.col("user_id"))
       .agg(F.max(F.col("running_n")).as("n_events"))
   }
 
@@ -626,34 +692,19 @@ object SparkEntry {
     * wm stuck at max_real − 30d, zero outer rows, state never evicted).
     * Oracle: the batch LEFT JOIN over the real events table. */
   private def qStreamJoinOuter(s: SparkSession, dir: String): DataFrame = {
-    val key = stageKey(dir, "events.parquet")
-    val srcDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_stream_outer_src_$key")
+    import s.implicits._
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
-    if (!java.nio.file.Files.exists(srcDir.resolve("b2").resolve("_SUCCESS"))) {
-      rmTree(srcDir.toString)
-      withNanosAsLong(s) {
-        Tables.events(s, dir).select(cols.map(F.col): _*)
-          .coalesce(1).write.mode("overwrite").parquet(srcDir.resolve("b1").toString)
-      }
-      import s.implicits._
-      Seq((-1L, "9998-01-01 00:00:00", -1L, "error", 0.0),
+    // Both files land in one AvailableNow batch today; the staged mtime
+    // order is insurance that under any admission limit the sentinels
+    // still come LAST (processed first, they would make every real row
+    // late, and dropped).
+    val srcDir = stageOnce("graft_stream_outer_src", dir, "events.parquet")(
+      p => withNanosAsLong(s)(oneFile(Tables.events(s, dir).select(cols.map(F.col): _*))(p)),
+      oneFile(Seq((-1L, "9998-01-01 00:00:00", -1L, "error", 0.0),
           (-2L, "9998-01-01 02:00:00", -2L, "click", 0.0))
         .toDF("event_id", "tss", "user_id", "event_type", "value")
         .select(F.col("event_id"), F.to_timestamp(F.col("tss")).as("ts"),
-          F.col("user_id"), F.col("event_type"), F.col("value"))
-        .coalesce(1).write.mode("overwrite").parquet(srcDir.resolve("b2").toString)
-      // Both files land in one AvailableNow batch today; distinct mtimes
-      // are insurance so that under any future admission limit the file
-      // source (mtime order) still processes sentinels LAST — sentinels
-      // processed first would make every real row late, and dropped.
-      val now = System.currentTimeMillis()
-      def touch(d: String, t: Long): Unit =
-        new java.io.File(srcDir.resolve(d).toString)
-          .listFiles().foreach { f => f.setLastModified(t); () }
-      touch("b1", now - 60000)
-      touch("b2", now)
-    }
+          F.col("user_id"), F.col("event_type"), F.col("value"))))
     val stream = s.readStream
       .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE")
       .parquet(s"$srcDir/b*")
@@ -717,34 +768,17 @@ object SparkEntry {
     val cutUs = (loUs + hiUs) / 2
     val s1Us = hiUs + ttlMs * 1000L + hourUs // pushes the frontier past every real deadline
     val s2Us = s1Us + hourUs                 // the expiry-delivery batch
-    val key = stageKey(dir, "events.parquet")
-    val srcA = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_rescale_resume_a_$key")
-    val srcRest = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_rescale_resume_rest_$key")
-    if (!java.nio.file.Files.exists(srcRest.resolve("b3").resolve("_SUCCESS"))) {
-      rmTree(srcA.toString); rmTree(srcRest.toString)
-      withNanosAsLong(s) {
-        val ev = Tables.events(s, dir).select(cols: _*)
-        ev.filter(F.unix_micros(F.col("ts")) <= cutUs).coalesce(1)
-          .write.mode("overwrite").parquet(srcA.resolve("a1").toString)
-        ev.filter(F.unix_micros(F.col("ts")) > cutUs).coalesce(1)
-          .write.mode("overwrite").parquet(srcRest.resolve("b1").toString)
-      }
-      Seq((-1L, -1L, s1Us), (-2L, -2L, s2Us)).zipWithIndex.foreach { case ((eid, uid, us), i) =>
-        Seq((eid, uid, us)).toDF("event_id", "user_id", "us")
-          .select(F.col("event_id"), F.col("user_id"),
-            F.timestamp_micros(F.col("us")).as("ts"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(srcRest.resolve(s"b${i + 2}").toString)
-      }
-      // arrival order for the resumed file source = mtime order
-      Seq("b1", "b2", "b3").zipWithIndex.foreach { case (d, i) =>
-        val now = System.currentTimeMillis()
-        new java.io.File(srcRest.resolve(d).toString).listFiles()
-          .foreach { f => f.setLastModified(now - (3 - i) * 60000L); () }
-      }
-    }
+    // b1 = phase A's half; b2 = the rest, then the two sentinels, in
+    // arrival (mtime) order for the resumed file source
+    def half(keep: Column): String => Unit = p => withNanosAsLong(s)(
+      oneFile(Tables.events(s, dir).select(cols: _*).filter(keep))(p))
+    def sentinel(eid: Long, us: Long): String => Unit =
+      oneFile(Seq((eid, eid, us)).toDF("event_id", "user_id", "us")
+        .select(F.col("event_id"), F.col("user_id"), F.timestamp_micros(F.col("us")).as("ts")))
+    val src = stageOnce("graft_rescale_resume", dir, "events.parquet")(
+      half(F.unix_micros(F.col("ts")) <= cutUs), half(F.unix_micros(F.col("ts")) > cutUs),
+      sentinel(-1L, s1Us), sentinel(-2L, s2Us))
+    val srcA = src.resolve("b1")
     val silentSum = new StatefulLogic[Long, EvT, Long, KTotal] {
       def zero = 0L
       def update(k: Long, v: EvT, t: Long): (Long, IterableOnce[KTotal]) =
@@ -757,18 +791,14 @@ object SparkEntry {
       (if (oneFilePerBatch) r.option("maxFilesPerTrigger", 1) else r)
         .parquet(path).withWatermark("ts", "0 seconds").as[EvT]
     }
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     val ckptA = scratchCheckpoint("rescale_resume_a")
     val ckptB = scratchCheckpoint("rescale_resume_b")
     val outB = scratchCheckpoint("rescale_resume_out")
     val srcB = java.nio.file.Paths.get(scratchCheckpoint("rescale_resume_src"))
-    try {
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try withConf(s, RocksDbProvider) {
       // Phase A (v1 engine, session partition count): first half only.
       val qa = StatefulExec.stream[Long, EvT, Long, KTotal](
-        readStream(s"$srcA/a1", oneFilePerBatch = false), _.user_id, silentSum)
+        readStream(srcA.toString, oneFilePerBatch = false), _.user_id, silentSum)
         .writeStream.option("checkpointLocation", ckptA)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .format("noop").outputMode("append").start()
@@ -777,10 +807,8 @@ object SparkEntry {
       // source universe minus the committed offsets' file set.
       val consumed = StateRescale.consumedFiles(ckptA)
         .map(u => new org.apache.hadoop.fs.Path(u).toUri.getPath).toSet
-      val universe = (srcA :: srcRest :: Nil).flatMap { root =>
-        java.nio.file.Files.walk(root).toArray.toSeq.map(_.toString)
-          .filter(_.endsWith(".parquet"))
-      }
+      val universe = java.nio.file.Files.walk(src).toArray.toSeq.map(_.toString)
+        .filter(_.endsWith(".parquet"))
       val unconsumed = universe.filterNot(consumed.contains)
         .map(p => new java.io.File(p)).sortBy(_.lastModified())
       if (consumed.isEmpty || unconsumed.exists(_.getAbsolutePath.startsWith(srcA.toString)))
@@ -795,37 +823,23 @@ object SparkEntry {
       val wmA = StateRescale.lastWatermarkMs(ckptA)
       // Phase B (v2 engine, DIFFERENT partition count): seed from ckptA,
       // arm TTL at the migration-point clock, read only the derived rest.
-      s.conf.set("spark.sql.shuffle.partitions", "7")
-      val init = StateRescale.initialStateFrom[Long, Long](s, ckptA)
-      val qb = StatefulExec.streamTws[Long, EvT, Long, KTotal](
-        readStream(srcB.toString, oneFilePerBatch = true), _.user_id, silentSum,
-        ttlMs = Some(ttlMs), eventTimeMs = Some(_.ts.getTime),
-        initialState = Some(init), initialStateTimeMs = wmA)
-        .writeStream.option("checkpointLocation", ckptB)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("parquet").option("path", outB)
-        .outputMode("append").start()
-      qb.awaitTermination()
+      withConf(s, "spark.sql.shuffle.partitions" -> "7") {
+        val init = StateRescale.initialStateFrom[Long, Long](s, ckptA)
+        StatefulExec.streamTws[Long, EvT, Long, KTotal](
+          readStream(srcB.toString, oneFilePerBatch = true), _.user_id, silentSum,
+          ttlMs = Some(ttlMs), eventTimeMs = Some(_.ts.getTime),
+          initialState = Some(init), initialStateTimeMs = wmA)
+          .writeStream.option("checkpointLocation", ckptB)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .format("parquet").option("path", outB)
+          .outputMode("append").start()
+      }.awaitTermination()
       val layoutA = StateRescale.statePartitionCount(ckptA)
       val layoutB = StateRescale.statePartitionCount(ckptB)
       if (layoutB != 7 || layoutA == layoutB) throw new IllegalStateException(
         s"migration did not change the state layout: $layoutA -> $layoutB")
-      // Decouple from the scratch dir before the finally-block deletes it.
-      val rows = s.read.schema("user_id BIGINT, total_eid BIGINT")
-        .parquet(outB).collect().toSeq
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("user_id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("total_eid",
-            org.apache.spark.sql.types.LongType, nullable = false))))
+      detach(s.read.schema("user_id BIGINT, total_eid BIGINT").parquet(outB))
     } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevProvider match {
-        case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
       rmTree(ckptA); rmTree(ckptB); rmTree(outB); rmTree(srcB.toString)
     }
   }
@@ -991,31 +1005,9 @@ object SparkEntry {
     * back via the format-agnostic FileSource with an explicit schema (no
     * inference pass), then aggregates — oracle = the same aggregate on
     * the original parquet, so the gate proves the json read is lossless. */
-  /** Size+mtime fingerprint of a staged query input (ADVICE r10): staging
-    * keys carry it so in-place testdata regeneration discards the stale
-    * staged copy instead of silently comparing it against a fresh oracle. */
-  private def srcStamp(dir: String, table: String): Long = {
-    val root = java.nio.file.Paths.get(dir, table)
-    val st = java.nio.file.Files.walk(root)
-    try st.filter(java.nio.file.Files.isRegularFile(_))
-      .mapToLong(p => java.nio.file.Files.size(p) ^ java.nio.file.Files.getLastModifiedTime(p).toMillis)
-      .sum()
-    finally st.close()
-  }
-
-  /** The (dir, source-stamp) staging key every stage-once gate uses
-    * (review r14: ten hand-rolled copies of the same format string):
-    * in-place testdata regeneration flips the stamp, so stale staged
-    * copies are discarded instead of silently graded. */
-  private def stageKey(dir: String, table: String): String =
-    f"${dir.hashCode}%08x_${srcStamp(dir, table)}%016x"
-
   private def qSourceJsonl(s: SparkSession, dir: String): DataFrame = {
-    val key = stageKey(dir, "documents.parquet")
-    val staged = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_jsonl_${new java.io.File(dir).getName}_$key")
-    if (!java.nio.file.Files.exists(staged.resolve("_SUCCESS")))
-      T(s, dir, "documents").write.mode("overwrite").json(staged.toString)
+    val staged = stageOnce("graft_jsonl", dir, "documents.parquet")(
+      T(s, dir, "documents").write.mode("overwrite").json(_))
     val docs = graft.sources.FileSource(staged.toString, "json",
       Some("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")).load(s)
     docs.groupBy(F.col("lang"))
@@ -1033,19 +1025,14 @@ object SparkEntry {
     * silently, never failing the job). The oracle replays the accounting
     * from the staging rule on the original table. */
   private def qSourceDirty(s: SparkSession, dir: String): DataFrame = {
-    val key = stageKey(dir, "documents.parquet")
-    val staged = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_dirty_$key")
-    if (!java.nio.file.Files.exists(staged.resolve("_SUCCESS"))) {
-      rmTree(staged.toString)
-      val line = F.to_json(F.struct(F.col("doc_id"), F.col("text")))
+    val line = F.to_json(F.struct(F.col("doc_id"), F.col("text")))
+    val staged = stageOnce("graft_dirty", dir, "documents.parquet")(
       T(s, dir, "documents")
         .select(
           F.when(F.col("doc_id") % 17 === 0,
             line.substr(F.lit(1), F.length(line) - 1))
             .otherwise(line).as("value"))
-        .coalesce(1).write.mode("overwrite").text(staged.toString)
-    }
+        .coalesce(1).write.mode("overwrite").text(_))
     s.read
       .schema("doc_id BIGINT, text STRING, _corrupt_record STRING")
       .option("mode", "PERMISSIVE")
@@ -1097,7 +1084,9 @@ object SparkEntry {
   }
 
   private def qSinkStateful(s: SparkSession, dir: String): DataFrame = {
-    val out = s"${sys.props("java.io.tmpdir")}/graft_stateful_sink_${new java.io.File(dir).getName}"
+    // keyed like a stage: a second dataset with the same basename must not
+    // find this one's committed epoch and be graded against its rows
+    val out = stagePath("graft_stateful_sink", dir, "documents.parquet").toString
     val df = T(s, dir, "documents")
       .groupBy(F.col("source")).agg(F.count(F.lit(1)).as("n_docs"))
     val sink = StatefulParquetSink(out)
@@ -1109,7 +1098,7 @@ object SparkEntry {
   // ------------------------------------------------------------ kafka shim
 
   private def kafkaRoot(dir: String) =
-    s"${sys.props("java.io.tmpdir")}/graft_kafka_${new java.io.File(dir).getName}"
+    tmpPath(s"graft_kafka_${new java.io.File(dir).getName}").toString
 
   private def qKafkaSource(s: SparkSession, dir: String): DataFrame = {
     val root = kafkaRoot(dir)
@@ -1464,18 +1453,10 @@ object SparkEntry {
       .withColumn("doc_id", F.col("doc_id") + F.lit(1000000000L))
       .withColumn("version", F.lit(1))
     val updates = refetched.unionByName(discovered)
-    // two-file staging (one file per micro-batch), keyed on the source
-    // stamp so regeneration invalidates it
-    val key = stageKey(dir, "documents.parquet")
-    val srcDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_stream_upsert_src_$key")
-    if (!java.nio.file.Files.exists(srcDir.resolve("b2").resolve("_SUCCESS"))) {
-      rmTree(srcDir.toString)
-      updates.filter(F.col("doc_id") % 2 === 0).coalesce(1)
-        .write.mode("overwrite").parquet(srcDir.resolve("b1").toString)
-      updates.filter(F.col("doc_id") % 2 === 1).coalesce(1)
-        .write.mode("overwrite").parquet(srcDir.resolve("b2").toString)
-    }
+    // one file per micro-batch
+    val srcDir = stageOnce("graft_stream_upsert_src", dir, "documents.parquet")(
+      oneFile(updates.filter(F.col("doc_id") % 2 === 0)),
+      oneFile(updates.filter(F.col("doc_id") % 2 === 1)))
     val stream = s.readStream
       .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT, version INT")
       .option("maxFilesPerTrigger", 1)
@@ -1485,27 +1466,10 @@ object SparkEntry {
     try {
       graft.streaming.StreamingOps.exactlyOnceParquetSink(stream, logDir, ckpt)
         .awaitTermination()
-      val batchDirs = new java.io.File(logDir).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-        .map(_.getAbsolutePath).sorted
-      val log = s.read.parquet(batchDirs.toSeq: _*)
-      // merge-on-read serving view; materialize to the driver before the
-      // finally deletes the scratch log segments the plan reads
-      val rows = graft.operators.Corpus.upsert(base, log)
+      // merge-on-read serving view
+      detach(graft.operators.Corpus.upsert(base, readBatches(s, logDir))
         .select(F.col("doc_id"), F.col("version"),
-          F.length(F.col("text")).cast("long").as("n_len"), F.col("source"))
-        .collect().toSeq
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("version",
-            org.apache.spark.sql.types.IntegerType, nullable = true),
-          org.apache.spark.sql.types.StructField("n_len",
-            org.apache.spark.sql.types.LongType, nullable = true),
-          org.apache.spark.sql.types.StructField("source",
-            org.apache.spark.sql.types.StringType, nullable = true))))
+          F.length(F.col("text")).cast("long").as("n_len"), F.col("source")))
     } finally { rmTree(ckpt); rmTree(logDir) }
   }
 
@@ -2031,16 +1995,11 @@ object SparkEntry {
     * (once per source stamp), then READ THE COMPACTED TABLE — a
     * compaction must be content-invisible, so the oracle is
     * q_corpus_asof's SQL over the uncompacted log, verbatim. */
-  private def qCorpusCompact(s: SparkSession, dir: String): DataFrame = {
-    val key = stageKey(dir, "documents.parquet")
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_compact_$key")
-    if (!java.nio.file.Files.exists(out.resolve("_SUCCESS")))
+  private def qCorpusCompact(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(stageOnce("graft_compact", dir, "documents.parquet")(
       graft.operators.Corpus.compact(
-        cdcLog(T(s, dir, "documents")), version = 2L, out.toString,
-        clusterCols = Seq("doc_id"), ranges = 4)
-    s.read.parquet(out.toString)
-  }
+        cdcLog(T(s, dir, "documents")), version = 2L, _,
+        clusterCols = Seq("doc_id"), ranges = 4)).toString)
 
   /** Padding-efficiency report
     * ([[graft.operators.Packing.paddingEfficiency]]): price the
@@ -2692,17 +2651,6 @@ object SparkEntry {
   private def qDedupMinhashEval(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashEval(T(s, dir, "documents"))
 
-  /** The (dir + source stamp) key the SINGLE shared index table was last
-    * built for in this JVM ([[qDedupIncremental]]). Lets repeated bench
-    * shots measure the steady-state incremental probe instead of
-    * re-paying the one-time history index build each shot; a fresh JVM
-    * (the driver's Verify run) always takes the full build+append path.
-    * One reference, not a set: the table name is shared, so only the
-    * LAST-built key may claim its contents (a set would let dir A reuse
-    * dir B's index after an A→B→A call sequence). */
-  private val incrementalStaged =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** Incremental cross-shard dedup: even-id docs are the already-indexed
     * corpus (signatures persisted bucketed-by-sig, paid once), odd-id docs
     * the arriving shard — deduped against the whole history WITHOUT
@@ -2726,30 +2674,20 @@ object SparkEntry {
     val docs = T(s, dir, "documents")
     val old = docs.filter(F.col("doc_id") % 2 === 0)
     val fresh = docs.filter(F.col("doc_id") % 2 === 1)
-    val key = stageKey(dir, "documents.parquet")
-    val reuse = key == incrementalStaged.get() && s.catalog.tableExists("graft_sig_index")
-    if (!reuse) {
-      incrementalStaged.set(null) // invalidate while the table is in flux
-      s.sql("DROP TABLE IF EXISTS graft_sig_index")
-      // A fresh session's catalog has no entry for a previous run's table,
-      // so the DROP can no-op while the warehouse directory survives —
-      // remove the location too or saveAsTable throws LOCATION_ALREADY_EXISTS.
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), "graft_sig_index")
-      loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
+    indexOnce("graft_sig_index", stageKey(dir, "documents.parquet"),
+        s.catalog.tableExists("graft_sig_index")) {
+      dropIndexTable(s, "graft_sig_index")
       Dedup.indexInit(old, "graft_sig_index")
     }
     // Both counts are BOUNDS (bucket guard / index guard), so the memoized
     // TOTAL documents count upper-bounds each side for free: no count job,
     // no column scan, on any shot — the steady state measures the probe.
     val nDocs = docCount(s, dir)
-    val out = Dedup.incremental(fresh, "graft_sig_index",
+    Dedup.incremental(fresh, "graft_sig_index",
       knownNewCount = nDocs, updateIndex = false,
       // ≤ bands sig rows per doc; DefaultBands (not a literal) so the
       // bound tracks the operator default it derives from.
       knownIndexCount = nDocs * Dedup.DefaultBands.toLong)
-    incrementalStaged.set(key)
-    out
   }
 
   /** STREAMING incremental dedup gate
@@ -2766,28 +2704,14 @@ object SparkEntry {
     * q_dedup_incremental times). */
   private def qStreamDedupIncremental(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    // two-file staging: odd docs split 1 mod 4 / 3 mod 4 (deterministic),
-    // one file per micro-batch
-    val key = stageKey(dir, "documents.parquet")
-    val srcDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_stream_inc_src_$key")
-    // Gate on the LAST-written artifact's commit marker: b1 appears at
-    // write start, so a crash between the two writes would otherwise
-    // leave a permanently half-staged source (the (dir,stamp) key never
-    // changes) that streams only half the odd docs on every later run.
-    if (!java.nio.file.Files.exists(srcDir.resolve("b2").resolve("_SUCCESS"))) {
-      rmTree(srcDir.toString)
-      docs.filter(F.col("doc_id") % 4 === 1).coalesce(1)
-        .write.mode("overwrite").parquet(srcDir.resolve("b1").toString)
-      docs.filter(F.col("doc_id") % 4 === 3).coalesce(1)
-        .write.mode("overwrite").parquet(srcDir.resolve("b2").toString)
-    }
+    // odd docs split 1 mod 4 / 3 mod 4 (deterministic), one file per
+    // micro-batch
+    val srcDir = stageOnce("graft_stream_inc_src", dir, "documents.parquet")(
+      oneFile(docs.filter(F.col("doc_id") % 4 === 1)),
+      oneFile(docs.filter(F.col("doc_id") % 4 === 3)))
     // fresh seed index every call: the stream APPENDS to it, so reuse
-    // across shots would pollute the probe (same reset as qDedupIncremental)
-    s.sql("DROP TABLE IF EXISTS graft_sig_index_stream")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), "graft_sig_index_stream")
-    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
+    // across shots would pollute the probe
+    dropIndexTable(s, "graft_sig_index_stream")
     Dedup.indexInit(docs.filter(F.col("doc_id") % 2 === 0), "graft_sig_index_stream")
     val stream = s.readStream
       .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
@@ -2798,22 +2722,7 @@ object SparkEntry {
     try {
       graft.streaming.StreamingOps.incrementalDedupStream(
         stream, "graft_sig_index_stream", outDir, ckpt).awaitTermination()
-      // pull the union through the driver: batch dirs are scratch (deleted
-      // below), so the returned frame must not re-read them lazily.
-      // Enumerate the batch dirs instead of a glob — the glob path makes
-      // the reader's FileStreamSink metadata probe log a spurious
-      // FileNotFoundException stack into every Verify run.
-      val batchDirs = new java.io.File(outDir).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-        .map(_.getAbsolutePath).sorted
-      val rows = s.read.parquet(batchDirs.toSeq: _*).collect().toSeq
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_a",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("doc_b",
-            org.apache.spark.sql.types.LongType, nullable = false))))
+      detach(readBatches(s, outDir))
     } finally { rmTree(ckpt); rmTree(outDir) }
   }
 
@@ -2938,12 +2847,6 @@ object SparkEntry {
   private def qAnnLsh(s: SparkSession, dir: String): DataFrame =
     Ann.lshBuckets(T(s, dir, "embeddings"), planes = 8)
 
-  /** Last-built key of the staged IVF index (the incrementalStaged
-    * pattern): one reference so only the latest (dir, stamp) may claim
-    * the on-disk index. */
-  private val ivfIndexStaged =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** IVF served from the PERSISTED cell-partitioned index
     * ([[graft.ann.Ann.ivfIndexInit]]/[[graft.ann.Ann.ivfTopKIndexed]]):
     * same training params as q_ann_ivf, shared scoring tail, so the
@@ -2954,22 +2857,9 @@ object SparkEntry {
     * the partition-pruned read of only the probed cells. */
   private def qAnnIvfIndexed(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
-    val key = stageKey(dir, "embeddings.parquet")
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index_$key"
-    val reuse = key == ivfIndexStaged.get() &&
-      new java.io.File(path, "_SUCCESS").isFile
-    if (!reuse) {
-      ivfIndexStaged.set(null) // invalidate while the index is in flux
-      Ann.ivfIndexInit(emb, path, cells = 16)
-      ivfIndexStaged.set(key)
-    }
+    val path = embeddingIndex("graft_ivf_index", dir)(Ann.ivfIndexInit(emb, _, cells = 16))
     Ann.ivfTopKIndexed(s, path, emb.filter(F.col("vec_id") < 20), k = 5, probes = 6)
   }
-
-  /** Last-built key of the staged INCREMENTAL IVF index (same
-    * one-reference contract as [[ivfIndexStaged]]). */
-  private val ivfIncStaged =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** IVF incremental ingest ([[graft.ann.Ann.ivfIndexAppend]]): the index
     * is built on the dense history prefix (vec_id < 512 — exactly the
@@ -2979,27 +2869,15 @@ object SparkEntry {
     * history re-read — the living-corpus lifecycle, the ANN analogue of
     * q_dedup_incremental), then served partition-pruned. Oracle =
     * q_ann_ivf's verbatim: freeze+append must reproduce the from-scratch
-    * build exactly. Crash-safe staging: the staged key is set only after
-    * the append lands; any earlier failure leaves a key mismatch and the
-    * next run rebuilds from scratch (init is a full overwrite). */
+    * build exactly. */
   private def qAnnIvfIncremental(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
-    val key = stageKey(dir, "embeddings.parquet")
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_inc_$key"
-    val reuse = key == ivfIncStaged.get() &&
-      new java.io.File(path, "_SUCCESS").isFile
-    if (!reuse) {
-      ivfIncStaged.set(null) // invalidate while the index is in flux
-      Ann.ivfIndexInit(emb.filter(F.col("vec_id") < 512), path, cells = 16)
-      Ann.ivfIndexAppend(emb.filter(F.col("vec_id") >= 512), path)
-      ivfIncStaged.set(key)
+    val path = embeddingIndex("graft_ivf_inc", dir) { p =>
+      Ann.ivfIndexInit(emb.filter(F.col("vec_id") < 512), p, cells = 16)
+      Ann.ivfIndexAppend(emb.filter(F.col("vec_id") >= 512), p)
     }
     Ann.ivfTopKIndexed(s, path, emb.filter(F.col("vec_id") < 20), k = 5, probes = 6)
   }
-
-  /** Last-built key of the staged SEMANTIC-DEDUP history index. */
-  private val semIncStaged =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** INCREMENTAL semantic dedup ([[Ann.semanticIncremental]], r20): the
     * dense history prefix (vec_id < 400 — dense ids, so the frozen
@@ -3013,15 +2891,8 @@ object SparkEntry {
     * state per (dir, stamp) per JVM; best-of-N measures the probe. */
   private def qDedupSemanticIncremental(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
-    val key = stageKey(dir, "embeddings.parquet")
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_sem_inc_$key"
-    val reuse = key == semIncStaged.get() &&
-      new java.io.File(path, "_SUCCESS").isFile
-    if (!reuse) {
-      semIncStaged.set(null) // invalidate while the index is in flux
-      Ann.ivfIndexInit(emb.filter(F.col("vec_id") < 400), path, cells = 16)
-      semIncStaged.set(key)
-    }
+    val path = embeddingIndex("graft_sem_inc", dir)(
+      Ann.ivfIndexInit(emb.filter(F.col("vec_id") < 400), _, cells = 16))
     Ann.semanticIncremental(s, path, emb.filter(F.col("vec_id") >= 400))
   }
 
@@ -3040,21 +2911,12 @@ object SparkEntry {
     * q_dedup_semantic_incremental times). */
   private def qStreamDedupSemantic(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
-    val key = stageKey(dir, "embeddings.parquet")
-    val srcDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_stream_sem_src_$key")
-    // gate on the LAST-written artifact (the qStreamDedupIncremental
-    // crash-consistency pattern)
-    if (!java.nio.file.Files.exists(srcDir.resolve("b2").resolve("_SUCCESS"))) {
-      rmTree(srcDir.toString)
-      emb.filter(F.col("vec_id") >= 400 && F.col("vec_id") % 2 === 0).coalesce(1)
-        .write.mode("overwrite").parquet(srcDir.resolve("b1").toString)
-      emb.filter(F.col("vec_id") >= 400 && F.col("vec_id") % 2 === 1).coalesce(1)
-        .write.mode("overwrite").parquet(srcDir.resolve("b2").toString)
-    }
+    val srcDir = stageOnce("graft_stream_sem_src", dir, "embeddings.parquet")(
+      oneFile(emb.filter(F.col("vec_id") >= 400 && F.col("vec_id") % 2 === 0)),
+      oneFile(emb.filter(F.col("vec_id") >= 400 && F.col("vec_id") % 2 === 1)))
     // fresh seed index every call: the stream APPENDS to it, so reuse
     // across shots would pollute the probe
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_sem_inc_stream_$key"
+    val path = stagePath("graft_sem_inc_stream", dir, "embeddings.parquet").toString
     rmTree(path); rmTree(path + "_centroids"); rmTree(path + "_stats")
     Ann.ivfIndexInit(emb.filter(F.col("vec_id") < 400), path, cells = 16)
     val stream = s.readStream
@@ -3066,30 +2928,9 @@ object SparkEntry {
     try {
       graft.streaming.StreamingOps.semanticDedupStream(
         stream, path, outDir, ckpt).awaitTermination()
-      // pull the union through the driver: batch dirs are scratch
-      // (deleted below), so the returned frame must not re-read them
-      // lazily (the qStreamDedupIncremental convention)
-      val batchDirs = new java.io.File(outDir).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-        .map(_.getAbsolutePath).sorted
-      val rows = s.read.parquet(batchDirs.toSeq: _*).collect().toSeq
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vec_a",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("vec_b",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("cell",
-            org.apache.spark.sql.types.IntegerType, nullable = true),
-          org.apache.spark.sql.types.StructField("cosine",
-            org.apache.spark.sql.types.DoubleType, nullable = true))))
+      detach(readBatches(s, outDir))
     } finally { rmTree(ckpt); rmTree(outDir) }
   }
-
-  /** Last-built key of the staged REQUANTIZED IVF index. */
-  private val ivfReqStaged =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** IVF requantize lifecycle ([[graft.ann.Ann.ivfRequantize]]): build on
     * the original embeddings, append a deterministically SHIFTED batch
@@ -3103,21 +2944,14 @@ object SparkEntry {
     * recall-before/after and drift-report pins. */
   private def qAnnIvfRequantized(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
-    val key = stageKey(dir, "embeddings.parquet")
-    val tmp = System.getProperty("java.io.tmpdir")
-    val base = s"$tmp/graft_ivf_req_src_$key"
-    val req = s"$tmp/graft_ivf_req_$key"
-    val reuse = key == ivfReqStaged.get() &&
-      new java.io.File(req, "_SUCCESS").isFile
-    if (!reuse) {
-      ivfReqStaged.set(null) // invalidate while the index is in flux
+    val req = embeddingIndex("graft_ivf_req", dir) { p =>
+      val base = s"${p}_base"
       val shifted = emb.filter(F.col("vec_id") % 4 === 0)
         .select((F.col("vec_id") + 1000000L).as("vec_id"),
           F.transform(F.col("embedding"), x => F.negate(x)).as("embedding"))
       Ann.ivfIndexInit(emb, base, cells = 16)
       Ann.ivfIndexAppend(shifted, base)
-      Ann.ivfRequantize(s, base, req, cells = 16)
-      ivfReqStaged.set(key)
+      Ann.ivfRequantize(s, base, p, cells = 16)
     }
     Ann.ivfTopKIndexed(s, req, emb.filter(F.col("vec_id") < 20), k = 5, probes = 6)
   }
@@ -3134,21 +2968,12 @@ object SparkEntry {
     * timing; q_ann_ivf_indexed times the steady-state serve). */
   private def qStreamAnnIngest(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
-    val key = stageKey(dir, "embeddings.parquet")
-    val srcDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_stream_ann_src_$key")
-    // Gate staging on the LAST-written artifact's commit marker (the
-    // qStreamDedupIncremental crash-consistency pattern).
-    if (!java.nio.file.Files.exists(srcDir.resolve("b2").resolve("_SUCCESS"))) {
-      rmTree(srcDir.toString)
-      emb.filter(F.col("vec_id") >= 512 && F.col("vec_id") % 2 === 0).coalesce(1)
-        .write.mode("overwrite").parquet(srcDir.resolve("b1").toString)
-      emb.filter(F.col("vec_id") >= 512 && F.col("vec_id") % 2 === 1).coalesce(1)
-        .write.mode("overwrite").parquet(srcDir.resolve("b2").toString)
-    }
+    val srcDir = stageOnce("graft_stream_ann_src", dir, "embeddings.parquet")(
+      oneFile(emb.filter(F.col("vec_id") >= 512 && F.col("vec_id") % 2 === 0)),
+      oneFile(emb.filter(F.col("vec_id") >= 512 && F.col("vec_id") % 2 === 1)))
     // fresh index every call: the stream APPENDS to it, so reuse across
     // shots would double the appended vectors
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_stream_$key"
+    val path = stagePath("graft_ivf_stream", dir, "embeddings.parquet").toString
     rmTree(path)
     rmTree(path + "_centroids")
     Ann.ivfIndexInit(emb.filter(F.col("vec_id") < 512), path, cells = 16)
@@ -3161,23 +2986,9 @@ object SparkEntry {
     try {
       graft.streaming.StreamingOps.ivfIngestStream(
         stream, path, outDir, ckpt).awaitTermination()
-      // Serve — and pull through the driver: the index is rebuilt (and the
-      // tmp markers deleted) on later calls, so the returned frame must
-      // not re-read the scratch state lazily.
-      val rows = Ann.ivfTopKIndexed(
-        s, path, emb.filter(F.col("vec_id") < 20), k = 5, probes = 6)
-        .collect().toSeq
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("query_id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("rnk",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("neighbor_id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("cosine",
-            org.apache.spark.sql.types.DoubleType, nullable = true))))
+      // serve; the index is rebuilt on later calls
+      detach(Ann.ivfTopKIndexed(
+        s, path, emb.filter(F.col("vec_id") < 20), k = 5, probes = 6))
     } finally { rmTree(ckpt); rmTree(outDir) }
   }
 
@@ -3510,7 +3321,7 @@ object SparkEntry {
 
   // ---------------------------------------------------------------- lookup
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_map" -> (qMap _),
     "q_filter" -> (qFilter _),
     "q_filter_map" -> (qFilterMap _),

@@ -39,27 +39,20 @@ object Tables {
   private val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
 
   /** Sniff the on-disk ts type of `<dir>/events.parquet` (footer-only
-    * read). The legacy nanosAsLong flag is set only for the sniff and
-    * RESTORED after — leaking a schema-changing flag into the session
-    * would make later unrelated TIMESTAMP(NANOS) reads silently return
-    * BIGINT instead of the default unsupported-type error. */
-  def tsShape(spark: SparkSession, dir: String): TsShape = {
-    val prev = spark.conf.getOption(nanosKey)
-    spark.conf.set(nanosKey, "true")
-    try spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType         => TsShape.NanosAsLong
-      case org.apache.spark.sql.types.TimestampType    => TsShape.Micros
-      case org.apache.spark.sql.types.TimestampNTZType => TsShape.Ntz
-      // Fail fast on a generator shape the loader doesn't support (INT96,
-      // string, date): a wildcard→Ntz here would silently cast garbage.
-      case other => throw new IllegalStateException(
-        s"events.ts has unsupported physical type $other; " +
-          "expected TIMESTAMP(NANOS|MICROS) or TIMESTAMP_NTZ")
-    } finally prev match {
-      case Some(v) => spark.conf.set(nanosKey, v)
-      case None    => spark.conf.unset(nanosKey)
+    * read), with the legacy nanosAsLong flag set only for the sniff. */
+  def tsShape(spark: SparkSession, dir: String): TsShape =
+    SessionConf.withConf(spark, nanosKey -> "true") {
+      spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType match {
+        case org.apache.spark.sql.types.LongType         => TsShape.NanosAsLong
+        case org.apache.spark.sql.types.TimestampType    => TsShape.Micros
+        case org.apache.spark.sql.types.TimestampNTZType => TsShape.Ntz
+        // Fail fast on a generator shape the loader doesn't support (INT96,
+        // string, date): a wildcard→Ntz here would silently cast garbage.
+        case other => throw new IllegalStateException(
+          s"events.ts has unsupported physical type $other; " +
+            "expected TIMESTAMP(NANOS|MICROS) or TIMESTAMP_NTZ")
+      }
     }
-  }
 
   /** Normalize a frame's `ts` column of the given shape to micro-precision
     * TimestampType (integral `DIV` for the nanos truncation — a double

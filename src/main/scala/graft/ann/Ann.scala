@@ -1,22 +1,18 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.expressions.Window
 
 import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.dotF
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
-  * Three tiers, per the build brief:
+  * Two baseline tiers:
   *  - [[bruteTopK]]: exact baseline. Small query set is broadcast, the big
   *    corpus is scanned ONCE (BroadcastNestedLoopJoin — no corpus shuffle);
   *    ranking is deterministic: (cosine rounded to 1e-6 desc, vec_id asc).
-  *  - [[bruteTopKPartial]]: same result, but the top-k is computed with a
-  *    typed [[TopKAgg]] aggregator → map-side partial top-k, so only
-  *    k rows per (partition × query) ever shuffle. The 100 TB brute path.
   *  - [[lshTopK]]: random-hyperplane LSH bucketing (replicable signatures,
   *    see VectorFunctions.lshSignature) → candidates share a bucket →
   *    rerank within bucket. Probes only matching buckets; recall is
@@ -314,30 +310,6 @@ object Ann {
       .withColumn("rm", F.row_number().over(wM))
       .filter(F.col("rm") === 1 && F.col("margin_score") >= threshold)
       .select("src_id", "tgt_id", "cosine", "margin_score")
-  }
-
-  /** Exact top-k via map-side partial aggregation — only k candidates per
-    * partition per query reach the shuffle. Identical output to
-    * [[bruteTopK]] (same deterministic sort key; a NULL cosine from a
-    * null-element embedding ranks last, as there). */
-  def bruteTopKPartial(corpus: DataFrame, queries: DataFrame, idCol: String = "vec_id",
-                       embCol: String = "embedding", k: Int = 5): DataFrame = {
-    val agg = new TopKAgg(k).toColumn.name("topk")
-    val p = pairs(corpus, queries, idCol, embCol)
-      .select(
-        F.col("query_id").cast("long").as("_1"),
-        F.struct(
-          F.col("cosine").as("_1"),
-          F.col("neighbor_id").cast("long").as("_2")).as("_2"))
-    import p.sparkSession.implicits._
-    p.as[(Long, (Option[Double], Long))]
-      .groupByKey(_._1)
-      .agg(agg)
-      .toDF("query_id", "topk")
-      .select(F.col("query_id"), F.posexplode(F.col("topk")))
-      .select(
-        F.col("query_id"), (F.col("pos") + 1L).as("rnk"),
-        F.col("col._2").as("neighbor_id"), F.col("col._1").as("cosine"))
   }
 
   /** JL-accelerated exact top-k ([[graft.functions.VectorFunctions
@@ -1270,38 +1242,4 @@ object Ann {
       .select(VectorFunctions.lshSignature(F.col(embCol), planes, dim).as("bucket"))
       .groupBy("bucket")
       .agg(F.count(F.lit(1)).as("n"))
-}
-
-/** Typed top-k aggregator: keeps the k best (score desc, id asc) pairs.
-  * Spark runs it with partial aggregation → map-side combine, which is what
-  * makes the brute scan viable at corpus scale. */
-class TopKAgg(k: Int)
-    extends Aggregator[(Long, (Option[Double], Long)), Seq[(Option[Double], Long)], Seq[(Option[Double], Long)]] {
-  private type Scored = (Option[Double], Long)
-  // The window formulation's `orderBy(cosine.desc)`, id ascending on ties:
-  // NaN ranks FIRST (as the largest double) and NULL LAST (desc sorts
-  // NULLS LAST) — a plain Ordering.by(-s) would sort NaN last and the two
-  // documented-identical paths would disagree on any zero-norm
-  // (NaN-cosine) or null-element (NULL-cosine) vector.
-  private def sortKey(s: Option[Double]): (Int, Double) = s match {
-    case None => (1, 0.0)
-    case Some(d) => (0, if (d.isNaN) Double.NegativeInfinity else -d)
-  }
-  private val ord: Ordering[Scored] =
-    Ordering.by[Scored, ((Int, Double), Long)] { case (s, id) => (sortKey(s), id) }
-
-  override def zero: Seq[Scored] = Seq.empty
-  // The buffer is kept sorted (trim's postcondition), so the common case —
-  // a row no better than the current worst of a full buffer — is a single
-  // comparison, not a k+1-element sort per corpus row.
-  override def reduce(buf: Seq[Scored], in: (Long, Scored)): Seq[Scored] =
-    if (buf.size == k && ord.gteq(in._2, buf.last)) buf
-    else trim(buf :+ in._2)
-  override def merge(a: Seq[Scored], b: Seq[Scored]): Seq[Scored] =
-    trim(a ++ b)
-  override def finish(r: Seq[Scored]): Seq[Scored] = r.sorted(ord)
-  private def trim(s: Seq[Scored]): Seq[Scored] = s.sorted(ord).take(k)
-
-  override def bufferEncoder: Encoder[Seq[Scored]] = ExpressionEncoder()
-  override def outputEncoder: Encoder[Seq[Scored]] = ExpressionEncoder()
 }

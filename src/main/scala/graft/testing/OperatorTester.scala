@@ -54,8 +54,7 @@ final class OperatorTester[V, O] private[testing] (
     eventTimeMs: V => Long,
     input: MemoryStream[(Timestamp, V)],
     query: StreamingQuery,
-    sinkTable: String,
-    restoreConf: () => Unit)(implicit oEnc: Encoder[O]) {
+    sinkTable: String)(implicit oEnc: Encoder[O]) {
 
   private val pending = mutable.ArrayBuffer.empty[(Timestamp, V)]
   private val received = mutable.Queue.empty[O]
@@ -101,7 +100,6 @@ final class OperatorTester[V, O] private[testing] (
     // The memory sink pins every row it ever received and registers a
     // temp view; a suite creating many testers would otherwise leak both.
     spark.catalog.dropTempView(sinkTable)
-    restoreConf()
   }
 }
 
@@ -124,8 +122,7 @@ object OperatorTester {
       spark: SparkSession,
       eventTimeMs: V => Long,
       exec: org.apache.spark.sql.Dataset[(Timestamp, V)] =>
-        org.apache.spark.sql.Dataset[O],
-      restoreConf: () => Unit = () => ())(
+        org.apache.spark.sql.Dataset[O])(
       implicit vEnc: Encoder[V], oEnc: Encoder[O]): OperatorTester[V, O] = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     implicit val tvEnc: Encoder[(Timestamp, V)] =
@@ -138,7 +135,7 @@ object OperatorTester {
         .as[(Timestamp, V)])
     val q = out.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
-    new OperatorTester[V, O](spark, eventTimeMs, stream, q, name, restoreConf)
+    new OperatorTester[V, O](spark, eventTimeMs, stream, q, name)
   }
 
   /** Tester over [[StatefulExec.stream]] (flatMapGroupsWithState, no TTL):
@@ -161,30 +158,18 @@ object OperatorTester {
         ds, tv => key(tv._2), _._1.getTime, ttlMs, lift(logic)))
 
   /** Tester over [[StatefulExec.streamTws]] (transformWithState): same
-    * contract on the state-v2 engine. Sets the RocksDB state-store
-    * provider for the query and restores the previous conf on `close()`
-    * — or immediately if the query fails to start, so a bad logic/encoder
-    * can't leak the provider onto unrelated queries. NOT re-entrant: two
-    * overlapping `tws` testers on one session would capture each other's
-    * provider setting as "previous". */
+    * contract on the state-v2 engine. The RocksDB state-store provider is
+    * set only while the query starts (the query keeps the conf it started
+    * with), so the session's own setting is back before this returns. */
   def tws[K: Encoder, V: Encoder, S: Encoder, O: Encoder](
       logic: StatefulLogic[K, V, S, O], key: V => K,
       eventTimeMs: V => Long, ttlMs: Option[Long] = None)(
-      spark: SparkSession): OperatorTester[V, O] = {
-    val confKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(confKey)
-    val restore = () => prev match {
-      case Some(p) => spark.conf.set(confKey, p)
-      case None    => spark.conf.unset(confKey)
+      spark: SparkSession): OperatorTester[V, O] =
+    graft.SessionConf.withConf(spark, graft.SessionConf.RocksDbProvider) {
+      start[K, V, S, O](spark, eventTimeMs,
+        ds => StatefulExec.streamTws[K, (Timestamp, V), S, O](
+          ds, tv => key(tv._2), lift(logic), ttlMs, Some(_._1.getTime)))
     }
-    spark.conf.set(confKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try start[K, V, S, O](spark, eventTimeMs,
-      ds => StatefulExec.streamTws[K, (Timestamp, V), S, O](
-        ds, tv => key(tv._2), lift(logic), ttlMs, Some(_._1.getTime)),
-      restoreConf = restore)
-    catch { case e: Throwable => restore(); throw e }
-  }
 
   /** One-shot check of the BATCH execution path ([[StatefulExec.batch]]):
     * fold `inputs` per key in `orderBy` order and return all outputs. The

@@ -352,31 +352,18 @@ class DedupAnnSpec extends AnyFunSuite with SparkFixture {
     assert(!cands.contains((4L, 5L)), s"unrelated docs flagged: $cands")
   }
 
-  test("bruteTopKPartial (map-side top-k aggregator) equals window bruteTopK") {
-    val emb = spark.read.parquet(s"$sf001/embeddings.parquet")
-    val q = emb.filter(F.col("vec_id") < 10)
-    VectorFunctions.registerAll(spark)
-    val a = Ann.bruteTopK(emb, q, k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
-    val b = Ann.bruteTopKPartial(emb, q, k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
-    assert(a == b, "partial-agg top-k diverges from window top-k")
-  }
-
   /** The sf0.001 embeddings with vec_id 3's element 5 set to null. */
   private def embWithNullElement() =
     spark.read.parquet(s"$sf001/embeddings.parquet").withColumn("embedding",
       F.expr("transform(embedding, (x, i) -> IF(vec_id = 3 AND i = 5, NULL, x))"))
 
-  test("bruteTopKPartial equals bruteTopK on a null-element embedding (NULL cosine ranks last)") {
+  test("bruteTopK ranks NULL cosines of a null-element embedding last") {
     val emb = embWithNullElement()
     val q = emb.filter(F.col("vec_id") < 10)
     val a = Ann.bruteTopK(emb, q, k = 5).collect().map(_.toString).sorted.toSeq
-    val b = Ann.bruteTopKPartial(emb, q, k = 5).collect().map(_.toString).sorted.toSeq
     // query 3 scores NULL against everything: its top 5 are ids 0..4
     assert(a.count(_.startsWith("[3,")) == 5 && a.filter(_.startsWith("[3,")).forall(_.endsWith(",null]")),
       s"expected five NULL-cosine rows for query 3: $a")
-    assert(a == b, s"window=${a.diff(b).take(5)} partial=${b.diff(a).take(5)}")
   }
 
   test("IVF training names the id and position of a null embedding element") {

@@ -52,10 +52,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("transformWithState (state v2) keeps per-key state across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    SessionConf.withConf(spark, SessionConf.RocksDbProvider) {
       val input = MemoryStream[SEvent]
       val out = StatefulExec.streamTws[Long, SEvent, Long, STotal](
         input.toDS(), _.k, runningSum)
@@ -69,9 +66,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       q.stop()
       assert(rows.contains(STotal(1, 17)), s"state lost across batches: $rows")
       assert(rows.contains(STotal(2, 5)))
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -588,10 +582,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("transformWithState timers expire on the WATERMARK, sparing refreshed keys") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    SessionConf.withConf(spark, SessionConf.RocksDbProvider) {
       val ttlLogic = new StatefulLogic[Long, WmEvent, Long, STotal] {
         def zero = 0L
         def update(k: Long, v: WmEvent, s: Long): (Long, IterableOnce[STotal]) =
@@ -623,19 +614,13 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
         s"watermark passing the deadline did not expire idle key 2: $rows")
       assert(!rows.exists(_.k == 1),
         s"key 1 was refreshed past the frontier and must NOT expire: $rows")
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("transformWithState TTL deadline is monotone under late-but-valid records") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    SessionConf.withConf(spark, SessionConf.RocksDbProvider) {
       val ttlLogic = new StatefulLogic[Long, WmEvent, Long, STotal] {
         def zero = 0L
         def update(k: Long, v: WmEvent, s: Long): (Long, IterableOnce[STotal]) =
@@ -668,9 +653,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       q.stop()
       assert(!rows.exists(_.k == 1),
         s"late-but-valid record moved the TTL deadline backward (premature expiry): $rows")
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -828,10 +810,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("TTL'd migration: seeded keys expire one TTL after the migration point, not at epoch 1970") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    SessionConf.withConf(spark, SessionConf.RocksDbProvider) {
       val ttlLogic = new StatefulLogic[Long, WmEvent, Long, STotal] {
         def zero = 0L
         def update(k: Long, v: WmEvent, s: Long): (Long, IterableOnce[STotal]) =
@@ -873,9 +852,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
         s"seeded-then-idle key must expire one TTL after the migration point: $rows")
       assert(rows.contains(STotal(1, 80)),
         s"refreshed key must carry seed+event through expiry: $rows")
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
