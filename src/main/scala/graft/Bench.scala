@@ -11,126 +11,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Headline set: the scale-sensitive paths (shuffle joins, window state,
-    * LSH dedup, ANN) — not the trivial projections. */
-  val headline: Seq[String] = Seq(
-    "q_join", "q_asof_join", "q_range_join",
-    "q_epochs_window", "q_stream_epochs", "q_stateful_map", "q_ttl_map",
-    "q_key_distribute", "q_agg_salted", "q_dedup_exact", "q_dedup_minhash",
-    "q_ngram_jaccard", "q_dedup_components", "q_fingerprint_winnow",
-    "q_ann_brute", "q_ann_ivf",
-    "q_ann_lsh", "q_tokens", "q_tfidf", "q_quality", "q_pipeline",
-    "q_dedup_minhash_pruned", "q_dedup_incremental", "q_dedup_semantic",
-    "q_distinct_sketch", "q_stream_join", "q_upsert", "q_corpus_diff",
-    "q_percentile_sketch", "q_mix_sample", "q_cap_per_source",
-    "q_contamination_bloom", "q_trim_spans", "q_dsir_weights",
-    "q_gopher_rules",
-    // r13 additions, benched from r14 (VERDICT r13 #5: oracle-gated but
-    // unbenched perf can silently rot): index-served ANN, perplexity
-    // buckets, DSIR selection, trained classifier, column profiling.
-    "q_ann_ivf_indexed", "q_ccnet_buckets", "q_dsir_select",
-    "q_clf_quality", "q_profile",
-    // r14 addition: the WET-style extraction scan (data-bound, ratio ~1.2
-    // solo). q_url_canonical / q_normalize_unicode measured 0.18/0.15 s
-    // solo — the sub-0.2 s fixed-cost class, correctness-gated only.
-    "q_html_extract",
-    // r15 additions (VERDICT r14 #7): the two r14 operators with
-    // corpus-proportional cost — the chained web pipeline and the BPE
-    // corpus encode (rows-only gate, so no DuckDB ratio: wall-clock is
-    // still tracked so its perf cannot rot silently).
-    "q_pipeline_web", "q_bpe_encode",
-    // r15 rows with corpus-proportional cost: the C4 line-filter scan,
-    // the line-dedup window+rebuild, the global token-rank shard.
-    // q_filter_funnel / q_corpus_asof measured 0.18/0.31 s solo — the
-    // fixed-cost class, correctness-gated only.
-    "q_c4_rules", "q_dedup_lines", "q_shard_by_tokens",
-    // r16 rows: PMI's two token-count passes, the CM-pruned heavy-hitter
-    // recount, the blocklist scan, the priority-sample top-k scan — all
-    // corpus-proportional. The sketch/sample pair price Spark's per-job
-    // constants against DuckDB's trivial small-key-space HAVING/ORDER BY
-    // (sub-second absolute — the q_key_distribute fixed-cost class;
-    // see BASELINE.md's honest-reading section).
-    "q_pmi", "q_heavy_hitters", "q_url_blocklist", "q_sample_priority",
-    // prototypes pruning is embedding-corpus-proportional (0.57 s solo);
-    // q_filter_funnel / q_corpus_asof stay in the sub-0.35 s fixed-cost
-    // class, correctness-gated only, and q_stream_heavy_hitters /
-    // q_stream_distinct_sketch / q_stream_percentile_sketch join the
-    // documented streaming-gate class
-    "q_prune_prototypes",
-    // r17 additions (VERDICT r16 #9 + the round's new corpus-proportional
-    // rows): grouped heavy hitters and the layout-pruned scan graduate to
-    // the headline; fertility is the rows-only BPE wall (tracked so its
-    // perf cannot rot); substring dedup is the L-gram digest pass +
-    // rebuild; incremental components rides the verified-pair build;
-    // requantized serving prices the warm partition-pruned probe.
-    "q_heavy_hitters_grouped", "q_layout_prune", "q_bpe_fertility",
-    "q_dedup_substring", "q_dedup_components_incremental",
-    "q_ann_ivf_requantized",
-    // r17 late additions, all corpus-proportional: the stupid-backoff
-    // bigram scorer (two count passes + two keyed joins), DoReMi's
-    // excess-loss pass over the same tables, soft dedup's shingle-df
-    // pass (the q_dup_ngrams plan shape). q_stream_sample_priority joins
-    // the documented streaming-gate class (correctness-gated only).
-    "q_lm_bigram", "q_lm_kn", "q_mix_doremi", "q_dedup_soft",
-    // unigram-LM tokenizer corpus encode (train included, the q_bpe_encode
-    // shape) — rows-only wall, tracked so its perf cannot rot
-    "q_spm_encode",
-    // D4: SemDeDup + survivor-retrained prototypes pruning (two Lloyd
-    // trainings + the within-cell pairing — embedding-corpus-proportional)
-    "q_pipeline_d4",
-    // r17 session-3 corpus-proportional rows: OPH signatures (pure scan),
-    // b-bit agreement (sig build + candidate compare), the AC blocklist
-    // scan, the two-k KMV overlap sketches, three-signal rank fusion
-    // (3 GlobalIndex passes + id joins), margin mining's broadcast
-    // probe, the two example-construction passes, and the MRL cut.
-    // q_clf_auc re-runs q_clf_quality's GD chain (already priced) and
-    // q_dedup_report re-runs q_dedup_components' closure — both
-    // correctness-gated only to keep the headline from double-billing.
-    "q_dedup_minhash_oph", "q_dedup_minhash_bbit", "q_phrase_blocklist",
-    "q_script_profile",
-    "q_corpus_overlap", "q_rank_fusion", "q_ann_margin",
-    "q_span_corrupt", "q_fim", "q_ann_mrl", "q_mine_pairs", "q_source_keywords",
-    // rows-only walls, tracked so their perf cannot rot: the other two
-    // tokenizer-family corpus encodes and the whitening fit+project.
-    "q_wordpiece_encode", "q_bpe_bytes_encode", "q_ann_whiten",
-    "q_compression_ratio", "q_zipf_fit", "q_bm25", "q_hybrid_search",
-    // r18 rows, all corpus-proportional: boilerplate df + rebuild (the
-    // q_dedup_lines plan shape plus a line-keyed count join), the two
-    // rank-then-middle median reductions, the JM trigram's three count
-    // passes + three keyed joins, the per-group KMV sketch pass + pairs
-    // arithmetic, the wordpiece corpus encode behind the coverage fold.
-    // q_source_rank_wilson (one combinable agg over the quality scan)
-    // and q_ann_mmr (pool-bounded driver loop over bruteTopK) sit in the
-    // sub-0.4 s fixed-cost class, correctness-gated only.
-    "q_boilerplate", "q_outliers_mad", "q_lm_jm", "q_overlap_matrix",
-    "q_tokenizer_coverage",
-    // curriculum: two GlobalIndex passes over the corpus (the
-    // shuffleShard cost shape, twice). q_ann_hamming/q_ann_mmr sit in
-    // the jl_rerank/bounded-pool class, correctness-gated only;
-    // q_stream_tokenizer_coverage joins the streaming-gate class.
-    "q_curriculum",
-    // weighted-Jaccard verify: candidates (the q_dedup_minhash cost) +
-    // the pair-bounded intersection join — the most verify-heavy dedup
-    // wall in the suite, tracked so it cannot rot.
-    "q_dedup_jaccard_weighted",
-    // Moore-Lewis: two unigram count passes + the double-scored token
-    // stream (the q_lm_score cost shape against two models).
-    "q_select_moore_lewis",
-    // planner→executor skew composition (r19): the skew diagnosis pass
-    // + the per-key-salted two-stage aggregate it recommends.
-    "q_agg_salted_auto",
-    // semantic decontamination (r19): broadcast eval set × one corpus
-    // scan + the per-vector argmax window — the q_ann_brute cost shape.
-    "q_decontaminate_semantic",
-    // corpus-ops telemetry (r19): PSI = two quality scans folded to
-    // bucket tables; kappa = one confusion-count aggregation.
-    "q_psi_drift", "q_clf_kappa",
-    // r20: incremental semantic dedup (frozen-quantizer index probe —
-    // the steady-state shard-vs-history cost, q_dedup_incremental's
-    // vector twin). q_stream_psi stays off the headline like its
-    // streaming siblings (fixed micro-batch machinery cost, tracked by
-    // the streaming gates).
-    "q_dedup_semantic_incremental")
+  /** The gates flagged `headline` in [[SparkEntry.gates]]. */
+  val headline: Seq[String] = SparkEntry.gates.filter(_.headline).map(_.name)
 
   def main(args: Array[String]): Unit = {
     // Every number below is formatted with the f interpolator, which uses
@@ -139,6 +21,10 @@ object Bench {
     // unparseable. This is a standalone measurement main, so pinning the
     // process default is the one-line fix for every %f site at once.
     java.util.Locale.setDefault(java.util.Locale.ROOT)
+    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (profiling aid) — any
+    // gate is benchable, not just the headline set; an unknown name fails.
+    val onlySelected = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(s => SparkEntry.gatesNamed(s.split(",").toSeq).map(_.name))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -160,7 +46,7 @@ object Bench {
     val listener = new graft.tools.StageMetricsListener()
     spark.sparkContext.addSparkListener(listener)
     val outDir =
-      if (sys.env.contains("SPARK_GRAFT_ONLY"))
+      if (onlySelected.isDefined)
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
       else java.nio.file.Paths.get("")
     val stagesOut = new java.io.PrintWriter(
@@ -169,10 +55,6 @@ object Bench {
     // Warm the JVM/session (codegen, parquet footers) outside the timings.
     Tables(spark, sfDir, "lineitem").count()
 
-    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (profiling aid) — any
-    // registered gate query is benchable, not just the headline set.
-    val onlySelected = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").toSeq.filter(SparkEntry.queries.contains))
     // Bench-order ROTATION (r20, VERDICT r19 #8): the end-of-run
     // contention cluster hit the same (alphabetically late / recently
     // added) queries every round, confounding per-query cross-round
@@ -510,15 +392,12 @@ object Bench {
         val sTot = results.collect { case (k, v) if baseline.contains(k) => v }.sum
         if (bTot == 0.0) ("", "") // no covered queries selected: NaN would corrupt the JSON
         else {
-          // Composition honesty (VERDICT r10): some queries have
-          // PATHOLOGICAL single-node baselines — DuckDB pays a recursive-
-          // CTE closure for q_dedup_components and a full unindexed Lloyd
-          // + within-cell-quadratic + closure chain for q_dedup_semantic —
-          // so the headline aggregate can read as throughput parity on the
-          // back of adversarial oracles. Emit the aggregate EXCLUDING them
-          // on both sides: ratio_ex_components (the r10 ask, components
-          // only) and ratio_ex_adversarial (every query in the list).
-          val adversarial = Set("q_dedup_components", "q_dedup_semantic")
+          // Some gates have pathological single-node baselines
+          // (OracleSql.adversarialBaselines), so the headline aggregate
+          // can read as throughput parity on the back of adversarial
+          // oracles. Emit the aggregate EXCLUDING them on both sides:
+          // ratio_ex_components (the closure gate only) and
+          // ratio_ex_adversarial (every gate in the set).
           def exRatio(excluded: Set[String]): Option[Double] = {
             val b = results.collect {
               case (k, _) if baseline.contains(k) && !excluded(k) => baseline(k) }.sum
@@ -527,9 +406,9 @@ object Bench {
             if (b == 0.0) None else Some(s / b)
           }
           val exJson =
-            exRatio(Set("q_dedup_components"))
+            exRatio(Set(OracleSql.closureBaseline))
               .map(r => s""","ratio_ex_components":${f"$r%.1f"}""").getOrElse("") +
-            exRatio(adversarial)
+            exRatio(OracleSql.adversarialBaselines)
               .map(r => s""","ratio_ex_adversarial":${f"$r%.1f"}""").getOrElse("")
           // The per-query ratio map goes to the FILE only: BENCH_r14's
           // one-line stdout record exceeded the driver's tail-capture

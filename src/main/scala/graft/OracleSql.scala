@@ -14,6 +14,13 @@ object OracleSql {
 
   private val dec4sum = "CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE)"
 
+  /** Oracles whose DuckDB wall is no fair single-node baseline: DuckDB
+    * pays a recursive-CTE closure for [[closureBaseline]] and an unindexed
+    * Lloyd + within-cell-quadratic + closure chain for q_dedup_semantic.
+    * `Bench` also reports its DuckDB ratio without them. */
+  val closureBaseline = "q_dedup_components"
+  val adversarialBaselines: Set[String] = Set(closureBaseline, "q_dedup_semantic")
+
   /** The deterministic md5-register HLL oracle, shared verbatim by
     * q_distinct_sketch (batch) and q_stream_distinct_sketch (the
     * streaming-agg-maintained registers): streamed state ≡ batch sketch

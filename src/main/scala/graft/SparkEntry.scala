@@ -14,8 +14,18 @@ import graft.sinks.{StatefulParquetSink, StdoutSink, VecSink}
 import graft.sources.{KafkaShim, ParquetSource, RangeSource, StatefulSource, StatelessFileSource}
 import graft.time.EventTime
 
-/** Driver contract — one `queries` entry per SURVEY.md §2 component, with a
-  * DuckDB-runnable oracle in [[oracleSql]] where SQL-expressible.
+/** One gate: a name, the query it runs on (session, sf directory), and
+  * whether `Bench` times it (`headline`) or only the cross-JVM smoke runs
+  * it beyond the headline (`crossJvm`). */
+final case class Gate(
+    name: String,
+    run: (SparkSession, String) => DataFrame,
+    headline: Boolean = false,
+    crossJvm: Boolean = false)
+
+/** Driver contract — one [[SparkEntry.gates]] row per SURVEY.md §2
+  * component, with a DuckDB-runnable oracle in [[oracleSql]] where
+  * SQL-expressible.
   *
   * Numeric conventions shared with the oracles (so value hashes match):
   *  - money/metric sums go through DECIMAL (exact, order-independent) and
@@ -3321,225 +3331,253 @@ object SparkEntry {
 
   // ---------------------------------------------------------------- lookup
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_map" -> (qMap _),
-    "q_filter" -> (qFilter _),
-    "q_filter_map" -> (qFilterMap _),
-    "q_flatten" -> (qFlatten _),
-    "q_inspect" -> (qInspect _),
-    "q_cloned" -> (qCloned _),
-    "q_split" -> (qSplit _),
-    "q_union" -> (qUnion _),
-    "q_key_local" -> (qKeyLocal _),
-    "q_key_distribute" -> (qKeyDistribute _),
-    "q_stateful_map" -> (qStatefulMap _),
-    "q_stateful_op" -> (qStatefulOp _),
-    "q_stateless_op" -> (qStatelessOp _),
-    "q_ttl_map" -> (qTtlMap _),
-    "q_assign_timestamps" -> (qAssignTimestamps _),
-    "q_epochs_window" -> (qEpochsWindow _),
-    "q_stream_epochs" -> (qStreamEpochs _),
-    "q_stream_stateful" -> (qStreamStateful _),
-    "q_stream_dedup" -> (qStreamDedup _),
-    "q_stream_dedup_minhash" -> (qStreamDedupMinhash _),
-    "q_stream_join" -> (qStreamJoin _),
-    "q_stream_join_outer" -> (qStreamJoinOuter _),
-    "q_sliding_window" -> (qSlidingWindow _),
-    "q_session_window" -> (qSessionWindow _),
-    "q_frontier" -> (qFrontier _),
-    "q_late_data" -> (qLateData _),
-    "q_join" -> (qJoin _),
-    "q_asof_join" -> (qAsofJoin _),
-    "q_asof_join_skewed" -> (qAsofJoinSkewed _),
-    "q_range_join" -> (qRangeJoin _),
-    "q_anti_join" -> (qAntiJoin _),
-    "q_outer_join" -> (qOuterJoin _),
-    "q_source_parquet" -> (qSourceParquet _),
-    "q_source_jsonl" -> (qSourceJsonl _),
-    "q_source_dirty" -> (qSourceDirty _),
-    "q_source_iterator" -> (qSourceIterator _),
-    "q_source_stateless" -> (qSourceStateless _),
-    "q_source_stateful" -> (qSourceStateful _),
-    "q_sink_stdout" -> (qSinkStdout _),
-    "q_sink_vec" -> (qSinkVec _),
-    "q_sink_stateful" -> (qSinkStateful _),
-    "q_kafka_source" -> (qKafkaSource _),
-    "q_kafka_sink" -> (qKafkaSink _),
-    "q_rescale" -> (qRescale _),
-    "q_rescale_resume" -> (qRescaleResume _),
-    "q_agg_salted" -> (qAggSalted _),
-    "q_topk" -> (qTopK _),
-    "q_dedup_keep" -> (qDedupKeep _),
-    "q_dedup_keep_near" -> (qDedupKeepNear _),
-    "q_dedup_components" -> (qDedupComponents _),
-    "q_dedup_components_dist" -> (qDedupComponentsDist _),
-    "q_dedup_components_incremental" -> (qDedupComponentsIncremental _),
-    "q_dedup_report" -> (qDedupReport _),
-    "q_tfidf" -> (qTfidf _),
-    "q_source_keywords" -> (qSourceKeywords _),
-    "q_bm25" -> (qBm25 _),
-    "q_hybrid_search" -> (qHybridSearch _),
-    "q_sample_stratified" -> (qSampleStratified _),
-    "q_sample_priority" -> (qSamplePriority _),
-    "q_mix_weights" -> (qMixWeights _),
-    "q_unimax" -> (qUnimax _),
-    "q_mix_sample" -> (qMixSample _),
-    "q_cap_per_source" -> (qCapPerSource _),
-    "q_upsert" -> (qUpsert _),
-    "q_stream_upsert" -> (qStreamUpsert _),
-    "q_corpus_compact" -> (qCorpusCompact _),
-    "q_corpus_diff" -> (qCorpusDiff _),
-    "q_folds" -> (qFolds _),
-    "q_split_leakage_safe" -> (qSplitLeakageSafe _),
-    "q_shuffle_shard" -> (qShuffleShard _),
-    "q_curriculum" -> (qCurriculum _),
-    "q_rollup" -> (qRollup _),
-    "q_chunk" -> (qChunk _),
-    "q_pack" -> (qPack _),
-    "q_scrub" -> (qScrub _),
-    "q_html_extract" -> (qHtmlExtract _),
-    "q_c4_rules" -> (qC4Rules _),
-    "q_dedup_lines" -> (qDedupLines _),
-    "q_boilerplate" -> (qBoilerplate _),
-    "q_outliers_mad" -> (qOutliersMad _),
-    "q_source_rank_wilson" -> (qSourceRankWilson _),
-    "q_shard_by_tokens" -> (qShardByTokens _),
-    "q_filter_funnel" -> (qFilterFunnel _),
-    "q_corpus_asof" -> (qCorpusAsof _),
-    "q_padding_efficiency" -> (qPaddingEfficiency _),
-    "q_url_canonical" -> (qUrlCanonical _),
-    "q_url_blocklist" -> (qUrlBlocklist _),
-    "q_phrase_blocklist" -> (qPhraseBlocklist _),
-    "q_script_profile" -> (qScriptProfile _),
-    "q_compression_ratio" -> (qCompressionRatio _),
-    "q_zipf_fit" -> (qZipfFit _),
-    "q_rank_fusion" -> (qRankFusion _),
-    "q_span_corrupt" -> (qSpanCorrupt _),
-    "q_fim" -> (qFim _),
-    "q_normalize_unicode" -> (qNormalizeUnicode _),
-    "q_pipeline_web" -> (qPipelineWeb _),
-    "q_bigrams" -> (qBigrams _),
-    "q_pmi" -> (qPmi _),
-    "q_contamination" -> (qContamination _),
-    "q_contamination_bloom" -> (qContaminationBloom _),
-    "q_trim_spans" -> (qTrimSpans _),
-    "q_dedup_substring" -> (qDedupSubstring _),
-    "q_dedup_substring_keepfirst" -> (qDedupSubstringKeepFirst _),
-    "q_dup_ngrams" -> (qDupNgrams _),
-    "q_lsh_plan" -> (qLshPlan _),
-    "q_jaccard_join" -> (qJaccardJoin _),
-    "q_dedup_soft" -> (qDedupSoft _),
-    "q_sample_soft" -> (qSampleSoft _),
-    "q_pipeline_d4" -> (qPipelineD4 _),
-    "q_mix_constrained" -> (qMixConstrained _),
-    "q_order_incontext" -> (qOrderIncontext _),
-    "q_ann_sq8" -> (qAnnSq8 _),
-    "q_ann_jl" -> (qAnnJl _),
-    "q_ann_jl_rerank" -> (qAnnJlRerank _),
-    "q_ann_hamming" -> (qAnnHamming _),
-    "q_outliers_embedding" -> (qOutliersEmbedding _),
-    "q_dup_paragraphs" -> (qDupParagraphs _),
-    "q_lm_score" -> (qLmScore _),
-    "q_lm_bigram" -> (qLmBigram _),
-    "q_mix_doremi" -> (qMixDoremi _),
-    "q_lm_kn" -> (qLmKn _),
-    "q_lm_jm" -> (qLmJm _),
-    "q_select_moore_lewis" -> (qSelectMooreLewis _),
-    "q_entropy" -> (qEntropy _),
-    "q_dsir_weights" -> (qDsirWeights _),
-    "q_ccnet_buckets" -> (qCcnetBuckets _),
-    "q_ccnet_buckets_dist" -> (qCcnetBucketsDist _),
-    "q_dsir_select" -> (qDsirSelect _),
-    "q_clf_quality" -> (qClfQuality _),
-    "q_active_learning" -> (qActiveLearning _),
-    "q_quality_percentile" -> (qQualityPercentile _),
-    "q_clf_calibration" -> (qClfCalibration _),
-    "q_clf_auc" -> (qClfAuc _),
-    "q_clf_kappa" -> (qClfKappa _),
-    "q_psi_drift" -> (qPsiDrift _),
-    "q_stream_psi" -> (qStreamPsiDrift _),
-    "q_bpe_train" -> (qBpeTrain _),
-    "q_spm_train" -> (qSpmTrain _),
-    "q_spm_encode" -> (qSpmEncode _),
-    "q_spm_fertility" -> (qSpmFertility _),
-    "q_corpus_overlap" -> (qCorpusOverlap _),
-    "q_overlap_matrix" -> (qOverlapMatrix _),
-    "q_wordpiece_train" -> (qWordpieceTrain _),
-    "q_wordpiece_encode" -> (qWordpieceEncode _),
-    "q_wordpiece_fertility" -> (qWordpieceFertility _),
-    "q_tokenizer_coverage" -> (qTokenizerCoverage _),
-    "q_stream_tokenizer_coverage" -> (qStreamTokenizerCoverage _),
-    "q_bpe_encode" -> (qBpeEncode _),
-    "q_bpe_bytes_train" -> (qBpeBytesTrain _),
-    "q_bpe_bytes_encode" -> (qBpeBytesEncode _),
-    "q_bpe_fertility" -> (qBpeFertility _),
-    "q_langid_eval" -> (qLangIdEval _),
-    "q_ann_ivf_indexed" -> (qAnnIvfIndexed _),
-    "q_ann_ivf_incremental" -> (qAnnIvfIncremental _),
-    "q_ann_ivf_requantized" -> (qAnnIvfRequantized _),
-    "q_stream_ann_ingest" -> (qStreamAnnIngest _),
-    "q_stream_dedup_incremental" -> (qStreamDedupIncremental _),
-    "q_profile" -> (qProfile _),
-    "q_skew_report" -> (qSkewReport _),
-    "q_agg_salted_auto" -> (qAggSaltedAuto _),
-    "q_stream_enrich" -> (qStreamEnrich _),
-    "q_stream_heavy_hitters" -> (qStreamHeavyHitters _),
-    "q_stream_distinct_sketch" -> (qStreamDistinctSketch _),
-    "q_stream_percentile_sketch" -> (qStreamPercentileSketch _),
-    "q_stream_sample_priority" -> (qStreamSamplePriority _),
-    "q_repetition" -> (qRepetition _),
-    "q_histogram" -> (qHistogram _),
-    "q_pivot" -> (qPivot _),
-    "q_window_analytics" -> (qWindowAnalytics _),
-    "q_distinct" -> (qDistinct _),
-    "q_distinct_sketch" -> (qDistinctSketch _),
-    "q_percentile_sketch" -> (qPercentileSketch _),
-    "q_heavy_hitters" -> (qHeavyHitters _),
-    "q_heavy_hitters_grouped" -> (qHeavyHittersGrouped _),
-    "q_percentiles" -> (qPercentiles _),
-    "q_dedup_exact" -> (qDedupExact _),
-    "q_dedup_minhash" -> (qDedupMinhash _),
-    "q_dedup_jaccard_weighted" -> (qDedupJaccardWeighted _),
-    "q_dedup_minhash_oph" -> (qDedupMinhashOph _),
-    "q_dedup_minhash_bbit" -> (qDedupMinhashBbit _),
-    "q_dedup_minhash_pruned" -> (qDedupMinhashPruned _),
-    "q_dedup_minhash_eval" -> (qDedupMinhashEval _),
-    "q_dedup_incremental" -> (qDedupIncremental _),
-    "q_dedup_semantic_incremental" -> (qDedupSemanticIncremental _),
-    "q_stream_dedup_semantic" -> (qStreamDedupSemantic _),
-    "q_dedup_semantic" -> (qDedupSemantic _),
-    "q_dedup_keep_best" -> (qDedupKeepBest _),
-    "q_dedup_simhash" -> (qDedupSimhash _),
-    "q_multimodal_phash" -> (qMultimodalPhash _),
-    "q_multimodal_afp" -> (qMultimodalAfp _),
-    "q_fix_mojibake" -> (qFixMojibake _),
-    "q_dedup_embedding" -> (qDedupEmbedding _),
-    "q_ngram_jaccard" -> (qNgramJaccard _),
-    "q_ann_brute" -> (qAnnBrute _),
-    "q_ann_mmr" -> (qAnnMmr _),
-    "q_ann_margin" -> (qAnnMargin _),
-    "q_ann_mrl" -> (qAnnMrl _),
-    "q_ann_whiten" -> (qAnnWhiten _),
-    "q_mine_pairs" -> (qMinePairs _),
-    "q_decontaminate_semantic" -> (qDecontaminateSemantic _),
-    "q_ann_ivf" -> (qAnnIvf _),
-    "q_ann_lsh" -> (qAnnLsh _),
-    "q_densify" -> (qDensify _),
-    "q_cluster_kmeans" -> (qClusterKmeans _),
-    "q_prune_prototypes" -> (qPrunePrototypes _),
-    "q_layout_prune" -> (qLayoutPrune _),
-    "q_ann_pq" -> (qAnnPq _),
-    "q_lang_id" -> (qLangId _),
-    "q_quality" -> (qQuality _),
-    "q_gopher_rules" -> (qGopherRules _),
-    "q_tokens" -> (qTokens _),
-    "q_fingerprint" -> (qFingerprint _),
-    "q_fingerprint_winnow" -> (qFingerprintWinnow _),
-    "q_multimodal" -> (qMultimodal _),
-    "q_multimodal_decode" -> (qMultimodalDecode _),
-    "q_multimodal_frames" -> (qMultimodalFrames _),
-    "q_json_extract" -> (qJsonExtract _),
-    "q_pipeline" -> (qPipeline _))
+  /** Every gate, once, in registration order; [[queries]], `Bench`'s
+    * headline and `ClusterSmoke`'s slice all derive from this table.
+    * `headline` marks the scale-sensitive, corpus-proportional paths
+    * `Bench` times (shuffle joins, window state, LSH dedup, ANN, corpus
+    * encodes). Gates in the sub-0.4 s fixed-cost class and the streaming
+    * gates (fixed micro-batch cost) stay correctness-gated only.
+    * `crossJvm` adds a gate to the cross-JVM smoke slice beyond the
+    * headline when its serialization surface runs nowhere else there. */
+  val gates: Seq[Gate] = Seq(
+    Gate("q_map", qMap),
+    Gate("q_filter", qFilter),
+    Gate("q_filter_map", qFilterMap),
+    Gate("q_flatten", qFlatten),
+    Gate("q_inspect", qInspect),
+    Gate("q_cloned", qCloned),
+    Gate("q_split", qSplit),
+    Gate("q_union", qUnion),
+    Gate("q_key_local", qKeyLocal),
+    Gate("q_key_distribute", qKeyDistribute, headline = true),
+    Gate("q_stateful_map", qStatefulMap, headline = true),
+    Gate("q_stateful_op", qStatefulOp),
+    Gate("q_stateless_op", qStatelessOp),
+    Gate("q_ttl_map", qTtlMap, headline = true),
+    Gate("q_assign_timestamps", qAssignTimestamps),
+    Gate("q_epochs_window", qEpochsWindow, headline = true),
+    Gate("q_stream_epochs", qStreamEpochs, headline = true),
+    Gate("q_stream_stateful", qStreamStateful, crossJvm = true), // transformWithState on RocksDB
+    Gate("q_stream_dedup", qStreamDedup),
+    Gate("q_stream_dedup_minhash", qStreamDedupMinhash),
+    Gate("q_stream_join", qStreamJoin, headline = true),
+    Gate("q_stream_join_outer", qStreamJoinOuter),
+    Gate("q_sliding_window", qSlidingWindow),
+    Gate("q_session_window", qSessionWindow),
+    Gate("q_frontier", qFrontier),
+    Gate("q_late_data", qLateData),
+    Gate("q_join", qJoin, headline = true),
+    Gate("q_asof_join", qAsofJoin, headline = true),
+    Gate("q_asof_join_skewed", qAsofJoinSkewed),
+    Gate("q_range_join", qRangeJoin, headline = true),
+    Gate("q_anti_join", qAntiJoin),
+    Gate("q_outer_join", qOuterJoin),
+    Gate("q_source_parquet", qSourceParquet),
+    Gate("q_source_jsonl", qSourceJsonl),
+    Gate("q_source_dirty", qSourceDirty),
+    Gate("q_source_iterator", qSourceIterator),
+    Gate("q_source_stateless", qSourceStateless),
+    Gate("q_source_stateful", qSourceStateful),
+    Gate("q_sink_stdout", qSinkStdout),
+    Gate("q_sink_vec", qSinkVec),
+    Gate("q_sink_stateful", qSinkStateful),
+    Gate("q_kafka_source", qKafkaSource),
+    Gate("q_kafka_sink", qKafkaSink),
+    Gate("q_rescale", qRescale),
+    Gate("q_rescale_resume", qRescaleResume),
+    Gate("q_agg_salted", qAggSalted, headline = true),
+    Gate("q_topk", qTopK),
+    Gate("q_dedup_keep", qDedupKeep),
+    Gate("q_dedup_keep_near", qDedupKeepNear),
+    Gate("q_dedup_components", qDedupComponents, headline = true),
+    Gate("q_dedup_components_dist", qDedupComponentsDist),
+    Gate("q_dedup_components_incremental", qDedupComponentsIncremental, headline = true),
+    // Re-runs q_dedup_components' closure: unbenched so it is not billed twice.
+    Gate("q_dedup_report", qDedupReport),
+    Gate("q_tfidf", qTfidf, headline = true),
+    Gate("q_source_keywords", qSourceKeywords, headline = true),
+    Gate("q_bm25", qBm25, headline = true),
+    Gate("q_hybrid_search", qHybridSearch, headline = true),
+    Gate("q_sample_stratified", qSampleStratified),
+    Gate("q_sample_priority", qSamplePriority, headline = true),
+    Gate("q_mix_weights", qMixWeights),
+    Gate("q_unimax", qUnimax),
+    Gate("q_mix_sample", qMixSample, headline = true),
+    Gate("q_cap_per_source", qCapPerSource, headline = true),
+    Gate("q_upsert", qUpsert, headline = true),
+    Gate("q_stream_upsert", qStreamUpsert),
+    Gate("q_corpus_compact", qCorpusCompact),
+    Gate("q_corpus_diff", qCorpusDiff, headline = true),
+    Gate("q_folds", qFolds),
+    Gate("q_split_leakage_safe", qSplitLeakageSafe),
+    Gate("q_shuffle_shard", qShuffleShard),
+    Gate("q_curriculum", qCurriculum, headline = true),
+    Gate("q_rollup", qRollup),
+    Gate("q_chunk", qChunk),
+    Gate("q_pack", qPack),
+    Gate("q_scrub", qScrub),
+    Gate("q_html_extract", qHtmlExtract, headline = true),
+    Gate("q_c4_rules", qC4Rules, headline = true),
+    Gate("q_dedup_lines", qDedupLines, headline = true),
+    Gate("q_boilerplate", qBoilerplate, headline = true),
+    Gate("q_outliers_mad", qOutliersMad, headline = true),
+    Gate("q_source_rank_wilson", qSourceRankWilson),
+    Gate("q_shard_by_tokens", qShardByTokens, headline = true),
+    Gate("q_filter_funnel", qFilterFunnel),
+    Gate("q_corpus_asof", qCorpusAsof),
+    Gate("q_padding_efficiency", qPaddingEfficiency),
+    Gate("q_url_canonical", qUrlCanonical),
+    Gate("q_url_blocklist", qUrlBlocklist, headline = true),
+    Gate("q_phrase_blocklist", qPhraseBlocklist, headline = true),
+    Gate("q_script_profile", qScriptProfile, headline = true),
+    Gate("q_compression_ratio", qCompressionRatio, headline = true),
+    Gate("q_zipf_fit", qZipfFit, headline = true),
+    Gate("q_rank_fusion", qRankFusion, headline = true),
+    Gate("q_span_corrupt", qSpanCorrupt, headline = true),
+    Gate("q_fim", qFim, headline = true),
+    Gate("q_normalize_unicode", qNormalizeUnicode, crossJvm = true), // NfcNormalizeExpr
+    Gate("q_pipeline_web", qPipelineWeb, headline = true),
+    Gate("q_bigrams", qBigrams),
+    Gate("q_pmi", qPmi, headline = true),
+    Gate("q_contamination", qContamination),
+    Gate("q_contamination_bloom", qContaminationBloom, headline = true),
+    Gate("q_trim_spans", qTrimSpans, headline = true),
+    Gate("q_dedup_substring", qDedupSubstring, headline = true),
+    Gate("q_dedup_substring_keepfirst", qDedupSubstringKeepFirst),
+    Gate("q_dup_ngrams", qDupNgrams),
+    Gate("q_lsh_plan", qLshPlan),
+    Gate("q_jaccard_join", qJaccardJoin),
+    Gate("q_dedup_soft", qDedupSoft, headline = true),
+    Gate("q_sample_soft", qSampleSoft),
+    Gate("q_pipeline_d4", qPipelineD4, headline = true),
+    Gate("q_mix_constrained", qMixConstrained),
+    Gate("q_order_incontext", qOrderIncontext),
+    Gate("q_ann_sq8", qAnnSq8, crossJvm = true), // SQ8 kernel
+    Gate("q_ann_jl", qAnnJl),
+    Gate("q_ann_jl_rerank", qAnnJlRerank),
+    Gate("q_ann_hamming", qAnnHamming),
+    Gate("q_outliers_embedding", qOutliersEmbedding),
+    Gate("q_dup_paragraphs", qDupParagraphs),
+    Gate("q_lm_score", qLmScore, crossJvm = true), // UnigramLm model ref-obj
+    Gate("q_lm_bigram", qLmBigram, headline = true),
+    Gate("q_mix_doremi", qMixDoremi, headline = true),
+    Gate("q_lm_kn", qLmKn, headline = true),
+    Gate("q_lm_jm", qLmJm, headline = true),
+    Gate("q_select_moore_lewis", qSelectMooreLewis, headline = true),
+    Gate("q_entropy", qEntropy),
+    Gate("q_dsir_weights", qDsirWeights, headline = true),
+    Gate("q_ccnet_buckets", qCcnetBuckets, headline = true),
+    Gate("q_ccnet_buckets_dist", qCcnetBucketsDist),
+    Gate("q_dsir_select", qDsirSelect, headline = true),
+    Gate("q_clf_quality", qClfQuality, headline = true),
+    Gate("q_active_learning", qActiveLearning),
+    Gate("q_quality_percentile", qQualityPercentile),
+    Gate("q_clf_calibration", qClfCalibration),
+    // Re-runs q_clf_quality's training chain: unbenched so it is not billed twice.
+    Gate("q_clf_auc", qClfAuc),
+    Gate("q_clf_kappa", qClfKappa, headline = true),
+    Gate("q_psi_drift", qPsiDrift, headline = true),
+    Gate("q_stream_psi", qStreamPsiDrift),
+    Gate("q_bpe_train", qBpeTrain),
+    Gate("q_spm_train", qSpmTrain),
+    Gate("q_spm_encode", qSpmEncode, headline = true),
+    Gate("q_spm_fertility", qSpmFertility),
+    Gate("q_corpus_overlap", qCorpusOverlap, headline = true),
+    Gate("q_overlap_matrix", qOverlapMatrix, headline = true),
+    Gate("q_wordpiece_train", qWordpieceTrain),
+    Gate("q_wordpiece_encode", qWordpieceEncode, headline = true),
+    Gate("q_wordpiece_fertility", qWordpieceFertility),
+    Gate("q_tokenizer_coverage", qTokenizerCoverage, headline = true),
+    Gate("q_stream_tokenizer_coverage", qStreamTokenizerCoverage),
+    Gate("q_bpe_encode", qBpeEncode, headline = true),
+    Gate("q_bpe_bytes_train", qBpeBytesTrain),
+    Gate("q_bpe_bytes_encode", qBpeBytesEncode, headline = true),
+    Gate("q_bpe_fertility", qBpeFertility, headline = true),
+    Gate("q_langid_eval", qLangIdEval),
+    Gate("q_ann_ivf_indexed", qAnnIvfIndexed, headline = true),
+    Gate("q_ann_ivf_incremental", qAnnIvfIncremental),
+    Gate("q_ann_ivf_requantized", qAnnIvfRequantized, headline = true),
+    Gate("q_stream_ann_ingest", qStreamAnnIngest),
+    Gate("q_stream_dedup_incremental", qStreamDedupIncremental),
+    Gate("q_profile", qProfile, headline = true),
+    Gate("q_skew_report", qSkewReport),
+    Gate("q_agg_salted_auto", qAggSaltedAuto, headline = true),
+    Gate("q_stream_enrich", qStreamEnrich),
+    Gate("q_stream_heavy_hitters", qStreamHeavyHitters),
+    Gate("q_stream_distinct_sketch", qStreamDistinctSketch),
+    Gate("q_stream_percentile_sketch", qStreamPercentileSketch),
+    Gate("q_stream_sample_priority", qStreamSamplePriority),
+    Gate("q_repetition", qRepetition),
+    Gate("q_histogram", qHistogram),
+    Gate("q_pivot", qPivot),
+    Gate("q_window_analytics", qWindowAnalytics),
+    Gate("q_distinct", qDistinct),
+    Gate("q_distinct_sketch", qDistinctSketch, headline = true),
+    Gate("q_percentile_sketch", qPercentileSketch, headline = true),
+    Gate("q_heavy_hitters", qHeavyHitters, headline = true),
+    Gate("q_heavy_hitters_grouped", qHeavyHittersGrouped, headline = true),
+    Gate("q_percentiles", qPercentiles),
+    Gate("q_dedup_exact", qDedupExact, headline = true),
+    Gate("q_dedup_minhash", qDedupMinhash, headline = true),
+    Gate("q_dedup_jaccard_weighted", qDedupJaccardWeighted, headline = true),
+    Gate("q_dedup_minhash_oph", qDedupMinhashOph, headline = true),
+    Gate("q_dedup_minhash_bbit", qDedupMinhashBbit, headline = true),
+    Gate("q_dedup_minhash_pruned", qDedupMinhashPruned, headline = true),
+    Gate("q_dedup_minhash_eval", qDedupMinhashEval),
+    Gate("q_dedup_incremental", qDedupIncremental, headline = true),
+    Gate("q_dedup_semantic_incremental", qDedupSemanticIncremental, headline = true),
+    Gate("q_stream_dedup_semantic", qStreamDedupSemantic),
+    Gate("q_dedup_semantic", qDedupSemantic, headline = true),
+    Gate("q_dedup_keep_best", qDedupKeepBest),
+    Gate("q_dedup_simhash", qDedupSimhash, crossJvm = true), // SimhashExpr
+    Gate("q_multimodal_phash", qMultimodalPhash),
+    Gate("q_multimodal_afp", qMultimodalAfp),
+    Gate("q_fix_mojibake", qFixMojibake, crossJvm = true), // mojibake repair kernel
+    Gate("q_dedup_embedding", qDedupEmbedding),
+    Gate("q_ngram_jaccard", qNgramJaccard, headline = true),
+    Gate("q_ann_brute", qAnnBrute, headline = true),
+    Gate("q_ann_mmr", qAnnMmr),
+    Gate("q_ann_margin", qAnnMargin, headline = true),
+    Gate("q_ann_mrl", qAnnMrl, headline = true),
+    Gate("q_ann_whiten", qAnnWhiten, headline = true),
+    Gate("q_mine_pairs", qMinePairs, headline = true),
+    Gate("q_decontaminate_semantic", qDecontaminateSemantic, headline = true),
+    Gate("q_ann_ivf", qAnnIvf, headline = true),
+    Gate("q_ann_lsh", qAnnLsh, headline = true),
+    Gate("q_densify", qDensify),
+    Gate("q_cluster_kmeans", qClusterKmeans),
+    Gate("q_prune_prototypes", qPrunePrototypes, headline = true),
+    Gate("q_layout_prune", qLayoutPrune, headline = true),
+    Gate("q_ann_pq", qAnnPq, crossJvm = true), // PQ codebook ref-obj
+    Gate("q_lang_id", qLangId),
+    Gate("q_quality", qQuality, headline = true),
+    Gate("q_gopher_rules", qGopherRules, headline = true),
+    Gate("q_tokens", qTokens, headline = true),
+    Gate("q_fingerprint", qFingerprint),
+    Gate("q_fingerprint_winnow", qFingerprintWinnow, headline = true),
+    Gate("q_multimodal", qMultimodal),
+    Gate("q_multimodal_decode", qMultimodalDecode),
+    Gate("q_multimodal_frames", qMultimodalFrames, crossJvm = true), // MediaDecoder mapPartitions factory
+    Gate("q_json_extract", qJsonExtract),
+    Gate("q_pipeline", qPipeline, headline = true))
+
+  private val byName: Map[String, Gate] = gates.map(g => g.name -> g).toMap
+  require(byName.size == gates.size, {
+    val names = gates.map(_.name)
+    s"gate names repeat: ${names.diff(names.distinct).distinct.mkString(", ")}"
+  })
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName.map { case (n, g) => n -> g.run }
+
+  /** The gates with these names, in the given order. Any name that is not
+    * a gate fails the call, listing every unknown name, so a typo never
+    * selects nothing in silence. */
+  def gatesNamed(names: Seq[String]): Seq[Gate] = {
+    val unknown = names.filterNot(byName.contains).distinct
+    require(unknown.isEmpty, s"unknown gate name(s): ${unknown.mkString(", ")}")
+    names.map(byName)
+  }
 
   def oracleSql: Map[String, String] = OracleSql.all
 

@@ -61,16 +61,7 @@ object Spread {
       }) => p
     }.isEmpty
 
-  def apply(df: DataFrame): DataFrame = {
-    // Streaming frames have no rdd to probe (AnalysisException) and their
-    // micro-batch scans are partitioned by the engine — pass through.
-    if (df.isStreaming) df
-    else if (!isScanChain(df.queryExecution.optimizedPlan)) df
-    else {
-      val p = df.sparkSession.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions < p) df.repartition(p) else df
-    }
-  }
+  def apply(df: DataFrame): DataFrame = spread(df)(df.repartition(_))
 
   /** Like [[apply]], but when a spread IS needed it hash-partitions on
     * `key` instead of round-robin — same cost (one exchange of the same
@@ -86,14 +77,17 @@ object Spread {
     * a low-cardinality key would concentrate the very parallelism this
     * exists to provide. Callers with categorical keys should use
     * [[apply]] (round-robin) and let the downstream op exchange. */
-  def byKey(df: DataFrame, key: String): DataFrame = {
-    if (df.isStreaming) df
-    else if (!isScanChain(df.queryExecution.optimizedPlan)) df
+  def byKey(df: DataFrame, key: String): DataFrame =
+    spread(df)(df.repartition(_, org.apache.spark.sql.functions.col(key)))
+
+  /** `repartition(p)` with `p` the default parallelism, applied only to a
+    * batch scan chain with fewer than `p` partitions; otherwise `df`.
+    * Streaming frames have no rdd to probe (AnalysisException) and their
+    * micro-batch scans are partitioned by the engine — they pass through. */
+  private def spread(df: DataFrame)(repartition: Int => DataFrame): DataFrame =
+    if (df.isStreaming || !isScanChain(df.queryExecution.optimizedPlan)) df
     else {
       val p = df.sparkSession.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions < p)
-        df.repartition(p, org.apache.spark.sql.functions.col(key))
-      else df
+      if (df.rdd.getNumPartitions < p) repartition(p) else df
     }
-  }
 }

@@ -1,28 +1,38 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   /** Columns the driver's pandas oracle cannot hash: its factorize step
-    * dies on array/map/struct cells (r17 silently un-graded three
-    * queries that way). Returns the offending column names — empty means
-    * the schema honors the harness contract. Applies to ORACLE-able
-    * queries only; rows-only gates may return any shape. */
-  def nonScalarColumns(schema: org.apache.spark.sql.types.StructType): Seq[String] = {
-    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+    * dies on array/map/struct cells. Returns the offending column names —
+    * empty means the schema honors the harness contract. Applies to
+    * ORACLE-able queries only; rows-only gates may return any shape. */
+  def nonScalarColumns(schema: StructType): Seq[String] =
     schema.fields.collect {
       case f if f.dataType.isInstanceOf[ArrayType] ||
         f.dataType.isInstanceOf[MapType] ||
         f.dataType.isInstanceOf[StructType] => f.name
     }.toSeq
+
+  /** Harness contract: an oracle-graded gate returning a complex column
+    * would crash the driver's compare AFTER this dump and grade as
+    * silently untested. Fail it here, visibly, instead. */
+  def requireScalarIfGraded(name: String, schema: StructType): Unit = {
+    val bad = nonScalarColumns(schema)
+    if (SparkEntry.oracleSql.contains(name) && bad.nonEmpty)
+      throw new IllegalStateException(
+        s"oracle-graded query $name emits non-scalar columns ${bad.mkString(",")}" +
+          " — serialize or explode them (driver oracle hashes scalars only)")
   }
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // Optional third arg: comma-separated query names (local iteration aid;
-    // the driver always runs the full set).
-    val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
+    // Optional third arg: comma-separated gate names (local iteration aid;
+    // the driver always runs the full set). An unknown name fails the run.
+    val only: Option[Set[String]] =
+      args.lift(2).map(a => SparkEntry.gatesNamed(a.split(",").toSeq).map(_.name).toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -57,15 +67,7 @@ object Verify {
       .foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
-        // Harness contract: an oracle-graded query returning a complex
-        // column would crash the driver's compare AFTER this dump and
-        // grade as silently-untested (r17: q_ann_jl/q_ann_sq8/
-        // q_phrase_blocklist). Fail it HERE, visibly, instead.
-        val bad = nonScalarColumns(df.schema)
-        if (SparkEntry.oracleSql.contains(name) && bad.nonEmpty)
-          throw new IllegalStateException(
-            s"oracle-graded query emits non-scalar columns ${bad.mkString(",")}" +
-              " — serialize or explode them (driver oracle hashes scalars only)")
+        requireScalarIfGraded(name, df.schema)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
       catch { case scala.util.control.NonFatal(e) =>

@@ -31,14 +31,13 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *   - XxHash64ArrayExpr (UnigramLm model ref)      → q_lm_score
   *   - ShingleExpr + decimal-exact DSIR sums        → q_dsir_weights
   *   - MediaDecoder factory (mapPartitions)         → q_multimodal_frames
-  *   - NfcNormalizeExpr (r14 native expression)     → q_normalize_unicode
-  *   - Bpe trainer + encode flatMap closures (r14;
-  *     r15 memoized mapPartitions encode)           → q_bpe_encode
-  *   - CentroidScoresExpr (r14, centroid ref-obj)   → q_ann_ivf
-  *   - C4StatsExpr (r15 native line-filter pass)    → q_c4_rules
-  *   - line window + ordered rebuild agg (r15)      → q_dedup_lines
-  *   - GlobalIndex zipWithIndex rank (r15 caller)   → q_shard_by_tokens
-  *   - DPP-pruned indexed IVF serve (r15: driver
+  *   - NfcNormalizeExpr                             → q_normalize_unicode
+  *   - Bpe trainer + memoized mapPartitions encode  → q_bpe_encode
+  *   - CentroidScoresExpr (centroid ref-obj)        → q_ann_ivf
+  *   - C4StatsExpr (native line-filter pass)        → q_c4_rules
+  *   - line window + ordered rebuild agg            → q_dedup_lines
+  *   - GlobalIndex zipWithIndex rank                → q_shard_by_tokens
+  *   - DPP-pruned indexed IVF serve (driver
   *     quantizer cache + prelist-reconciled append) → q_ann_ivf_indexed
   *   - StatefulLogic batch path (flatMapGroups)     → q_stateful_map
   *   - StatefulLogic streaming (transformWithState,
@@ -51,19 +50,12 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   */
 object ClusterSmoke {
 
-  /** The cross-JVM slice is the ENTIRE bench headline (r18: the r17
-    * 41-query hand-picked slice left half the headline's session-3
-    * operators — tokenizers, KMV overlap, example prep — without a
-    * multi-process determinism pin) plus the non-headline queries whose
-    * serialization surfaces nothing else exercises across executor JVM
-    * boundaries: custom-expression ref-objs (Bloom/PQ/Simhash/Winnow/
-    * Mojibake kernels), the MediaDecoder mapPartitions factory, the
-    * flatMapGroups + transformWithState state paths, and the
-    * closure-vocabulary SPM/unigram-LM encodes. */
-  val slice: Seq[String] = (graft.Bench.headline ++ Seq(
-    "q_dedup_simhash", "q_fingerprint_winnow", "q_ann_pq", "q_lm_score",
-    "q_normalize_unicode", "q_multimodal_frames", "q_stateful_map",
-    "q_stream_stateful", "q_fix_mojibake", "q_ann_sq8")).distinct
+  /** The whole bench headline plus the gates flagged `crossJvm`: those
+    * whose serialization surface (a custom-expression ref-obj, the
+    * MediaDecoder factory, a state path) the headline does not cross an
+    * executor JVM boundary with. */
+  val slice: Seq[String] =
+    graft.SparkEntry.gates.filter(g => g.headline || g.crossJvm).map(_.name)
 
   /** Canonical result hash: columns sorted by name, every value rendered
     * deterministically (binary → hex — Array.toString would be an object

@@ -19,7 +19,8 @@ import graft.{CacheScope, SparkEntry}
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val gates =
+      if (args.length > 1) SparkEntry.gatesNamed(args.tail.toSeq) else SparkEntry.gates.sortBy(_.name)
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -29,8 +30,8 @@ object ExplainAudit {
       // quiet too (setLogLevel after getOrCreate comes too late for them)
       .config("spark.log.level", "ERROR")
       .getOrCreate()
-    names.foreach { n =>
-      println(s"\n========== $n ==========")
+    gates.foreach { g =>
+      println(s"\n========== ${g.name} ==========")
       var i = 0
       CacheScope.planRecorder = (kind, plan) => {
         i += 1
@@ -38,7 +39,7 @@ object ExplainAudit {
         println(plan)
       }
       try {
-        val df = SparkEntry.queries(n)(spark, sfDir)
+        val df = g.run(spark, sfDir)
         if (i > 0) println("---------- terminal ----------")
         df.explain("formatted")
       } catch { case scala.util.control.NonFatal(e) => println(s"EXPLAIN FAILED: ${e.getMessage}") }

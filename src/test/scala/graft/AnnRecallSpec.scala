@@ -147,9 +147,9 @@ class AnnRecallSpec extends AnyFunSuite with SparkFixture {
     val truth = Ann.bruteTopK(union, q, k = 10).collect()
       .map(r => (r.getLong(0), r.getLong(2)))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val tmp = System.getProperty("java.io.tmpdir")
-    val base = s"$tmp/graft_drift_spec_base"
-    val req = s"$tmp/graft_drift_spec_req"
+    val tmp = tempDir("graft_drift_spec_").toString
+    val base = s"$tmp/base"
+    val req = s"$tmp/req"
     Ann.ivfIndexInit(orig, base, cells = 4, sampleN = 400)
     Ann.ivfIndexAppend(fresh, base)
     def recall(path: String): Double = {
@@ -187,7 +187,7 @@ class AnnRecallSpec extends AnyFunSuite with SparkFixture {
     // requantize(init + append) is bit-equal to a from-scratch ivfReindex
     // on the union corpus — the lifecycle op is a real rebuild, not an
     // approximation of one
-    val scratch = s"$tmp/graft_drift_spec_scratch"
+    val scratch = s"$tmp/scratch"
     Ann.ivfReindex(union, scratch, cells = 4, sampleN = 400)
     val servedReq = Ann.ivfTopKIndexed(spark, req, q, k = 10, probes = 2)
       .collect().map(_.toSeq).toSet

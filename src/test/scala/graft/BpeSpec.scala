@@ -196,7 +196,7 @@ class BpeSpec extends AnyFunSuite with SparkFixture {
     val docs = Seq((1L, "lowest lower low newest widest low low newest")).toDF("doc_id", "text")
     val merges = Bpe.train(docs, numMerges = 8)
     assert(merges.nonEmpty)
-    val path = java.nio.file.Files.createTempDirectory("graft_bpe_artifact")
+    val path = tempDir("graft_bpe_artifact")
       .resolve("tokenizer").toString
     Bpe.save(spark, merges, path)
     val loaded = Bpe.load(spark, path)

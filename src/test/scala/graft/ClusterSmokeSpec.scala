@@ -29,7 +29,7 @@ class ClusterSmokeSpec extends AnyFunSuite {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar")
       .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cwd = java.nio.file.Files.createTempDirectory("graft_smoke_").toFile
+    val cwd = SparkFixture.tempDir("graft_smoke_").toFile
     val cmd: Seq[String] =
       Seq(javaBin) ++ addOpens ++ Seq(
         "-Xmx3g", "-cp", sys.props("java.class.path"),

@@ -109,7 +109,7 @@ class CorpusSpec extends AnyFunSuite with SparkFixture {
       (4L, 2L, "u", "d-v2"),
       (3L, 3L, "u", "c-v3") // beyond the compaction cut: must be absent
     ).toDF("doc_id", "version", "op", "text")
-    val out = java.nio.file.Files.createTempDirectory("graft_compact_spec_")
+    val out = tempDir("graft_compact_spec_")
     try {
       Corpus.compact(log, version = 2L, out.toString,
         clusterCols = Seq("doc_id"), ranges = 2)
@@ -130,7 +130,7 @@ class CorpusSpec extends AnyFunSuite with SparkFixture {
   test("optimizeLayout clusters files stats-tight and preserves content exactly") {
     import org.apache.spark.sql.{functions => F}
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
-    val out = java.nio.file.Files.createTempDirectory("graft_layout_spec_").toString
+    val out = tempDir("graft_layout_spec_").toString
     try {
       Corpus.optimizeLayout(docs, out, Seq("lang", "n_chars"), ranges = 8)
       // content preservation: the rewrite is invisible to a full reader

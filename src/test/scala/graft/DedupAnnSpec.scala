@@ -401,7 +401,7 @@ class DedupAnnSpec extends AnyFunSuite with SparkFixture {
   test("persisted IVF index serves the identical answer via a partition-pruned read") {
     val emb = spark.read.parquet(s"$sf001/embeddings.parquet")
     val q = emb.filter(F.col("vec_id") < 20)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_spec")
+    val path = tempDir("graft_ivf_spec")
       .resolve("index").toString
     Ann.ivfIndexInit(emb, path, cells = 16)
     val indexedDf = Ann.ivfTopKIndexed(spark, path, q, k = 5, probes = 6)
@@ -428,7 +428,7 @@ class DedupAnnSpec extends AnyFunSuite with SparkFixture {
     val history = emb.filter(F.col("vec_id") < 100)
     val batch = emb.filter(F.col("vec_id") >= 100)
     assert(batch.count() > 0, "precondition: a non-empty append batch")
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_inc_spec")
+    val path = tempDir("graft_ivf_inc_spec")
       .resolve("index").toString
     Ann.ivfIndexInit(history, path, cells = 16, sampleN = 100)
     val historyFiles = new java.io.File(path).listFiles().flatMap(d =>
@@ -461,7 +461,7 @@ class DedupAnnSpec extends AnyFunSuite with SparkFixture {
     val q = emb.filter(F.col("vec_id") < 20)
     val history = emb.filter(F.col("vec_id") < 100)
     val batch = emb.filter(F.col("vec_id") >= 100)
-    val base = java.nio.file.Files.createTempDirectory("graft_ivf_replay_spec")
+    val base = tempDir("graft_ivf_replay_spec")
     val path = base.resolve("index").toString
     val prelist = base.resolve("prelist_batch=0").toString
     Ann.ivfIndexInit(history, path, cells = 16, sampleN = 100)
@@ -665,7 +665,7 @@ class DedupAnnSpec extends AnyFunSuite with SparkFixture {
       (100L, Array(1f, 0f, 0f, 0f, 0f, 0f, 0f, 0f)),  // exact dup of cluster a
       (101L, Array(0f, 0f, 0f, 0f, 1f, 0f, 0f, 0f)))  // orthogonal, clean
       .toDF("vec_id", "embedding")
-    val path = System.getProperty("java.io.tmpdir") + "/graft_sem_inc_spec"
+    val path = tempDir("graft_sem_inc_spec_").toString + "/idx"
     graft.ann.Ann.ivfIndexInit(hist, path, cells = 4, sampleN = 20)
     val out = graft.ann.Ann.semanticIncremental(spark, path, shard, tau = 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -41,7 +39,7 @@ class FaultToleranceSpec extends AnyFunSuite with SparkFixture {
 
   test("streaming query killed mid-batch resumes from checkpoint exactly-once") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_fault_").toString
+    val dir = tempDir("graft_fault_").toString
     val src = s"$dir/in"
     val ckpt = s"$dir/ckpt"
     val outDir = s"$dir/out"

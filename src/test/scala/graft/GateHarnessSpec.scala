@@ -3,28 +3,11 @@ package graft
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{functions => F}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The chores every gate shares, each written once: staging inputs per
   * source version, memoizing a built index, scoping a session conf. */
-class GateHarnessSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
-
-  private val made = collection.mutable.Buffer.empty[Path]
-
-  /** A temp dir removed after the suite, with everything under it. */
-  private def tempDir(prefix: String): Path = {
-    val d = Files.createTempDirectory(prefix)
-    made += d
-    d
-  }
-
-  override def afterAll(): Unit =
-    try made.filter(Files.exists(_)).foreach { d =>
-      val st = Files.walk(d)
-      try st.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
-      finally st.close()
-    } finally super.afterAll()
+class GateHarnessSpec extends AnyFunSuite with SparkFixture {
 
   /** A fresh dataset dir holding a one-file `t.parquet` table to key on. */
   private def dataset(): String = {
@@ -46,8 +29,7 @@ class GateHarnessSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterA
     val writes = collection.mutable.Buffer.empty[String]
     def stage() = SparkEntry.stageOnce("graft_harness_stage", ds, "t.parquet")(
       part(writes, "a"), part(writes, "b"), part(writes, "c"))
-    val root = stage()
-    made += root
+    val root = SparkFixture.removeOnExit(stage())
     assert(writes == Seq("a", "b", "c"))
     val mtimes = Seq("b1", "b2", "b3").map(b => root.resolve(b).resolve("data").toFile.lastModified())
     assert(mtimes == mtimes.sorted && mtimes.distinct.size == 3,
@@ -69,7 +51,7 @@ class GateHarnessSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterA
     val first = SparkEntry.stageOnce("graft_harness_stage", ds, "t.parquet")(part(writes, "v1"))
     Files.writeString(Path.of(ds, "t.parquet"), "regenerated")
     val second = SparkEntry.stageOnce("graft_harness_stage", ds, "t.parquet")(part(writes, "v2"))
-    made ++= Seq(first, second)
+    Seq(first, second).foreach(SparkFixture.removeOnExit)
     assert(first != second && writes == Seq("v1", "v2"))
     assert(Files.readString(second.resolve("data")) == "v2")
   }

@@ -7,9 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Harness contract: the driver's pandas oracle hashes SCALAR columns
   * only — an oracle-graded query returning array/map/struct crashes its
   * factorize step AFTER the engine ran, grading the query as silently
-  * untested (r17: q_ann_jl, q_ann_sq8, q_phrase_blocklist). Verify now
+  * untested (once: q_ann_jl, q_ann_sq8, q_phrase_blocklist). Verify
   * rejects such registrations at dump time; this spec pins the predicate
-  * and the rejection, and re-checks the three r17 offenders' schemas. */
+  * and the rejection, re-checks those three schemas, and pins the gate
+  * table every registry derives from. */
 class HarnessContractSpec extends AnyFunSuite with SparkFixture {
 
   test("nonScalarColumns flags array/map/struct, passes scalars") {
@@ -27,18 +28,38 @@ class HarnessContractSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("a deliberately array-returning oracle-graded registration is rejected") {
-    // Mirror Verify's dump-time gate on a dummy: registered name present
-    // in oracleSql + complex output column => IllegalStateException.
     val df = spark.range(3).select(
       F.col("id"), F.array(F.lit(1.0), F.lit(2.0)).as("vec"))
-    val oracleable = true // dummy stands in for oracleSql.contains(name)
-    val bad = Verify.nonScalarColumns(df.schema)
     val ex = intercept[IllegalStateException] {
-      if (oracleable && bad.nonEmpty)
-        throw new IllegalStateException(
-          s"oracle-graded query emits non-scalar columns ${bad.mkString(",")}")
+      Verify.requireScalarIfGraded("q_map", df.schema)
     }
     assert(ex.getMessage.contains("vec"))
+    // a gate without an oracle may return any shape
+    Verify.requireScalarIfGraded("q_bpe_train", df.schema)
+  }
+
+  test("gatesNamed resolves known names in order and names every unknown one") {
+    assert(SparkEntry.gatesNamed(Seq("q_join", "q_map")).map(_.name) == Seq("q_join", "q_map"))
+    val typo = intercept[IllegalArgumentException](SparkEntry.gatesNamed(Seq("q_jion")))
+    assert(typo.getMessage.contains("q_jion"))
+    val mixed = intercept[IllegalArgumentException] {
+      SparkEntry.gatesNamed(Seq("q_map", "q_mpa", "q_join", "q_jion"))
+    }
+    assert(mixed.getMessage.contains("q_mpa") && mixed.getMessage.contains("q_jion"))
+    assert(!mixed.getMessage.contains("q_map") && !mixed.getMessage.contains("q_join"))
+  }
+
+  test("the gate table: distinct names, its derived sets, and which gates have an oracle") {
+    val names = SparkEntry.gates.map(_.name)
+    assert(names.distinct == names)
+    assert(names.size == 218)
+    assert(Bench.headline.size == 95)
+    assert(graft.tools.ClusterSmoke.slice.size == 103)
+    assert(SparkEntry.queries.keySet == names.toSet)
+    assert(SparkEntry.oracleSql.keySet.subsetOf(names.toSet),
+      SparkEntry.oracleSql.keySet.diff(names.toSet))
+    assert(names.filterNot(SparkEntry.oracleSql.contains).toSet ==
+      Set("q_bpe_train", "q_spm_train", "q_wordpiece_train", "q_bpe_bytes_train"))
   }
 
   test("the r17 offenders now emit scalar-only schemas") {

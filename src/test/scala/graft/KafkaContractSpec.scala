@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{functions => F, SaveMode}
@@ -77,7 +76,7 @@ class KafkaContractSpec extends AnyFunSuite with SparkFixture {
 
   test("file shim honors the inclusive startingOffsets contract like the broker") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_kafka_contract_").toString
+    val root = tempDir("graft_kafka_contract_").toString
     val df = Seq(
       (0, "a", "va", Timestamp.valueOf("2026-01-01 00:00:00")),
       (0, "b", "vb", Timestamp.valueOf("2026-01-01 00:00:01")),
@@ -106,7 +105,7 @@ class KafkaContractSpec extends AnyFunSuite with SparkFixture {
 
   test("readStream keeps the canonical broker column ORDER, not just the set") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_kafka_stream_").toString
+    val root = tempDir("graft_kafka_stream_").toString
     KafkaShim.write(
       Seq((0, "k", "v", Timestamp.valueOf("2026-01-01 00:00:00")))
         .toDF("partition", "key", "value", "ts"),
@@ -124,7 +123,7 @@ class KafkaContractSpec extends AnyFunSuite with SparkFixture {
 
   test("readAuto without a broker address falls back to the file shim") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_kafka_auto_").toString
+    val root = tempDir("graft_kafka_auto_").toString
     KafkaShim.write(
       Seq((0, "k", "v", Timestamp.valueOf("2026-01-01 00:00:00")))
         .toDF("partition", "key", "value", "ts"),

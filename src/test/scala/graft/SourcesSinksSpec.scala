@@ -52,7 +52,7 @@ class SourcesSinksSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("StatefulParquetSink is idempotent per epoch, advances on new epoch") {
-    val dir = Files.createTempDirectory("graft_sink_").toString + "/t"
+    val dir = tempDir("graft_sink_").toString + "/t"
     val sink = StatefulParquetSink(dir)
     sink.write(spark.range(3).toDF("i"), epoch = 1L)
     assert(sink.committedEpoch.contains(1L))
@@ -64,7 +64,7 @@ class SourcesSinksSpec extends AnyFunSuite with SparkFixture {
 
   test("KafkaShim assigns dense per-partition offsets and honors start offsets") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_kafka_").toString
+    val root = tempDir("graft_kafka_").toString
     val df = (0L until 20L).map(i => (i % 3, s"k$i", s"v$i", i))
       .toDF("partition", "key", "value", "seq")
       .withColumn("ts", F.timestamp_seconds(F.col("seq")))
@@ -93,7 +93,7 @@ class SourcesSinksSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     // no spark-sql-kafka jar ships in this container
     assert(!KafkaShim.kafkaJarPresent)
-    val root = Files.createTempDirectory("graft_kauto_").toString
+    val root = tempDir("graft_kauto_").toString
     val df = (0L until 6L).map(i => (i % 2, s"k$i", s"v$i", i))
       .toDF("partition", "key", "value", "seq")
       .withColumn("ts", F.timestamp_seconds(F.col("seq")))
@@ -112,7 +112,7 @@ class SourcesSinksSpec extends AnyFunSuite with SparkFixture {
   test("KafkaShim append continues offsets after each partition's high-water mark") {
     import spark.implicits._
     import org.apache.spark.sql.SaveMode
-    val root = Files.createTempDirectory("graft_kappend_").toString
+    val root = tempDir("graft_kappend_").toString
     def batch(lo: Long, hi: Long) = (lo until hi).map(i => (i % 2, s"k$i", s"v$i", i))
       .toDF("partition", "key", "value", "seq")
       .withColumn("ts", F.timestamp_seconds(F.col("seq")))
@@ -443,7 +443,7 @@ class SourcesSinksSpec extends AnyFunSuite with SparkFixture {
 
   test("FileSource reads csv and jsonl with explicit schemas; streaming demands a schema") {
     import graft.sources.FileSource
-    val dir = java.nio.file.Files.createTempDirectory("filesource")
+    val dir = tempDir("filesource")
     java.nio.file.Files.writeString(dir.resolve("part.csv"),
       "id,name,score\n1,alpha,0.5\n2,beta,1.5\n")
     val csv = FileSource(dir.toString, "csv",
@@ -451,7 +451,7 @@ class SourcesSinksSpec extends AnyFunSuite with SparkFixture {
       Map("header" -> "true")).load(spark).collect().sortBy(_.getLong(0))
     assert(csv.length == 2 && csv(0).getString(1) == "alpha" && csv(1).getDouble(2) == 1.5)
 
-    val jdir = java.nio.file.Files.createTempDirectory("filesource_json")
+    val jdir = tempDir("filesource_json")
     java.nio.file.Files.writeString(jdir.resolve("part.jsonl"),
       """{"id":1,"name":"alpha"}""" + "\n" + """{"id":2,"name":"beta"}""" + "\n")
     val json = FileSource(jdir.toString, "json", Some("id BIGINT, name STRING"))

@@ -15,7 +15,7 @@ class SpreadSpec extends AnyFunSuite with SparkFixture {
     // A real single-file parquet scan — the actual small-file regime
     // (coalesce would not do: it is itself a RepartitionOperation and
     // correctly trips the scan-only guard below).
-    val dir = java.nio.file.Files.createTempDirectory("spread").toString
+    val dir = tempDir("spread").toString
     (1 to 100).toDF("x").coalesce(1).write.mode("overwrite").parquet(dir)
     val one = spark.read.parquet(dir)
     assert(one.rdd.getNumPartitions == 1)

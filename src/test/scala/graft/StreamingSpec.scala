@@ -244,13 +244,9 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     val b = Array(0f, 1f, 0f, 0f, 0f, 0f, 0f, 0f)
     val hist = ((0L until 10L).map(i => (i, a)) ++ (10L until 20L).map(i => (i, b)))
       .toDF("vec_id", "embedding")
-    val tmp = System.getProperty("java.io.tmpdir")
-    val path = s"$tmp/graft_sem_stream_spec_idx"
-    val src = s"$tmp/graft_sem_stream_spec_src"
-    def rm(p: String): Unit = {
-      val (fs, hp) = graft.HadoopFs.get(p); fs.delete(hp, true); ()
-    }
-    Seq(path, path + "_centroids", path + "_stats", src).foreach(rm)
+    val tmp = tempDir("graft_sem_stream_spec_").toString
+    val path = s"$tmp/idx"
+    val src = s"$tmp/src"
     graft.ann.Ann.ivfIndexInit(hist, path, cells = 4, sampleN = 20)
     Seq((100L, a)).toDF("vec_id", "embedding")
       .coalesce(1).write.parquet(s"$src/b1")
@@ -260,26 +256,23 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$src/b*")
-    val outDir = s"$tmp/graft_sem_stream_spec_out"
-    val ckpt = s"$tmp/graft_sem_stream_spec_ckpt"
-    Seq(outDir, ckpt).foreach(rm)
-    try {
-      graft.streaming.StreamingOps.semanticDedupStream(
-        stream, path, outDir, ckpt).awaitTermination()
-      val pairs = spark.read.parquet(
-          new java.io.File(outDir).listFiles()
-            .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-            .map(_.getAbsolutePath).toSeq: _*)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      // batch-1 vs history
-      assert((0L until 10L).forall(i => pairs.contains((i, 100L))), s"got $pairs")
-      // batch-2 vs history AND vs batch 1 (the carry-over pair)
-      assert((0L until 10L).forall(i => pairs.contains((i, 200L))), s"got $pairs")
-      assert(pairs.contains((100L, 200L)), s"cross-batch carry-over pair missing: $pairs")
-      // orthogonal batch-2 vector stays clean; no history-internal pairs
-      assert(!pairs.exists(p => p._1 == 201L || p._2 == 201L), s"got $pairs")
-      assert(pairs.forall(p => p._2 >= 100L), s"history-internal pair leaked: $pairs")
-    } finally Seq(outDir, ckpt, src).foreach(rm)
+    val outDir = s"$tmp/out"
+    val ckpt = s"$tmp/ckpt"
+    graft.streaming.StreamingOps.semanticDedupStream(
+      stream, path, outDir, ckpt).awaitTermination()
+    val pairs = spark.read.parquet(
+        new java.io.File(outDir).listFiles()
+          .filter(f => f.isDirectory && f.getName.startsWith("batch="))
+          .map(_.getAbsolutePath).toSeq: _*)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // batch-1 vs history
+    assert((0L until 10L).forall(i => pairs.contains((i, 100L))), s"got $pairs")
+    // batch-2 vs history AND vs batch 1 (the carry-over pair)
+    assert((0L until 10L).forall(i => pairs.contains((i, 200L))), s"got $pairs")
+    assert(pairs.contains((100L, 200L)), s"cross-batch carry-over pair missing: $pairs")
+    // orthogonal batch-2 vector stays clean; no history-internal pairs
+    assert(!pairs.exists(p => p._1 == 201L || p._2 == 201L), s"got $pairs")
+    assert(pairs.forall(p => p._2 >= 100L), s"history-internal pair leaked: $pairs")
   }
 
   test("psiBucketsStream: fMGWS histogram equals the batch histogram after multiple batches") {
@@ -363,8 +356,8 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       .toDF("doc_id", "text", "version")
     val upd1 = Seq((2L, "two-v1", 1))
     val upd2 = Seq((3L, "three-v1", 1), (9L, "nine-v1", 1))
-    val logDir = Files.createTempDirectory("graft_cdc_log_").toString
-    val ckpt1 = Files.createTempDirectory("graft_cdc_ck1_").toString
+    val logDir = tempDir("graft_cdc_log_").toString
+    val ckpt1 = tempDir("graft_cdc_ck1_").toString
     def runStream(ckpt: String): Unit = {
       val input = MemoryStream[(Long, String, Int)]
       // ProcessingTime(0): the memory-stream driver feeds batches one at
@@ -394,7 +387,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       got(1L) == (("one", 0)))
     // redelivery: the WHOLE stream replays against a fresh checkpoint
     // (same batch ids) — the committed markers make every append a no-op
-    val ckpt2 = Files.createTempDirectory("graft_cdc_ck2_").toString
+    val ckpt2 = tempDir("graft_cdc_ck2_").toString
     runStream(ckpt2)
     assert(segs().length == 2, "replayed batches must not duplicate segments")
     assert(serve() == expect, "replay changed the served corpus")
@@ -447,7 +440,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
   test("checkpointed query resumes state after a restart") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_ckpt_").toString
+    val dir = tempDir("graft_ckpt_").toString
     val src = s"$dir/in"
     val ckpt = s"$dir/ckpt"
     val outDir = s"$dir/out"
@@ -495,7 +488,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
   test("KafkaShim streams a topic through readStream") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_kstream_").toString
+    val root = tempDir("graft_kstream_").toString
     val df = (0L until 30L).map(i => (i % 3, s"k$i", s"v$i", i))
       .toDF("partition", "key", "value", "seq")
       .withColumn("ts", org.apache.spark.sql.functions.timestamp_seconds($"seq"))
@@ -679,7 +672,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
   test("checkpoint resume survives a requested parallelism change") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_rescale_").toString
+    val dir = tempDir("graft_rescale_").toString
     val src = s"$dir/in"
     val ckpt = s"$dir/ckpt"
     val outDir = s"$dir/out"
@@ -711,7 +704,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("offline state rescale: migrated checkpoint adopts the NEW partition count with no state loss") {
     import spark.implicits._
     import graft.streaming.StateRescale
-    val dir = Files.createTempDirectory("graft_migrate_").toString
+    val dir = tempDir("graft_migrate_").toString
     val origParts = spark.conf.get("spark.sql.shuffle.partitions")
     def runPhase(src: String, ckpt: String, outDir: String,
                  init: Option[org.apache.spark.sql.KeyValueGroupedDataset[Long, Long]]): Unit = {
@@ -765,7 +758,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("engine upgrade: fMGWS checkpoint state seeds a transformWithState query") {
     import spark.implicits._
     import graft.streaming.StateRescale
-    val dir = Files.createTempDirectory("graft_upgrade_").toString
+    val dir = tempDir("graft_upgrade_").toString
     val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     try {
       // Phase A on the v1 engine (flatMapGroupsWithState).
@@ -857,7 +850,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
   test("exactly-once sink skips replayed batches") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_e1_").toString
+    val dir = tempDir("graft_e1_").toString
     val src = s"$dir/in"
     val outDir = s"$dir/out"
     Seq(SEvent(1, 1), SEvent(2, 2)).toDS().write.mode(SaveMode.Append).parquet(src)
@@ -876,7 +869,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
   test("stream-static broadcast enrichment equals the batch join") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_enrich_").toString
+    val dir = tempDir("graft_enrich_").toString
     Seq((1L, 10L, 5.0), (2L, 11L, 7.0), (3L, 10L, 2.0), (4L, 99L, 1.0))
       .toDF("event_id", "user_id", "value")
       .write.parquet(s"$dir/events")
@@ -901,7 +894,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
   test("incrementalDedupStream: index carry-over finds cross-batch dups; restart is exactly-once") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_inc_stream_").toString
+    val dir = tempDir("graft_inc_stream_").toString
     val srcDir = s"$dir/src"
     Files.createDirectories(java.nio.file.Paths.get(srcDir))
     val outDir = s"$dir/out"
@@ -951,7 +944,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("end-to-end rescale-resume: migrated run is row-identical to the never-stopped run, incl. TTL expiries") {
     import spark.implicits._
     import graft.streaming.StateRescale
-    val dir = Files.createTempDirectory("graft_e2e_mig_").toString
+    val dir = tempDir("graft_e2e_mig_").toString
     val origParts = spark.conf.get("spark.sql.shuffle.partitions")
     val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     // Emits ONLY on expiry — so every output row is a (key, final_total)
@@ -1090,7 +1083,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
   test("SinkGate: nothing public until open, marker-last publish, idempotent replay") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_sinkgate").toString
+    val dir = tempDir("graft_sinkgate").toString
     val gate = new graft.streaming.SinkGate(s"$dir/stage", s"$dir/public")
     def pub() = Option(new java.io.File(s"$dir/public").listFiles())
       .map(_.map(_.getName).sorted.toSeq).getOrElse(Nil)
@@ -1119,7 +1112,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
   test("SinkGate: a crash mid-publish heals on the next open") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_sinkgate_crash").toString
+    val dir = tempDir("graft_sinkgate_crash").toString
     val gate = new graft.streaming.SinkGate(s"$dir/stage", s"$dir/public")
     gate.sink(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), 0L)
     // simulate a crash mid-publish: a data file copied but NO _SUCCESS
@@ -1144,7 +1137,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     import graft.streaming.StateRescale
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_pinned_export").toString
+    val dir = tempDir("graft_pinned_export").toString
     val input = MemoryStream[SEvent]
     val q = StatefulExec.stream[Long, SEvent, Long, STotal](
       input.toDS(), _.k, runningSum)
@@ -1178,7 +1171,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     // "entries <= logOffset" union under-reports and a derived resume
     // would double-read. The compact's entries carry their batchId —
     // consumedFiles must filter on that instead.
-    val dir = Files.createTempDirectory("graft_compact_edge")
+    val dir = tempDir("graft_compact_edge")
     def put(rel: String, body: String): Unit = {
       val f = dir.resolve(rel)
       Files.createDirectories(f.getParent)
@@ -1199,7 +1192,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
   test("consumedFiles fails loudly on an unrecoverable metadata-log gap") {
     import graft.streaming.StateRescale
-    val dir = Files.createTempDirectory("graft_compact_gap")
+    val dir = tempDir("graft_compact_gap")
     def put(rel: String, body: String): Unit = {
       val f = dir.resolve(rel)
       Files.createDirectories(f.getParent)

@@ -19,7 +19,7 @@ class TablesSpec extends AnyFunSuite with SparkFixture {
   /** Write a one-table testdata dir whose events.parquet has `ts` of the
     * given writer, return the dir. */
   private def stage(name: String)(writeTs: java.io.File => Unit): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"tables_spec_$name").toFile
+    val dir = tempDir(s"tables_spec_$name").toFile
     writeTs(dir)
     dir.getAbsolutePath
   }

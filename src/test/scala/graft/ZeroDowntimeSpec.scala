@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,7 +36,7 @@ class ZeroDowntimeSpec extends AnyFunSuite with SparkFixture {
   test("zero-downtime handoff: live export + gated cutover equals the never-stopped run") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_zdt").toString
+    val dir = tempDir("graft_zdt").toString
     // the timeline, fenced between f2 and f3
     val f1 = Seq(SEvent(1, 10), SEvent(2, 5))
     val f2 = Seq(SEvent(1, 7), SEvent(3, 2))
