@@ -33,6 +33,7 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(HadoopFs.forkFreeLocalConfs)
       // NOTE: no spark.driver.memory here — in local mode the JVM is
       // already running, so a builder conf would be a silent no-op; the
       // heap actually comes from build.sbt's -Xmx (same SPARK_DRIVER_MEM

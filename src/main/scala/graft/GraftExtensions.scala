@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graftbridge.ContextBridge
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -17,6 +18,10 @@ import graft.functions.expressions.{DotProductF, MinhashSigsExpr, ShingleExpr, S
   *
   * Column-API callers don't need this — graft.functions.* builds the same
   * expressions directly.
+  *
+  * Applying the extension also puts the session's context on graft's
+  * fork-free `file:` filesystem ([[HadoopFs.useForkFreeLocal]]); a key
+  * the user set is left alone.
   */
 object GraftExtensions {
 
@@ -61,6 +66,11 @@ object GraftExtensions {
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // Spark applies extensions after it builds the context and before
+    // the session, so the keys land before the session's first `file:`
+    // access. Without a context (a bare SparkSessionExtensions) there is
+    // nothing to configure, and none may be created here.
+    ContextBridge.active.foreach(sc => HadoopFs.useForkFreeLocal(sc.hadoopConfiguration))
     ext.injectOptimizerRule(_ => graft.plans.RewriteDotProduct)
     GraftExtensions.functions.foreach { f =>
       ext.injectFunction(

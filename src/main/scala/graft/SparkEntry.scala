@@ -202,7 +202,7 @@ object SparkEntry {
   /** Streaming file sources read DIRECTORIES; the testdata tables are
     * single parquet files. Stage a per-table temp directory holding one
     * symlink to the file (idempotent, re-linked if the target moved). */
-  private def stageStreamDir(dir: String, table: String): java.nio.file.Path = {
+  private[graft] def stageStreamDir(dir: String, table: String): java.nio.file.Path = {
     val src = java.nio.file.Paths.get(s"$dir/$table.parquet")
     val key = f"${src.toAbsolutePath.toString.hashCode}%08x"
     val srcDir = tmpPath(s"graft_stream_src_${table}_${new java.io.File(dir).getName}_$key")
@@ -291,7 +291,7 @@ object SparkEntry {
 
   /** `<tmp>/<name>_<stageKey>`: a location owned by one dataset and one
     * version of its `table`, never by every dataset sharing a basename. */
-  private def stagePath(name: String, dir: String, table: String): java.nio.file.Path =
+  private[graft] def stagePath(name: String, dir: String, table: String): java.nio.file.Path =
     tmpPath(s"${name}_${stageKey(dir, table)}")
 
   /** Write the input a gate derives from `dir/table` once per

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.{CacheScope, SparkEntry}
+import graft.{CacheScope, HadoopFs, SparkEntry}
 
 /** Prints formatted physical plans for selected queries — the audit loop
   * for pushdown (PushedFilters/ReadSchema), broadcast joins, exchanges and
@@ -26,6 +26,7 @@ object ExplainAudit {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(HadoopFs.forkFreeLocalConfs)
       // applied as the context starts, so its own start-up INFO lines are
       // quiet too (setLogLevel after getOrCreate comes too late for them)
       .config("spark.log.level", "ERROR")

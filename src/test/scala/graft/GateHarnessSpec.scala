@@ -109,6 +109,9 @@ class GateHarnessSpec extends AnyFunSuite with SparkFixture {
     spark.read.parquet(s"$sf001/documents.parquet")
       .filter(F.col("doc_id") % 3 === 0)
       .write.parquet(filtered.resolve("documents.parquet").toString)
+    // the filtered dataset dies with this JVM, so its sink stage must too
+    SparkFixture.removeOnExit(
+      SparkEntry.stagePath("graft_stateful_sink", filtered.toString, "documents.parquet"))
     Seq(sf001, filtered.toString).foreach { dir =>
       val expected = spark.read.parquet(s"$dir/documents.parquet")
         .groupBy(F.col("source")).count()

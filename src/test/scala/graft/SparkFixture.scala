@@ -70,6 +70,7 @@ object SparkFixture {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(HadoopFs.forkFreeLocalConfs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -83,6 +83,8 @@ class TablesSpec extends AnyFunSuite with SparkFixture {
     val got = SparkEntry.queries("q_stream_epochs")(spark, dir)
       .select("event_type", "window_start", "n")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    // the staged stream dir links into this JVM's temp dataset: drop it too
+    SparkFixture.removeOnExit(SparkEntry.stageStreamDir(dir, "events"))
     assert(got.nonEmpty, "stream gate returned no rows on micros-TIMESTAMP events")
     val batch = Tables.events(spark, dir)
       .groupBy(F.col("event_type"), F.window(F.col("ts"), "1 hour"))
