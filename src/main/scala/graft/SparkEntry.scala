@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.types.StructType
 
 import graft.api.{GraftStream, SaltedAgg}
 import graft.SessionConf.{RocksDbProvider, withConf}
@@ -191,31 +192,6 @@ object SparkEntry {
         F.col("n"), F.col("sum_value"))
   }
 
-  /** FileStreamSource wants a directory; stage the events table file into
-    * one, keyed on a hash of the FULL source path (two datasets sharing a
-    * basename can't collide) and re-linked through NOFOLLOW_LINKS +
-    * deleteIfExists (a dangling or stale symlink is replaced, never
-    * followed into a false "exists" or a silent read of old data). */
-  private def stageEventsDir(dir: String): java.nio.file.Path =
-    stageStreamDir(dir, "events")
-
-  /** Streaming file sources read DIRECTORIES; the testdata tables are
-    * single parquet files. Stage a per-table temp directory holding one
-    * symlink to the file (idempotent, re-linked if the target moved). */
-  private[graft] def stageStreamDir(dir: String, table: String): java.nio.file.Path = {
-    val src = java.nio.file.Paths.get(s"$dir/$table.parquet")
-    val key = f"${src.toAbsolutePath.toString.hashCode}%08x"
-    val srcDir = tmpPath(s"graft_stream_src_${table}_${new java.io.File(dir).getName}_$key")
-    java.nio.file.Files.createDirectories(srcDir)
-    val link = srcDir.resolve(s"$table.parquet")
-    if (!java.nio.file.Files.exists(link, java.nio.file.LinkOption.NOFOLLOW_LINKS) ||
-        java.nio.file.Files.readSymbolicLink(link) != src) {
-      java.nio.file.Files.deleteIfExists(link)
-      java.nio.file.Files.createSymbolicLink(link, src)
-    }
-    srcDir
-  }
-
   /** Layout-optimized `documents` staging for [[qLayoutPrune]] — written
     * once per source dir ([[graft.operators.Corpus.optimizeLayout]],
     * clustered on (lang, n_chars)), reused across runs: the gate times
@@ -256,6 +232,14 @@ object SparkEntry {
     java.nio.file.Files.createTempDirectory(base, s"graft_ckpt_${name}_").toString
   }
 
+  /** `body` over one fresh [[scratchCheckpoint]] dir per name (a
+    * checkpoint, a sink's output, ...), all deleted after it returns or
+    * throws. */
+  private def withScratch[A](names: String*)(body: Seq[String] => A): A = {
+    val dirs = names.map(scratchCheckpoint)
+    try body(dirs) finally dirs.foreach(rmTree)
+  }
+
   private def rmTree(path: String): Unit = {
     val root = java.nio.file.Paths.get(path)
     if (java.nio.file.Files.exists(root)) {
@@ -271,9 +255,9 @@ object SparkEntry {
   private def tmpPath(name: String): java.nio.file.Path =
     java.nio.file.Paths.get(sys.props("java.io.tmpdir"), name)
 
-  /** Size+mtime fingerprint of a staged query input (ADVICE r10): staging
-    * keys carry it so in-place testdata regeneration discards the stale
-    * staged copy instead of silently comparing it against a fresh oracle. */
+  /** Size+mtime fingerprint of a staged query input: staging keys carry
+    * it so in-place testdata regeneration discards the stale staged copy
+    * instead of silently comparing it against a fresh oracle. */
   private def srcStamp(dir: String, table: String): Long = {
     val root = java.nio.file.Paths.get(dir, table)
     val st = java.nio.file.Files.walk(root)
@@ -287,7 +271,9 @@ object SparkEntry {
     * in-place testdata regeneration flips the stamp, so stale staged
     * copies are discarded instead of silently graded. */
   private def stageKey(dir: String, table: String): String =
-    f"${dir.hashCode}%08x_${srcStamp(dir, table)}%016x"
+    f"${dirKey(dir)}_${srcStamp(dir, table)}%016x"
+
+  private def dirKey(dir: String): String = f"${dir.hashCode}%08x"
 
   /** `<tmp>/<name>_<stageKey>`: a location owned by one dataset and one
     * version of its `table`, never by every dataset sharing a basename. */
@@ -301,7 +287,9 @@ object SparkEntry {
     * next part's, because a file stream admits files in mtime order. The
     * stage is done only when the LAST part's `_SUCCESS` exists — the root
     * appears as soon as the first write starts — and an unfinished stage
-    * is wiped and written again from the first part. */
+    * is wiped and written again from the first part. Once a stage is
+    * whole, the stages `name` holds for other versions of the same
+    * dataset's table are deleted; other datasets' stages are kept. */
   private[graft] def stageOnce(name: String, dir: String, table: String)(
       parts: (String => Unit)*): java.nio.file.Path = {
     val root = stagePath(name, dir, table)
@@ -314,6 +302,11 @@ object SparkEntry {
       dirs.zipWithIndex.foreach { case (d, i) =>
         d.toFile.listFiles().foreach { f => f.setLastModified(now - (dirs.size - 1 - i) * 60000L); () }
       }
+      val mine = root.getFileName.toString
+      val sameDataset = s"${name}_${dirKey(dir)}_"
+      root.getParent.toFile.listFiles().map(_.getName)
+        .filter(n => n.startsWith(sameDataset) && n.length == mine.length && n != mine)
+        .foreach(n => rmTree(root.resolveSibling(n).toString))
     }
     root
   }
@@ -321,6 +314,37 @@ object SparkEntry {
   /** A [[stageOnce]] part: `df` as one parquet file. */
   private def oneFile(df: DataFrame): String => Unit =
     df.coalesce(1).write.mode("overwrite").parquet(_)
+
+  /** A streaming gate's input as [[stage]] wrote it: the root, the schema
+    * of the frames staged and the part count. */
+  private final case class Staged(root: java.nio.file.Path, schema: StructType, parts: Int) {
+    /** Every part, in arrival order. */
+    def files: String = if (parts == 1) root.toString else s"$root/b*"
+
+    /** A file stream over `path` under the staged schema, at most
+      * `maxFiles` files per micro-batch (0: no limit). */
+    def stream(s: SparkSession, maxFiles: Int = 0, path: String = files): DataFrame = {
+      val r = s.readStream.schema(schema)
+      (if (maxFiles > 0) r.option("maxFilesPerTrigger", maxFiles.toLong) else r).parquet(path)
+    }
+  }
+
+  /** The one way a streaming gate gets its input: `parts` written once
+    * per [[stageKey]] of `dir/table`, one parquet file each
+    * ([[stageOnce]]), read back with [[Staged.stream]]. */
+  private def stage(name: String, dir: String, table: String)(parts: DataFrame*): Staged =
+    Staged(stageOnce(name, dir, table)(parts.map(oneFile): _*), parts.head.schema, parts.size)
+
+  /** `events` staged with `ts` already normalized ([[Tables.withEvents]]
+    * scopes the legacy flag to this write), so every gate that streams
+    * events, or stages parts derived from it, reads micro-precision
+    * TIMESTAMP whatever shape the table was generated in. */
+  private def stagedEvents(s: SparkSession, dir: String): Staged =
+    Tables.withEvents(s, dir)(stage("graft_stream_events", dir, "events.parquet")(_))
+
+  /** `documents` staged whole, for the gates that stream the table. */
+  private def stagedDocs(s: SparkSession, dir: String): Staged =
+    stage("graft_stream_documents", dir, "documents.parquet")(T(s, dir, "documents"))
 
   /** Slot → the [[stageKey]] its persisted index was last built for in
     * this JVM, so repeated bench shots time the steady-state probe, not
@@ -377,31 +401,6 @@ object SparkEntry {
       .filter(f => f.isDirectory && f.getName.startsWith("batch="))
       .map(_.getAbsolutePath).sorted.toSeq: _*)
 
-  /** Run `body` with `spark.sql.legacy.parquet.nanosAsLong` set: the
-    * streaming sources read the raw nanosecond BIGINT column. */
-  private def withNanosAsLong[A](s: SparkSession)(body: => A): A =
-    withConf(s, "spark.sql.legacy.parquet.nanosAsLong" -> "true")(body)
-
-  /** Schema-adaptive streaming read of the staged events dir: declare
-    * whichever physical ts shape the file actually has (the SAME
-    * Tables.tsShape dispatch the batch loader uses — a separate
-    * hand-rolled sniff here once lacked the adjusted-to-UTC branch, so a
-    * generator flip to TIMESTAMP(MICROS, adjusted) would have crashed only
-    * the stream gates) and normalize to micro-precision TimestampType. */
-  private def eventsStream(s: SparkSession, srcDir: java.nio.file.Path): DataFrame = {
-    // srcDir is the staged dir holding the events.parquet symlink, so the
-    // batch sniff reads the same footer the stream will.
-    val shape = Tables.tsShape(s, srcDir.toString)
-    val tsDdl = shape match {
-      case Tables.TsShape.NanosAsLong => "BIGINT"
-      case Tables.TsShape.Micros      => "TIMESTAMP"
-      case Tables.TsShape.Ntz         => "TIMESTAMP_NTZ"
-    }
-    Tables.normalizeTs(shape, s.readStream
-      .schema(s"event_id BIGINT, ts $tsDdl, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
-      .parquet(srcDir.toString))
-  }
-
   /** Run a bounded streaming gate: write `df` to a memory sink under
     * `qname` with an AvailableNow trigger and a scratch checkpoint,
     * using `parts` state partitions for the query (the state-store
@@ -409,16 +408,16 @@ object SparkEntry {
     * the moment the query starts). Returns the sink table. */
   private def runMemoryGate(s: SparkSession, df: DataFrame, qname: String,
                             mode: String, parts: String = "8"): DataFrame = {
-    val ckpt = scratchCheckpoint(qname)
-    try withConf(s, "spark.sql.shuffle.partitions" -> parts) {
-      df.writeStream
-        .format("memory").queryName(qname)
-        .option("checkpointLocation", ckpt)
-        .outputMode(mode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }.awaitTermination()
-    finally rmTree(ckpt)
+    withScratch(qname) { case Seq(ckpt) =>
+      withConf(s, "spark.sql.shuffle.partitions" -> parts) {
+        df.writeStream
+          .format("memory").queryName(qname)
+          .option("checkpointLocation", ckpt)
+          .outputMode(mode)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+      }.awaitTermination()
+    }
     s.table(qname)
   }
 
@@ -428,9 +427,8 @@ object SparkEntry {
     * matrix next to the stream-stream interval join (q_stream_join).
     * Executed as a real Structured Streaming job; the batch join oracle
     * checks the result hash-exactly. */
-  private def qStreamEnrich(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
-    val srcDir = stageEventsDir(dir)
-    val stream = eventsStream(s, srcDir)
+  private def qStreamEnrich(s: SparkSession, dir: String): DataFrame = {
+    val stream = stagedEvents(s, dir).stream(s)
     val dim = T(s, dir, "customer")
     runMemoryGate(s,
       stream
@@ -451,18 +449,17 @@ object SparkEntry {
     * are LOAD-BEARING for the oracle-checked answer: an under-counted
     * register would lose a heavy key and break the hash. Oracle = the
     * q_heavy_hitters HAVING (same key synthesis). */
-  private def qStreamHeavyHitters(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
-    val srcDir = stageEventsDir(dir)
+  private def qStreamHeavyHitters(s: SparkSession, dir: String): DataFrame = {
+    val ev = stagedEvents(s, dir)
     def key(c: Column, u: Column) = F.concat(F.lit("k"),
       F.when(c % 2 === 0, (u % 10).cast("string"))
         .otherwise(F.concat(F.lit("c"), (c % 2000).cast("string"))))
-    val stream = eventsStream(s, srcDir)
     val regs = graft.functions.Sketches.cmRegisters(
-      stream.select(key(F.col("event_id"), F.col("user_id")).as("key")), "key")
+      ev.stream(s).select(key(F.col("event_id"), F.col("user_id")).as("key")), "key")
     val regRows = runMemoryGate(s, regs, "graft_stream_hh", mode = "complete")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq
     graft.functions.Sketches.heavyHittersFromRegisters(
-      Tables.events(s, dir).select(key(F.col("event_id"), F.col("user_id")).as("key")),
+      s.read.parquet(ev.files).select(key(F.col("event_id"), F.col("user_id")).as("key")),
       "key", phi = 0.01, regRows, d = 4, w = 1024)
   }
 
@@ -471,14 +468,13 @@ object SparkEntry {
     * complete-mode streaming max IS an incremental max-merge, so the
     * bounded state (≤ groups × 2^p rows, however much stream passes) is
     * [[graft.functions.Sketches.hllRegisters]] applied to the stream
-    * unchanged (the row-143 CM pattern for the second sketch tier). The
-    * streamed registers then fold to the estimate
+    * unchanged (the [[qStreamHeavyHitters]] pattern for the second
+    * sketch tier). The streamed registers then fold to the estimate
     * ([[graft.functions.Sketches.hllEstimate]]), so they are LOAD-BEARING
     * for the oracle-checked number: the oracle is q_distinct_sketch's
     * batch HLL SQL verbatim — streamed state ≡ batch sketch. */
-  private def qStreamDistinctSketch(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
-    val srcDir = stageEventsDir(dir)
-    val stream = eventsStream(s, srcDir)
+  private def qStreamDistinctSketch(s: SparkSession, dir: String): DataFrame = {
+    val stream = stagedEvents(s, dir).stream(s)
     val regs = graft.functions.Sketches.hllRegisters(
       stream.select(F.col("event_type"), F.col("user_id")), Seq("event_type"), "user_id")
     val regDf = runMemoryGate(s, regs, "graft_stream_hll", mode = "complete")
@@ -494,10 +490,9 @@ object SparkEntry {
     * selection as the batch sketch. Oracle = q_percentile_sketch's SQL
     * verbatim: streamed state ≡ batch sample, because bottom-k is a
     * function of the SET, not of arrival order. */
-  private def qStreamPercentileSketch(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
+  private def qStreamPercentileSketch(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val srcDir = stageEventsDir(dir)
-    val stream = eventsStream(s, srcDir)
+    val stream = stagedEvents(s, dir).stream(s)
     val snaps = graft.streaming.StreamingOps.bottomKSampleStream(
       stream, "event_type", "value", "event_id")
     val collected = runMemoryGate(s, snaps, "graft_stream_kmv", mode = "append")
@@ -511,20 +506,17 @@ object SparkEntry {
 
   /** STREAMING priority-sample maintenance
     * ([[graft.streaming.StreamingOps.prioritySampleStream]]) — the
-    * row-143 pattern for the sampling tier: the top-(k+1) candidate set
-    * by (priority DESC, id ASC) is merge-closed under its total order, so
-    * it lives as flatMapGroupsWithState state (bounded at k+1 entries
-    * however much stream passes); the final snapshot's (id, weight) rows
+    * [[qStreamHeavyHitters]] pattern for the sampling tier: the top-(k+1)
+    * candidate set by (priority DESC, id ASC) is merge-closed under its
+    * total order, so it lives as flatMapGroupsWithState state (bounded at
+    * k+1 entries however much stream passes); the final snapshot's (id, weight) rows
     * feed the audited batch [[graft.operators.Sampling.prioritySample]],
     * which recomputes rank, tau and the subset-sum estimator on <= k+1
     * rows. Streamed state is LOAD-BEARING (it decides the candidate set);
     * oracle = q_sample_priority's SQL verbatim — streamed sample ≡ batch
     * sample of the whole table. */
   private def qStreamSamplePriority(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = stageStreamDir(dir, "documents")
-    val stream = s.readStream
-      .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-      .parquet(srcDir.toString)
+    val stream = stagedDocs(s, dir).stream(s)
     val snaps = graft.streaming.StreamingOps.prioritySampleStream(
       stream.select("doc_id", "n_chars"), "doc_id", F.col("n_chars"), k = 100)
     val collected = runMemoryGate(s, snaps, "graft_stream_psample", mode = "append")
@@ -539,9 +531,8 @@ object SparkEntry {
     * Streaming job (file stream → watermark → windowed agg → memory sink,
     * AvailableNow trigger) — proving the streaming path produces the
     * batch-identical answer the oracle checks. */
-  private def qStreamEpochs(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
-    val srcDir = stageEventsDir(dir)
-    val stream = eventsStream(s, srcDir)
+  private def qStreamEpochs(s: SparkSession, dir: String): DataFrame = {
+    val stream = stagedEvents(s, dir).stream(s)
     val agg = EventTime.generateEpochs(stream, "ts", "10 minutes")
       .groupBy(F.col("event_type"), F.window(F.col("ts"), "1 hour"))
       .agg(F.count(F.lit(1)).as("n"), dsum(F.col("value"), 4).as("sum_value"))
@@ -560,10 +551,9 @@ object SparkEntry {
     * micro-batches; the per-key MAX of the running counts is the total —
     * order-independent, so the batch COUNT(*) per user is its exact
     * oracle. */
-  private def qStreamStateful(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
+  private def qStreamStateful(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val srcDir = stageEventsDir(dir)
-    val stream = eventsStream(s, srcDir)
+    val stream = stagedEvents(s, dir).stream(s)
       .select(F.col("event_id"), F.col("user_id"), F.unix_micros(F.col("ts")).as("ts_us"))
       .as[Ev]
     val logic = new StatefulLogic[Long, Ev, Long, RunningN] {
@@ -582,7 +572,7 @@ object SparkEntry {
   /** Streaming exact dedup executed as a real Structured Streaming job
     * (file stream → sha-256 → watermarked dropDuplicatesWithinWatermark →
     * memory sink, AvailableNow): the streaming face of the batch dedup,
-    * gate-checked against the batch answer (VERDICT r9 #5).
+    * gate-checked against the batch answer.
     *
     * Event time is synthesized from doc_id (micros) — documents carry no
     * timestamp — with a delay horizon far wider than the id spread, so no
@@ -598,10 +588,7 @@ object SparkEntry {
     * every duplicate and lost no content. StreamingSpec asserts the
     * keep-FIRST semantics on an ordered stream. */
   private def qStreamDedup(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = stageStreamDir(dir, "documents")
-    val stream = s.readStream
-      .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-      .parquet(srcDir.toString)
+    val stream = stagedDocs(s, dir).stream(s)
       // +1 day: doc_id 0 would land exactly on epoch 0 == the initial
       // watermark, and the state operator treats ts <= watermark as late.
       .withColumn("ts", F.timestamp_micros(F.col("doc_id") + F.lit(86400000000L)))
@@ -619,10 +606,7 @@ object SparkEntry {
     * oracle reproduces exactly from the batch KM-minhash CTE (which copy
     * survives is arrival-dependent, as in [[qStreamDedup]]). */
   private def qStreamDedupMinhash(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = stageStreamDir(dir, "documents")
-    val stream = s.readStream
-      .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-      .parquet(srcDir.toString)
+    val stream = stagedDocs(s, dir).stream(s)
       .withColumn("ts", F.timestamp_micros(F.col("doc_id") + F.lit(86400000000L)))
     val survivors = graft.streaming.StreamingOps
       .dedupMinhashStream(stream, "ts", "1 hour")
@@ -643,23 +627,22 @@ object SparkEntry {
   }
 
   /** Watermarked stream-stream INTERVAL join executed as a real streaming
-    * job (VERDICT r10 next-round #4): two file streams over the staged
-    * events table — errors and clicks — joined on user with the click
-    * time bounded to [t0, t0 + 1h). Both sides watermarked (the state
-    * cleanup contract: click state is evictable once the error watermark
-    * passes ts, and vice versa via the derived bound t0 ∈ (ts − 1h, ts]).
+    * job: two file streams over the staged events table — errors and
+    * clicks — joined on user with the click time bounded to [t0, t0 + 1h).
+    * Both sides watermarked (the state cleanup contract: click state is
+    * evictable once the error watermark passes ts, and vice versa via the
+    * derived bound t0 ∈ (ts − 1h, ts]).
     * An INNER interval join emits each match exactly once as it forms —
     * not on watermark close — so the append-mode output is the complete
     * pair set, row-identical to the batch range-join oracle regardless of
     * arrival order. */
-  private def qStreamJoin(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
-    val srcDir = stageEventsDir(dir)
-    def readEv() = eventsStream(s, srcDir)
-    val errors = readEv().filter(F.col("event_type") === "error")
+  private def qStreamJoin(s: SparkSession, dir: String): DataFrame = {
+    val ev = stagedEvents(s, dir)
+    val errors = ev.stream(s).filter(F.col("event_type") === "error")
       .select(F.col("user_id").as("err_user"), F.col("event_id").as("err_id"),
         F.col("ts").as("t0"))
       .withWatermark("t0", "30 days")
-    val clicks = readEv().filter(F.col("event_type") === "click")
+    val clicks = ev.stream(s).filter(F.col("event_type") === "click")
       .select(F.col("event_id").as("click_id"), F.col("user_id"), F.col("ts"))
       .withWatermark("ts", "30 days")
     val joined = clicks.join(errors,
@@ -677,8 +660,8 @@ object SparkEntry {
       "graft_stream_join", mode = "append", parts = "4")
   }
 
-  /** LEFT-OUTER watermarked stream-stream interval join (VERDICT r13 #4):
-    * same errors × clicks interval semantics as q_stream_join, but
+  /** LEFT-OUTER watermarked stream-stream interval join: the same
+    * errors × clicks interval semantics as q_stream_join, but
     * unmatched errors must be EMITTED null-padded — and in Structured
     * Streaming outer results only materialize when the WATERMARK passes
     * t0 + 1h, the classic end-of-stream correctness trap: a finite input
@@ -697,10 +680,9 @@ object SparkEntry {
     * err_user >= 0 guard is applied to the SINK table, never inside the
     * streaming plan: Catalyst pushes a left-side filter below the outer
     * join into the errors SCAN, which silently deletes the error
-    * sentinel at the source and stalls the watermark — this gate's first
-    * draft shipped exactly that bug (batch metrics: in=2000 not 2004,
-    * wm stuck at max_real − 30d, zero outer rows, state never evicted).
-    * Oracle: the batch LEFT JOIN over the real events table. */
+    * sentinel at the source and stalls the watermark: no outer row is
+    * emitted and the state is never evicted. Oracle: the batch LEFT JOIN
+    * over the real events table. */
   private def qStreamJoinOuter(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
@@ -708,16 +690,13 @@ object SparkEntry {
     // order is insurance that under any admission limit the sentinels
     // still come LAST (processed first, they would make every real row
     // late, and dropped).
-    val srcDir = stageOnce("graft_stream_outer_src", dir, "events.parquet")(
-      p => withNanosAsLong(s)(oneFile(Tables.events(s, dir).select(cols.map(F.col): _*))(p)),
-      oneFile(Seq((-1L, "9998-01-01 00:00:00", -1L, "error", 0.0),
+    val stream = stage("graft_stream_outer_src", dir, "events.parquet")(
+      s.read.parquet(stagedEvents(s, dir).files).select(cols.map(F.col): _*),
+      Seq((-1L, "9998-01-01 00:00:00", -1L, "error", 0.0),
           (-2L, "9998-01-01 02:00:00", -2L, "click", 0.0))
         .toDF("event_id", "tss", "user_id", "event_type", "value")
         .select(F.col("event_id"), F.to_timestamp(F.col("tss")).as("ts"),
-          F.col("user_id"), F.col("event_type"), F.col("value"))))
-    val stream = s.readStream
-      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE")
-      .parquet(s"$srcDir/b*")
+          F.col("user_id"), F.col("event_type"), F.col("value"))).stream(s)
     val errors = stream.filter(F.col("event_type") === "error")
       .select(F.col("user_id").as("err_user"), F.col("event_id").as("err_id"),
         F.col("ts").as("t0"))
@@ -738,10 +717,9 @@ object SparkEntry {
 
   /** End-to-end offline key migration, DRIVER-VISIBLE (the Spark answer
     * to reference live key-range migration, message_router/{interrogate,
-    * collect,normal}.rs; VERDICT r13 "missing #1" residual): a v1
-    * (flatMapGroupsWithState) job consumes the FIRST HALF of the events
-    * timeline and stops; the rest of the input arrives while the job is
-    * down; the gate derives the un-consumed files from the old
+    * collect,normal}.rs): a v1 (flatMapGroupsWithState) job consumes the
+    * FIRST HALF of the events timeline and stops; the rest of the input
+    * arrives while the job is down; the gate derives the un-consumed files from the old
     * checkpoint's committed offsets ([[graft.streaming.StateRescale
     * .consumedFiles]]), reads every (key, state) pair out of the stopped
     * checkpoint, and resumes the SAME logic on the v2 engine
@@ -764,14 +742,13 @@ object SparkEntry {
   private def qRescaleResume(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.streaming.StateRescale
-    val cols = Seq(F.col("event_id"), F.col("user_id"), F.col("ts"))
+    val ev = s.read.parquet(stagedEvents(s, dir).files)
+      .select(F.col("event_id"), F.col("user_id"), F.col("ts"))
     // Event-time extent (micros) — drives the split point, the TTL span,
     // and the sentinel timestamps; deterministic per dataset.
-    val ext = withNanosAsLong(s) {
-      Tables.events(s, dir).agg(
-        F.min(F.unix_micros(F.col("ts"))).as("lo"),
-        F.max(F.unix_micros(F.col("ts"))).as("hi")).head()
-    }
+    val ext = ev.agg(
+      F.min(F.unix_micros(F.col("ts"))).as("lo"),
+      F.max(F.unix_micros(F.col("ts"))).as("hi")).head()
     val (loUs, hiUs) = (ext.getLong(0), ext.getLong(1))
     val hourUs = 3600L * 1000000L
     val ttlMs = (hiUs - loUs) / 1000L + 2 * 3600000L // range + 2h: nothing real expires early
@@ -780,15 +757,14 @@ object SparkEntry {
     val s2Us = s1Us + hourUs                 // the expiry-delivery batch
     // b1 = phase A's half; b2 = the rest, then the two sentinels, in
     // arrival (mtime) order for the resumed file source
-    def half(keep: Column): String => Unit = p => withNanosAsLong(s)(
-      oneFile(Tables.events(s, dir).select(cols: _*).filter(keep))(p))
-    def sentinel(eid: Long, us: Long): String => Unit =
-      oneFile(Seq((eid, eid, us)).toDF("event_id", "user_id", "us")
-        .select(F.col("event_id"), F.col("user_id"), F.timestamp_micros(F.col("us")).as("ts")))
-    val src = stageOnce("graft_rescale_resume", dir, "events.parquet")(
-      half(F.unix_micros(F.col("ts")) <= cutUs), half(F.unix_micros(F.col("ts")) > cutUs),
+    def sentinel(eid: Long, us: Long): DataFrame =
+      Seq((eid, eid, us)).toDF("event_id", "user_id", "us")
+        .select(F.col("event_id"), F.col("user_id"), F.timestamp_micros(F.col("us")).as("ts"))
+    val src = stage("graft_rescale_resume", dir, "events.parquet")(
+      ev.filter(F.unix_micros(F.col("ts")) <= cutUs),
+      ev.filter(F.unix_micros(F.col("ts")) > cutUs),
       sentinel(-1L, s1Us), sentinel(-2L, s2Us))
-    val srcA = src.resolve("b1")
+    val srcA = src.root.resolve("b1")
     val silentSum = new StatefulLogic[Long, EvT, Long, KTotal] {
       def zero = 0L
       def update(k: Long, v: EvT, t: Long): (Long, IterableOnce[KTotal]) =
@@ -796,61 +772,55 @@ object SparkEntry {
       override def onExpiry(k: Long, t: Long): IterableOnce[KTotal] =
         Iterator.single(KTotal(k, t))
     }
-    def readStream(path: String, oneFilePerBatch: Boolean) = {
-      val r = s.readStream.schema("event_id BIGINT, user_id BIGINT, ts TIMESTAMP")
-      (if (oneFilePerBatch) r.option("maxFilesPerTrigger", 1) else r)
-        .parquet(path).withWatermark("ts", "0 seconds").as[EvT]
-    }
-    val ckptA = scratchCheckpoint("rescale_resume_a")
-    val ckptB = scratchCheckpoint("rescale_resume_b")
-    val outB = scratchCheckpoint("rescale_resume_out")
-    val srcB = java.nio.file.Paths.get(scratchCheckpoint("rescale_resume_src"))
-    try withConf(s, RocksDbProvider) {
-      // Phase A (v1 engine, session partition count): first half only.
-      val qa = StatefulExec.stream[Long, EvT, Long, KTotal](
-        readStream(srcA.toString, oneFilePerBatch = false), _.user_id, silentSum)
-        .writeStream.option("checkpointLocation", ckptA)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .format("noop").outputMode("append").start()
-      qa.awaitTermination()
-      // Derive what the stopped job had NOT consumed: everything in the
-      // source universe minus the committed offsets' file set.
-      val consumed = StateRescale.consumedFiles(ckptA)
-        .map(u => new org.apache.hadoop.fs.Path(u).toUri.getPath).toSet
-      val universe = java.nio.file.Files.walk(src).toArray.toSeq.map(_.toString)
-        .filter(_.endsWith(".parquet"))
-      val unconsumed = universe.filterNot(consumed.contains)
-        .map(p => new java.io.File(p)).sortBy(_.lastModified())
-      if (consumed.isEmpty || unconsumed.exists(_.getAbsolutePath.startsWith(srcA.toString)))
-        throw new IllegalStateException(
-          s"offset-derived resume set is wrong: consumed=$consumed unconsumed=$unconsumed")
-      unconsumed.zipWithIndex.foreach { case (f, i) =>
-        val dst = srcB.resolve(f"part$i%03d.parquet")
-        java.nio.file.Files.copy(f.toPath, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-      val wmA = StateRescale.lastWatermarkMs(ckptA)
-      // Phase B (v2 engine, DIFFERENT partition count): seed from ckptA,
-      // arm TTL at the migration-point clock, read only the derived rest.
-      withConf(s, "spark.sql.shuffle.partitions" -> "7") {
-        val init = StateRescale.initialStateFrom[Long, Long](s, ckptA)
-        StatefulExec.streamTws[Long, EvT, Long, KTotal](
-          readStream(srcB.toString, oneFilePerBatch = true), _.user_id, silentSum,
-          ttlMs = Some(ttlMs), eventTimeMs = Some(_.ts.getTime),
-          initialState = Some(init), initialStateTimeMs = wmA)
-          .writeStream.option("checkpointLocation", ckptB)
+    def readStream(path: String, maxFiles: Int) =
+      src.stream(s, maxFiles, path).withWatermark("ts", "0 seconds").as[EvT]
+    withScratch("rescale_resume_a", "rescale_resume_b", "rescale_resume_out",
+        "rescale_resume_src") { case Seq(ckptA, ckptB, outB, srcB) =>
+      withConf(s, RocksDbProvider) {
+        // Phase A (v1 engine, session partition count): first half only.
+        val qa = StatefulExec.stream[Long, EvT, Long, KTotal](
+          readStream(srcA.toString, maxFiles = 0), _.user_id, silentSum)
+          .writeStream.option("checkpointLocation", ckptA)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("parquet").option("path", outB)
-          .outputMode("append").start()
-      }.awaitTermination()
-      val layoutA = StateRescale.statePartitionCount(ckptA)
-      val layoutB = StateRescale.statePartitionCount(ckptB)
-      if (layoutB != 7 || layoutA == layoutB) throw new IllegalStateException(
-        s"migration did not change the state layout: $layoutA -> $layoutB")
-      detach(s.read.schema("user_id BIGINT, total_eid BIGINT").parquet(outB))
-    } finally {
-      rmTree(ckptA); rmTree(ckptB); rmTree(outB); rmTree(srcB.toString)
+          .format("noop").outputMode("append").start()
+        qa.awaitTermination()
+        // Derive what the stopped job had NOT consumed: everything in the
+        // source universe minus the committed offsets' file set.
+        val consumed = StateRescale.consumedFiles(ckptA)
+          .map(u => new org.apache.hadoop.fs.Path(u).toUri.getPath).toSet
+        val universe = java.nio.file.Files.walk(src.root).toArray.toSeq.map(_.toString)
+          .filter(_.endsWith(".parquet"))
+        val unconsumed = universe.filterNot(consumed.contains)
+          .map(p => new java.io.File(p)).sortBy(_.lastModified())
+        if (consumed.isEmpty || unconsumed.exists(_.getAbsolutePath.startsWith(srcA.toString)))
+          throw new IllegalStateException(
+            s"offset-derived resume set is wrong: consumed=$consumed unconsumed=$unconsumed")
+        unconsumed.zipWithIndex.foreach { case (f, i) =>
+          val dst = java.nio.file.Paths.get(srcB, f"part$i%03d.parquet")
+          java.nio.file.Files.copy(f.toPath, dst)
+          java.nio.file.Files.setLastModifiedTime(dst,
+            java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
+        }
+        val wmA = StateRescale.lastWatermarkMs(ckptA)
+        // Phase B (v2 engine, DIFFERENT partition count): seed from ckptA,
+        // arm TTL at the migration-point clock, read only the derived rest.
+        withConf(s, "spark.sql.shuffle.partitions" -> "7") {
+          val init = StateRescale.initialStateFrom[Long, Long](s, ckptA)
+          StatefulExec.streamTws[Long, EvT, Long, KTotal](
+            readStream(srcB, maxFiles = 1), _.user_id, silentSum,
+            ttlMs = Some(ttlMs), eventTimeMs = Some(_.ts.getTime),
+            initialState = Some(init), initialStateTimeMs = wmA)
+            .writeStream.option("checkpointLocation", ckptB)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .format("parquet").option("path", outB)
+            .outputMode("append").start()
+        }.awaitTermination()
+        val layoutA = StateRescale.statePartitionCount(ckptA)
+        val layoutB = StateRescale.statePartitionCount(ckptB)
+        if (layoutB != 7 || layoutA == layoutB) throw new IllegalStateException(
+          s"migration did not change the state layout: $layoutA -> $layoutB")
+        detach(s.read.parquet(outB))
+      }
     }
   }
 
@@ -1464,23 +1434,17 @@ object SparkEntry {
       .withColumn("version", F.lit(1))
     val updates = refetched.unionByName(discovered)
     // one file per micro-batch
-    val srcDir = stageOnce("graft_stream_upsert_src", dir, "documents.parquet")(
-      oneFile(updates.filter(F.col("doc_id") % 2 === 0)),
-      oneFile(updates.filter(F.col("doc_id") % 2 === 1)))
-    val stream = s.readStream
-      .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT, version INT")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
-    val logDir = scratchCheckpoint("stream_upsert_log")
-    val ckpt = scratchCheckpoint("stream_upsert")
-    try {
+    val stream = stage("graft_stream_upsert_src", dir, "documents.parquet")(
+      updates.filter(F.col("doc_id") % 2 === 0),
+      updates.filter(F.col("doc_id") % 2 === 1)).stream(s, maxFiles = 1)
+    withScratch("stream_upsert_log", "stream_upsert") { case Seq(logDir, ckpt) =>
       graft.streaming.StreamingOps.exactlyOnceParquetSink(stream, logDir, ckpt)
         .awaitTermination()
       // merge-on-read serving view
       detach(graft.operators.Corpus.upsert(base, readBatches(s, logDir))
         .select(F.col("doc_id"), F.col("version"),
           F.length(F.col("text")).cast("long").as("n_len"), F.col("source")))
-    } finally { rmTree(ckpt); rmTree(logDir) }
+    }
   }
 
   /** Snapshot diff (Corpus.diff): the new snapshot drops every 7th id,
@@ -2207,15 +2171,23 @@ object SparkEntry {
         TF.qualityScore(F.col("text")).as("quality")),
       groupCol = "source", valueCol = "quality")
 
+  // Each tokenizer family's training settings, shared by its gates and
+  // oracle stages. Every call trains afresh; nothing is memoized.
+  private def bpeMerges(docs: DataFrame) = graft.functions.Bpe.train(docs, numMerges = 16)
+  private def byteBpeMerges(docs: DataFrame) = graft.functions.ByteBpe.train(docs, numMerges = 16)
+  private def spmModel(docs: DataFrame) = graft.functions.Spm.train(docs, vocabSize = 400)
+  private def wordpieceVocab(docs: DataFrame) =
+    graft.functions.Wordpiece.train(docs, numMerges = 16)
+
   /** BPE tokenizer TRAINING on the engine ([[graft.functions.Bpe.train]]):
     * one corpus scan to word counts, then K merge iterations over the
     * vocabulary table only. Rows-only by design (greedy within-word
     * re-segmentation is sequential — no SQL oracle exists; BpeSpec pins
-    * the semantics against an independent reference implementation, the
-    * row-45/102 precedent). Output = the ordered merge table. */
+    * the semantics against an independent reference implementation).
+    * Output = the ordered merge table. */
   private def qBpeTrain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.Bpe.train(T(s, dir, "documents"), numMerges = 16)
+    bpeMerges(T(s, dir, "documents"))
       .zipWithIndex
       .map { case ((l, r), i) => (i.toLong, l, r, l + r) }
       .toDF("merge_rank", "left", "right", "merged")
@@ -2227,7 +2199,7 @@ object SparkEntry {
     * losslessness the spec proves, surfaced as data). Rows-only. */
   private def qBpeEncode(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val merges = graft.functions.Bpe.train(docs, numMerges = 16)
+    val merges = bpeMerges(docs)
     graft.functions.Bpe.encode(docs, merges)
       .groupBy(F.col("doc_id"))
       .agg(
@@ -2237,14 +2209,14 @@ object SparkEntry {
   }
 
   /** Byte-level BPE TRAINING ([[graft.functions.ByteBpe.train]], the
-    * GPT-2 construction): the row-130 trainer over byte-mapped words —
+    * GPT-2 construction): the BPE trainer over byte-mapped words —
     * base alphabet = the 256 UTF-8 bytes, so anything tokenizes with
     * zero unknowns. Rows-only by the tokenizer contract; ByteBpeSpec
     * pins the byte↔unicode bijection, losslessness on emoji/CJK, and
     * bit-exact retrain. Output = the merge table in mapped byte space. */
   private def qBpeBytesTrain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.ByteBpe.train(T(s, dir, "documents"), numMerges = 16)
+    byteBpeMerges(T(s, dir, "documents"))
       .zipWithIndex
       .map { case ((l, r), i) => (i.toLong, l, r, l + r) }
       .toDF("merge_rank", "left", "right", "merged")
@@ -2257,7 +2229,7 @@ object SparkEntry {
     * Rows-only. */
   private def qBpeBytesEncode(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val merges = graft.functions.ByteBpe.train(docs, numMerges = 16)
+    val merges = byteBpeMerges(docs)
     graft.functions.ByteBpe.encode(docs, merges)
       .groupBy(F.col("doc_id"))
       .agg(
@@ -2275,7 +2247,7 @@ object SparkEntry {
     * = the trained vocabulary with ln-probs. */
   private def qSpmTrain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.Spm.train(T(s, dir, "documents"), vocabSize = 400)
+    spmModel(T(s, dir, "documents"))
       .map { case (piece, lp) =>
         (piece, BigDecimal(lp).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
           piece.codePointCount(0, piece.length).toLong)
@@ -2289,7 +2261,7 @@ object SparkEntry {
     * shape. Rows-only. */
   private def qSpmEncode(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val model = graft.functions.Spm.train(docs, vocabSize = 400)
+    val model = spmModel(docs)
     graft.functions.Spm.encode(docs, model)
       .groupBy(F.col("doc_id"))
       .agg(
@@ -2305,18 +2277,18 @@ object SparkEntry {
     * on a hand-computable corpus. */
   private def qBpeFertility(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val merges = graft.functions.Bpe.train(docs, numMerges = 16)
+    val merges = bpeMerges(docs)
     graft.functions.Bpe.fertilityReport(docs, merges)
   }
 
   /** Unigram-tokenizer fertility report ([[graft.functions.Spm
-    * .fertilityReport]]) — the row-146 table for the SECOND tokenizer
-    * family, on the shared arithmetic, so a vocabulary decision can read
-    * BPE vs unigram like for like. Rows-only by the tokenizer
+    * .fertilityReport]]) — the BPE fertility table for the SECOND
+    * tokenizer family, on the shared arithmetic, so a vocabulary decision
+    * can read BPE vs unigram like for like. Rows-only by the tokenizer
     * contract. */
   private def qSpmFertility(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val model = graft.functions.Spm.train(docs, vocabSize = 400)
+    val model = spmModel(docs)
     graft.functions.Spm.fertilityReport(docs, model)
   }
 
@@ -2353,7 +2325,7 @@ object SparkEntry {
     * order. */
   private def qWordpieceTrain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.Wordpiece.train(T(s, dir, "documents"), numMerges = 16)
+    wordpieceVocab(T(s, dir, "documents"))
       .zipWithIndex
       .map { case (p, i) =>
         (i.toLong, p, p.startsWith(graft.functions.Wordpiece.Cont),
@@ -2368,7 +2340,7 @@ object SparkEntry {
     * inputs + UNK tally — the [[qBpeEncode]] shape. Rows-only. */
   private def qWordpieceEncode(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val vocab = graft.functions.Wordpiece.train(docs, numMerges = 16)
+    val vocab = wordpieceVocab(docs)
     graft.functions.Wordpiece.encode(docs, vocab)
       .groupBy(F.col("doc_id"))
       .agg(
@@ -2385,7 +2357,7 @@ object SparkEntry {
     * compared like for like. Rows-only. */
   private def qWordpieceFertility(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val vocab = graft.functions.Wordpiece.train(docs, numMerges = 16)
+    val vocab = wordpieceVocab(docs)
     graft.functions.Wordpiece.fertilityReport(docs, vocab)
   }
 
@@ -2396,25 +2368,22 @@ object SparkEntry {
     * arithmetic over the staged encode stream. */
   private def qTokenizerCoverage(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val vocab = graft.functions.Wordpiece.train(docs, numMerges = 16)
+    val vocab = wordpieceVocab(docs)
     graft.functions.Wordpiece.coverageFromEncode(
       graft.functions.Wordpiece.encode(docs, vocab), docs)
   }
 
   /** STREAMING tokenizer-coverage monitor
-    * ([[graft.streaming.StreamingOps.coverageStream]]): the row-203 OOV
-    * report maintained under ingest against a frozen vocabulary —
-    * complete-mode groups-sized state, final snapshot ≡ the batch fold,
-    * oracle = the batch SQL minus the distinct-count columns. */
+    * ([[graft.streaming.StreamingOps.coverageStream]]): the OOV report
+    * of [[qTokenizerCoverage]] maintained under ingest against a frozen
+    * vocabulary — complete-mode groups-sized state, final snapshot ≡ the
+    * batch fold, oracle = the batch SQL minus the distinct-count columns. */
   private def qStreamTokenizerCoverage(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val vocab = graft.functions.Wordpiece.train(docs, numMerges = 16)
-    val srcDir = stageStreamDir(dir, "documents")
-    val stream = s.readStream
-      .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-      .parquet(srcDir.toString)
-    val agg = graft.streaming.StreamingOps.coverageStream(stream, docs, vocab)
-    runMemoryGate(s, agg, "graft_stream_cov", mode = "complete")
+    val vocab = wordpieceVocab(docs)
+    runMemoryGate(s,
+      graft.streaming.StreamingOps.coverageStream(stagedDocs(s, dir).stream(s), docs, vocab),
+      "graft_stream_cov", mode = "complete")
   }
 
   /** Classifier CALIBRATION ([[graft.functions.Classifier.trainScore]]
@@ -2492,10 +2461,10 @@ object SparkEntry {
   }
 
   /** The SAME PSI drift report with the DRIFTED snapshot arriving as a
-    * STREAM ([[graft.streaming.StreamingOps.psiBucketsStream]], r20 /
-    * VERDICT r19 #5): per-bucket counts live as flatMapGroupsWithState
-    * state under the batch operator's own fixed bin edges, the final
-    * histogram is max(cumulative n) per bucket off the append sink, and
+    * STREAM ([[graft.streaming.StreamingOps.psiBucketsStream]]):
+    * per-bucket counts live as flatMapGroupsWithState state under the
+    * batch operator's own fixed bin edges, the final histogram is
+    * max(cumulative n) per bucket off the append sink, and
     * the PSI tail ([[graft.operators.Profile.psiFromHistograms]]) runs
     * against the batch reference histogram. Oracle = q_psi_drift's SQL
     * verbatim — per-bucket counts are order-free, so the streamed
@@ -2506,10 +2475,7 @@ object SparkEntry {
       .select(F.round(TF.qualityScore(F.col("text")), 6).as("q"))
       .select(graft.operators.Profile.psiBucket(F.col("q"), 10).as("bucket"))
       .groupBy(F.col("bucket")).agg(F.count(F.lit(1)).as("n_a"))
-    val srcDir = stageStreamDir(dir, "documents")
-    val stream = s.readStream
-      .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-      .parquet(srcDir.toString)
+    val stream = stagedDocs(s, dir).stream(s)
     val drifted = F.concat(F.col("text"),
       F.when(F.col("doc_id") % 4 === 0, F.lit(" !!! ### 12345 $$$ %%% 999"))
         .otherwise(F.lit("")))
@@ -2716,24 +2682,18 @@ object SparkEntry {
     val docs = T(s, dir, "documents")
     // odd docs split 1 mod 4 / 3 mod 4 (deterministic), one file per
     // micro-batch
-    val srcDir = stageOnce("graft_stream_inc_src", dir, "documents.parquet")(
-      oneFile(docs.filter(F.col("doc_id") % 4 === 1)),
-      oneFile(docs.filter(F.col("doc_id") % 4 === 3)))
+    val src = stage("graft_stream_inc_src", dir, "documents.parquet")(
+      docs.filter(F.col("doc_id") % 4 === 1),
+      docs.filter(F.col("doc_id") % 4 === 3))
     // fresh seed index every call: the stream APPENDS to it, so reuse
     // across shots would pollute the probe
     dropIndexTable(s, "graft_sig_index_stream")
     Dedup.indexInit(docs.filter(F.col("doc_id") % 2 === 0), "graft_sig_index_stream")
-    val stream = s.readStream
-      .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
-    val outDir = scratchCheckpoint("stream_inc_out")
-    val ckpt = scratchCheckpoint("stream_inc")
-    try {
+    withScratch("stream_inc_out", "stream_inc") { case Seq(outDir, ckpt) =>
       graft.streaming.StreamingOps.incrementalDedupStream(
-        stream, "graft_sig_index_stream", outDir, ckpt).awaitTermination()
+        src.stream(s, maxFiles = 1), "graft_sig_index_stream", outDir, ckpt).awaitTermination()
       detach(readBatches(s, outDir))
-    } finally { rmTree(ckpt); rmTree(outDir) }
+    }
   }
 
   private def qDedupSimhash(s: SparkSession, dir: String): DataFrame =
@@ -2921,25 +2881,19 @@ object SparkEntry {
     * q_dedup_semantic_incremental times). */
   private def qStreamDedupSemantic(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
-    val srcDir = stageOnce("graft_stream_sem_src", dir, "embeddings.parquet")(
-      oneFile(emb.filter(F.col("vec_id") >= 400 && F.col("vec_id") % 2 === 0)),
-      oneFile(emb.filter(F.col("vec_id") >= 400 && F.col("vec_id") % 2 === 1)))
+    val src = stage("graft_stream_sem_src", dir, "embeddings.parquet")(
+      emb.filter(F.col("vec_id") >= 400 && F.col("vec_id") % 2 === 0),
+      emb.filter(F.col("vec_id") >= 400 && F.col("vec_id") % 2 === 1))
     // fresh seed index every call: the stream APPENDS to it, so reuse
     // across shots would pollute the probe
     val path = stagePath("graft_sem_inc_stream", dir, "embeddings.parquet").toString
     rmTree(path); rmTree(path + "_centroids"); rmTree(path + "_stats")
     Ann.ivfIndexInit(emb.filter(F.col("vec_id") < 400), path, cells = 16)
-    val stream = s.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
-    val outDir = scratchCheckpoint("stream_sem_out")
-    val ckpt = scratchCheckpoint("stream_sem")
-    try {
+    withScratch("stream_sem_out", "stream_sem") { case Seq(outDir, ckpt) =>
       graft.streaming.StreamingOps.semanticDedupStream(
-        stream, path, outDir, ckpt).awaitTermination()
+        src.stream(s, maxFiles = 1), path, outDir, ckpt).awaitTermination()
       detach(readBatches(s, outDir))
-    } finally { rmTree(ckpt); rmTree(outDir) }
+    }
   }
 
   /** IVF requantize lifecycle ([[graft.ann.Ann.ivfRequantize]]): build on
@@ -2978,28 +2932,22 @@ object SparkEntry {
     * timing; q_ann_ivf_indexed times the steady-state serve). */
   private def qStreamAnnIngest(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
-    val srcDir = stageOnce("graft_stream_ann_src", dir, "embeddings.parquet")(
-      oneFile(emb.filter(F.col("vec_id") >= 512 && F.col("vec_id") % 2 === 0)),
-      oneFile(emb.filter(F.col("vec_id") >= 512 && F.col("vec_id") % 2 === 1)))
+    val src = stage("graft_stream_ann_src", dir, "embeddings.parquet")(
+      emb.filter(F.col("vec_id") >= 512 && F.col("vec_id") % 2 === 0),
+      emb.filter(F.col("vec_id") >= 512 && F.col("vec_id") % 2 === 1))
     // fresh index every call: the stream APPENDS to it, so reuse across
     // shots would double the appended vectors
     val path = stagePath("graft_ivf_stream", dir, "embeddings.parquet").toString
     rmTree(path)
     rmTree(path + "_centroids")
     Ann.ivfIndexInit(emb.filter(F.col("vec_id") < 512), path, cells = 16)
-    val stream = s.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
-    val outDir = scratchCheckpoint("stream_ann_out")
-    val ckpt = scratchCheckpoint("stream_ann")
-    try {
+    withScratch("stream_ann_out", "stream_ann") { case Seq(outDir, ckpt) =>
       graft.streaming.StreamingOps.ivfIngestStream(
-        stream, path, outDir, ckpt).awaitTermination()
+        src.stream(s, maxFiles = 1), path, outDir, ckpt).awaitTermination()
       // serve; the index is rebuilt on later calls
       detach(Ann.ivfTopKIndexed(
         s, path, emb.filter(F.col("vec_id") < 20), k = 5, probes = 6))
-    } finally { rmTree(ckpt); rmTree(outDir) }
+    }
   }
 
   /** Dense-id pre-densification (VERDICT r11 #8): a corpus whose vec_ids
@@ -3596,19 +3544,19 @@ object SparkEntry {
     Map(
       "bpe_encode" -> ((s, dir) => {
         val d = T(s, dir, "documents")
-        toks(graft.functions.Bpe.encode(d, graft.functions.Bpe.train(d, numMerges = 16)))
+        toks(graft.functions.Bpe.encode(d, bpeMerges(d)))
       }),
       "spm_encode" -> ((s, dir) => {
         val d = T(s, dir, "documents")
-        toks(graft.functions.Spm.encode(d, graft.functions.Spm.train(d, vocabSize = 400)))
+        toks(graft.functions.Spm.encode(d, spmModel(d)))
       }),
       "wordpiece_encode" -> ((s, dir) => {
         val d = T(s, dir, "documents")
-        toks(graft.functions.Wordpiece.encode(d, graft.functions.Wordpiece.train(d, numMerges = 16)))
+        toks(graft.functions.Wordpiece.encode(d, wordpieceVocab(d)))
       }),
       "bytebpe_encode" -> ((s, dir) => {
         val d = T(s, dir, "documents")
-        toks(graft.functions.ByteBpe.encode(d, graft.functions.ByteBpe.train(d, numMerges = 16)))
+        toks(graft.functions.ByteBpe.encode(d, byteBpeMerges(d)))
       }),
       // The winnow gate's rolling k-gram hash stream (k = 16, matching
       // qFingerprintWinnow): the w-window minimum selection, distinct

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Canonical loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -11,7 +12,9 @@ import org.apache.spark.sql.{functions => F}
   * and truncate nanos→micros) and plain TIMESTAMP(MICROS) with
   * isAdjustedToUTC=false (read as TIMESTAMP_NTZ). Both normalize to the
   * same micro-precision TimestampType under the UTC session timezone,
-  * matching DuckDB's `CAST(ts AS TIMESTAMP)` bit-for-bit.
+  * matching DuckDB's `CAST(ts AS TIMESTAMP)` bit-for-bit. This object is
+  * the only reader of that shape: streaming gates read a stage written
+  * from [[events]].
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -24,59 +27,41 @@ object Tables {
       case n        => spark.read.parquet(s"$dir/$n.parquet")
     }
 
-  /** The physical shape `events.ts` was generated with. ONE dispatch point
-    * shared by the batch loader below and the streaming reader
-    * (SparkEntry.eventsStream) — two hand-rolled copies of this sniff
-    * diverged once already (the streaming copy lacked the adjusted-to-UTC
-    * branch, so a generator flip would have crashed only the stream gates). */
-  sealed trait TsShape
-  object TsShape {
-    case object NanosAsLong extends TsShape // TIMESTAMP(NANOS), BIGINT under nanosAsLong
-    case object Micros extends TsShape      // TIMESTAMP(MICROS), isAdjustedToUTC=true
-    case object Ntz extends TsShape         // TIMESTAMP(MICROS), isAdjustedToUTC=false
-  }
-
   private val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
 
-  /** Sniff the on-disk ts type of `<dir>/events.parquet` (footer-only
-    * read), with the legacy nanosAsLong flag set only for the sniff. */
-  def tsShape(spark: SparkSession, dir: String): TsShape =
-    SessionConf.withConf(spark, nanosKey -> "true") {
-      spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType         => TsShape.NanosAsLong
-        case org.apache.spark.sql.types.TimestampType    => TsShape.Micros
-        case org.apache.spark.sql.types.TimestampNTZType => TsShape.Ntz
-        // Fail fast on a generator shape the loader doesn't support (INT96,
-        // string, date): a wildcard→Ntz here would silently cast garbage.
-        case other => throw new IllegalStateException(
-          s"events.ts has unsupported physical type $other; " +
-            "expected TIMESTAMP(NANOS|MICROS) or TIMESTAMP_NTZ")
-      }
-    }
-
-  /** Normalize a frame's `ts` column of the given shape to micro-precision
-    * TimestampType (integral `DIV` for the nanos truncation — a double
-    * division would lose precision on large nano epochs; UTC session tz
-    * makes the NTZ cast value-preserving). */
-  def normalizeTs(shape: TsShape, df: DataFrame): DataFrame = shape match {
-    case TsShape.NanosAsLong =>
-      df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    case TsShape.Micros => df
-    case TsShape.Ntz =>
-      df.withColumn("ts", F.col("ts").cast(org.apache.spark.sql.types.TimestampType))
-  }
-
   /** events with `ts` normalized to micro-precision TimestampType,
-    * whichever physical shape the driver generated (see class doc). For
-    * the legacy nanos shape the flag must stay set through EXECUTION of
-    * the returned frame (the scan consults it again), so only that shape
-    * leaves it on — callers in that regime wrap execution in
-    * SparkEntry.withNanosAsLong anyway. */
+    * whichever physical shape it was generated in (see class doc). The
+    * on-disk type is sniffed from the footer with the legacy nanosAsLong
+    * flag set for the sniff only. For the nanos shape the flag must stay
+    * set through EXECUTION of the returned frame (the scan consults it
+    * again), so only that shape leaves it on; [[withEvents]] scopes it. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    val shape = tsShape(spark, dir)
-    if (shape == TsShape.NanosAsLong) spark.conf.set(nanosKey, "true")
-    normalizeTs(shape, spark.read.parquet(s"$dir/events.parquet"))
+    val path = s"$dir/events.parquet"
+    val ts = SessionConf.withConf(spark, nanosKey -> "true")(
+      spark.read.parquet(path).schema("ts").dataType)
+    ts match {
+      // TIMESTAMP(NANOS): integral DIV, a double division loses large nano epochs
+      case LongType =>
+        spark.conf.set(nanosKey, "true")
+        spark.read.parquet(path).withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+      // TIMESTAMP(MICROS), isAdjustedToUTC=true
+      case TimestampType => spark.read.parquet(path)
+      // isAdjustedToUTC=false: the UTC session tz makes the cast value-preserving
+      case TimestampNTZType =>
+        spark.read.parquet(path).withColumn("ts", F.col("ts").cast(TimestampType))
+      // Fail fast on a generator shape the loader doesn't support (INT96,
+      // string, date): a wildcard cast here would silently read garbage.
+      case other => throw new IllegalStateException(
+        s"events.ts has unsupported physical type $other; " +
+          "expected TIMESTAMP(NANOS|MICROS) or TIMESTAMP_NTZ")
+    }
   }
+
+  /** `body` over [[events]] with the legacy nanos flag held for exactly
+    * its duration: a body that executes the frame (a stage write) reads
+    * the nanos shape, and the session does not keep the flag after. */
+  def withEvents[A](spark: SparkSession, dir: String)(body: DataFrame => A): A =
+    SessionConf.withConf(spark, nanosKey -> "true")(body(events(spark, dir)))
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "orders")

@@ -9,7 +9,7 @@ import java.util.EnumSet
 import scala.jdk.CollectionConverters._
 
 import jdk.jfr.Recording
-import jdk.jfr.consumer.RecordingFile
+import jdk.jfr.consumer.{RecordedEvent, RecordingFile}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -23,9 +23,10 @@ import graft.sinks.StatefulParquetSink
 import graft.sources.KafkaShim
 
 /** graft's fork-free `file:` filesystem: a checkpointed stateful
-  * micro-batch, its sink and a KafkaShim write start no OS process, and
-  * every operation it overrides leaves the same files, modes and
-  * statuses as Hadoop's stock local filesystem under the same umask. */
+  * micro-batch, its sink and a KafkaShim write start no OS process
+  * through Hadoop, and every operation it overrides leaves the same
+  * files, modes and statuses as Hadoop's stock local filesystem under
+  * the same umask. */
 class ForkFreeLocalFsSpec extends AnyFunSuite with SparkFixture {
 
   private val local = new URI("file:///")
@@ -75,6 +76,26 @@ class ForkFreeLocalFsSpec extends AnyFunSuite with SparkFixture {
     Seq(rel(st.getPath), st.isDirectory, st.isSymlink, st.getLen, st.getReplication,
       st.getBlockSize, st.getPermission, st.getOwner, st.getGroup,
       if (st.isSymlink) rel(st.getSymlink) else "")
+  }
+
+  /** The `jdk.ProcessStart` events recorded while `body` runs whose
+    * stack passes through Hadoop: the processes graft's filesystem
+    * replaces. The recording covers the whole JVM, so a start from
+    * outside Hadoop (Spark's `Cleaner` running `rm -rf` on the artifact
+    * dir of a session an earlier suite dropped, its once-per-JVM
+    * `getconf PAGESIZE` probe) can land in it and is not counted. */
+  private def hadoopProcessStarts(root: NioPath)(body: => Unit): Seq[RecordedEvent] = {
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    try body finally rec.stop()
+    val jfr = Files.createTempFile(root, "process-starts", ".jfr")
+    rec.dump(jfr)
+    rec.close()
+    RecordingFile.readAllEvents(jfr).asScala.toSeq.filter { e =>
+      e.getEventType.getName == "jdk.ProcessStart" && Option(e.getStackTrace).exists(
+        _.getFrames.asScala.exists(_.getMethod.getType.getName.startsWith("org.apache.hadoop.")))
+    }
   }
 
   private def write(fc: FileContext, p: Path, text: String): Unit = {
@@ -180,13 +201,7 @@ class ForkFreeLocalFsSpec extends AnyFunSuite with SparkFixture {
     val sink = StatefulParquetSink(root.resolve("out").toString)
     val toSink: (Dataset[STotal], Long) => Unit = (df, id) => sink.write(df.toDF(), id)
 
-    // Spark's executor metrics start one `getconf` per JVM on the first
-    // heartbeat; run it now so the recording holds graft's work alone.
-    SparkInternals.initProcfsMetrics()
-    val rec = new Recording()
-    rec.enable("jdk.ProcessStart").withStackTrace()
-    rec.start()
-    try {
+    val starts = hadoopProcessStarts(root) {
       val q = StatefulExec.stream[Long, SEvent, Long, STotal](input.toDS(), _.k, sum)
         .writeStream.option("checkpointLocation", root.resolve("ckpt").toString)
         .outputMode("append").foreachBatch(toSink).start()
@@ -199,13 +214,7 @@ class ForkFreeLocalFsSpec extends AnyFunSuite with SparkFixture {
       KafkaShim.write(
         Seq((0, "k", "v", Timestamp.valueOf("2026-01-01 00:00:00"))).toDF("partition", "key", "value", "ts"),
         root.resolve("kafka").toString, "events", orderCols = Seq("ts"))
-    } finally rec.stop()
-    val jfr = root.resolve("process-starts.jfr")
-    rec.dump(jfr)
-    rec.close()
-
-    val starts = RecordingFile.readAllEvents(jfr).asScala
-      .filter(_.getEventType.getName == "jdk.ProcessStart")
+    }
     assert(starts.isEmpty, s"${starts.size} processes started:\n" + starts.map { e =>
       val top = Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala.take(6))
         .map(f => s"    at ${f.getMethod.getType.getName}.${f.getMethod.getName}")
@@ -213,5 +222,14 @@ class ForkFreeLocalFsSpec extends AnyFunSuite with SparkFixture {
     }.mkString("\n"))
     assert(sink.committedEpoch.contains(1L))
     assert(spark.read.parquet(root.resolve("out").toString).as[STotal].collect().toSeq == Seq(STotal(1, 17)))
+
+    // Negative control: the same filter sees the `chmod` that Hadoop's
+    // stock filesystem starts for a setPermission.
+    val stockFs = FileSystem.newInstance(local, conf(stock))
+    val file = Files.createFile(root.resolve("control"))
+    val control =
+      try hadoopProcessStarts(root)(stockFs.setPermission(new Path(file.toString), perm("600")))
+      finally stockFs.close()
+    assert(control.nonEmpty, "the filter missed the stock setPermission's process")
   }
 }

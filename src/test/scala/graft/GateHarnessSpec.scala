@@ -54,6 +54,7 @@ class GateHarnessSpec extends AnyFunSuite with SparkFixture {
     Seq(first, second).foreach(SparkFixture.removeOnExit)
     assert(first != second && writes == Seq("v1", "v2"))
     assert(Files.readString(second.resolve("data")) == "v2")
+    assert(!Files.exists(first), "the old version's stage must be pruned")
   }
 
   test("an index memo rebuilds when its marker is gone") {

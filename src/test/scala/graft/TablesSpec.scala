@@ -24,8 +24,7 @@ class TablesSpec extends AnyFunSuite with SparkFixture {
     dir.getAbsolutePath
   }
 
-  private def readMicros(dir: String): Seq[Long] = {
-    val got = Tables.events(spark, dir)
+  private def readMicros(dir: String): Seq[Long] = Tables.withEvents(spark, dir) { got =>
     assert(got.schema("ts").dataType == TimestampType,
       s"normalized type, got ${got.schema("ts").dataType}")
     got.select(F.unix_micros(F.col("ts"))).collect().map(_.getLong(0)).toSeq.sorted
@@ -56,45 +55,55 @@ class TablesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("a stream gate runs on every ts shape, batch-identical") {
-    // The streaming reader once hand-rolled its own shape sniff and lacked
-    // the adjusted-to-UTC branch — a generator flip would have crashed
-    // only the stream gates. Drive q_stream_epochs over a micros-TIMESTAMP
-    // events dir and pin it row-identical to the batch epoch aggregation.
-    val dir = stage("gate") { d =>
-      import spark.implicits._
-      // The generator ships events.parquet as a single FILE (the staged
-      // stream dir symlinks it); write to a scratch dir and move the one
-      // part-file into place.
+    // Drive q_stream_epochs over a micros-TIMESTAMP and a nano-epoch
+    // events dir and pin each row-identical to the batch epoch
+    // aggregation. The gate stages events once with ts normalized, so
+    // the legacy nanos flag is set for that write only and must not
+    // outlive the gate.
+    import spark.implicits._
+    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+    def events(ts: org.apache.spark.sql.Column) = microsUtc.toDF("us")
+      .select(
+        F.monotonically_increasing_id().as("event_id"),
+        ts.as("ts"),
+        F.lit(7L).as("user_id"),
+        F.lit("click").as("event_type"),
+        F.lit(1.5).as("value"),
+        F.lit("{}").as("props"))
+      .coalesce(1)
+    val micros = stage("gate") { d =>
+      // The generator ships events.parquet as a single FILE; write to a
+      // scratch dir and move the one part-file into place.
       val scratch = s"$d/_scratch"
-      microsUtc.toDF("us")
-        .select(
-          F.monotonically_increasing_id().as("event_id"),
-          F.timestamp_micros(F.col("us")).as("ts"),
-          F.lit(7L).as("user_id"),
-          F.lit("click").as("event_type"),
-          F.lit(1.5).as("value"),
-          F.lit("{}").as("props"))
-        .coalesce(1).write.mode("overwrite").parquet(scratch)
+      events(F.timestamp_micros(F.col("us"))).write.mode("overwrite").parquet(scratch)
       val part = new java.io.File(scratch).listFiles()
         .find(_.getName.endsWith(".parquet")).get
       java.nio.file.Files.move(part.toPath,
         java.nio.file.Paths.get(s"$d/events.parquet"))
     }
-    val got = SparkEntry.queries("q_stream_epochs")(spark, dir)
-      .select("event_type", "window_start", "n")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    // the staged stream dir links into this JVM's temp dataset: drop it too
-    SparkFixture.removeOnExit(SparkEntry.stageStreamDir(dir, "events"))
-    assert(got.nonEmpty, "stream gate returned no rows on micros-TIMESTAMP events")
-    val batch = Tables.events(spark, dir)
-      .groupBy(F.col("event_type"), F.window(F.col("ts"), "1 hour"))
-      .agg(F.count(F.lit(1)).as("n"))
-      .select(
-        F.col("event_type"),
-        F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        F.col("n"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    assert(got == batch, s"stream/batch divergence: $got vs $batch")
+    val nanos = stage("gate_nanos") { d =>
+      events(F.col("us") * 1000L + 789L).write.mode("overwrite").parquet(s"$d/events.parquet")
+    }
+    spark.conf.unset(nanosKey) // an earlier nanos-shape read may have left it on
+    for (dir <- Seq(micros, nanos)) {
+      val got = SparkEntry.queries("q_stream_epochs")(spark, dir)
+        .select("event_type", "window_start", "n")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+      // the gate's stage holds this JVM's temp dataset: drop it too
+      SparkFixture.removeOnExit(SparkEntry.stagePath("graft_stream_events", dir, "events.parquet"))
+      val leaked = spark.conf.getAll.get(nanosKey)
+      assert(leaked.isEmpty, s"$nanosKey = $leaked outlived the gate on $dir")
+      assert(got.nonEmpty, s"stream gate returned no rows on $dir")
+      val batch = Tables.withEvents(spark, dir)(_
+        .groupBy(F.col("event_type"), F.window(F.col("ts"), "1 hour"))
+        .agg(F.count(F.lit(1)).as("n"))
+        .select(
+          F.col("event_type"),
+          F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
+          F.col("n"))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet)
+      assert(got == batch, s"stream/batch divergence on $dir: $got vs $batch")
+    }
   }
 
   test("events.ts as nano-epoch BIGINT truncates nanos to micros") {

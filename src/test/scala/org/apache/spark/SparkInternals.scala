@@ -1,6 +1,6 @@
 package org.apache.spark
 
-/** Test access to two `private[spark]` corners of Spark. */
+/** Test access to the `private[spark]` active-context slot of SparkContext. */
 object SparkInternals {
   def activeContext: Option[SparkContext] = SparkContext.getActive
 
@@ -14,8 +14,4 @@ object SparkInternals {
       prev.foreach(SparkContext.setActiveContext)
     }
   }
-
-  /** Build the executor's process-tree metrics reader, which runs
-    * `getconf PAGESIZE` once per JVM on the first heartbeat. */
-  def initProcfsMetrics(): Unit = require(executor.ProcfsMetricsGetter.pTreeInfo != null)
 }
