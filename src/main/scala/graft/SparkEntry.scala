@@ -12,7 +12,7 @@ import graft.functions.{TextFunctions => TF}
 import graft.multimodal.Multimodal
 import graft.operators.{StatefulExec, StatefulLogic}
 import graft.sinks.{StatefulParquetSink, StdoutSink, VecSink}
-import graft.sources.{KafkaShim, ParquetSource, RangeSource, StatefulSource, StatelessFileSource}
+import graft.sources.{FileSource, KafkaShim, RangeSource, StatefulSource}
 import graft.time.EventTime
 
 /** One gate: a name, the query it runs on (session, sf directory), and
@@ -288,8 +288,8 @@ object SparkEntry {
     * stage is done only when the LAST part's `_SUCCESS` exists — the root
     * appears as soon as the first write starts — and an unfinished stage
     * is wiped and written again from the first part. Once a stage is
-    * whole, the stages `name` holds for other versions of the same
-    * dataset's table are deleted; other datasets' stages are kept. */
+    * whole, [[pruneOtherVersions]] deletes the stages `name` holds for
+    * other versions of the same dataset's table. */
   private[graft] def stageOnce(name: String, dir: String, table: String)(
       parts: (String => Unit)*): java.nio.file.Path = {
     val root = stagePath(name, dir, table)
@@ -302,13 +302,21 @@ object SparkEntry {
       dirs.zipWithIndex.foreach { case (d, i) =>
         d.toFile.listFiles().foreach { f => f.setLastModified(now - (dirs.size - 1 - i) * 60000L); () }
       }
-      val mine = root.getFileName.toString
-      val sameDataset = s"${name}_${dirKey(dir)}_"
-      root.getParent.toFile.listFiles().map(_.getName)
-        .filter(n => n.startsWith(sameDataset) && n.length == mine.length && n != mine)
-        .foreach(n => rmTree(root.resolveSibling(n).toString))
+      pruneOtherVersions(root, name, dir)
     }
     root
+  }
+
+  /** Delete every entry `name` holds beside `mine` (its [[stagePath]])
+    * for another version of `dir`'s table, with the `_base`, `_centroids`
+    * and `_stats` companions an index writes next to itself; other
+    * datasets' entries are kept. */
+  private def pruneOtherVersions(mine: java.nio.file.Path, name: String, dir: String): Unit = {
+    val version = (java.util.regex.Pattern.quote(s"${name}_${dirKey(dir)}_") +
+      "[0-9a-f]{16}(_base)?(_centroids|_stats)?").r
+    mine.getParent.toFile.listFiles().map(_.getName)
+      .filter(n => version.matches(n) && !n.startsWith(mine.getFileName.toString))
+      .foreach(n => rmTree(mine.resolveSibling(n).toString))
   }
 
   /** A [[stageOnce]] part: `df` as one parquet file. */
@@ -367,12 +375,15 @@ object SparkEntry {
 
   /** [[indexOnce]] for an index of `dir`'s embeddings persisted at
     * [[stagePath]], present while its `_SUCCESS` marker is; returns the
-    * path. */
-  private def embeddingIndex(name: String, dir: String)(build: String => Unit): String = {
+    * path. A build prunes the index `name` holds for any other version
+    * of the embeddings ([[pruneOtherVersions]]). */
+  private[graft] def embeddingIndex(name: String, dir: String)(build: String => Unit): String = {
     val key = stageKey(dir, "embeddings.parquet")
     val path = tmpPath(s"${name}_$key")
-    indexOnce(name, key, java.nio.file.Files.isRegularFile(path.resolve("_SUCCESS")))(
-      build(path.toString))
+    indexOnce(name, key, java.nio.file.Files.isRegularFile(path.resolve("_SUCCESS"))) {
+      build(path.toString)
+      pruneOtherVersions(path, name, dir)
+    }
     path.toString
   }
 
@@ -975,7 +986,7 @@ object SparkEntry {
   // ------------------------------------------------------- sources / sinks
 
   private def qSourceParquet(s: SparkSession, dir: String): DataFrame =
-    GraftStream(ParquetSource(s"$dir/lineitem.parquet").load(s))
+    GraftStream(FileSource(s"$dir/lineitem.parquet").load(s))
       .keyLocal(F.col("l_returnflag"))
       .agg(F.count(F.lit(1)).as("n"), dsum(F.col("l_quantity")).as("sum_qty"))
       .toDF
@@ -988,7 +999,7 @@ object SparkEntry {
   private def qSourceJsonl(s: SparkSession, dir: String): DataFrame = {
     val staged = stageOnce("graft_jsonl", dir, "documents.parquet")(
       T(s, dir, "documents").write.mode("overwrite").json(_))
-    val docs = graft.sources.FileSource(staged.toString, "json",
+    val docs = FileSource(staged.toString, "json",
       Some("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")).load(s)
     docs.groupBy(F.col("lang"))
       .agg(F.count(F.lit(1)).as("n_docs"),
@@ -1031,7 +1042,7 @@ object SparkEntry {
       .toDF
 
   private def qSourceStateless(s: SparkSession, dir: String): DataFrame =
-    GraftStream(StatelessFileSource(s"$dir/documents.parquet").load(s))
+    GraftStream(FileSource(s"$dir/documents.parquet").load(s))
       .map(F.col("doc_id"), F.col("source"), F.col("n_chars"))
       .toDF
 
@@ -1064,15 +1075,16 @@ object SparkEntry {
   }
 
   private def qSinkStateful(s: SparkSession, dir: String): DataFrame = {
-    // keyed like a stage: a second dataset with the same basename must not
-    // find this one's committed epoch and be graded against its rows
-    val out = stagePath("graft_stateful_sink", dir, "documents.parquet").toString
     val df = T(s, dir, "documents")
       .groupBy(F.col("source")).agg(F.count(F.lit(1)).as("n_docs"))
-    val sink = StatefulParquetSink(out)
-    sink.write(df, epoch = 1L)
-    sink.write(df, epoch = 1L) // replay of the same epoch → idempotent no-op
-    s.read.parquet(out)
+    // a fresh sink per call: no other call's committed epoch can turn
+    // this call's first write into a replay
+    withScratch("stateful_sink") { case Seq(out) =>
+      val sink = StatefulParquetSink(out)
+      sink.write(df, epoch = 1L)
+      sink.write(df, epoch = 1L) // replay of the same epoch → idempotent no-op
+      detach(s.read.parquet(out))
+    }
   }
 
   // ------------------------------------------------------------ kafka shim
@@ -2886,10 +2898,9 @@ object SparkEntry {
       emb.filter(F.col("vec_id") >= 400 && F.col("vec_id") % 2 === 1))
     // fresh seed index every call: the stream APPENDS to it, so reuse
     // across shots would pollute the probe
-    val path = stagePath("graft_sem_inc_stream", dir, "embeddings.parquet").toString
-    rmTree(path); rmTree(path + "_centroids"); rmTree(path + "_stats")
-    Ann.ivfIndexInit(emb.filter(F.col("vec_id") < 400), path, cells = 16)
-    withScratch("stream_sem_out", "stream_sem") { case Seq(outDir, ckpt) =>
+    withScratch("stream_sem_out", "stream_sem", "stream_sem_index") { case Seq(outDir, ckpt, idx) =>
+      val path = s"$idx/index"
+      Ann.ivfIndexInit(emb.filter(F.col("vec_id") < 400), path, cells = 16)
       graft.streaming.StreamingOps.semanticDedupStream(
         src.stream(s, maxFiles = 1), path, outDir, ckpt).awaitTermination()
       detach(readBatches(s, outDir))
@@ -2937,14 +2948,12 @@ object SparkEntry {
       emb.filter(F.col("vec_id") >= 512 && F.col("vec_id") % 2 === 1))
     // fresh index every call: the stream APPENDS to it, so reuse across
     // shots would double the appended vectors
-    val path = stagePath("graft_ivf_stream", dir, "embeddings.parquet").toString
-    rmTree(path)
-    rmTree(path + "_centroids")
-    Ann.ivfIndexInit(emb.filter(F.col("vec_id") < 512), path, cells = 16)
-    withScratch("stream_ann_out", "stream_ann") { case Seq(outDir, ckpt) =>
+    withScratch("stream_ann_out", "stream_ann", "stream_ann_index") { case Seq(outDir, ckpt, idx) =>
+      val path = s"$idx/index"
+      Ann.ivfIndexInit(emb.filter(F.col("vec_id") < 512), path, cells = 16)
       graft.streaming.StreamingOps.ivfIngestStream(
         src.stream(s, maxFiles = 1), path, outDir, ckpt).awaitTermination()
-      // serve; the index is rebuilt on later calls
+      // serve before the scratch index is deleted
       detach(Ann.ivfTopKIndexed(
         s, path, emb.filter(F.col("vec_id") < 20), k = 5, probes = 6))
     }

@@ -135,7 +135,8 @@ object LookMaImStreaming {
 
 /** examples/ttl_map_example.rs: per-key state that EXPIRES by event time —
   * keys silent past the TTL flush via onExpiry, exactly the reference's
-  * epoch-driven expiry re-expressed as watermark + EventTimeTimeout. */
+  * epoch-driven expiry re-expressed as watermark + transformWithState
+  * event-time timers (which need the RocksDB state-store provider). */
 object TtlMapExample {
   final case class Hit(k: Long, ts: java.sql.Timestamp, v: Long)
   final case class Flush(k: Long, total: Long)
@@ -152,10 +153,12 @@ object TtlMapExample {
         Iterator.single(Flush(k, s)) // … flush when the key goes quiet
     }
     val input = MemoryStream[Hit]
-    val out = StatefulExec.streamEventTime[Long, Hit, Long, Flush](
+    val out = StatefulExec.streamTws[Long, Hit, Long, Flush](
       input.toDS().withWatermark("ts", "0 seconds").as[Hit],
-      _.k, _.ts.getTime, ttlMs = 10000L, logic)
-    val q = out.writeStream.format("console").outputMode("append").start()
+      _.k, logic, ttlMs = Some(10000L), eventTimeMs = Some(_.ts.getTime))
+    val q = graft.SessionConf.withConf(spark, graft.SessionConf.RocksDbProvider) {
+      out.writeStream.format("console").outputMode("append").start()
+    }
     def t(ms: Long) = new java.sql.Timestamp(ms)
     input.addData(Hit(1, t(1000), 5), Hit(2, t(2000), 7))
     q.processAllAvailable()
@@ -317,8 +320,8 @@ object OperatorTestingAndRescale {
     //    times must sit ABOVE the frontier: the initial frontier is 0, so
     //    a record at t=0 is already late and drops, exactly as it would
     //    in production.)
-    val t = graft.testing.OperatorTester.eventTime[Long, Click, Long, Sessions](
-      sessionize, _.user, _.ts, ttlMs = 30 * 60000L)(spark)
+    val t = graft.testing.OperatorTester.tws[Long, Click, Long, Sessions](
+      sessionize, _.user, _.ts, ttlMs = Some(30 * 60000L))(spark)
     t.stepWith(Click(1, min(10)), Click(2, min(10))) // epoch 1: two sessions open
     // epoch 2: user 1 stays active, pushing the frontier to 60min — past
     // user 2's 10min+30min deadline, so user 2's session flushes HERE.

@@ -12,15 +12,18 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    order inside `flatMapGroups` (state lives in executors, never the
   *    driver; one shuffle on the key).
   *  - streaming: [[StatefulExec.stream]] runs it under
-  *    `flatMapGroupsWithState`, with state checkpointed by Structured
+  *    `flatMapGroupsWithState`, and [[StatefulExec.streamTws]] under
+  *    `transformWithState`, with state checkpointed by Structured
   *    Streaming (the snapshot/ backend analogue, snapshot/slatedb.rs).
+  *    Only `streamTws` expires state.
   */
 trait StatefulLogic[K, V, S, O] extends Serializable {
   /** Initial state for a fresh key. */
   def zero: S
   /** Fold one value; return (new state, outputs to emit). */
   def update(key: K, value: V, state: S): (S, IterableOnce[O])
-  /** Emitted when a key's state expires (TTL) — streaming only. */
+  /** Emitted when a key's state expires: only [[StatefulExec.streamTws]]
+    * with a `ttlMs` calls it. */
   def onExpiry(key: K, state: S): IterableOnce[O] = Iterator.empty
 }
 
@@ -87,124 +90,58 @@ object StatefulExec {
     spark.createDataset(folded)
   }
 
-  /** Streaming execution with EVENT-TIME TTL — the faithful analogue of
-    * the reference's epoch-driven expiry (malstrom-core/src/operators/
-    * ttl_map.rs:21-23, tests :123-152): state expires when the event-time
-    * WATERMARK (the epoch-frontier analogue) passes
-    * last-seen-event-time + ttlMs — advancing the data's clock, not the
-    * wall clock, drives expiry.
-    *
-    * `ds` must carry a watermark (`withWatermark` upstream of the `.as[V]`)
-    * — Structured Streaming requires one for EventTimeTimeout. The state
-    * tuple carries the per-key max event time so a restart re-arms the
-    * same expiry deadline from the checkpoint. */
-  def streamEventTime[K: Encoder, V, S: Encoder, O: Encoder](
-      ds: Dataset[V],
-      key: V => K,
-      eventTimeMs: V => Long,
-      ttlMs: Long,
-      logic: StatefulLogic[K, V, S, O]): Dataset[O] = {
-    // ttlMs = 0 would arm a deadline AT the watermark for late-data-only
-    // keys, which setTimeoutTimestamp rejects at runtime — fail fast here.
-    require(ttlMs > 0, s"streamEventTime needs ttlMs > 0, got $ttlMs")
-    implicit val stateEnc: Encoder[(S, Long)] =
-      Encoders.tuple(implicitly[Encoder[S]], Encoders.scalaLong)
-    ds.groupByKey(key)
-      .flatMapGroupsWithState[(S, Long), O](OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (k: K, values: Iterator[V], gs: GroupState[(S, Long)]) =>
-          if (gs.hasTimedOut) {
-            val out = logic.onExpiry(k, gs.get._1)
-            gs.remove()
-            out.iterator
-          } else {
-            var (state, maxTs) = gs.getOption.getOrElse((logic.zero, Long.MinValue))
-            val out = values.flatMap { v =>
-              maxTs = math.max(maxTs, eventTimeMs(v))
-              val (s2, o) = logic.update(k, v, state)
-              state = s2
-              o.iterator
-            }.toVector
-            gs.update((state, maxTs))
-            // Deadline must sit above the current watermark or Spark
-            // rejects it; a key fed only pre-watermark (late) data arms
-            // one interval past the frontier instead.
-            val deadline = math.max(
-              maxTs + ttlMs,
-              gs.getCurrentWatermarkMs() + ttlMs)
-            gs.setTimeoutTimestamp(deadline)
-            out.iterator
-          }
-      }
-  }
-
-  /** Streaming execution under flatMapGroupsWithState with optional
-    * processing-time TTL (state untouched for `ttlMs` of WALL-CLOCK time
-    * expires and `onExpiry` fires — the operational-cleanup variant;
-    * [[streamEventTime]] is the reference-faithful epoch-driven one).
+  /** Streaming execution under flatMapGroupsWithState, with no expiry:
+    * state lives until the query's checkpoint is dropped. A key whose
+    * state must EXPIRE runs on [[streamTws]], the one engine with
+    * event-time TTL.
     *
     * `initialState` seeds fresh keys' state instead of [[StatefulLogic.zero]]
     * — the landing half of an offline state RESCALE
     * ([[graft.streaming.StateRescale]]): state read from a stopped
     * checkpoint re-enters here under a new shuffle-partition count, which
     * is Spark's form of the reference's key-range migration
-    * (keyed/distributed/message_router/normal.rs).
-    *
-    * CAVEAT — `initialState` + `ttlMs` together: Spark's fMGWS stores
-    * initial state WITHOUT invoking the user function for keys that get
-    * no input rows (verified against the 4.1.2 engine), and the timeout
-    * is only armed inside that function — so a seeded key that never
-    * receives another event keeps its state forever and `onExpiry` never
-    * fires for it. A TTL'd migration should land on [[streamTws]]
-    * instead, whose `handleInitialState` hook arms a timer for every
-    * seeded key at seed time. */
+    * (keyed/distributed/message_router/normal.rs). */
   def stream[K: Encoder, V, S: Encoder, O: Encoder](
       ds: Dataset[V],
       key: V => K,
       logic: StatefulLogic[K, V, S, O],
-      ttlMs: Option[Long] = None,
       initialState: Option[org.apache.spark.sql.KeyValueGroupedDataset[K, S]] = None)
       : Dataset[O] = {
-    val timeout =
-      if (ttlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    val fn = (k: K, values: Iterator[V], gs: GroupState[S]) =>
-      if (gs.hasTimedOut) {
-        val out = logic.onExpiry(k, gs.get)
-        gs.remove()
-        out.iterator
-      } else {
-        var state = gs.getOption.getOrElse(logic.zero)
-        val out = values.flatMap { v =>
-          val (s2, o) = logic.update(k, v, state)
-          state = s2
-          o.iterator
-        }.toVector
-        gs.update(state)
-        ttlMs.foreach(gs.setTimeoutDuration)
-        out.iterator
-      }
+    val fn = (k: K, values: Iterator[V], gs: GroupState[S]) => {
+      var state = gs.getOption.getOrElse(logic.zero)
+      val out = values.flatMap { v =>
+        val (s2, o) = logic.update(k, v, state)
+        state = s2
+        o.iterator
+      }.toVector
+      gs.update(state)
+      out.iterator
+    }
     val grouped = ds.groupByKey(key)
     initialState match {
       case Some(init) =>
-        grouped.flatMapGroupsWithState[S, O](OutputMode.Append, timeout, init)(fn)
+        grouped.flatMapGroupsWithState[S, O](OutputMode.Append, GroupStateTimeout.NoTimeout, init)(fn)
       case None =>
-        grouped.flatMapGroupsWithState[S, O](OutputMode.Append, timeout)(fn)
+        grouped.flatMapGroupsWithState[S, O](OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
     }
   }
 
   /** Streaming execution on Spark 4's transformWithState (state v2) — the
-    * modern engine for the same [[StatefulLogic]] contract. Differences
-    * from [[stream]]/[[streamEventTime]] that matter at scale:
+    * modern engine for the same [[StatefulLogic]] contract, and the only
+    * one that expires keyed state. Differences from [[stream]] that
+    * matter at scale:
     *  - state lives in named `ValueState` slots in the RocksDB state store
     *    (changelog-checkpointable — the snapshot/slatedb.rs analogue with
     *    an LSM backend, not a memory map);
-    *  - expiry is an event-time TIMER per key (re-armed to
-    *    watermark + ttl on every update), so `onExpiry` fires when the
-    *    watermark — the epoch frontier analogue, ttl_map.rs:21-23 —
-    *    passes the deadline, never the wall clock.
+    *  - with `ttlMs`, expiry is an event-time TIMER per key, re-armed on
+    *    every update to max(last-seen event time, watermark) + ttl, so
+    *    `onExpiry` fires when the watermark — the epoch frontier
+    *    analogue, ttl_map.rs:21-23 — passes the deadline, never the wall
+    *    clock.
     * Requires `spark.sql.streaming.stateStore.providerClass` =
-    * RocksDBStateStoreProvider and, when `ttlMs` is set, a watermark on
-    * `ds` (timers need TimeMode.EventTime). */
+    * RocksDBStateStoreProvider (`graft.SessionConf.RocksDbProvider`), so a
+    * TTL needs that provider too, and, when `ttlMs` is set, a watermark
+    * on `ds` (timers need TimeMode.EventTime). `ttlMs` must be positive. */
   def streamTws[K: Encoder, V, S: Encoder, O: Encoder](
       ds: Dataset[V],
       key: V => K,
@@ -214,6 +151,10 @@ object StatefulExec {
       initialState: Option[org.apache.spark.sql.KeyValueGroupedDataset[K, S]] = None,
       initialStateTimeMs: Option[Long] = None)
       : Dataset[O] = {
+    // A non-positive TTL arms a deadline at or behind the key's last
+    // activity, so the key would expire as soon as the frontier reaches
+    // its own events — fail fast here.
+    ttlMs.foreach(t => require(t > 0, s"streamTws needs ttlMs > 0, got $t"))
     import org.apache.spark.sql.streaming.{ExpiredTimerInfo, StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues, ValueState}
     val stateEnc = implicitly[Encoder[S]]
     // WithInitialState extends the plain processor contract, so ONE class

@@ -18,20 +18,6 @@ trait GraftSource extends Serializable {
     throw new UnsupportedOperationException(s"$this is batch-only")
 }
 
-/** Parquet directory/file source (the workhorse). */
-final case class ParquetSource(path: String, schemaDDL: Option[String] = None) extends GraftSource {
-  override def load(spark: SparkSession): DataFrame = spark.read.parquet(path)
-  override def loadStream(spark: SparkSession): DataFrame = {
-    // Same explicit precondition as FileSource: streaming file sources
-    // refuse schema inference, and Spark's generic runtime error (or a
-    // cluster that happens to set streaming.schemaInference) is a worse
-    // failure mode than failing fast here.
-    require(schemaDDL.nonEmpty,
-      s"ParquetSource($path).loadStream needs schemaDDL — streaming sources cannot infer schemas")
-    spark.readStream.schema(schemaDDL.get).parquet(path)
-  }
-}
-
 /** In-memory iterator source (sources/single_iterator.rs): a driver-side
   * finite sequence distributed via `spark.range` + pure projection — the
   * generator runs on executors, not the driver. */
@@ -61,7 +47,9 @@ final case class RangeSource(n: Long, numPartitions: Int = 4,
   * streaming variant (Structured Streaming refuses inference) and
   * strongly recommended for batch on schemaless text formats, where
   * inference costs an extra full pass over the data — at 100 TB an
-  * inferred schema is a second scan of the corpus. */
+  * inferred schema is a second scan of the corpus. With the default
+  * `parquet` format it is also the stateless file source
+  * (sources/stateless.rs): each load re-reads `path` and keeps no offsets. */
 final case class FileSource(path: String, format: String = "parquet",
     schemaDDL: Option[String] = None,
     options: Map[String, String] = Map.empty) extends GraftSource {
@@ -74,12 +62,6 @@ final case class FileSource(path: String, format: String = "parquet",
       "streaming file sources require an explicit schema DDL"))
     spark.readStream.format(format).options(options).schema(ddl).load(path)
   }
-}
-
-/** Stateless file source (sources/stateless.rs): re-reads everything,
-  * keeps no offsets. */
-final case class StatelessFileSource(path: String) extends GraftSource {
-  override def load(spark: SparkSession): DataFrame = spark.read.parquet(path)
 }
 
 /** Resumable source (sources/stateful.rs): rows strictly after `offset` in

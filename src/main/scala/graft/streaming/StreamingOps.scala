@@ -9,7 +9,9 @@ import org.apache.spark.sql.Row
   * state (malstrom's snapshot backend ≡ `checkpointLocation`), and the
   * exactly-once sink contract (sinks/stateful.rs ≡ foreachBatch + batchId
   * idempotence). Stateful per-key logic runs through
-  * [[graft.operators.StatefulExec.stream]] (flatMapGroupsWithState).
+  * [[graft.operators.StatefulExec.stream]] (flatMapGroupsWithState), or
+  * [[graft.operators.StatefulExec.streamTws]] (transformWithState) when
+  * its state expires.
   *
   * Reference: malstrom-core/src/snapshot/ (persistence), runtime/
   * (coordinator barriers). Spark gives both: the state store checkpoints

@@ -23,12 +23,13 @@ import graft.operators.{StatefulExec, StatefulLogic}
   *    batch and returns what the operator emitted for it;
   *  - the FRONTIER is the event-time watermark: it advances to the max
   *    event time of each processed batch, and TTL expiry
-  *    ([[StatefulLogic.onExpiry]]) fires once the frontier passes
+  *    ([[StatefulLogic.onExpiry]], on the [[OperatorTester.tws]] tester
+  *    with a `ttlMs`) fires once the frontier passes
   *    last-seen-event-time + ttl. A [[OperatorTester.step]] whose data
   *    advances the frontier DELIVERS the expiries it causes in its own
   *    return value (processAllAvailable runs the engine's follow-up
-  *    no-data batch, where timeouts are evaluated against the new
-  *    frontier). Records at or below the current frontier are LATE and
+  *    no-data batch, where timers fire against the new frontier).
+  *    Records at or below the current frontier are LATE and
   *    silently dropped, production-faithfully — which includes event
   *    time 0 against the INITIAL frontier (also 0): start test
   *    timelines strictly above zero;
@@ -39,12 +40,12 @@ import graft.operators.{StatefulExec, StatefulLogic}
   *
   * Usage (see StreamingSpec's event-time TTL test, which runs on this):
   * {{{
-  * val t = OperatorTester.eventTime(logic, key = _.k, eventTimeMs = _.ts,
-  *                                  ttlMs = 30 * 60000L)(spark)
+  * val t = OperatorTester.tws(logic, key = _.k, eventTimeMs = _.ts,
+  *                            ttlMs = Some(30 * 60000L))(spark)
   * t.sendLocal(Ev(1, min10), Ev(2, min10))
   * t.step()                      // epoch 1: both keys folded
-  * t.stepWith(Ev(1, min60))      // epoch 2: frontier -> 60 min
-  * t.stepWith(Ev(3, min61))      // epoch 3: key 2's expiry fires here
+  * t.stepWith(Ev(1, min60))      // epoch 2: frontier -> 60 min; returns
+  *                               // key 2's expiry (deadline 40 min)
   * assert(t.outputs.contains(...))
   * t.close()
   * }}}
@@ -147,20 +148,12 @@ object OperatorTester {
       ds => StatefulExec.stream[K, (Timestamp, V), S, O](
         ds, tv => key(tv._2), lift(logic)))
 
-  /** Tester over [[StatefulExec.streamEventTime]]: event-time TTL, expiry
-    * driven by the watermark (= the reference's epoch frontier). */
-  def eventTime[K: Encoder, V: Encoder, S: Encoder, O: Encoder](
-      logic: StatefulLogic[K, V, S, O], key: V => K,
-      eventTimeMs: V => Long, ttlMs: Long)(
-      spark: SparkSession): OperatorTester[V, O] =
-    start[K, V, S, O](spark, eventTimeMs,
-      ds => StatefulExec.streamEventTime[K, (Timestamp, V), S, O](
-        ds, tv => key(tv._2), _._1.getTime, ttlMs, lift(logic)))
-
   /** Tester over [[StatefulExec.streamTws]] (transformWithState): same
-    * contract on the state-v2 engine. The RocksDB state-store provider is
-    * set only while the query starts (the query keeps the conf it started
-    * with), so the session's own setting is back before this returns. */
+    * contract on the state-v2 engine, and the TTL tester — with `ttlMs`,
+    * a key expires once the frontier passes its last event time + ttl.
+    * The RocksDB state-store provider is set only while the query starts
+    * (the query keeps the conf it started with), so the session's own
+    * setting is back before this returns. */
   def tws[K: Encoder, V: Encoder, S: Encoder, O: Encoder](
       logic: StatefulLogic[K, V, S, O], key: V => K,
       eventTimeMs: V => Long, ttlMs: Option[Long] = None)(

@@ -9,12 +9,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * source version, memoizing a built index, scoping a session conf. */
 class GateHarnessSpec extends AnyFunSuite with SparkFixture {
 
-  /** A fresh dataset dir holding a one-file `t.parquet` table to key on. */
-  private def dataset(): String = {
+  /** A fresh dataset dir holding a one-file `table` to key on. */
+  private def dataset(table: String = "t.parquet"): String = {
     val dir = tempDir("graft_harness_ds_")
-    Files.writeString(dir.resolve("t.parquet"), "x")
+    Files.writeString(dir.resolve(table), "x")
     dir.toString
   }
+
+  /** The entries named `prefix*` in `java.io.tmpdir` and in `/dev/shm`,
+    * where the gates' scratch dirs go when it exists. */
+  private def tmpEntries(prefix: String): Set[Path] =
+    Seq(Path.of(sys.props("java.io.tmpdir")), Path.of("/dev/shm")).filter(Files.isDirectory(_))
+      .flatMap(d => d.toFile.list().filter(_.startsWith(prefix)).map(d.resolve)).toSet
 
   /** A stage part that writes one data file and its `_SUCCESS` marker. */
   private def part(writes: collection.mutable.Buffer[String], tag: String): String => Unit = { p =>
@@ -55,6 +61,23 @@ class GateHarnessSpec extends AnyFunSuite with SparkFixture {
     assert(first != second && writes == Seq("v1", "v2"))
     assert(Files.readString(second.resolve("data")) == "v2")
     assert(!Files.exists(first), "the old version's stage must be pruned")
+  }
+
+  test("an embedding index build prunes an older version's index and its companions") {
+    val companions = Seq("", "_base", "_base_centroids", "_base_stats", "_centroids", "_stats")
+    def build(ds: String) = Path.of(SparkEntry.embeddingIndex("graft_harness_emb", ds) { p =>
+      companions.foreach(c => Files.writeString(Files.createDirectories(Path.of(p + c)).resolve("_SUCCESS"), ""))
+    })
+    def files(index: Path) = companions.map(c => index.resolveSibling(index.getFileName.toString + c))
+    val (ds, other) = (dataset("embeddings.parquet"), dataset("embeddings.parquet"))
+    val kept = build(other)
+    val first = build(ds)
+    Files.writeString(Path.of(ds, "embeddings.parquet"), "regenerated")
+    val second = build(ds)
+    Seq(kept, first, second).flatMap(files).foreach(SparkFixture.removeOnExit)
+    assert(first != second && files(second).forall(Files.exists(_)))
+    assert(!files(first).exists(Files.exists(_)), "the old version's index and companions must be pruned")
+    assert(files(kept).forall(Files.exists(_)), "another dataset's index must be kept")
   }
 
   test("an index memo rebuilds when its marker is gone") {
@@ -110,9 +133,8 @@ class GateHarnessSpec extends AnyFunSuite with SparkFixture {
     spark.read.parquet(s"$sf001/documents.parquet")
       .filter(F.col("doc_id") % 3 === 0)
       .write.parquet(filtered.resolve("documents.parquet").toString)
-    // the filtered dataset dies with this JVM, so its sink stage must too
-    SparkFixture.removeOnExit(
-      SparkEntry.stagePath("graft_stateful_sink", filtered.toString, "documents.parquet"))
+    def sinks = tmpEntries("graft_stateful_sink_") ++ tmpEntries("graft_ckpt_stateful_sink_")
+    val before = sinks
     Seq(sf001, filtered.toString).foreach { dir =>
       val expected = spark.read.parquet(s"$dir/documents.parquet")
         .groupBy(F.col("source")).count()
@@ -121,5 +143,6 @@ class GateHarnessSpec extends AnyFunSuite with SparkFixture {
         .collect().map(r => (r.getAs[String]("source"), r.getAs[Long]("n_docs"))).toSet
       assert(got == expected, s"$dir: sink rows $got, table rows $expected")
     }
+    assert(sinks == before, s"the sink must not outlive its call: ${sinks -- before}")
   }
 }

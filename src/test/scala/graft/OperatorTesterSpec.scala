@@ -10,11 +10,11 @@ import graft.testing.OperatorTester
 final case class OtEv(k: Long, v: Long, ts: Long)
 final case class OtTot(k: Long, total: Long)
 
-/** Coverage for every [[OperatorTester]] engine variant beyond the
-  * event-time one (which the migrated StreamingSpec TTL test drives):
-  * the no-TTL fMGWS tester, the transformWithState tester, and the
-  * one-shot batch checker — each with the same tiny running-sum logic so
-  * cross-engine output parity is part of the assertion. */
+/** Coverage for every [[OperatorTester]] engine variant without a TTL
+  * (StreamingSpec's event-time TTL test drives `tws` with one): the
+  * fMGWS tester, the transformWithState tester, and the one-shot batch
+  * checker — each with the same tiny running-sum logic so cross-engine
+  * output parity is part of the assertion. */
 
 class OperatorTesterSpec extends AnyFunSuite with SparkFixture {
 

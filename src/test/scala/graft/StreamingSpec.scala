@@ -13,7 +13,7 @@ import graft.streaming.StreamingOps
 case class SEvent(k: Long, v: Long)
 case class STotal(k: Long, total: Long)
 /** Watermark-carrying event: the watermarked `ts` column must stay in the
-  * Dataset for EventTimeTimeout (Spark checks it reaches the stateful op). */
+  * Dataset for event-time timers (Spark checks it reaches the stateful op). */
 case class WmEvent(k: Long, v: Long, ts: java.sql.Timestamp)
 case class SDoc(doc_id: Long, text: String)
 
@@ -505,45 +505,11 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(counts == Map(0 -> 10L, 1 -> 10L, 2 -> 10L))
   }
 
-  test("TTL state expires idle keys and fires onExpiry") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ttlLogic = new StatefulLogic[Long, SEvent, Long, STotal] {
-      def zero = 0L
-      def update(k: Long, v: SEvent, s: Long): (Long, IterableOnce[STotal]) =
-        (s + v.v, Iterator.empty) // emit nothing on update...
-      override def onExpiry(k: Long, s: Long): IterableOnce[STotal] =
-        Iterator.single(STotal(k, s)) // ...only the final state on expiry
-    }
-    val input = MemoryStream[SEvent]
-    val out = StatefulExec.stream[Long, SEvent, Long, STotal](
-      input.toDS(), _.k, ttlLogic, ttlMs = Some(10L))
-    // With processing-time timeouts the engine keeps scheduling batches to
-    // evaluate expiry, so processAllAvailable never "drains" — poll the
-    // sink with a deadline instead.
-    val q = out.writeStream.format("memory").queryName("ttl_1")
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime("100 milliseconds"))
-      .start()
-    input.addData(SEvent(1, 4), SEvent(1, 2))
-    val deadline = System.currentTimeMillis + 30000
-    var rows = Seq.empty[STotal]
-    while (!rows.contains(STotal(1, 6)) && System.currentTimeMillis < deadline) {
-      Thread.sleep(200)
-      input.addData(SEvent(2, 1)) // keep batches flowing so timeouts fire
-      rows = spark.table("ttl_1").as[STotal].collect().toSeq
-    }
-    q.stop()
-    assert(rows.contains(STotal(1, 6)), s"expiry did not deliver final state: $rows")
-  }
-
   test("event-time TTL expires state when the WATERMARK passes, not the clock") {
     import spark.implicits._
-    // MIGRATED to the public graft.testing.OperatorTester harness (the
-    // reference's operator_tester.rs equivalent) — this test doubles as
-    // its usage proof: same scenario and assertions as before the
-    // migration, driven through sendLocal/step instead of a hand-rolled
-    // MemoryStream + memory-sink rig.
+    // Runs on the public graft.testing.OperatorTester harness (the
+    // reference's operator_tester.rs equivalent), so this test doubles as
+    // its usage proof, on the transformWithState engine that carries TTL.
     val ttlLogic = new StatefulLogic[Long, SEvent, Long, STotal] {
       def zero = 0L
       def update(k: Long, v: SEvent, s: Long): (Long, IterableOnce[STotal]) =
@@ -552,22 +518,22 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
         Iterator.single(STotal(k, s)) // final state, delivered on expiry
     }
     // (k, v) pairs where v doubles as the event time in minutes.
-    val t = graft.testing.OperatorTester.eventTime[Long, SEvent, Long, STotal](
-      ttlLogic, _.k, v => v.v * 60000L, ttlMs = 30 * 60000L)(spark)
+    val t = graft.testing.OperatorTester.tws[Long, SEvent, Long, STotal](
+      ttlLogic, _.k, v => v.v * 60000L, ttlMs = Some(30 * 60000L))(spark)
     // epoch 1: keys 1 and 2 at t=10min → both armed to expire at t+30min
     val e1 = t.stepWith(SEvent(1, 10), SEvent(2, 10))
     assert(e1.isEmpty, s"nothing expires in epoch 1: $e1")
     // epoch 2: key 1 refreshed at t=60min → frontier advances to 60min,
-    // putting key 2's deadline (40min) behind it
-    t.stepWith(SEvent(1, 60))
-    // epoch 3: timeouts fire against the epoch-2 frontier
-    t.stepWith(SEvent(3, 61))
+    // putting key 2's deadline (40min) behind it; the step that moves the
+    // frontier returns the expiry it causes
+    val e2 = t.stepWith(SEvent(1, 60))
+    assert(e2 == Seq(STotal(2, 10)), s"epoch 2 must deliver key 2's expiry: $e2")
+    val e3 = t.stepWith(SEvent(3, 61))
+    assert(e3.isEmpty, s"nothing is left to expire in epoch 3: $e3")
     val rows = t.outputs
     t.close()
-    assert(rows.contains(STotal(2, 10)),
-      s"advancing the watermark did not expire idle key 2: $rows")
-    assert(!rows.exists(_.k == 1),
-      s"key 1 was refreshed past the frontier and must NOT expire: $rows")
+    assert(rows == Seq(STotal(2, 10)),
+      s"only idle key 2 expires; key 1 was refreshed past the frontier: $rows")
     // recvLocal drains the same emissions in order (reference recv_local).
     assert(t.recvLocal().contains(STotal(2, 10)) && t.recvLocal().isEmpty)
   }
@@ -575,6 +541,9 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("transformWithState timers expire on the WATERMARK, sparing refreshed keys") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
+    // The same scenario as the test above, driven without the harness:
+    // the caller's own watermarked `ts` column feeds streamTws directly and
+    // a memory sink collects what it emits.
     SessionConf.withConf(spark, SessionConf.RocksDbProvider) {
       val ttlLogic = new StatefulLogic[Long, WmEvent, Long, STotal] {
         def zero = 0L
@@ -593,8 +562,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
         eventTimeMs = Some(_.ts.getTime))
       val q = out.writeStream.format("memory").queryName("ttl_tws")
         .outputMode("append").start()
-      // same scenario as the fMGWS event-time test: key 2 idles past its
-      // deadline, key 1 is refreshed beyond the frontier
+      // key 2 idles past its deadline, key 1 is refreshed beyond the frontier
       input.addData(SEvent(1, 10), SEvent(2, 10))
       q.processAllAvailable()
       input.addData(SEvent(1, 60))
@@ -607,6 +575,19 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
         s"watermark passing the deadline did not expire idle key 2: $rows")
       assert(!rows.exists(_.k == 1),
         s"key 1 was refreshed past the frontier and must NOT expire: $rows")
+    }
+  }
+
+  test("streamTws refuses a TTL that is not positive when it is called") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[SEvent]
+    Seq(0L, -1L).foreach { ttl =>
+      val e = intercept[IllegalArgumentException] {
+        StatefulExec.streamTws[Long, SEvent, Long, STotal](
+          input.toDS(), _.k, runningSum, ttlMs = Some(ttl))
+      }
+      assert(e.getMessage.contains("ttlMs"), s"ttlMs = $ttl: ${e.getMessage}")
     }
   }
 
