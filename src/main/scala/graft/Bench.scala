@@ -99,9 +99,6 @@ object Bench {
       if (java.nio.file.Files.isDirectory(small)) small.toString else sfDir
     }
     val warmupOn = sys.env.get("SPARK_GRAFT_WARMUP").forall(_ == "1")
-    // A/B lever for the per-query re-warm alone (suite warmup unaffected):
-    // SPARK_GRAFT_REWARM=0 disables just the immediately-before-shots pass.
-    val rewarmOn = sys.env.get("SPARK_GRAFT_REWARM").forall(_ == "1")
     if (warmupOn) {
       selected.foreach { name =>
         try { SparkEntry.queries(name)(spark, warmDir).count(); () }
@@ -152,7 +149,7 @@ object Bench {
     //    reject it (stamped in bench_stages.jsonl), re-shoot, cap 3
     //    rejects per query. Rejected shots never enter the diag arrays
     //    or the best-of-N minimum.
-    val runnableGate = sys.env.getOrElse("SPARK_GRAFT_RUNNABLE_GATE", "6").toInt
+    val runnableGate = 6
     val maxDeferMs = 30000L
     def deferWhileLoaded(): Long = {
       var waited = 0L
@@ -254,7 +251,7 @@ object Bench {
       // stages any per-(dir,stamp) on-disk index untimed — the
       // documented "measure the serving path" semantics). Data caches
       // still cleared per shot below.
-      if (warmupOn && rewarmOn) {
+      if (warmupOn) {
         try { fn(spark, sfDir).count(); () }
         catch { case scala.util.control.NonFatal(_) => () }
         spark.catalog.clearCache()

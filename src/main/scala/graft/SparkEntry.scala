@@ -257,12 +257,14 @@ object SparkEntry {
 
   /** Size+mtime fingerprint of a staged query input: staging keys carry
     * it so in-place testdata regeneration discards the stale staged copy
-    * instead of silently comparing it against a fresh oracle. */
+    * instead of silently comparing it against a fresh oracle. Each file's
+    * pair is hashed, not XORed: `size ^ mtime` stays the same when a
+    * rewrite from 1 to 11 bytes lands 10 ms later. */
   private def srcStamp(dir: String, table: String): Long = {
     val root = java.nio.file.Paths.get(dir, table)
     val st = java.nio.file.Files.walk(root)
     try st.filter(java.nio.file.Files.isRegularFile(_))
-      .mapToLong(p => java.nio.file.Files.size(p) ^ java.nio.file.Files.getLastModifiedTime(p).toMillis)
+      .mapToLong(p => (java.nio.file.Files.size(p), java.nio.file.Files.getLastModifiedTime(p).toMillis).##.toLong)
       .sum()
     finally st.close()
   }
@@ -279,6 +281,12 @@ object SparkEntry {
     * version of its `table`, never by every dataset sharing a basename. */
   private[graft] def stagePath(name: String, dir: String, table: String): java.nio.file.Path =
     tmpPath(s"${name}_${stageKey(dir, table)}")
+
+  /** `<tmp>/graft_oracle_stage_<dirKey>`: where Verify writes the stages
+    * the oracle SQL of `dir` reads, one root per dataset path. Left in
+    * place: the oracle compare reads them after Verify exits. */
+  private[graft] def oracleStageRoot(dir: String): java.nio.file.Path =
+    tmpPath(s"graft_oracle_stage_${dirKey(dir)}")
 
   /** Write the input a gate derives from `dir/table` once per
     * [[stageKey]] and return its root, [[stagePath]]. A single part is
@@ -730,14 +738,13 @@ object SparkEntry {
     * to reference live key-range migration, message_router/{interrogate,
     * collect,normal}.rs): a v1 (flatMapGroupsWithState) job consumes the
     * FIRST HALF of the events timeline and stops; the rest of the input
-    * arrives while the job is down; the gate derives the un-consumed files from the old
-    * checkpoint's committed offsets ([[graft.streaming.StateRescale
-    * .consumedFiles]]), reads every (key, state) pair out of the stopped
-    * checkpoint, and resumes the SAME logic on the v2 engine
+    * arrives while the job is down; [[graft.streaming.StateRescale.resume]]
+    * stages the files the old checkpoint's committed offsets had not
+    * consumed and seeds from every (key, state) pair of the stopped
+    * checkpoint, and the SAME logic resumes on the v2 engine
     * (transformWithState + RocksDB) at a DIFFERENT state-partition count
     * (witnessed — the gate throws unless the new checkpoint's layout
-    * actually changed), TTL armed at the migration-point watermark
-    * ([[graft.streaming.StateRescale.lastWatermarkMs]]).
+    * actually changed), TTL armed at the migration-point watermark.
     *
     * State is an exact per-user long sum of event ids, emitted ONLY on
     * TTL expiry; the TTL spans the whole event-time range and two
@@ -775,7 +782,6 @@ object SparkEntry {
       ev.filter(F.unix_micros(F.col("ts")) <= cutUs),
       ev.filter(F.unix_micros(F.col("ts")) > cutUs),
       sentinel(-1L, s1Us), sentinel(-2L, s2Us))
-    val srcA = src.root.resolve("b1")
     val silentSum = new StatefulLogic[Long, EvT, Long, KTotal] {
       def zero = 0L
       def update(k: Long, v: EvT, t: Long): (Long, IterableOnce[KTotal]) =
@@ -790,37 +796,24 @@ object SparkEntry {
       withConf(s, RocksDbProvider) {
         // Phase A (v1 engine, session partition count): first half only.
         val qa = StatefulExec.stream[Long, EvT, Long, KTotal](
-          readStream(srcA.toString, maxFiles = 0), _.user_id, silentSum)
+          readStream(src.root.resolve("b1").toString, maxFiles = 0), _.user_id, silentSum)
           .writeStream.option("checkpointLocation", ckptA)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .format("noop").outputMode("append").start()
         qa.awaitTermination()
-        // Derive what the stopped job had NOT consumed: everything in the
-        // source universe minus the committed offsets' file set.
-        val consumed = StateRescale.consumedFiles(ckptA)
-          .map(u => new org.apache.hadoop.fs.Path(u).toUri.getPath).toSet
-        val universe = java.nio.file.Files.walk(src.root).toArray.toSeq.map(_.toString)
-          .filter(_.endsWith(".parquet"))
-        val unconsumed = universe.filterNot(consumed.contains)
-          .map(p => new java.io.File(p)).sortBy(_.lastModified())
-        if (consumed.isEmpty || unconsumed.exists(_.getAbsolutePath.startsWith(srcA.toString)))
-          throw new IllegalStateException(
-            s"offset-derived resume set is wrong: consumed=$consumed unconsumed=$unconsumed")
-        unconsumed.zipWithIndex.foreach { case (f, i) =>
-          val dst = java.nio.file.Paths.get(srcB, f"part$i%03d.parquet")
-          java.nio.file.Files.copy(f.toPath, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-        }
-        val wmA = StateRescale.lastWatermarkMs(ckptA)
         // Phase B (v2 engine, DIFFERENT partition count): seed from ckptA,
-        // arm TTL at the migration-point clock, read only the derived rest.
+        // arm TTL at the migration-point clock, read only the rest, which
+        // `resume` derives from ckptA's committed offsets.
         withConf(s, "spark.sql.shuffle.partitions" -> "7") {
-          val init = StateRescale.initialStateFrom[Long, Long](s, ckptA)
+          val r = StateRescale.resume[Long, Long](s, ckptA, src.root.toString, srcB)
+          // each part is one file: phase A consumed b1's, the rest replay in part order
+          if (r.unconsumed.map(new org.apache.hadoop.fs.Path(_).getParent.getName) !=
+              (2 to src.parts).map(i => s"b$i"))
+            throw new IllegalStateException(s"offset-derived resume set is wrong: ${r.unconsumed}")
           StatefulExec.streamTws[Long, EvT, Long, KTotal](
             readStream(srcB, maxFiles = 1), _.user_id, silentSum,
             ttlMs = Some(ttlMs), eventTimeMs = Some(_.ts.getTime),
-            initialState = Some(init), initialStateTimeMs = wmA)
+            initialState = Some(r.initialState), initialStateTimeMs = r.initialStateTimeMs)
             .writeStream.option("checkpointLocation", ckptB)
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .format("parquet").option("path", outB)
@@ -1089,41 +1082,40 @@ object SparkEntry {
 
   // ------------------------------------------------------------ kafka shim
 
-  private def kafkaRoot(dir: String) =
-    tmpPath(s"graft_kafka_${new java.io.File(dir).getName}").toString
+  // Each call writes its topic to a fresh scratch root: a root shared by
+  // calls would let one dataset's topic stand in for another's.
+  private def qKafkaSource(s: SparkSession, dir: String): DataFrame =
+    withScratch("kafka_source") { case Seq(root) =>
+      KafkaShim.write(
+        Tables.events(s, dir).select(
+          (F.col("user_id") % 4).cast("int").as("partition"),
+          F.col("user_id").cast("string").as("key"),
+          F.col("event_type").as("value"),
+          F.col("ts"),
+          F.col("event_id")),
+        root, "events_in", orderCols = Seq("event_id"))
+      detach(KafkaShim.read(s, root, "events_in", startingOffsets = Map(0 -> 10L, 1 -> 10L))
+        .groupBy(F.col("partition").as("part_id"))
+        .agg(
+          F.count(F.lit(1)).as("n"),
+          F.min("offset").as("min_off"),
+          F.max("offset").as("max_off"))
+        .select(F.col("part_id").cast("int").as("part_id"), F.col("n"), F.col("min_off"), F.col("max_off")))
+    }
 
-  private def qKafkaSource(s: SparkSession, dir: String): DataFrame = {
-    val root = kafkaRoot(dir)
-    KafkaShim.write(
-      Tables.events(s, dir).select(
-        (F.col("user_id") % 4).cast("int").as("partition"),
-        F.col("user_id").cast("string").as("key"),
-        F.col("event_type").as("value"),
-        F.col("ts"),
-        F.col("event_id")),
-      root, "events_in", orderCols = Seq("event_id"))
-    KafkaShim.read(s, root, "events_in", startingOffsets = Map(0 -> 10L, 1 -> 10L))
-      .groupBy(F.col("partition").as("part_id"))
-      .agg(
-        F.count(F.lit(1)).as("n"),
-        F.min("offset").as("min_off"),
-        F.max("offset").as("max_off"))
-      .select(F.col("part_id").cast("int").as("part_id"), F.col("n"), F.col("min_off"), F.col("max_off"))
-  }
-
-  private def qKafkaSink(s: SparkSession, dir: String): DataFrame = {
-    val root = kafkaRoot(dir)
-    KafkaShim.write(
-      Tables.events(s, dir).select(
-        (F.length(F.col("event_type")) % 3).cast("int").as("partition"),
-        F.col("event_type").as("key"),
-        F.col("props").as("value"),
-        F.col("ts"),
-        F.col("event_id")),
-      root, "events_out", orderCols = Seq("event_id"))
-    KafkaShim.endOffsets(s, root, "events_out")
-      .select(F.col("partition").cast("int").as("part_id"), F.col("end_offset"), F.col("n"))
-  }
+  private def qKafkaSink(s: SparkSession, dir: String): DataFrame =
+    withScratch("kafka_sink") { case Seq(root) =>
+      KafkaShim.write(
+        Tables.events(s, dir).select(
+          (F.length(F.col("event_type")) % 3).cast("int").as("partition"),
+          F.col("event_type").as("key"),
+          F.col("props").as("value"),
+          F.col("ts"),
+          F.col("event_id")),
+        root, "events_out", orderCols = Seq("event_id"))
+      detach(KafkaShim.endOffsets(s, root, "events_out")
+        .select(F.col("partition").cast("int").as("part_id"), F.col("end_offset"), F.col("n")))
+    }
 
   // -------------------------------------------------------------- rescale
 

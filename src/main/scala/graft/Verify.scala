@@ -47,11 +47,10 @@ object Verify {
     // Stage the tokenizer encode streams the oracle SQL folds over
     // (referenced as __STAGE__/<name>; substituted below). Written
     // BEFORE the queries run so a stage failure surfaces here, and
-    // keyed by the sf directory name so runs at different scales never
-    // read each other's rows. Skipped when a restricted run selects no
-    // query that reads the stage.
-    val stageBase =
-      s"/tmp/graft_oracle_stage/${new java.io.File(sfDir).getName}"
+    // keyed by the sf directory's path so runs over different datasets
+    // never read each other's rows. Skipped when a restricted run selects
+    // no query that reads the stage.
+    val stageBase = SparkEntry.oracleStageRoot(sfDir).toString
     SparkEntry.oracleStages.foreach { case (name, fn) =>
       val needed = SparkEntry.oracleSql.exists { case (q, sql) =>
         sql.contains(s"__STAGE__/$name") && only.forall(_.contains(q))

@@ -329,11 +329,8 @@ object OperatorTestingAndRescale {
     println(s"flushed sessions: $emitted")           // Sessions(2, 1)
     t.close()
 
-    // 2. The same logic's production checkpoint can later be migrated to
-    //    a different partition count (or the state-v2 engine) offline:
-    //    see graft.streaming.StateRescale and the StreamingSpec
-    //    offline-rescale / engine-upgrade tests for the full round trip.
-    println("rescale: StateRescale.keyedState -> initialState re-seed (see docs/DEPLOY.md §4)")
+    // 2. Its stopped checkpoint resumes at a new partition count with
+    //    graft.streaming.StateRescale.resume.
     spark.stop()
   }
 

@@ -28,10 +28,12 @@ import org.apache.spark.sql.{functions => F}
   * the new `spark.sql.shuffle.partitions` and
   * `initialState = ` the read state (StatefulExec.stream's `initialState`
   * hook). Keys hash-route to the new layout in one shuffle; processing
-  * resumes with no state loss. The source stream's OFFSET progress is the
-  * caller's to carry over (for replayable sources, resume from the offsets
-  * recorded in the old checkpoint's `offsets/` log — [[lastCommittedOffsets]]
-  * surfaces them).
+  * resumes with no state loss. For a FILE source, [[resume]] does all of
+  * it in one call: the seed, the migration-point clock, and the source
+  * files the old checkpoint had not consumed, staged for the new query.
+  * For other sources the OFFSET progress is the caller's to carry over
+  * (for replayable sources, resume from the offsets recorded in the old
+  * checkpoint's `offsets/` log — [[lastCommittedOffsets]] surfaces them).
   *
   * Scale shape: the read is a parquet-like columnar scan of the state
   * files (no driver materialization), the re-seed is one hash exchange of
@@ -69,11 +71,9 @@ object StateRescale {
     * concurrent state export may pin to (offsets/N exists BEFORE batch N
     * runs; commits/N only after its state is durable). None when nothing
     * ever committed. */
-  def lastCommittedBatch(checkpointDir: String): Option[Long] = {
-    val committed = listNames(s"$checkpointDir/commits")
-      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
-    if (committed.isEmpty) None else Some(committed.max)
-  }
+  def lastCommittedBatch(checkpointDir: String): Option[Long] =
+    listNames(s"$checkpointDir/commits")
+      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).maxOption
 
   /** The typed (key, state) pairs of a flatMapGroupsWithState checkpoint —
     * the input `initialState` wants. The state source returns structs; a
@@ -150,15 +150,13 @@ object StateRescale {
     * that batch's input range entirely (in neither the migrated state
     * nor the replayed stream). The commits/ log is the truth the state
     * reader itself reflects. */
-  def lastCommittedOffsets(checkpointDir: String): Seq[String] = {
-    val committed = listNames(s"$checkpointDir/commits")
-      .filter(_.forall(_.isDigit)).map(_.toLong)
-    if (committed.isEmpty) return Seq.empty
-    raw(offsetsFile(checkpointDir, committed.max))
-      // line 0 is the version header ("v1"), line 1 the metadata JSON;
-      // the per-source offset JSONs follow.
-      .split("\n").toSeq.drop(2).filter(_.nonEmpty)
-  }
+  def lastCommittedOffsets(checkpointDir: String): Seq[String] =
+    lastCommittedBatch(checkpointDir).toSeq.flatMap { batch =>
+      raw(offsetsFile(checkpointDir, batch))
+        // line 0 is the version header ("v1"), line 1 the metadata JSON;
+        // the per-source offset JSONs follow.
+        .split("\n").toSeq.drop(2).filter(_.nonEmpty)
+    }
 
   /** The event-time watermark the last committed batch had reached
     * (0 when the query had no watermark). This is the MIGRATION-POINT
@@ -175,19 +173,17 @@ object StateRescale {
     * re-seed armed from it would expire every migrated key one batch of
     * event-time too early. Falls back to the offsets metadata for a
     * commit entry without the field. */
-  def lastWatermarkMs(checkpointDir: String): Option[Long] = {
-    val committed = listNames(s"$checkpointDir/commits")
-      .filter(_.forall(_.isDigit)).map(_.toLong)
-    if (committed.isEmpty) return None
-    val fromCommit =
-      "\"nextBatchWatermarkMs\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(
-        raw(s"$checkpointDir/commits/${committed.max}")).map(_.group(1).toLong)
-    fromCommit.orElse {
-      val meta = raw(offsetsFile(checkpointDir, committed.max)).split("\n")
-      "\"batchWatermarkMs\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(
-        meta.lift(1).getOrElse("")).map(_.group(1).toLong)
+  def lastWatermarkMs(checkpointDir: String): Option[Long] =
+    lastCommittedBatch(checkpointDir).flatMap { batch =>
+      val fromCommit =
+        "\"nextBatchWatermarkMs\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(
+          raw(s"$checkpointDir/commits/$batch")).map(_.group(1).toLong)
+      fromCommit.orElse {
+        val meta = raw(offsetsFile(checkpointDir, batch)).split("\n")
+        "\"batchWatermarkMs\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(
+          meta.lift(1).getOrElse("")).map(_.group(1).toLong)
+      }
     }
-  }
 
   /** The input files a stopped query's FILE source had consumed as of its
     * last COMMITTED batch — the complement (files present in the source
@@ -234,11 +230,11 @@ object StateRescale {
       .foldLeft(-1L)(math.max)
     val plainLe = entries.collect { case (_, b, false) if b <= logOffset => b }.toSet
     val uncovered = ((maxCompactLe + 1) to logOffset).filterNot(plainLe.contains)
-    if (uncovered.isEmpty)
-      entries.flatMap { case (n, b, _) =>
-        if (b <= logOffset) pathRe.findAllMatchIn(raw(s"$dir/$n")).map(_.group(1)).toSeq
-        else Seq.empty
-      }.distinct
+    val listed = entries.flatMap { case (n, b, _) =>
+      if (b <= logOffset) pathRe.findAllMatchIn(raw(s"$dir/$n")).map(_.group(1)).toSeq
+      else Seq.empty
+    }
+    if (uncovered.isEmpty) listed.distinct
     else {
       // retention dropped per-batch entries: recover them from the
       // OLDEST compact past logOffset, whose entries carry their batchId
@@ -257,12 +253,64 @@ object StateRescale {
             if b <= logOffset
           } yield p
         }
-      val fromPlain = entries.flatMap { case (n, b, _) =>
-        if (b <= logOffset) pathRe.findAllMatchIn(raw(s"$dir/$n")).map(_.group(1)).toSeq
-        else Seq.empty
-      }
-      (fromCompact ++ fromPlain).distinct
+      (fromCompact ++ listed).distinct
     }
+  }
+
+  /** What a resumed query needs from [[resume]]: the source files the old
+    * checkpoint had not consumed, in replay order; the `initialState`
+    * seed; and the migration-point clock for `initialStateTimeMs`. */
+  final case class Resumed[K, S](
+      unconsumed: Seq[String],
+      initialState: KeyValueGroupedDataset[K, S],
+      initialStateTimeMs: Option[Long])
+
+  /** Resume a STOPPED keyed stream over a file source at a new partition
+    * count: the data files under `sourceDir` that `checkpointDir` had not
+    * consumed ([[consumedFiles]]) are copied into `restDir` in arrival
+    * (mtime) order, each with a strictly later mtime than the one before,
+    * so a file source on `restDir` replays them in that order; the seed is
+    * [[initialStateFrom]] and the clock [[lastWatermarkMs]]. Call it under
+    * the NEW `spark.sql.shuffle.partitions`, as [[initialStateFrom]]
+    * requires; the engine, the logic and the new checkpoint stay the
+    * caller's.
+    *
+    * Data files are those Spark's file source reads: names starting with
+    * `_` or `.` (markers, checksums, `_temporary`) are skipped, at any
+    * depth. Paths compare qualified, so an `hdfs://` source works. A
+    * consumed file outside `sourceDir` is refused: it says `sourceDir` is
+    * not the old query's source, and a resume from it would re-read
+    * consumed input and double every total. */
+  def resume[K: Encoder, S: Encoder](spark: SparkSession, checkpointDir: String,
+      sourceDir: String, restDir: String): Resumed[K, S] = {
+    import org.apache.hadoop.fs.{FileStatus, FileUtil, Path}
+    val (fs, dir) = graft.HadoopFs.get(sourceDir)
+    val root = fs.makeQualified(dir)
+    def under(p: Path): Boolean = p != null && (p == root || under(p.getParent))
+    val consumed = consumedFiles(checkpointDir)
+      .map(new Path(_).makeQualified(fs.getUri, fs.getWorkingDirectory)).toSet
+    consumed.find(!under(_)).foreach(p => throw new IllegalStateException(
+      s"$checkpointDir consumed $p, which is not under $root: resuming from " +
+        "that source would re-read consumed input"))
+    def dataFiles(d: Path): Seq[FileStatus] =
+      fs.listStatus(d).toSeq
+        .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+        .flatMap(st => if (st.isDirectory) dataFiles(st.getPath) else Seq(st))
+    val rest = dataFiles(root).filterNot(st => consumed(st.getPath))
+      .sortBy(st => (st.getModificationTime, st.getPath.toString))
+    val (restFs, restRoot) = graft.HadoopFs.get(restDir)
+    restFs.mkdirs(restRoot)
+    // one second apart at least: a file source orders by mtime, and some
+    // stores keep it at second granularity
+    rest.zipWithIndex.foldLeft(Long.MinValue) { case (prev, (st, i)) =>
+      val dst = new Path(restRoot, f"part-$i%05d-${st.getPath.getName}")
+      FileUtil.copy(fs, st.getPath, restFs, dst, false, false, graft.HadoopFs.sessionConf())
+      val mtime = math.max(st.getModificationTime, prev + 1000L)
+      restFs.setTimes(dst, mtime, -1L)
+      mtime
+    }
+    Resumed(rest.map(_.getPath.toString),
+      initialStateFrom[K, S](spark, checkpointDir), lastWatermarkMs(checkpointDir))
   }
 
   private def offsetsFile(checkpointDir: String, batch: Long): String = {

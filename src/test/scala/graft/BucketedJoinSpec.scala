@@ -16,9 +16,7 @@ class BucketedJoinSpec extends AnyFunSuite with SparkFixture {
     val lineitem = Tables.lineitem(spark, sf001)
     Bucketing.writeBucketed(orders, "b_orders", 8, "o_orderkey")
     Bucketing.writeBucketed(lineitem, "b_lineitem", 8, "l_orderkey")
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
+    try SessionConf.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force SMJ
       val joined = spark.table("b_lineitem")
         .join(spark.table("b_orders"), F.col("l_orderkey") === F.col("o_orderkey"))
       val plan = joined.queryExecution.executedPlan.toString
@@ -27,7 +25,6 @@ class BucketedJoinSpec extends AnyFunSuite with SparkFixture {
       val expected = lineitem.join(orders, F.col("l_orderkey") === F.col("o_orderkey")).count()
       assert(joined.count() == expected)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_lineitem")
     }
@@ -41,9 +38,7 @@ class BucketedJoinSpec extends AnyFunSuite with SparkFixture {
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
     spark.sql("DROP TABLE IF EXISTS t_sig_idx")
     graft.dedup.Dedup.indexInit(docs.filter(F.col("doc_id") % 2 === 0), "t_sig_idx")
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
+    try SessionConf.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force SMJ
       val probe = graft.dedup.Dedup
         .minhashSignaturesFromDocs(docs.filter(F.col("doc_id") % 2 === 1), "doc_id", "text", 3, 8)
         .join(spark.table("t_sig_idx").withColumnRenamed("doc_id", "old_id"), Seq("band", "sig"))
@@ -57,10 +52,7 @@ class BucketedJoinSpec extends AnyFunSuite with SparkFixture {
         s"exchange found on the index side:\n$plan")
       assert(plan.contains("Bucketed: true"), s"index scan not bucketed:\n$plan")
       assert(probe.count() > 0)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS t_sig_idx")
-    }
+    } finally spark.sql("DROP TABLE IF EXISTS t_sig_idx")
   }
 
   test("incremental dedup: the probe-side heavy-hitter guard drops big index buckets") {

@@ -145,4 +145,19 @@ class GateHarnessSpec extends AnyFunSuite with SparkFixture {
     }
     assert(sinks == before, s"the sink must not outlive its call: ${sinks -- before}")
   }
+
+  test("the kafka gates write their topics to scratch that their call deletes") {
+    def topics = tmpEntries("graft_kafka_") ++ tmpEntries("graft_ckpt_kafka_")
+    val before = topics
+    Seq("q_kafka_source", "q_kafka_sink").foreach { q =>
+      assert(!SparkEntry.queries(q)(spark, sf001).isEmpty, s"$q returned no rows")
+    }
+    assert(topics == before, s"a topic outlived its call: ${topics -- before}")
+  }
+
+  test("Verify's oracle stages get one root per dataset path, under java.io.tmpdir") {
+    val roots = Seq("/data/a/sf0.01", "/data/b/sf0.01").map(SparkEntry.oracleStageRoot)
+    assert(roots.distinct.size == 2, s"two datasets named alike share $roots")
+    assert(roots.forall(_.getParent == Path.of(sys.props("java.io.tmpdir"))), s"$roots")
+  }
 }

@@ -1023,13 +1023,11 @@ class PipelineOpsSpec extends AnyFunSuite with SparkFixture {
     import graft.operators.Sampling
     val docs = spark.read.parquet(s"$sf001/documents.parquet").select("doc_id")
     val n = docs.count()
-    def run(parts: String): Map[Long, (Long, Long)] = {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try Sampling.shuffleShard(docs, nShards = 8).collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
+    def run(parts: String): Map[Long, (Long, Long)] =
+      SessionConf.withConf(spark, "spark.sql.shuffle.partitions" -> parts) {
+        Sampling.shuffleShard(docs, nShards = 8).collect()
+          .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      }
     val a = run("4")
     // bijection: every position 0..N-1 exactly once
     assert(a.values.map(_._1).toSet == (0L until n).toSet)
@@ -1050,13 +1048,11 @@ class PipelineOpsSpec extends AnyFunSuite with SparkFixture {
       .select("doc_id", "n_chars")
     val n = docs.count()
     val totalW = docs.agg(F.sum(F.col("n_chars").cast("double"))).head().getDouble(0)
-    def run(parts: String, k: Int, seed: String = "graft") = {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try Sampling.prioritySample(docs, "doc_id", F.col("n_chars"), k, seed)
-        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
+    def run(parts: String, k: Int, seed: String = "graft") =
+      SessionConf.withConf(spark, "spark.sql.shuffle.partitions" -> parts) {
+        Sampling.prioritySample(docs, "doc_id", F.col("n_chars"), k, seed)
+          .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+      }
     val k = 20
     val a = run("4", k)
     assert(a.length == k && a.map(_._1).distinct.length == k, "not k distinct rows")

@@ -19,19 +19,10 @@ trait SparkFixture { self: AnyFunSuite =>
     * factoryMode governs non-WSCG expression evaluation (projections,
     * filters outside codegen stages): CODEGEN_ONLY / NO_CODEGEN force the
     * two paths; FALLBACK is the production default. */
-  def withModes[A](codegen: Boolean)(body: => A): A = {
-    val conf = spark.conf
-    val ws = conf.get("spark.sql.codegen.wholeStage", "true")
-    val fm = conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    conf.set("spark.sql.codegen.wholeStage", codegen.toString)
-    conf.set("spark.sql.codegen.factoryMode",
-      if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
-    try body
-    finally {
-      conf.set("spark.sql.codegen.wholeStage", ws)
-      conf.set("spark.sql.codegen.factoryMode", fm)
-    }
-  }
+  def withModes[A](codegen: Boolean)(body: => A): A =
+    SessionConf.withConf(spark,
+      "spark.sql.codegen.wholeStage" -> codegen.toString,
+      "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"))(body)
 }
 
 object SparkFixture {

@@ -658,7 +658,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     val ckpt = s"$dir/ckpt"
     val outDir = s"$dir/out"
     Seq(SEvent(1, 10), SEvent(2, 5)).toDS().write.mode(SaveMode.Append).parquet(src)
-    val origParts = spark.conf.get("spark.sql.shuffle.partitions")
     def run(): Unit = {
       val stream = spark.readStream.schema("k LONG, v LONG").parquet(src).as[SEvent]
       val q = StatefulExec.stream[Long, SEvent, Long, STotal](stream, _.k, runningSum)
@@ -669,24 +668,20 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
         .outputMode("append").start()
       q.awaitTermination()
     }
-    try {
-      run()
-      Seq(SEvent(1, 7)).toDS().write.mode(SaveMode.Append).parquet(src)
-      // "rescale": ask for a different shuffle parallelism on restart — the
-      // state store layout pins its partitioning from the checkpoint, so
-      // keyed state must survive regardless of the new session setting.
-      spark.conf.set("spark.sql.shuffle.partitions", "9")
-      run()
-      val rows = spark.read.parquet(outDir).as[STotal].collect().toSeq
-      assert(rows.contains(STotal(1, 17)), s"state lost across rescale-restart: $rows")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", origParts)
+    run()
+    Seq(SEvent(1, 7)).toDS().write.mode(SaveMode.Append).parquet(src)
+    // "rescale": ask for a different shuffle parallelism on restart — the
+    // state store layout pins its partitioning from the checkpoint, so
+    // keyed state must survive regardless of the new session setting.
+    SessionConf.withConf(spark, "spark.sql.shuffle.partitions" -> "9")(run())
+    val rows = spark.read.parquet(outDir).as[STotal].collect().toSeq
+    assert(rows.contains(STotal(1, 17)), s"state lost across rescale-restart: $rows")
   }
 
   test("offline state rescale: migrated checkpoint adopts the NEW partition count with no state loss") {
     import spark.implicits._
     import graft.streaming.StateRescale
     val dir = tempDir("graft_migrate_").toString
-    val origParts = spark.conf.get("spark.sql.shuffle.partitions")
     def runPhase(src: String, ckpt: String, outDir: String,
                  init: Option[org.apache.spark.sql.KeyValueGroupedDataset[Long, Long]]): Unit = {
       val stream = spark.readStream.schema("k LONG, v LONG").parquet(src).as[SEvent]
@@ -699,21 +694,20 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
         .outputMode("append").start()
       q.awaitTermination()
     }
-    try {
-      // Phase A: state laid out at the fixture's 4 shuffle partitions.
-      Seq(SEvent(1, 10), SEvent(2, 5)).toDS()
-        .write.mode(SaveMode.Append).parquet(s"$dir/inA")
-      runPhase(s"$dir/inA", s"$dir/ckptA", s"$dir/outA", None)
-      val oldLayout = StateRescale.statePartitionCount(s"$dir/ckptA")
-      assert(oldLayout == 4, s"phase A should pin 4 state partitions, got $oldLayout")
+    // Phase A: state laid out at the fixture's 4 shuffle partitions.
+    Seq(SEvent(1, 10), SEvent(2, 5)).toDS()
+      .write.mode(SaveMode.Append).parquet(s"$dir/inA")
+    runPhase(s"$dir/inA", s"$dir/ckptA", s"$dir/outA", None)
+    val oldLayout = StateRescale.statePartitionCount(s"$dir/ckptA")
+    assert(oldLayout == 4, s"phase A should pin 4 state partitions, got $oldLayout")
 
-      // Migrate: read every (key, state) pair out of the stopped
-      // checkpoint, then seed a FRESH checkpoint under partitions = 9.
-      val migrated = StateRescale.keyedState[Long, Long](spark, s"$dir/ckptA")
-        .collect().toMap
-      assert(migrated == Map(1L -> 10L, 2L -> 5L),
-        s"state reader lost pairs: $migrated")
-      spark.conf.set("spark.sql.shuffle.partitions", "9")
+    // Migrate: read every (key, state) pair out of the stopped
+    // checkpoint, then seed a FRESH checkpoint under partitions = 9.
+    val migrated = StateRescale.keyedState[Long, Long](spark, s"$dir/ckptA")
+      .collect().toMap
+    assert(migrated == Map(1L -> 10L, 2L -> 5L),
+      s"state reader lost pairs: $migrated")
+    SessionConf.withConf(spark, "spark.sql.shuffle.partitions" -> "9") {
       val init = StateRescale.initialStateFrom[Long, Long](spark, s"$dir/ckptA")
 
       // Phase B: same logic, new checkpoint, migrated initial state. Key 1
@@ -721,45 +715,42 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       Seq(SEvent(1, 7), SEvent(3, 2)).toDS()
         .write.mode(SaveMode.Append).parquet(s"$dir/inB")
       runPhase(s"$dir/inB", s"$dir/ckptB", s"$dir/outB", Some(init))
+    }
 
-      val rows = spark.read.parquet(s"$dir/outB").as[STotal].collect().toSeq
-      assert(rows.contains(STotal(1, 17)),
-        s"migrated state was not carried into the rescaled query: $rows")
-      assert(rows.contains(STotal(3, 2)), s"fresh key mishandled: $rows")
-      // The genuinely-changed layout: the new checkpoint is pinned to 9.
-      val newLayout = StateRescale.statePartitionCount(s"$dir/ckptB")
-      assert(newLayout == 9,
-        s"migration did not change the state layout: $newLayout partitions")
-      // And the old checkpoint still resumes its sources where it stopped.
-      assert(StateRescale.lastCommittedOffsets(s"$dir/ckptA").nonEmpty,
-        "old checkpoint's committed offsets should be readable for source resume")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", origParts)
+    val rows = spark.read.parquet(s"$dir/outB").as[STotal].collect().toSeq
+    assert(rows.contains(STotal(1, 17)),
+      s"migrated state was not carried into the rescaled query: $rows")
+    assert(rows.contains(STotal(3, 2)), s"fresh key mishandled: $rows")
+    // The genuinely-changed layout: the new checkpoint is pinned to 9.
+    val newLayout = StateRescale.statePartitionCount(s"$dir/ckptB")
+    assert(newLayout == 9,
+      s"migration did not change the state layout: $newLayout partitions")
+    // And the old checkpoint still resumes its sources where it stopped.
+    assert(StateRescale.lastCommittedOffsets(s"$dir/ckptA").nonEmpty,
+      "old checkpoint's committed offsets should be readable for source resume")
   }
 
   test("engine upgrade: fMGWS checkpoint state seeds a transformWithState query") {
     import spark.implicits._
     import graft.streaming.StateRescale
     val dir = tempDir("graft_upgrade_").toString
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try {
-      // Phase A on the v1 engine (flatMapGroupsWithState).
-      Seq(SEvent(1, 10), SEvent(2, 5)).toDS()
-        .write.mode(SaveMode.Append).parquet(s"$dir/inA")
-      val qa = StatefulExec.stream[Long, SEvent, Long, STotal](
-        spark.readStream.schema("k LONG, v LONG").parquet(s"$dir/inA").as[SEvent],
-        _.k, runningSum)
-        .writeStream.option("checkpointLocation", s"$dir/ckptA")
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", s"$dir/outA")
-        .outputMode("append").start()
-      qa.awaitTermination()
+    // Phase A on the v1 engine (flatMapGroupsWithState).
+    Seq(SEvent(1, 10), SEvent(2, 5)).toDS()
+      .write.mode(SaveMode.Append).parquet(s"$dir/inA")
+    val qa = StatefulExec.stream[Long, SEvent, Long, STotal](
+      spark.readStream.schema("k LONG, v LONG").parquet(s"$dir/inA").as[SEvent],
+      _.k, runningSum)
+      .writeStream.option("checkpointLocation", s"$dir/ckptA")
+      .trigger(Trigger.AvailableNow())
+      .format("parquet").option("path", s"$dir/outA")
+      .outputMode("append").start()
+    qa.awaitTermination()
 
-      // Migrate the v1 state into a v2 (transformWithState) query — the
-      // offline engine-upgrade path: same StateRescale read, landed via
-      // StatefulProcessorWithInitialState.handleInitialState.
-      val init = StateRescale.initialStateFrom[Long, Long](spark, s"$dir/ckptA")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // Migrate the v1 state into a v2 (transformWithState) query — the
+    // offline engine-upgrade path: same StateRescale read, landed via
+    // StatefulProcessorWithInitialState.handleInitialState.
+    val init = StateRescale.initialStateFrom[Long, Long](spark, s"$dir/ckptA")
+    SessionConf.withConf(spark, SessionConf.RocksDbProvider) {
       Seq(SEvent(1, 7), SEvent(3, 2)).toDS()
         .write.mode(SaveMode.Append).parquet(s"$dir/inB")
       val qb = StatefulExec.streamTws[Long, SEvent, Long, STotal](
@@ -770,15 +761,12 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
         .format("parquet").option("path", s"$dir/outB")
         .outputMode("append").start()
       qb.awaitTermination()
-
-      val rows = spark.read.parquet(s"$dir/outB").as[STotal].collect().toSeq
-      assert(rows.contains(STotal(1, 17)),
-        s"v1 state not carried into the v2 engine: $rows")
-      assert(rows.contains(STotal(3, 2)), s"fresh key mishandled: $rows")
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
+
+    val rows = spark.read.parquet(s"$dir/outB").as[STotal].collect().toSeq
+    assert(rows.contains(STotal(1, 17)),
+      s"v1 state not carried into the v2 engine: $rows")
+    assert(rows.contains(STotal(3, 2)), s"fresh key mishandled: $rows")
   }
 
   test("TTL'd migration: seeded keys expire one TTL after the migration point, not at epoch 1970") {
@@ -926,8 +914,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     import graft.streaming.StateRescale
     val dir = tempDir("graft_e2e_mig_").toString
-    val origParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     // Emits ONLY on expiry — so every output row is a (key, final_total)
     // the TTL machinery flushed, and row-identity between the two runs
     // checks state carry + offset resume + expiry clocks all at once:
@@ -956,10 +942,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     val f3 = Seq(ev(9, 0, 200))                 // frontier -> 200 min
     val f4 = Seq(ev(8, 0, 201))                 // expiry-delivery batch
     val expected = Set(STotal(1, 17), STotal(2, 5), STotal(3, 2))
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
+    SessionConf.withConf(spark, SessionConf.RocksDbProvider) {
       // ----- Reference: ONE never-stopped query over the same timeline.
       implicit val sqlCtx = spark.sqlContext
       val refIn = MemoryStream[WmEvent]
@@ -995,53 +978,34 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       f3.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(src)
       f4.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(src)
 
-      // ----- Migrate: offsets say what was consumed; the DIFFERENCE is
-      // what the resumed query reads (derived, not assumed).
-      def leaf(uri: String) =
-        new org.apache.hadoop.fs.Path(uri).toUri.getPath
-      val consumed = StateRescale.consumedFiles(s"$dir/ckptA").map(leaf).toSet
-      assert(consumed.nonEmpty && consumed.forall(_.contains("/in/")),
-        s"consumedFiles should list phase-A input: $consumed")
-      // Arrival order = original mtime order (parquet part names are
-      // UUIDs; a path sort would scramble the event-time line).
-      val allParts = new java.io.File(src).listFiles()
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .sortBy(_.lastModified())
-        .map(_.getAbsolutePath).toSeq
-      val unconsumed = allParts.filterNot(consumed.contains)
-      assert(consumed == (allParts.toSet -- unconsumed),
-        s"offset log and directory listing disagree: $consumed vs $allParts")
-      assert(unconsumed.size == 3, s"expected f2-f4 unconsumed: $unconsumed")
-      // Stage the un-consumed files for the resumed query, mtime-ordered
-      // by original arrival so the file source replays them in arrival
-      // order (ts-200 before ts-201 etc. — the order the frontier needs).
-      val srcB = java.nio.file.Paths.get(s"$dir/inB")
-      Files.createDirectories(srcB)
-      unconsumed.zipWithIndex.foreach { case (p, i) =>
-        val dst = srcB.resolve(f"part$i%03d.parquet")
-        Files.copy(java.nio.file.Paths.get(p), dst)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-      val wmA = StateRescale.lastWatermarkMs(s"$dir/ckptA")
-      assert(wmA.contains(12 * 60000L),
-        s"phase-A committed watermark should stand at minute 12: $wmA")
-
-      // ----- Phase B (v2 engine, 9 partitions): seed from ckptA, arm TTL
-      // at the migration-point clock, read ONLY the unconsumed files.
-      spark.conf.set("spark.sql.shuffle.partitions", "9")
-      val init = StateRescale.initialStateFrom[Long, Long](spark, s"$dir/ckptA")
-      val qb = StatefulExec.streamTws[Long, WmEvent, Long, STotal](
-        watermarked(spark.readStream
-          .schema("k LONG, v LONG, ts TIMESTAMP")
-          .option("maxFilesPerTrigger", 1).parquet(srcB.toString)),
-        _.k, silentSum, ttlMs = Some(ttl), eventTimeMs = Some(_.ts.getTime),
-        initialState = Some(init), initialStateTimeMs = wmA)
-        .writeStream.option("checkpointLocation", s"$dir/ckptB")
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", s"$dir/outB")
-        .outputMode("append").start()
-      qb.awaitTermination()
+      // ----- Phase B (v2 engine, 9 partitions): `resume` stages ONLY the
+      // files ckptA's offsets had not consumed, seeds from ckptA and arms
+      // TTL at the migration-point clock.
+      SessionConf.withConf(spark, "spark.sql.shuffle.partitions" -> "9") {
+        val r = StateRescale.resume[Long, Long](spark, s"$dir/ckptA", src, s"$dir/inB")
+        // Arrival order = original mtime order (parquet part names are
+        // UUIDs; a path sort would scramble the event-time line).
+        val allParts = new java.io.File(src).listFiles()
+          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+          .sortBy(_.lastModified())
+          .map(_.getAbsolutePath).toSeq
+        val unconsumed = r.unconsumed.map(new org.apache.hadoop.fs.Path(_).toUri.getPath)
+        assert(unconsumed == allParts.tail,
+          s"offset log and directory listing disagree: $unconsumed vs $allParts")
+        assert(unconsumed.size == 3, s"expected f2-f4 unconsumed: $unconsumed")
+        assert(r.initialStateTimeMs.contains(12 * 60000L),
+          s"phase-A committed watermark should stand at minute 12: ${r.initialStateTimeMs}")
+        StatefulExec.streamTws[Long, WmEvent, Long, STotal](
+          watermarked(spark.readStream
+            .schema("k LONG, v LONG, ts TIMESTAMP")
+            .option("maxFilesPerTrigger", 1).parquet(s"$dir/inB")),
+          _.k, silentSum, ttlMs = Some(ttl), eventTimeMs = Some(_.ts.getTime),
+          initialState = Some(r.initialState), initialStateTimeMs = r.initialStateTimeMs)
+          .writeStream.option("checkpointLocation", s"$dir/ckptB")
+          .trigger(Trigger.AvailableNow())
+          .format("parquet").option("path", s"$dir/outB")
+          .outputMode("append").start()
+      }.awaitTermination()
       assert(StateRescale.statePartitionCount(s"$dir/ckptB") == 9,
         "migration did not adopt the new layout")
 
@@ -1053,13 +1017,67 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
         .parquet(s"$dir/outB").as[STotal].collect().toSet
       assert(migRows == refRows,
         s"migrated run diverged from the never-stopped run: $migRows vs $refRows")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", origParts)
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
+  }
+
+  /** Land `name.parquet`, one `SEvent(v, v)`, in `dir/in` with mtime
+    * `mtimeMs`. */
+  private def putFile(dir: String, name: String, v: Long, mtimeMs: Long): Unit = {
+    import spark.implicits._
+    val w = s"$dir/w_$name"
+    Seq(SEvent(v, v)).toDS().coalesce(1).write.parquet(w)
+    val part = new java.io.File(w).listFiles().find(_.getName.endsWith(".parquet")).get
+    val dst = Files.createDirectories(java.nio.file.Paths.get(s"$dir/in")).resolve(s"$name.parquet")
+    Files.move(part.toPath, dst)
+    Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
+  }
+
+  /** A keyed stream over `dir/in`, checkpointed at `dir/ckpt`, stopped
+    * once it has consumed every file there now. */
+  private def consumeAll(dir: String): Unit = {
+    import spark.implicits._
+    StatefulExec.stream[Long, SEvent, Long, STotal](
+      spark.readStream.schema("k LONG, v LONG").parquet(s"$dir/in").as[SEvent], _.k, runningSum)
+      .writeStream.option("checkpointLocation", s"$dir/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .format("noop").outputMode("append").start()
+      .awaitTermination()
+  }
+
+  test("StateRescale.resume replays the unconsumed files in mtime order, not name order") {
+    import spark.implicits._
+    import graft.streaming.StateRescale
+    val dir = tempDir("graft_resume_order_").toString
+    val t0 = 1700000000000L
+    putFile(dir, "f", 0L, t0)
+    consumeAll(dir)
+    // a..e arrive newest-first, so name order is the reverse of mtime
+    // order; they are created in neither order
+    Seq("c" -> 3L, "a" -> 5L, "e" -> 1L, "b" -> 4L, "d" -> 2L)
+      .foreach { case (n, i) => putFile(dir, n, i, t0 + i * 60000L) }
+    val r = StateRescale.resume[Long, Long](spark, s"$dir/ckpt", s"$dir/in", s"$dir/rest")
+    assert(r.unconsumed.map(new org.apache.hadoop.fs.Path(_).getName) ==
+      Seq("e", "d", "c", "b", "a").map(n => s"$n.parquet"), s"replay order: ${r.unconsumed}")
+    // a file source on the rest dir admits files in mtime order
+    val copies = new java.io.File(s"$dir/rest").listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.lastModified()).toSeq
+    assert(copies.map(_.lastModified()).distinct.size == 5, s"mtimes must differ: $copies")
+    assert(copies.map(f => spark.read.parquet(f.getPath).as[SEvent].head().v) == Seq(1L, 2L, 3L, 4L, 5L))
+  }
+
+  test("StateRescale.resume refuses a source dir that does not hold the consumed files") {
+    import spark.implicits._
+    import graft.streaming.StateRescale
+    val dir = tempDir("graft_resume_wrong_src_").toString
+    putFile(dir, "f", 0L, 1700000000000L)
+    consumeAll(dir)
+    // a copy of the input elsewhere: resuming from it would re-read f
+    val copy = Files.createDirectories(java.nio.file.Paths.get(s"$dir/copy"))
+    Files.copy(java.nio.file.Paths.get(s"$dir/in/f.parquet"), copy.resolve("f.parquet"))
+    val err = intercept[IllegalStateException](
+      StateRescale.resume[Long, Long](spark, s"$dir/ckpt", copy.toString, s"$dir/rest"))
+    assert(err.getMessage.contains(s"$dir/in/f.parquet"), err.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/rest")), "nothing may be staged")
   }
 
   test("SinkGate: nothing public until open, marker-last publish, idempotent replay") {

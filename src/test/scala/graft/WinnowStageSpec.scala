@@ -52,20 +52,10 @@ class WinnowStageSpec extends AnyFunSuite with SparkFixture {
 
   test("KgramHashesExpr: generated and interpreted paths agree") {
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
-    def run(codegen: Boolean): Seq[String] = {
-      val conf = spark.conf
-      val ws = conf.get("spark.sql.codegen.wholeStage", "true")
-      val fm = conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-      conf.set("spark.sql.codegen.wholeStage", codegen.toString)
-      conf.set("spark.sql.codegen.factoryMode",
-        if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
-      try docs.select(F.col("doc_id"),
+    def run(codegen: Boolean): Seq[String] = withModes(codegen) {
+      docs.select(F.col("doc_id"),
           TextFunctions.kgramHashes(F.col("text"), k).as("hs"))
         .collect().map(_.toString).sorted.toSeq
-      finally {
-        conf.set("spark.sql.codegen.wholeStage", ws)
-        conf.set("spark.sql.codegen.factoryMode", fm)
-      }
     }
     assert(run(codegen = true) == run(codegen = false))
   }

@@ -56,10 +56,8 @@ class ZeroDowntimeSpec extends AnyFunSuite with SparkFixture {
       .map(t => (t.k, t.total)).sorted.toSeq
     refQ.stop()
 
-    val origParts = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
+    SessionConf.withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
       // ----- OLD: owns everything below the fence, publishes directly
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
       val oldIn = MemoryStream[SEvent]
       val oldQ = StatefulExec.stream[Long, SEvent, Long, STotal](
         oldIn.toDS(), _.k, runningSum)
@@ -78,41 +76,42 @@ class ZeroDowntimeSpec extends AnyFunSuite with SparkFixture {
         spark, s"$dir/ckptOld", batchId = pin)
 
       // ----- NEW: different layout, post-fence input, gate CLOSED
-      spark.conf.set("spark.sql.shuffle.partitions", "9")
-      val gate = new SinkGate(s"$dir/stage", s"$dir/public")
-      val newIn = MemoryStream[SEvent]
-      val newQ = StatefulExec.stream[Long, SEvent, Long, STotal](
-        newIn.toDS(), _.k, runningSum, initialState = Some(seed))
-        .writeStream
-        .option("checkpointLocation", s"$dir/ckptNew")
-        .foreachBatch((batch: org.apache.spark.sql.Dataset[STotal], id: Long) =>
-          gate.sink(batch.toDF(), id))
-        .outputMode("append").start()
-      // the OVERLAP: NEW processes f3 while OLD is still up
-      newIn.addData(f3: _*); newQ.processAllAvailable()
-      assert(oldQ.isActive, "the overlap must be real: OLD still running")
-      assert(!new java.io.File(s"$dir/public").exists() ||
-        new java.io.File(s"$dir/public").listFiles().isEmpty,
-        "gate closed but NEW output became public")
+      SessionConf.withConf(spark, "spark.sql.shuffle.partitions" -> "9") {
+        val gate = new SinkGate(s"$dir/stage", s"$dir/public")
+        val newIn = MemoryStream[SEvent]
+        val newQ = StatefulExec.stream[Long, SEvent, Long, STotal](
+          newIn.toDS(), _.k, runningSum, initialState = Some(seed))
+          .writeStream
+          .option("checkpointLocation", s"$dir/ckptNew")
+          .foreachBatch((batch: org.apache.spark.sql.Dataset[STotal], id: Long) =>
+            gate.sink(batch.toDF(), id))
+          .outputMode("append").start()
+        // the OVERLAP: NEW processes f3 while OLD is still up
+        newIn.addData(f3: _*); newQ.processAllAvailable()
+        assert(oldQ.isActive, "the overlap must be real: OLD still running")
+        assert(!new java.io.File(s"$dir/public").exists() ||
+          new java.io.File(s"$dir/public").listFiles().isEmpty,
+          "gate closed but NEW output became public")
 
-      // ----- phase 3: drain OLD at the fence, CHECK, then cut over
-      oldQ.processAllAvailable(); oldQ.stop()
-      assert(StateRescale.lastCommittedBatch(s"$dir/ckptOld").contains(pin),
-        "OLD advanced past the export pin — the fence was not respected " +
-          "and the seed is stale (the delta re-seed path would be required)")
-      gate.open()
-      newIn.addData(f4: _*); newQ.processAllAvailable(); newQ.stop()
-      assert(StateRescale.statePartitionCount(s"$dir/ckptNew") == 9,
-        "NEW did not adopt the new layout")
+        // ----- phase 3: drain OLD at the fence, CHECK, then cut over
+        oldQ.processAllAvailable(); oldQ.stop()
+        assert(StateRescale.lastCommittedBatch(s"$dir/ckptOld").contains(pin),
+          "OLD advanced past the export pin — the fence was not respected " +
+            "and the seed is stale (the delta re-seed path would be required)")
+        gate.open()
+        newIn.addData(f4: _*); newQ.processAllAvailable(); newQ.stop()
+        assert(StateRescale.statePartitionCount(s"$dir/ckptNew") == 9,
+          "NEW did not adopt the new layout")
 
-      // ----- the contract: OLD's output ∪ NEW's published output == ref
-      val oldRows = spark.read.schema("k LONG, total LONG")
-        .parquet(s"$dir/outOld").as[STotal].collect()
-      val newRows = spark.read.schema("k LONG, total LONG")
-        .parquet(s"$dir/public").as[STotal].collect()
-      val got = (oldRows ++ newRows).map(t => (t.k, t.total)).sorted.toSeq
-      assert(got == refRows,
-        s"handoff diverged from the never-stopped run: $got vs $refRows")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", origParts)
+        // ----- the contract: OLD's output ∪ NEW's published output == ref
+        val oldRows = spark.read.schema("k LONG, total LONG")
+          .parquet(s"$dir/outOld").as[STotal].collect()
+        val newRows = spark.read.schema("k LONG, total LONG")
+          .parquet(s"$dir/public").as[STotal].collect()
+        val got = (oldRows ++ newRows).map(t => (t.k, t.total)).sorted.toSeq
+        assert(got == refRows,
+          s"handoff diverged from the never-stopped run: $got vs $refRows")
+      }
+    }
   }
 }
