@@ -47,8 +47,9 @@ object OracleSql {
 
   /** The deterministic bottom-k KMV quantile oracle, shared verbatim by
     * q_percentile_sketch (batch) and q_stream_percentile_sketch (the
-    * fMGWS-maintained sample): streamed state ≡ batch sample because
-    * bottom-k is a function of the set, not arrival order. */
+    * same sample as a streaming aggregation): streamed state ≡ batch
+    * sample because bottom-k is a function of the set, not arrival
+    * order. */
   private lazy val kmvSketchSql: String =
     s"""WITH qsr AS (
        |  SELECT event_type, value, md5(CAST(event_id AS VARCHAR)) AS qs_key
@@ -71,9 +72,9 @@ object OracleSql {
     * the base vs the noise-drifted snapshot; Laplace-smoothed
     * proportions, ln on round-6 shared text (values only), total =
     * DECIMAL-exact sum of the rounded terms. Shared verbatim by
-    * q_psi_drift (batch) and q_stream_psi (the fMGWS-maintained
-    * histogram): streamed counts ≡ batch counts because a histogram is
-    * a function of the set, not arrival order. */
+    * q_psi_drift (batch) and q_stream_psi (the drifted histogram as a
+    * streaming aggregation): streamed counts ≡ batch counts because a
+    * histogram is a function of the set, not arrival order. */
   private lazy val psiDriftSql: String =
     s"""WITH a AS (SELECT round($qualityExpr, 6) AS q FROM documents),
        |bsrc AS (SELECT concat(text, CASE WHEN doc_id % 4 = 0
@@ -237,9 +238,9 @@ object OracleSql {
       |FROM r WHERE rn = 1""".stripMargin
 
   /** The priority-sample oracle, shared verbatim by q_sample_priority
-    * (batch) and q_stream_sample_priority (the fMGWS-maintained top-(k+1)
-    * candidate set): streamed sample ≡ batch sample because top-m under a
-    * total order is merge-closed. */
+    * (batch) and q_stream_sample_priority (the top-(k+1) candidate set
+    * as a streaming aggregation): streamed sample ≡ batch sample because
+    * top-m under a total order is merge-closed. */
   private lazy val prioritySampleSql: String =
     """WITH p AS (
       |  SELECT doc_id, CAST(n_chars AS DOUBLE) AS weight,
@@ -995,8 +996,8 @@ object OracleSql {
     // the batch HLL SQL.
     "q_stream_distinct_sketch" -> hllSketchSql,
 
-    // STREAMING KMV maintenance: the bottom-k sample lives as fMGWS state
-    // (union + re-bottom-k); the final snapshot equals the batch sample
+    // STREAMING KMV maintenance: the bottom-k sample lives as streaming-agg
+    // state (union + re-bottom-k); the final state equals the batch sample
     // (bottom-k is a function of the set), so the oracle IS the batch SQL.
     "q_stream_percentile_sketch" -> kmvSketchSql,
 
@@ -2713,8 +2714,8 @@ object OracleSql {
     "q_sample_priority" -> prioritySampleSql,
 
     // STREAMING priority-sample maintenance: the top-(k+1) candidate set
-    // is merge-closed under (priority DESC, id ASC), lives as fMGWS state,
-    // and the final snapshot feeds the audited batch sampler — streamed
+    // is merge-closed under (priority DESC, id ASC), lives as streaming-agg
+    // state, and the final state feeds the batch sampler — streamed
     // sample ≡ batch sample, so the oracle IS the batch SQL.
     "q_stream_sample_priority" -> prioritySampleSql,
 

@@ -500,50 +500,35 @@ object SparkEntry {
     graft.functions.Sketches.hllEstimate(regDf, Seq("event_type"))
   }
 
-  /** STREAMING KMV quantile-sketch maintenance
-    * ([[graft.streaming.StreamingOps.bottomKSampleStream]]): the bottom-k
-    * sample lives as flatMapGroupsWithState state (union + re-bottom-k is
-    * the KMV merge rule — bounded at groups × k entries), each
-    * micro-batch emits a versioned snapshot, and the FINAL snapshot
-    * (max cumulative-count `ver` per group) feeds the same nearest-rank
+  /** STREAMING KMV quantile-sketch maintenance: the batch
+    * [[graft.functions.Sketches.bottomKSample]] runs on the stream
+    * unchanged as a complete-mode streaming aggregation (union +
+    * re-bottom-k is the KMV merge rule, so the state holds at most
+    * groups × k rows), and its sample feeds the same nearest-rank
     * selection as the batch sketch. Oracle = q_percentile_sketch's SQL
-    * verbatim: streamed state ≡ batch sample, because bottom-k is a
-    * function of the SET, not of arrival order. */
+    * verbatim: bottom-k is a function of the SET, not of arrival order. */
   private def qStreamPercentileSketch(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val stream = stagedEvents(s, dir).stream(s)
-    val snaps = graft.streaming.StreamingOps.bottomKSampleStream(
-      stream, "event_type", "value", "event_id")
-    val collected = runMemoryGate(s, snaps, "graft_stream_kmv", mode = "append")
-    val latest = collected
-      .withColumn("_mx", F.max("ver").over(Window.partitionBy(F.col("event_type"))))
-      .filter(F.col("ver") === F.col("_mx"))
-      .select(F.col("event_type"), F.col("qs_key"), F.col("value"))
-    graft.functions.Sketches.sampleQuantiles(latest, Seq("event_type"), "value",
-      Seq("p50_est" -> 0.5, "p95_est" -> 0.95))
+    val sample = graft.functions.Sketches.bottomKSample(
+      stagedEvents(s, dir).stream(s), Seq("event_type"), "value", "event_id")
+    graft.functions.Sketches.sampleQuantiles(
+      runMemoryGate(s, sample, "graft_stream_kmv", mode = "complete"),
+      Seq("event_type"), "value", Seq("p50_est" -> 0.5, "p95_est" -> 0.95))
   }
 
-  /** STREAMING priority-sample maintenance
-    * ([[graft.streaming.StreamingOps.prioritySampleStream]]) — the
-    * [[qStreamHeavyHitters]] pattern for the sampling tier: the top-(k+1)
-    * candidate set by (priority DESC, id ASC) is merge-closed under its
-    * total order, so it lives as flatMapGroupsWithState state (bounded at
-    * k+1 entries however much stream passes); the final snapshot's (id, weight) rows
-    * feed the audited batch [[graft.operators.Sampling.prioritySample]],
-    * which recomputes rank, tau and the subset-sum estimator on <= k+1
-    * rows. Streamed state is LOAD-BEARING (it decides the candidate set);
-    * oracle = q_sample_priority's SQL verbatim — streamed sample ≡ batch
-    * sample of the whole table. */
+  /** STREAMING priority-sample maintenance: the top-(k+1) candidate set
+    * ([[graft.operators.Sampling.priorityCandidates]]) is a
+    * complete-mode streaming aggregation (top-m under a total order is
+    * merge-closed, so the state holds at most k+1 rows), and its (id,
+    * weight) rows feed the batch [[graft.operators.Sampling.prioritySample]],
+    * which recomputes rank, tau and the subset-sum estimator. The
+    * streamed state decides the candidate set; oracle =
+    * q_sample_priority's SQL verbatim. */
   private def qStreamSamplePriority(s: SparkSession, dir: String): DataFrame = {
-    val stream = stagedDocs(s, dir).stream(s)
-    val snaps = graft.streaming.StreamingOps.prioritySampleStream(
-      stream.select("doc_id", "n_chars"), "doc_id", F.col("n_chars"), k = 100)
-    val collected = runMemoryGate(s, snaps, "graft_stream_psample", mode = "append")
-    val mx = collected.agg(F.max(F.col("ver")).as("_mx"))
-    val latest = collected.crossJoin(F.broadcast(mx))
-      .filter(F.col("ver") === F.col("_mx"))
-      .select(F.col("id").as("doc_id"), F.col("weight").as("n_chars"))
-    graft.operators.Sampling.prioritySample(latest, "doc_id", F.col("n_chars"), k = 100)
+    val candidates = graft.operators.Sampling.priorityCandidates(
+      stagedDocs(s, dir).stream(s), "doc_id", F.col("n_chars"), k = 100)
+    graft.operators.Sampling.prioritySample(
+      runMemoryGate(s, candidates, "graft_stream_psample", mode = "complete"),
+      "doc_id", F.col("weight"), k = 100)
   }
 
   /** The SAME epoch-window aggregation, executed as a real Structured
@@ -2465,29 +2450,20 @@ object SparkEntry {
   }
 
   /** The SAME PSI drift report with the DRIFTED snapshot arriving as a
-    * STREAM ([[graft.streaming.StreamingOps.psiBucketsStream]]):
-    * per-bucket counts live as flatMapGroupsWithState state under the
-    * batch operator's own fixed bin edges, the final histogram is
-    * max(cumulative n) per bucket off the append sink, and
-    * the PSI tail ([[graft.operators.Profile.psiFromHistograms]]) runs
-    * against the batch reference histogram. Oracle = q_psi_drift's SQL
-    * verbatim — per-bucket counts are order-free, so the streamed
-    * histogram of the whole table ≡ the batch histogram. */
+    * STREAM: [[graft.operators.Profile.psiHistogram]] runs on it as a
+    * complete-mode streaming aggregation (at most 10 bucket counts of
+    * state) and on the base snapshot as a batch, and
+    * [[graft.operators.Profile.psiFromHistograms]] folds the two.
+    * Oracle = q_psi_drift's SQL verbatim: counts are order-free. */
   private def qStreamPsiDrift(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
-    val refHist = docs
-      .select(F.round(TF.qualityScore(F.col("text")), 6).as("q"))
-      .select(graft.operators.Profile.psiBucket(F.col("q"), 10).as("bucket"))
-      .groupBy(F.col("bucket")).agg(F.count(F.lit(1)).as("n_a"))
-    val stream = stagedDocs(s, dir).stream(s)
+    import graft.operators.Profile
+    val ref = T(s, dir, "documents").select(F.round(TF.qualityScore(F.col("text")), 6).as("q"))
     val drifted = F.concat(F.col("text"),
       F.when(F.col("doc_id") % 4 === 0, F.lit(" !!! ### 12345 $$$ %%% 999"))
         .otherwise(F.lit("")))
-    val qb = stream.select(F.round(TF.qualityScore(drifted), 6).as("q"))
-    val snaps = graft.streaming.StreamingOps.psiBucketsStream(qb, "q")
-    val collected = runMemoryGate(s, snaps, "graft_stream_psi", mode = "append")
-    val bHist = collected.groupBy(F.col("bucket")).agg(F.max(F.col("n")).as("n_b"))
-    graft.operators.Profile.psiFromHistograms(refHist, bHist)
+    val snap = stagedDocs(s, dir).stream(s).select(F.round(TF.qualityScore(drifted), 6).as("q"))
+    Profile.psiFromHistograms(Profile.psiHistogram(ref, "q"),
+      runMemoryGate(s, Profile.psiHistogram(snap, "q"), "graft_stream_psi", mode = "complete"))
   }
 
   /** CCNet perplexity buckets

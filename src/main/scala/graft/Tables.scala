@@ -63,6 +63,13 @@ object Tables {
   def withEvents[A](spark: SparkSession, dir: String)(body: DataFrame => A): A =
     SessionConf.withConf(spark, nanosKey -> "true")(body(events(spark, dir)))
 
+  /** Run `body`, one gate built and consumed, and then put the nanos flag
+    * back as it was: [[events]] leaves it set on the nanos shape, and left
+    * set it would make every later query in the JVM read parquet under
+    * the legacy flag. Verify, Bench and ClusterSmoke run each gate in one. */
+  def restoringNanosFlag[A](spark: SparkSession)(body: => A): A =
+    SessionConf.withConf(spark, nanosKey -> "false")(body)
+
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "orders")
   def customer(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "customer")

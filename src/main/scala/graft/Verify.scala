@@ -65,7 +65,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try {
+      try Tables.restoringNanosFlag(spark) {
         val df = fn(spark, sfDir)
         requireScalarIfGraded(name, df.schema)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 
+import graft.time.EventTime
+
 /** Fluent dataflow builder — the Spark-native analogue of malstrom's
   * `StreamBuilder` chain (reference: malstrom-core/src/stream/mod.rs).
   *
@@ -96,13 +98,13 @@ final class GraftStream private (val toDF: DataFrame) {
 
   /** Assign the event-time column (operators/time/assign_timestamps.rs:17). */
   def assignTimestamps(ts: Column): GraftStream =
-    GraftStream(toDF.withColumn("event_time", ts.cast("timestamp")))
+    GraftStream(EventTime.assignTimestamps(toDF, ts))
 
   /** Bounded out-of-orderness watermark (time/generate_epochs.rs:134).
     * On a streaming DataFrame this is a real watermark; on batch it is a
     * no-op marker (batch sees all data, i.e. a complete epoch). */
   def limitOutOfOrderness(tsCol: String, delay: String): GraftStream =
-    if (toDF.isStreaming) GraftStream(toDF.withWatermark(tsCol, delay)) else this
+    GraftStream(EventTime.generateEpochs(toDF, tsCol, delay))
 
   def where(pred: Column): GraftStream = filter(pred)
 
@@ -195,15 +197,12 @@ final class KeyedGraftStream private[api] (
 
   /** Max observed event time per key — operators/time/inspect_frontier.rs. */
   def frontier(tsCol: Column): GraftStream =
-    GraftStream(toDF.groupBy(keys: _*).agg(F.max(tsCol).as("frontier")))
+    GraftStream(EventTime.frontier(toDF, tsCol, keys))
 
   /** Rows older than `bound` behind their key's frontier — the batch
     * equivalent of the late-data side output of time/generate_epochs.rs. */
   def lateData(tsCol: Column, bound: String): GraftStream =
-    GraftStream(
-      toDF.withColumn("__frontier", F.max(tsCol).over(w))
-        .filter(tsCol < F.col("__frontier") - F.expr(s"INTERVAL $bound"))
-        .drop("__frontier"))
+    GraftStream(EventTime.lateData(toDF, tsCol, keys, bound))
 
   /** TTL sessionization — batch analogue of operators/ttl_map.rs:16: state
     * for a key expires after `gap` of event-time inactivity; each expiry

@@ -3,107 +3,105 @@ package graft.functions.expressions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, RowOrdering, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
 import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Bounded bottom-k-by-rank-key aggregate — the SORT-FREE state of the
-  * KMV/quantile sample (reference semantics: malstrom's keyed stateful
-  * fold, malstrom-core/src/operators/stateful_op.rs; the bottom-k sample
-  * contract itself is Sketches.bottomKSample's).
+  * KMV/quantile sample and of the priority sample's top-(k+1) cut
+  * (reference semantics: malstrom's keyed stateful fold,
+  * malstrom-core/src/operators/stateful_op.rs).
   *
-  * Input: ONE struct-typed child whose FIRST field is a non-null STRING
-  * rank key (md5 hex in every current caller). State: a TreeMap of the
-  * k smallest keys seen → their full struct rows. Output: the state as
-  * an `array<struct>` in ascending key order — a deterministic FUNCTION
-  * of the input set, independent of partitioning and arrival order
+  * Input: ONE struct-typed child whose FIRST field is the rank key, of
+  * any orderable type (md5 hex for the KMV sample, `struct(-priority,
+  * id)` for the priority sample). State: a TreeMap of the k smallest
+  * keys seen → their full struct rows. Output: the state as an
+  * `array<struct>` in ascending key order — a deterministic FUNCTION of
+  * the input set, independent of partitioning and arrival order
   * (distinct keys by contract; a replayed identical key overwrites its
-  * own slot, the mergeBottomK idempotence rule).
+  * own slot, the mergeBottomK idempotence rule). Being an aggregate, it
+  * runs unchanged as a streaming aggregation, whose state store then
+  * holds the k rows.
   *
   * Why not `row_number() OVER (...) <= k`: the Partial WindowGroupLimit
   * Spark plans for that cut still requires a FULL LOCAL SORT of every
   * map partition before it (O(n log n) per task, all row widths), where
   * this aggregate streams rows through a capped heap — O(n log k), no
   * sort node at all, and the exchange carries at most tasks × groups × k
-  * pre-combined rows. At 100 TB the sort is the difference between a
-  * spillable wide sort per task and a 256-entry map.
+  * pre-combined rows.
   *
-  * Key comparisons are UTF8String byte order — identical to Spark's
-  * binary string sort and DuckDB's varchar compare on ASCII hex, so the
-  * result is hash-exact against the window formulation and the SQL
-  * oracle. Ties (duplicate keys) collapse to the LAST-seen row; callers
-  * guarantee distinct keys (md5 of distinct ids).
+  * Keys compare under Spark's ordering for their type, the one an
+  * ascending `ORDER BY` uses: a STRING key orders by UTF-8 bytes, which
+  * is DuckDB's varchar order on ASCII hex, so the result is hash-exact
+  * against the window formulation and the SQL oracle. Ties (duplicate
+  * keys) collapse to the LAST-seen row; callers guarantee distinct keys.
   *
-  * PRECONDITION (ADVICE r20): the rank key must be NON-NULL. Rows whose
-  * key evaluates to NULL are dropped here, whereas the pinned
-  * `row_number() OVER (ORDER BY key)` window reference sorts NULLs
-  * FIRST ascending — a nullable-key caller would diverge from the
-  * window formulation (and the SQL oracle). Every caller keys on
-  * md5(...) of a non-null column, which cannot be null; a new caller
-  * with a nullable key must coalesce it explicitly first.
+  * PRECONDITION: the rank key must be NON-NULL. Rows whose key is NULL
+  * are dropped here, whereas `ORDER BY key` sorts NULLs first
+  * ascending; a caller with a nullable key must coalesce or filter it
+  * first.
   */
 case class BottomKByKeyAgg(
     child: Expression,
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.TreeMap[UTF8String, UnsafeRow]]
+  extends TypedImperativeAggregate[java.util.TreeMap[Any, UnsafeRow]]
   with UnaryLike[Expression] {
 
   require(k >= 1, s"bottom-k needs k >= 1, got $k")
 
   private lazy val structType = child.dataType.asInstanceOf[StructType]
+  private lazy val keyType = structType.head.dataType
   @transient private lazy val toUnsafe = UnsafeProjection.create(structType)
+  @transient private lazy val keyOrdering = TypeUtils.getInterpretedOrdering(keyType)
 
   override def dataType: DataType = ArrayType(structType, containsNull = false)
   override def nullable: Boolean = false
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+  override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
-      case s: StructType if s.nonEmpty &&
-          s.head.dataType == org.apache.spark.sql.types.StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case s: StructType if s.nonEmpty && RowOrdering.isOrderable(s.head.dataType) =>
+        TypeCheckResult.TypeCheckSuccess
       case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bottom_k_by_key needs struct<rankKey: string, ...>, got $other")
+        TypeCheckResult.TypeCheckFailure(
+          s"bottom_k_by_key needs struct<rankKey: orderable type, ...>, got $other")
     }
 
-  override def createAggregationBuffer(): java.util.TreeMap[UTF8String, UnsafeRow] =
-    new java.util.TreeMap[UTF8String, UnsafeRow]()
+  override def createAggregationBuffer(): java.util.TreeMap[Any, UnsafeRow] =
+    new java.util.TreeMap[Any, UnsafeRow](keyOrdering)
 
-  private def insert(buf: java.util.TreeMap[UTF8String, UnsafeRow],
-                     key: UTF8String, row: UnsafeRow): Unit = {
-    if (buf.size < k || key.compareTo(buf.lastKey()) < 0 || buf.containsKey(key)) {
+  private def admits(buf: java.util.TreeMap[Any, UnsafeRow], key: Any): Boolean =
+    buf.size < k || keyOrdering.lt(key, buf.lastKey()) || buf.containsKey(key)
+
+  private def insert(buf: java.util.TreeMap[Any, UnsafeRow], key: Any, row: UnsafeRow): Unit =
+    if (admits(buf, key)) {
       buf.put(key, row)
       if (buf.size > k) buf.remove(buf.lastKey())
     }
-  }
 
-  override def update(buf: java.util.TreeMap[UTF8String, UnsafeRow],
-                      input: InternalRow): java.util.TreeMap[UTF8String, UnsafeRow] = {
+  override def update(buf: java.util.TreeMap[Any, UnsafeRow],
+                      input: InternalRow): java.util.TreeMap[Any, UnsafeRow] = {
     val v = child.eval(input)
     if (v != null) {
       val row = v.asInstanceOf[InternalRow]
-      val key = row.getUTF8String(0)
-      if (key != null &&
-          (buf.size < k || key.compareTo(buf.lastKey()) < 0 || buf.containsKey(key))) {
+      if (!row.isNullAt(0) && admits(buf, row.get(0, keyType))) {
         // copy BEFORE keying: eval may return a row backed by reused
         // buffers; the copied UnsafeRow owns its bytes, and the key is
         // read back out of the copy so it shares that stable backing
         val stable = toUnsafe(row).copy()
-        insert(buf, stable.getUTF8String(0), stable)
+        insert(buf, stable.get(0, keyType), stable)
       }
     }
     buf
   }
 
-  override def merge(a: java.util.TreeMap[UTF8String, UnsafeRow],
-                     b: java.util.TreeMap[UTF8String, UnsafeRow])
-      : java.util.TreeMap[UTF8String, UnsafeRow] = {
+  override def merge(a: java.util.TreeMap[Any, UnsafeRow],
+                     b: java.util.TreeMap[Any, UnsafeRow])
+      : java.util.TreeMap[Any, UnsafeRow] = {
     val it = b.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
@@ -112,7 +110,7 @@ case class BottomKByKeyAgg(
     a
   }
 
-  override def eval(buf: java.util.TreeMap[UTF8String, UnsafeRow]): Any = {
+  override def eval(buf: java.util.TreeMap[Any, UnsafeRow]): Any = {
     val out = new Array[Any](buf.size)
     var i = 0
     val it = buf.values().iterator()
@@ -120,7 +118,7 @@ case class BottomKByKeyAgg(
     new GenericArrayData(out)
   }
 
-  override def serialize(buf: java.util.TreeMap[UTF8String, UnsafeRow]): Array[Byte] = {
+  override def serialize(buf: java.util.TreeMap[Any, UnsafeRow]): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     val out = new DataOutputStream(bos)
     out.writeInt(buf.size)
@@ -135,7 +133,7 @@ case class BottomKByKeyAgg(
     bos.toByteArray
   }
 
-  override def deserialize(bytes: Array[Byte]): java.util.TreeMap[UTF8String, UnsafeRow] = {
+  override def deserialize(bytes: Array[Byte]): java.util.TreeMap[Any, UnsafeRow] = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
     val buf = createAggregationBuffer()
     val n = in.readInt()
@@ -146,7 +144,7 @@ case class BottomKByKeyAgg(
       in.readFully(arr)
       val row = new UnsafeRow(structType.length)
       row.pointTo(arr, len)
-      buf.put(row.getUTF8String(0), row)
+      buf.put(row.get(0, keyType), row)
       i += 1
     }
     buf

@@ -323,21 +323,21 @@ object Profile {
     * psi_term round-6, psi_total round-6 — the DECIMAL-exact sum of the
     * rounded terms, constant across rows). */
   def psiDrift(snapA: DataFrame, snapB: DataFrame, scoreCol: String,
-               buckets: Int = 10): DataFrame = {
-    def bucketed(df: DataFrame): DataFrame =
-      df.select(psiBucket(F.col(scoreCol), buckets).as("bucket"))
-        .groupBy(F.col("bucket")).agg(F.count(F.lit(1)).as("c"))
-    psiFromHistograms(
-      bucketed(snapA).select(F.col("bucket"), F.col("c").as("n_a")),
-      bucketed(snapB).select(F.col("bucket"), F.col("c").as("n_b")),
-      buckets)
-  }
+               buckets: Int = 10): DataFrame =
+    psiFromHistograms(psiHistogram(snapA, scoreCol, buckets),
+      psiHistogram(snapB, scoreCol, buckets), buckets)
 
-  /** The fixed equal-width PSI bin — shared by the batch [[psiDrift]]
-    * and the streaming fold ([[graft.streaming.StreamingOps
-    * .psiBucketsStream]]) so both engines and both execution modes bin
-    * IDENTICALLY (constant edges are what make PSI values comparable
-    * across snapshots at all). */
+  /** One snapshot's PSI histogram: (bucket, n) under the fixed
+    * [[psiBucket]] edges, one row per non-empty bucket. A map and a
+    * count, so it runs unchanged on a stream as a `complete`-mode
+    * aggregation, whose state is at most `buckets` counts. */
+  def psiHistogram(df: DataFrame, scoreCol: String, buckets: Int = 10): DataFrame =
+    df.select(psiBucket(F.col(scoreCol), buckets).as("bucket"))
+      .groupBy(F.col("bucket")).agg(F.count(F.lit(1)).as("n"))
+
+  /** The fixed equal-width PSI bin, shared by every PSI path so each
+    * bins IDENTICALLY (constant edges are what make PSI values
+    * comparable across snapshots at all). */
   def psiBucket(score: org.apache.spark.sql.Column, buckets: Int)
       : org.apache.spark.sql.Column =
     F.least(F.greatest(F.floor(score * buckets), F.lit(0L)),
@@ -347,10 +347,8 @@ object Profile {
     * score columns derive from ONE table (base corpus vs a transformed
     * view of itself: the q_psi_drift gate, any before/after-filter
     * comparison). The two-frame form scans the input twice — once per
-    * bucketed() branch — and the scan is the expensive part (quality
-    * scores are regex folds over full text; r20 trajectory measured the
-    * double scan as the suite's worst growth exponent, 0.43). This form
-    * pays ONE scan: a single map-side-combinable `(bucket_a, bucket_b)`
+    * [[psiHistogram]] — and the scan is the expensive part (quality
+    * scores are regex folds over full text). This form pays ONE scan: a single map-side-combinable `(bucket_a, bucket_b)`
     * pair-count aggregation (≤ buckets² rows), from which both marginal
     * histograms fold. Same smoothing/ln/total tail, same output,
     * hash-identical to [[psiDrift]] on the same rows. */
@@ -361,22 +359,19 @@ object Profile {
       psiBucket(F.col(scoreColA), buckets).as("ba"),
       psiBucket(F.col(scoreColB), buckets).as("bb"))
       .groupBy(F.col("ba"), F.col("bb")).agg(F.count(F.lit(1)).as("c"))
-    val a = pair.groupBy(F.col("ba").as("bucket")).agg(F.sum(F.col("c")).as("n_a"))
-    val b = pair.groupBy(F.col("bb").as("bucket")).agg(F.sum(F.col("c")).as("n_b"))
+    val a = pair.groupBy(F.col("ba").as("bucket")).agg(F.sum(F.col("c")).as("n"))
+    val b = pair.groupBy(F.col("bb").as("bucket")).agg(F.sum(F.col("c")).as("n"))
     psiFromHistograms(a, b, buckets)
   }
 
-  /** PSI tail over two pre-folded histograms — `a` as (bucket, n_a),
-    * `b` as (bucket, n_b), one row per non-empty bucket each. Split out
-    * of [[psiDrift]] (r20, VERDICT r19 #5) so a STREAMED histogram (the
-    * per-bucket counts living as streaming state) feeds the identical
-    * smoothing/ln/total math as the batch path — the oracle is the batch
-    * PSI of the same prefix, order-independent because counts are. */
+  /** PSI tail over two [[psiHistogram]]-shaped histograms, `a` the
+    * reference and `b` the snapshot, each (bucket, n). */
   def psiFromHistograms(a: DataFrame, b: DataFrame,
                         buckets: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(buckets >= 2 && buckets <= 1000, s"need 2 <= buckets <= 1000, got $buckets")
-    val joined = a.join(b, Seq("bucket"), "full_outer")
+    val joined = a.withColumnRenamed("n", "n_a")
+      .join(b.withColumnRenamed("n", "n_b"), Seq("bucket"), "full_outer")
       .select(F.col("bucket"),
         F.coalesce(F.col("n_a"), F.lit(0L)).as("n_a"),
         F.coalesce(F.col("n_b"), F.lit(0L)).as("n_b"))

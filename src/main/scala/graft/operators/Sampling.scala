@@ -362,6 +362,43 @@ object Sampling {
     df.filter(F.md5(F.col(idCol).cast("string")) < threshold)
   }
 
+  /** The priority `q_i = w_i / u_i` as a Column — one expression text
+    * for [[prioritySample]] and [[priorityCandidates]], so both produce
+    * bit-identical doubles for the same row. */
+  def priorityExpr(idCol: String, weightCol: Column, seed: String = "graft"): Column = {
+    val u56 = F.conv(F.substring(
+      F.md5(F.concat(F.lit(seed), F.lit(":"), F.col(idCol).cast("string"))),
+      1, 14), 16, 10).cast("long")
+    val u = (u56 + 1).cast("double") / F.lit(7.2057594037927936E16)
+    weightCol.cast("double") / u
+  }
+
+  /** [[prioritySample]]'s top-(k+1) candidate set as an aggregate, so it
+    * runs on a stream: a [[graft.functions.expressions.BottomKByKeyAgg]]
+    * over the rank key `struct(-priority, id)`, whose ascending order is
+    * the sampler's (priority DESC, id ASC). Top-m under a total order is
+    * merge-closed and a replayed row keeps its key, so in `complete` mode
+    * the state after any prefix is that prefix's candidate set, at most
+    * k+1 rows. Rows with a NULL id or weight are dropped. Output rows:
+    * (idCol, weight); feed them to [[prioritySample]] with
+    * `F.col("weight")` for rank, tau and `weight_est`. */
+  def priorityCandidates(df: DataFrame, idCol: String, weightCol: Column,
+                         k: Int, seed: String = "graft"): DataFrame = {
+    require(k >= 1, s"need k >= 1, got $k")
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val rank = F.struct((-priorityExpr(idCol, weightCol, seed)).as("neg_priority"),
+      F.col(idCol).as("id"))
+    val top = ColumnBridge.column(
+      graft.functions.expressions.BottomKByKeyAgg(
+        ColumnBridge.expression(F.struct(rank.as("rank"), F.col(idCol),
+          weightCol.cast("double").as("weight"))), k + 1)
+        .toAggregateExpression())
+    df.filter(F.col(idCol).isNotNull && weightCol.isNotNull)
+      .agg(top.as("_top"))
+      .select(F.explode(F.col("_top")).as("_e"))
+      .select(F.col("_e").getField(idCol).as(idCol), F.col("_e").getField("weight").as("weight"))
+  }
+
   /** Priority sampling (Duffield, Lund & Thorup, JACM 54(6) 2007): a
     * WEIGHTED sample without replacement of `k` rows plus the estimator
     * that makes it useful — each survivor carries
@@ -383,23 +420,13 @@ object Sampling {
     * [[bottomKSample]] determinism contract, oracle-replicable).
     *
     * Scale shape: priorities are scan-local; the global top-(k+1) plans as
-    * TakeOrderedAndProject (per-partition heaps, no full-sort exchange —
-    * the [[graft.dedup.Dedup]] q_dsir_select precedent); the rank window
-    * and one-row `tau` aggregate run on the `k+1`-row result, not on data.
+    * TakeOrderedAndProject (per-partition heaps, no Exchange node —
+    * the [[graft.dedup.Dedup]] q_dsir_select precedent). A stream cannot
+    * plan that cut and takes [[priorityCandidates]] instead; that global
+    * aggregate would add an exchange here. The rank window and one-row
+    * `tau` aggregate run on the `k+1`-row result, not on data.
     * Groups of `n <= k` rows degrade exactly: everything is kept and
     * `tau = 0`, so `weight_est = weight` and the estimator is exact. */
-  /** The priority `q_i = w_i / u_i` as a Column — shared expression text
-    * between the batch sampler and the streaming maintenance path
-    * ([[graft.streaming.StreamingOps.prioritySampleStream]]), so both
-    * produce bit-identical doubles for the same row. */
-  def priorityExpr(idCol: String, weightCol: Column, seed: String = "graft"): Column = {
-    val u56 = F.conv(F.substring(
-      F.md5(F.concat(F.lit(seed), F.lit(":"), F.col(idCol).cast("string"))),
-      1, 14), 16, 10).cast("long")
-    val u = (u56 + 1).cast("double") / F.lit(7.2057594037927936E16)
-    weightCol.cast("double") / u
-  }
-
   def prioritySample(df: DataFrame, idCol: String, weightCol: Column,
                      k: Int, seed: String = "graft"): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")

@@ -42,30 +42,21 @@ import org.apache.spark.sql.{functions => F}
   */
 object StateRescale {
 
-  /** Raw (key, value, partition_id) rows of a stopped query's state store.
-    * `operatorId`/`storeName`/`batchId` follow the State Data Source
-    * options; defaults read the latest snapshot of operator 0's default
-    * store — the layout [[graft.operators.StatefulExec.stream]] writes. */
+  /** Raw (key, value, partition_id) rows of a checkpoint's state store,
+    * operator `operatorId`'s default store (the layout
+    * [[graft.operators.StatefulExec.stream]] writes). `batchId = None`
+    * reads the latest snapshot, the offline (stopped-query) default.
+    * `Some(n)` pins the read to committed batch n, which a zero-downtime
+    * migration's warm-up export must do while the old query is STILL
+    * RUNNING (docs/ZERO_DOWNTIME_MIGRATION.md phase 2): "latest" is a
+    * moving target against a live checkpoint, but the snapshot files of
+    * a committed batch are immutable. Use [[lastCommittedBatch]] for the
+    * pin. */
   def readState(spark: SparkSession, checkpointDir: String,
-                operatorId: Int = 0): DataFrame =
-    spark.read.format("statestore")
-      .option("operatorId", operatorId)
-      .load(checkpointDir)
-
-  /** [[readState]] pinned to an EXPLICIT committed batch — the form a
-    * zero-downtime migration's warm-up export must use while the old
-    * query is STILL RUNNING (docs/ZERO_DOWNTIME_MIGRATION.md phase 2):
-    * "latest" is a moving target against a live checkpoint (the store
-    * may commit batch N+1 between the reader's option resolution and its
-    * scan), but the snapshot files of an already-committed batch are
-    * immutable, so pinning `batchId` makes the concurrent read
-    * well-defined. Use [[lastCommittedBatch]] for the pin. */
-  def readStateAt(spark: SparkSession, checkpointDir: String,
-                  batchId: Long, operatorId: Int = 0): DataFrame =
-    spark.read.format("statestore")
-      .option("operatorId", operatorId)
-      .option("batchId", batchId)
-      .load(checkpointDir)
+                operatorId: Int = 0, batchId: Option[Long] = None): DataFrame = {
+    val reader = spark.read.format("statestore").option("operatorId", operatorId)
+    batchId.fold(reader)(reader.option("batchId", _)).load(checkpointDir)
+  }
 
   /** The newest batch id with a COMMIT record — the only version a
     * concurrent state export may pin to (offsets/N exists BEFORE batch N
@@ -81,17 +72,12 @@ object StateRescale {
     * a multi-field struct stays a struct and decodes via the encoder. */
   def keyedState[K: Encoder, S: Encoder](
       spark: SparkSession, checkpointDir: String,
-      operatorId: Int = 0, batchId: Long = -1L): Dataset[(K, S)] = {
+      operatorId: Int = 0, batchId: Option[Long] = None): Dataset[(K, S)] = {
     implicit val ksEnc: Encoder[(K, S)] =
       org.apache.spark.sql.Encoders.tuple(
         implicitly[Encoder[K]], implicitly[Encoder[S]])
-    // batchId >= 0 pins the read to that committed batch's immutable
-    // snapshot ([[readStateAt]]) — REQUIRED when exporting against a
-    // LIVE query (the zero-downtime warm-up); -1 = latest, the offline
-    // (stopped-query) default.
-    val raw =
-      if (batchId >= 0L) readStateAt(spark, checkpointDir, batchId, operatorId)
-      else readState(spark, checkpointDir, operatorId)
+    // a LIVE query's export must pin `batchId` (see [[readState]])
+    val raw = readState(spark, checkpointDir, operatorId, batchId)
     import org.apache.spark.sql.types.StructType
     def unwrap(col: String): org.apache.spark.sql.Column = {
       var path = col
@@ -117,7 +103,7 @@ object StateRescale {
     * key into the new layout. */
   def initialStateFrom[K: Encoder, S: Encoder](
       spark: SparkSession, checkpointDir: String,
-      operatorId: Int = 0, batchId: Long = -1L): KeyValueGroupedDataset[K, S] =
+      operatorId: Int = 0, batchId: Option[Long] = None): KeyValueGroupedDataset[K, S] =
     keyedState[K, S](spark, checkpointDir, operatorId, batchId)
       .groupByKey(_._1).mapValues(_._2)
 

@@ -5,13 +5,15 @@ import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
-/** Structured-Streaming-side execution: watermarked windows, checkpointed
+/** Structured-Streaming-side execution: watermarked dedup, checkpointed
   * state (malstrom's snapshot backend ≡ `checkpointLocation`), and the
   * exactly-once sink contract (sinks/stateful.rs ≡ foreachBatch + batchId
   * idempotence). Stateful per-key logic runs through
-  * [[graft.operators.StatefulExec.stream]] (flatMapGroupsWithState), or
+  * [[graft.operators.StatefulExec.stream]], or
   * [[graft.operators.StatefulExec.streamTws]] (transformWithState) when
-  * its state expires.
+  * its state expires. A mergeable sketch needs neither: its batch
+  * operator runs on the stream as a streaming aggregation, and the
+  * state store holds its bounded state.
   *
   * Reference: malstrom-core/src/snapshot/ (persistence), runtime/
   * (coordinator barriers). Spark gives both: the state store checkpoints
@@ -19,15 +21,6 @@ import org.apache.spark.sql.Row
   * a shuffle-partition change at restart, state re-keyed by the store.
   */
 object StreamingOps {
-
-  /** Watermarked tumbling-window aggregation — the epoch-aggregation shape
-    * of examples/event_time.rs, streaming form. */
-  def windowedCounts(events: DataFrame, tsCol: String, width: String, delay: String,
-                     keys: Seq[String]): DataFrame =
-    events
-      .withWatermark(tsCol, delay)
-      .groupBy(keys.map(F.col) :+ F.window(F.col(tsCol), width): _*)
-      .agg(F.count(F.lit(1)).as("n"))
 
   /** Streaming exact dedup: keep the FIRST document per content hash.
     * `dropDuplicatesWithinWatermark` bounds the dedup state by EVENT time
@@ -151,18 +144,18 @@ object StreamingOps {
     * re-read), gated per batch by [[markerGated]]. The marker dir records
     * the batch's id set (tiny — one long per vector).
     *
-    * Delivery contract (r15 — was at-least-once + serve-side dedup): the
-    * marker commits AFTER the (non-transactional parquet) append, so a
-    * crash inside that window replays the batch — the append itself is
-    * made EXACTLY-ONCE-EFFECTIVE by [[graft.ann.Ann.ivfIndexAppend]]'s
-    * prelist reconciliation: the batch's pre-append file listing is
-    * committed to `outDir/prelist_batch=<id>` before the first attempt
-    * (OUTSIDE the target dir, so the final output overwrite cannot eat
-    * it), and a replay deletes the crashed attempt's orphan files before
+    * Delivery contract: the marker commits AFTER the (non-transactional
+    * parquet) append, so a crash inside that window replays the batch —
+    * the append itself is made EXACTLY-ONCE-EFFECTIVE by
+    * [[graft.ann.Ann.ivfIndexAppend]]'s prelist reconciliation: the
+    * batch's pre-append file listing is committed to
+    * `outDir/prelist_batch=<id>` before the first attempt (OUTSIDE the
+    * target dir, so the final output overwrite cannot eat it), and a
+    * replay deletes the crashed attempt's orphan files before
     * re-appending. Serving therefore trusts the index and carries no
-    * dedup exchange (the r14 serve paid one on every clean call; the
-    * reconciliation runs only on the rare replay). Single-writer per
-    * index, as for every persisted-index op in this repo. */
+    * dedup exchange (the reconciliation runs only on the rare replay).
+    * Single-writer per index, as for every persisted-index op in this
+    * repo. */
   def ivfIngestStream(vectors: DataFrame, indexPath: String,
                       outDir: String, checkpointDir: String,
                       idCol: String = "vec_id",
@@ -177,10 +170,10 @@ object StreamingOps {
     }), checkpointDir)
 
   /** Streaming INCREMENTAL SEMANTIC dedup — [[incrementalDedupStream]]'s
-    * vector twin over the frozen-quantizer index (r20, row 221's
-    * streaming half): each micro-batch of new embeddings is APPENDED to
-    * the persisted index first ([[graft.ann.Ann.ivfIndexAppend]] with
-    * the prelist reconciliation ledger — exactly-once-effective), then
+    * vector twin over the frozen-quantizer index: each micro-batch of
+    * new embeddings is APPENDED to the persisted index first
+    * ([[graft.ann.Ann.ivfIndexAppend]] with the prelist reconciliation
+    * ledger — exactly-once-effective), then
     * PROBED ([[graft.ann.Ann.semanticIncremental]], whose cross side
     * anti-joins the batch's own ids out of the history read — so
     * probing after the append sees exactly the pre-append history plus
@@ -206,7 +199,7 @@ object StreamingOps {
     }), checkpointDir)
 
   /** The ONE per-batch replay gate every marker-committed sink shares
-    * (review r14: hand-rolled copies drift): run `action(batch, targetDir)`
+    * (hand-rolled copies drift): run `action(batch, targetDir)`
     * only when `outDir/batch=<id>/_SUCCESS` is absent — a replayed batch
     * whose marker committed is a full no-op. The probe resolves through
     * the session's Hadoop FS ([[graft.HadoopFs]]): a java.io.File check on
@@ -234,7 +227,7 @@ object StreamingOps {
     * can never re-enter this batch, so the prelist is dead weight — and a
     * STALE committed ledger is dangerous (a batch-id collision after a
     * checkpoint reset would treat the old listing as this batch's
-    * pre-state and delete every file appended since — review r15). It is
+    * pre-state and delete every file appended since). It is
     * deleted right after the action; a crash between the marker and the
     * delete leaves a harmless orphan that is never read again (the marker
     * gates the only reader). This also bounds ledger storage at O(1)
@@ -249,173 +242,6 @@ object StreamingOps {
         val (fs, p) = graft.HadoopFs.get(prelist)
         fs.delete(p, true); ()
       }(batch, batchId)
-  }
-
-  /** STREAMING KMV bottom-k maintenance — the quantile-sketch face of the
-    * row-143 pattern (a sketch whose state is merge-closed can live AS
-    * streaming state): per group, the flatMapGroupsWithState state is the
-    * bottom-`k` (md5-rank, value) sample itself — union + re-bottom-k is
-    * the KMV merge rule ([[graft.functions.Sketches.mergeBottomK]]), so
-    * each micro-batch folds in with an O(k)-memory capped TreeSet and the
-    * state after ANY prefix of the stream equals the batch
-    * [[graft.functions.Sketches.bottomKSample]] of that prefix
-    * (order-free: bottom-k is a function of the SET). Bounded state by
-    * construction: groups × k entries, however much stream passes.
-    *
-    * Emission: one snapshot of the sample per (group, micro-batch) —
-    * `ver` is the group's cumulative row count, strictly increasing, so
-    * a downstream max-`ver` filter reads the FINAL sample off an
-    * append-mode sink (the memory-gate shape; a production job would
-    * read the same snapshot from its latest batch dir). The TreeSet
-    * collapses replayed (rank, value) pairs exactly as mergeBottomK's
-    * replay-idempotence contract; distinct ids give distinct md5 ranks
-    * by the same contract as the batch sketch.
-    *
-    * Output rows: (group, ver, qs_key, value) — feed the max-`ver` slice
-    * to [[graft.functions.Sketches.sampleQuantiles]]. */
-  def bottomKSampleStream(df: DataFrame, groupCol: String, valueCol: String,
-                          idCol: String, k: Int = 256): DataFrame = {
-    require(k >= 1, s"need k >= 1, got $k")
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
-    val prepared = df
-      .filter(F.col(valueCol).isNotNull && F.col(groupCol).isNotNull)
-      .select(F.col(groupCol).cast("string"),
-        F.md5(F.col(idCol).cast("string")),
-        F.col(valueCol).cast("double"))
-      .as[(String, String, Double)]
-    implicit val ord: Ordering[(String, Double)] =
-      Ordering.Tuple2(Ordering.String, Ordering.Double.TotalOrdering)
-    prepared.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Seq[(String, Double)]),
-                              (String, Long, String, Double)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (g, it, gs) =>
-        val (n0, samp0) = gs.getOption.getOrElse((0L, Seq.empty[(String, Double)]))
-        val buf = scala.collection.mutable.TreeSet.empty[(String, Double)]
-        samp0.foreach(buf += _)
-        var n = n0
-        it.foreach { t =>
-          n += 1
-          buf += ((t._2, t._3))
-          if (buf.size > k) buf -= buf.last
-        }
-        val merged = buf.toSeq
-        gs.update((n, merged))
-        merged.iterator.map(x => (g, n, x._1, x._2))
-      }
-      .toDF(groupCol, "ver", "qs_key", valueCol)
-  }
-
-  /** STREAMING PSI drift histogram — the row-143 pattern (merge-closed
-    * sketch state lives AS streaming state) for the drift monitor
-    * ([[graft.operators.Profile.psiDrift]], r20 / VERDICT r19 #5): the
-    * score stream folds into per-bucket COUNTS under the batch
-    * operator's own fixed equal-width bin edges
-    * ([[graft.operators.Profile.psiBucket]] — constant edges are the
-    * PSI contract), kept as flatMapGroupsWithState state keyed by
-    * bucket. Counts are trivially merge-closed and order-free, so the
-    * state after ANY stream prefix equals the batch histogram of that
-    * prefix — the oracle replays batch PSI on the same rows. Bounded
-    * state by construction: ≤ `buckets` longs, however much stream
-    * passes.
-    *
-    * Emission: one (bucket, n) row per micro-batch per touched bucket,
-    * `n` the bucket's CUMULATIVE count (strictly increasing), so the
-    * final histogram off an append-mode sink is `max(n)` per bucket —
-    * feed it to [[graft.operators.Profile.psiFromHistograms]] against
-    * the fixed reference histogram.
-    *
-    * PRECONDITION (ADVICE r20): `scoreCol` must be non-null. This path
-    * filters NULL scores out (a typed Long group key cannot carry them),
-    * while the batch psiBucket map would send a NULL score to a NULL
-    * bucket row — so the prefix-equals-batch contract above holds only
-    * for non-null score streams. Every gate caller derives the score
-    * from qualityScore over non-null text (non-null by construction);
-    * callers with nullable scores must pre-filter or pre-map NULLs
-    * identically on both paths. */
-  def psiBucketsStream(df: DataFrame, scoreCol: String,
-                       buckets: Int = 10): DataFrame = {
-    require(buckets >= 2 && buckets <= 1000, s"need 2 <= buckets <= 1000, got $buckets")
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
-    val prepared = df
-      .filter(F.col(scoreCol).isNotNull)
-      .select(graft.operators.Profile.psiBucket(F.col(scoreCol), buckets))
-      .as[Long]
-    prepared.groupByKey(identity)
-      .flatMapGroupsWithState[Long, (Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (bucket, it, gs) =>
-        var n = gs.getOption.getOrElse(0L)
-        it.foreach(_ => n += 1)
-        gs.update(n)
-        Iterator.single((bucket, n))
-      }
-      .toDF("bucket", "n")
-  }
-
-  /** STREAMING priority-sample maintenance — the row-143 pattern for the
-    * sampling tier ([[graft.operators.Sampling.prioritySample]], Duffield–
-    * Lund–Thorup): the state a weighted-without-replacement sample needs
-    * is exactly the top-(k+1) rows by (priority DESC, id ASC), and top-m
-    * under a total order is merge-closed (top-m of a union = top-m of the
-    * merged per-part top-ms), so it lives as flatMapGroupsWithState state
-    * in an O(k) capped TreeSet — bounded at k+1 entries however much
-    * stream passes. Priorities are computed by the SAME expression text
-    * as the batch sampler ([[graft.operators.Sampling.priorityExpr]] —
-    * two IEEE divisions, no libm), so the streamed candidate set is
-    * bit-identical to the batch scan's.
-    *
-    * Emission: one snapshot of the candidate set per micro-batch with
-    * `ver` = cumulative row count (strictly increasing); the max-`ver`
-    * slice is the FINAL top-(k+1), and feeding those (id, weight) rows
-    * back through the batch [[graft.operators.Sampling.prioritySample]]
-    * recomputes rank, tau and `weight_est` on <= k+1 rows — the streamed
-    * state is load-bearing (it decides the candidate set), the estimator
-    * math is the audited batch operator, and the whole thing equals the
-    * batch sample of the full stream (spec-pinned across micro-batches).
-    * Replayed rows collapse in the TreeSet (same (priority, id, weight)
-    * triple), matching the md5-determinism contract.
-    *
-    * Output rows: (ver, id, weight) — slice max-`ver`, rename, and pass
-    * to `prioritySample`. */
-  def prioritySampleStream(df: DataFrame, idCol: String, weightCol: org.apache.spark.sql.Column,
-                           k: Int, seed: String = "graft"): DataFrame = {
-    require(k >= 1, s"need k >= 1, got $k")
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
-    val prepared = df
-      .filter(F.col(idCol).isNotNull && weightCol.isNotNull)
-      .select(F.col(idCol).cast("long"),
-        weightCol.cast("double"),
-        graft.operators.Sampling.priorityExpr(idCol, weightCol, seed))
-      .as[(Long, Double, Double)]
-    // State tuple: (priority, id, weight). Total order: priority DESC,
-    // id ASC — the batch sampler's orderBy (priorities are positive
-    // finite, so negation under TotalOrdering preserves the order).
-    implicit val ord: Ordering[(Double, Long, Double)] =
-      Ordering.by[(Double, Long, Double), (Double, Long)](t => (-t._1, t._2))(
-        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
-    prepared.groupByKey(_ => 0)
-      .flatMapGroupsWithState[(Long, Seq[(Double, Long, Double)]),
-                              (Long, Long, Double)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (_, it, gs) =>
-        val (n0, top0) = gs.getOption.getOrElse((0L, Seq.empty[(Double, Long, Double)]))
-        val buf = scala.collection.mutable.TreeSet.empty[(Double, Long, Double)]
-        top0.foreach(buf += _)
-        var n = n0
-        it.foreach { t =>
-          n += 1
-          buf += ((t._3, t._1, t._2))
-          if (buf.size > k + 1) buf -= buf.last
-        }
-        val merged = buf.toSeq
-        gs.update((n, merged))
-        merged.iterator.map(x => (n, x._2, x._3))
-      }
-      .toDF("ver", "id", "weight")
   }
 
   /** STREAMING tokenizer-coverage monitor: the row-203 OOV report

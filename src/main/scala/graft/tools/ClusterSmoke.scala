@@ -57,6 +57,19 @@ object ClusterSmoke {
   val slice: Seq[String] =
     graft.SparkEntry.gates.filter(g => g.headline || g.crossJvm).map(_.name)
 
+  /** The JDK-17 module opens spark-submit would normally inject, as JVM
+    * arguments: handed to the executor JVMs here, and to the JVM that
+    * ClusterSmokeSpec forks for this main. */
+  val addOpens: Seq[String] = Seq(
+    "java.base/java.lang", "java.base/java.lang.invoke",
+    "java.base/java.lang.reflect", "java.base/java.io",
+    "java.base/java.net", "java.base/java.nio",
+    "java.base/java.util", "java.base/java.util.concurrent",
+    "java.base/java.util.concurrent.atomic",
+    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
+    "java.base/sun.security.action", "java.base/sun.util.calendar")
+    .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+
   /** Canonical result hash: columns sorted by name, every value rendered
     * deterministically (binary → hex — Array.toString would be an object
     * identity), rows sorted, md5 over the concatenation. Both masters go
@@ -89,6 +102,7 @@ object ClusterSmoke {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(graft.HadoopFs.forkFreeLocalConfs)
     extraConf.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
@@ -98,7 +112,8 @@ object ClusterSmoke {
   private def runSlice(s: SparkSession, sfDir: String): Map[String, (Long, String)] =
     slice.map { name =>
       val t0 = System.nanoTime()
-      val h = resultHash(graft.SparkEntry.queries(name)(s, sfDir))
+      val h = graft.Tables.restoringNanosFlag(s)(
+        resultHash(graft.SparkEntry.queries(name)(s, sfDir)))
       System.err.println(
         f"[smoke] ${s.sparkContext.master}%-24s $name%-24s ${(System.nanoTime() - t0) / 1e9}%6.2fs rows=${h._1} ${h._2}")
       name -> h
@@ -111,21 +126,12 @@ object ClusterSmoke {
     // --- Pass 1: real multi-JVM standalone cluster. Executor JVMs are
     // launched by the in-process Workers with a FRESH classpath — hand
     // them ours (same machine, so the driver's classpath is valid there)
-    // plus the JDK-17 module opens spark-submit would normally inject.
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
+    // plus the module opens.
     val cluster = buildSession(
       "local-cluster[2,2,1024]",
       Map(
         "spark.executor.extraClassPath" -> sys.props("java.class.path"),
-        "spark.executor.extraJavaOptions" -> addOpens,
+        "spark.executor.extraJavaOptions" -> addOpens.mkString(" "),
         "spark.executor.memory" -> "1024m"))
     // Block until both remote executors registered (the first job would
     // otherwise run degraded on one) — statusTracker counts the driver too.

@@ -20,18 +20,9 @@ class ClusterSmokeSpec extends AnyFunSuite {
   test("local-cluster[2,2] run is hash-identical to local[4] on the serialization slice") {
     val javaBin = java.nio.file.Paths.get(
       sys.props("java.home"), "bin", "java").toString
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     val cwd = SparkFixture.tempDir("graft_smoke_").toFile
     val cmd: Seq[String] =
-      Seq(javaBin) ++ addOpens ++ Seq(
+      Seq(javaBin) ++ graft.tools.ClusterSmoke.addOpens ++ Seq(
         "-Xmx3g", "-cp", sys.props("java.class.path"),
         "-Dspark.ui.enabled=false",
         "graft.tools.ClusterSmoke")

@@ -128,6 +128,30 @@ class GateHarnessSpec extends AnyFunSuite with SparkFixture {
     spark.conf.unset(set)
   }
 
+  test("an events gate in Tables.restoringNanosFlag leaves the nanosAsLong flag unset") {
+    // TablesSpec's nano-epoch shape: `events.ts` as BIGINT nanos, which
+    // Tables.events reads under the legacy flag and leaves it set
+    import spark.implicits._
+    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+    val dir = tempDir("graft_harness_nanos_")
+    Seq(1700000000000000L, 1700000000123456L).toDF("us")
+      .select(
+        F.monotonically_increasing_id().as("event_id"),
+        (F.col("us") * 1000L + 789L).as("ts"),
+        F.lit(7L).as("user_id"),
+        F.lit("click").as("event_type"),
+        F.lit(1.5).as("value"),
+        F.lit("{}").as("props"))
+      .coalesce(1).write.parquet(dir.resolve("events.parquet").toString)
+    spark.conf.unset(nanosKey)
+    val rows = Tables.restoringNanosFlag(spark)(
+      SparkEntry.queries("q_key_local")(spark, dir.toString).collect())
+    assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((7L, 2L)),
+      rows.toSeq.toString)
+    val leaked = spark.conf.getAll.get(nanosKey)
+    assert(leaked.isEmpty, s"$nanosKey = $leaked outlived the gate")
+  }
+
   test("q_sink_stateful grades each dataset on its own rows, also when two share a basename") {
     val filtered = tempDir("graft_harness_sink_").resolve("sf0.001")
     spark.read.parquet(s"$sf001/documents.parquet")

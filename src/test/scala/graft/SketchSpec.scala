@@ -114,6 +114,37 @@ class SketchSpec extends AnyFunSuite with SparkFixture {
     assert(tiny.count() == 1)
   }
 
+  test("BottomKByKeyAgg: a struct(double, long) rank key gives the orderBy(desc, asc).limit(k+1) set") {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import graft.functions.expressions.BottomKByKeyAgg
+    // 200 rows over 9 distinct priorities: ties on the double must break
+    // on the long, across a many-partition layout (partial/merge paths)
+    val rows = spark.range(200).select(F.col("id"),
+      ((F.col("id") * 7) % 9 - 4).cast("double").as("p")).repartition(13)
+    for (k <- Seq(1, 5, 64)) {
+      val cut = ColumnBridge.column(BottomKByKeyAgg(ColumnBridge.expression(
+        F.struct(F.struct((-F.col("p")).as("neg_p"), F.col("id")).as("rank"),
+          F.col("id"), F.col("p"))), k + 1).toAggregateExpression())
+      val got = rows.agg(cut.as("_top")).select(F.explode(F.col("_top")).as("e"))
+        .select(F.col("e.id"), F.col("e.p"))
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val want = rows.orderBy(F.col("p").desc, F.col("id").asc).limit(k + 1)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(got.size == k + 1 && got.toSet == want.toSet, s"k=$k: got $got, want $want")
+    }
+  }
+
+  test("BottomKByKeyAgg: a map-typed rank key fails analysis") {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import graft.functions.expressions.BottomKByKeyAgg
+    val rows = spark.range(3).select(F.map(F.lit("a"), F.col("id")).as("m"), F.col("id"))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      rows.agg(ColumnBridge.column(BottomKByKeyAgg(ColumnBridge.expression(
+        F.struct(F.col("m"), F.col("id"))), 2).toAggregateExpression()).as("_top"))
+    }
+    assert(e.getMessage.contains("bottom_k_by_key"), e.getMessage)
+  }
+
   test("KMV set sketch: shard sketches merge to the whole-set sketch") {
     import graft.functions.Sketches
     val docs = spark.read.parquet(s"$sf001/documents.parquet")

@@ -200,36 +200,35 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(estS == estB)
   }
 
-  test("bottomKSampleStream: fMGWS state equals the batch bottom-k after multiple batches") {
+  test("bottomKSample on a stream: complete-mode state is the batch sample after replay") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.functions.Sketches
     val input = MemoryStream[(String, Long, Double)]
-    val stream = input.toDS().toDF("g", "id", "value")
-    val snaps = graft.streaming.StreamingOps.bottomKSampleStream(
-      stream, "g", "value", "id", k = 4)
-    val q = snaps.writeStream.format("memory").queryName("kmv_stream")
-      .outputMode("append").start()
+    val sample = Sketches.bottomKSample(
+      input.toDS().toDF("g", "id", "value"), Seq("g"), "value", "id", k = 4)
+    val q = sample.writeStream.format("memory").queryName("kmv_stream")
+      .outputMode("complete").start()
+    def rows() = spark.table("kmv_stream").collect()
+      .map(r => (r.getString(0), r.getString(2), r.getDouble(1))).toSeq
+    // bounded: the state never holds more than k entries per group
+    def assertBounded(rs: Seq[(String, String, Double)]): Unit =
+      rs.groupBy(_._1).foreach { case (g, grp) =>
+        assert(grp.size <= 4, s"group $g exceeded k: ${grp.size}")
+      }
     val batch1 = (0L until 10L).map(i => ("a", i, i * 1.5)) ++ Seq(("b", 100L, 7.0))
     val batch2 = (10L until 25L).map(i => ("a", i, i * 0.5)) ++ Seq(("b", 101L, 3.0))
-    input.addData(batch1: _*); q.processAllAvailable()
+    input.addData(batch1: _*); q.processAllAvailable(); assertBounded(rows())
+    input.addData(batch2: _*); q.processAllAvailable(); assertBounded(rows())
+    // replay: a re-delivered batch keeps its md5 ranks, so the sample holds
     input.addData(batch2: _*); q.processAllAvailable()
-    val rows = spark.table("kmv_stream").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getDouble(3)))
+    val streamed = rows()
     q.stop()
-    // final snapshot per group = max cumulative-count version
-    val finalSamp = rows.groupBy(_._1).toSeq.flatMap { case (_, rs) =>
-      val mx = rs.map(_._2).max
-      rs.filter(_._2 == mx).toSeq
-    }.map(t => (t._1, t._3, t._4)).toSet
+    assertBounded(streamed)
     val whole = Sketches.bottomKSample(
       (batch1 ++ batch2).toDF("g", "id", "value"), Seq("g"), "value", "id", k = 4)
-      .collect().map(r => (r.getString(0), r.getString(2), r.getDouble(1))).toSet
-    assert(finalSamp == whole, s"streamed=$finalSamp batch=$whole")
-    // bounded: never more than k entries per group in any snapshot
-    rows.groupBy(r => (r._1, r._2)).foreach { case (gv, rs) =>
-      assert(rs.size <= 4, s"snapshot $gv exceeded k: ${rs.size}")
-    }
+      .collect().map(r => (r.getString(0), r.getString(2), r.getDouble(1))).toSeq
+    assert(streamed.sorted == whole.sorted, s"streamed=$streamed batch=$whole")
   }
 
   test("semanticDedupStream: cross-BATCH pairs come from the index carry-over") {
@@ -275,72 +274,60 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(pairs.forall(p => p._2 >= 100L), s"history-internal pair leaked: $pairs")
   }
 
-  test("psiBucketsStream: fMGWS histogram equals the batch histogram after multiple batches") {
+  test("psiHistogram on a stream: complete-mode state is the batch histogram") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
+    import graft.operators.Profile
     val input = MemoryStream[Double]
-    val stream = input.toDS().toDF("q")
-    val snaps = graft.streaming.StreamingOps.psiBucketsStream(stream, "q", buckets = 10)
-    val q = snaps.writeStream.format("memory").queryName("psi_stream")
-      .outputMode("append").start()
+    val hist = Profile.psiHistogram(input.toDS().toDF("q"), "q", buckets = 10)
+    val q = hist.writeStream.format("memory").queryName("psi_stream")
+      .outputMode("complete").start()
+    def rows() = spark.table("psi_stream").collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
     // out-of-range scores must clamp into the edge bins like the batch op
     val batch1 = Seq(0.05, 0.15, 0.17, 0.95, 1.0, -0.2)
     val batch2 = Seq(0.05, 0.83, 2.5, 0.18)
     input.addData(batch1: _*); q.processAllAvailable()
+    assert(rows().size <= 10, s"more rows than buckets: ${rows()}")
     input.addData(batch2: _*); q.processAllAvailable()
-    val rows = spark.table("psi_stream").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
+    val streamed = rows()
     q.stop()
-    val streamed = rows.groupBy(_._1).map { case (b, rs) => b -> rs.map(_._2).max }
+    assert(streamed.size <= 10, s"more rows than buckets: $streamed")
     val batch = (batch1 ++ batch2).toDF("q")
-      .select(graft.operators.Profile.psiBucket(F.col("q"), 10).as("b"))
+      .select(Profile.psiBucket(F.col("q"), 10).as("b"))
       .groupBy("b").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(streamed == batch, s"streamed=$streamed batch=$batch")
-    // cumulative versions strictly increase per bucket
-    rows.groupBy(_._1).foreach { case (b, rs) =>
-      assert(rs.map(_._2).distinct.length == rs.length,
-        s"bucket $b re-emitted a non-increasing count: ${rs.toSeq}")
-    }
+    assert(streamed.toMap == batch, s"streamed=$streamed batch=$batch")
   }
 
-  test("prioritySampleStream: fMGWS top-(k+1) state equals the batch priority sample") {
+  test("priorityCandidates on a stream: complete-mode top-(k+1) gives the batch sample") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Sampling
     val input = MemoryStream[(Long, Long)]
-    val stream = input.toDS().toDF("doc_id", "w")
-    val snaps = graft.streaming.StreamingOps.prioritySampleStream(
-      stream, "doc_id", F.col("w"), k = 5)
-    val q = snaps.writeStream.format("memory").queryName("psample_stream")
-      .outputMode("append").start()
+    val candidates = Sampling.priorityCandidates(
+      input.toDS().toDF("doc_id", "w"), "doc_id", F.col("w"), k = 5)
+    val q = candidates.writeStream.format("memory").queryName("psample_stream")
+      .outputMode("complete").start()
+    def rows() = spark.table("psample_stream").collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val batch1 = (0L until 20L).map(i => (i, i % 7 + 1))
     val batch2 = (20L until 45L).map(i => (i, i % 11 + 1))
     input.addData(batch1: _*); q.processAllAvailable()
+    // bounded: the state never holds more than k+1 candidates
+    assert(rows().size <= 6, s"exceeded k+1: ${rows()}")
     input.addData(batch2: _*); q.processAllAvailable()
-    // replay: a re-delivered batch collapses in the TreeSet — the
-    // candidate SET after replay must equal the set before it
+    val before = rows()
+    // replay: a re-delivered batch keeps its rank keys, so the candidate
+    // set after the replay equals the set before it
     input.addData(batch2: _*); q.processAllAvailable()
-    val rows = spark.table("psample_stream").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val after = rows()
     q.stop()
-    // bounded: no snapshot version carries more than k+1 candidates
-    rows.groupBy(_._1).foreach { case (v, rs) =>
-      assert(rs.size <= 6, s"snapshot ver=$v exceeded k+1: ${rs.size}")
-    }
-    // replay idempotence: last two snapshots carry the same candidate set
-    val vers = rows.map(_._1).distinct.sorted
-    val mx = vers.last
-    val prev = vers(vers.length - 2)
-    assert(rows.filter(_._1 == mx).map(t => (t._2, t._3)).toSet ==
-      rows.filter(_._1 == prev).map(t => (t._2, t._3)).toSet,
-      "replayed batch changed the candidate set")
-    // final snapshot -> audited batch sampler == batch sample of the union
-    val latest = rows.filter(_._1 == mx).map(t => (t._2, t._3))
-      .toSeq.toDF("doc_id", "w")
+    assert(after.size <= 6, s"exceeded k+1: $after")
+    assert(after.sorted == before.sorted, "replayed batch changed the candidate set")
     def keyOf(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
-    val streamedFinal = Sampling.prioritySample(latest, "doc_id", F.col("w"), k = 5)
+    val streamedFinal = Sampling.prioritySample(
+      after.toDF("doc_id", "weight"), "doc_id", F.col("weight"), k = 5)
       .collect().map(keyOf).toSet
     val whole = Sampling.prioritySample(
       (batch1 ++ batch2).toDF("doc_id", "w"), "doc_id", F.col("w"), k = 5)
@@ -473,7 +460,9 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(java.sql.Timestamp, String)]
     val df = input.toDS().toDF("ts", "kind")
-    val agg = StreamingOps.windowedCounts(df, "ts", "1 hour", "10 minutes", Seq("kind"))
+    val agg = graft.time.EventTime.tumblingAgg(
+      graft.time.EventTime.generateEpochs(df, "ts", "10 minutes"),
+      F.col("ts"), "1 hour", Seq(F.col("kind")), Seq(F.count(F.lit(1)).as("n")))
     val q = agg.writeStream.format("memory").queryName("wins_1")
       .outputMode("complete").start()
     def t(min: Int) = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(min * 60L))
@@ -1132,7 +1121,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(rows == Seq((1L, "a"), (2L, "b")), s"healed batch wrong: $rows")
   }
 
-  test("readStateAt pins the export to an explicit committed batch") {
+  test("readState pins the export to an explicit committed batch") {
     import spark.implicits._
     import graft.streaming.StateRescale
     implicit val sqlCtx = spark.sqlContext
@@ -1153,10 +1142,10 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       df.selectExpr("key.value AS k", "value.groupState.value AS s")
         .as[(Long, Long)].collect().toMap
     // batch 0's snapshot: only the first micro-batch's state
-    assert(totals(StateRescale.readStateAt(spark, s"$dir/ckpt", 0L)) ==
+    assert(totals(StateRescale.readState(spark, s"$dir/ckpt", batchId = Some(0L))) ==
       Map(1L -> 10L, 2L -> 5L))
     // batch 1 == latest
-    val at1 = totals(StateRescale.readStateAt(spark, s"$dir/ckpt", 1L))
+    val at1 = totals(StateRescale.readState(spark, s"$dir/ckpt", batchId = Some(1L)))
     assert(at1 == Map(1L -> 17L, 2L -> 5L, 3L -> 1L))
     assert(totals(StateRescale.readState(spark, s"$dir/ckpt")) == at1)
   }

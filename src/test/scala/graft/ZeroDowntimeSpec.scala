@@ -16,7 +16,7 @@ import graft.streaming.{SinkGate, StateRescale}
   * bearing claims each witnessed:
   *
   *  1. the export is taken while OLD is STILL RUNNING
-  *     ([[StateRescale.readStateAt]] pinned to [[StateRescale.lastCommittedBatch]] —
+  *     ([[StateRescale.readState]] pinned to [[StateRescale.lastCommittedBatch]] —
   *     "latest" against a live checkpoint is a moving target);
   *  2. NEW runs CONCURRENTLY with OLD at a DIFFERENT partition count,
   *     publicly invisible until cutover (the gate stages exactly-once);
@@ -73,7 +73,7 @@ class ZeroDowntimeSpec extends AnyFunSuite with SparkFixture {
       val pin = StateRescale.lastCommittedBatch(s"$dir/ckptOld")
         .getOrElse(fail("OLD committed nothing"))
       val seed = StateRescale.initialStateFrom[Long, Long](
-        spark, s"$dir/ckptOld", batchId = pin)
+        spark, s"$dir/ckptOld", batchId = Some(pin))
 
       // ----- NEW: different layout, post-fence input, gate CLOSED
       SessionConf.withConf(spark, "spark.sql.shuffle.partitions" -> "9") {
